@@ -73,43 +73,6 @@ def main() -> None:
     from data_integration_spark.session import get_spark
 
     load_all()
-    # driver-window insurance (VERDICT r7 #8): surface the signing-rotation
-    # debt in-round (stderr — stdout stays the single JSON line)
-    try:
-        import glob
-
-        from data_integration_spark.queries import _RESIGN
-
-        repo = os.path.dirname(os.path.abspath(__file__))
-        signed: set[str] = set()
-        latest: dict[str, int] = {}
-        for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-            rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-            with open(path) as fh:
-                names = set(json.load(fh))
-            signed |= names
-            for n in names:
-                latest[n] = max(latest.get(n, 0), rnd)
-        unsigned = [n for n in QUERIES if n not in signed]
-        # declared re-signs consume window slots too — count the full demand
-        resigns = [n for n in _RESIGN if n in QUERIES and n in signed]
-        demand = len(unsigned) + len(resigns)
-        # the rotation backlog: signed names whose latest driver row is
-        # r1/r2-era (stale signatures queued for refresh, r8-r10 plan)
-        stale = [n for n in QUERIES if latest.get(n, 99) <= 2]
-        from data_integration_spark.queries import PENDING_R10
-
-        print(
-            f"[bench] signing debt: {len(unsigned)} unsigned + "
-            f"{len(resigns)} re-signs = {demand} vs 50-slot driver window "
-            f"({'OK' if demand <= 50 else 'OVERFLOW'}); "
-            f"r1/r2-era rotation backlog: {len(stale)}; "
-            f"r10-staged (PENDING_R10, oracle-verified, will claim window "
-            f"slots at flip): {len(PENDING_R10)}",
-            file=sys.stderr,
-        )
-    except Exception:  # noqa: BLE001 — diagnostics must never break bench
-        pass
     spark = get_spark(app_name="bench")
     # warm the JVM + parquet footers once (not measured per-query)
     QUERIES["q_scan_parquet"](spark, sf_dir).write.format("noop").mode(
@@ -166,14 +129,10 @@ def main() -> None:
         spreads[name] = round(max(passes) - min(passes), 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # r16 (VERDICT r15 #1): the driver's capture of BENCH_r14's stdout was
-    # truncated and the round-over-round comparison was lost. Defend the
-    # contract line: per-query SPREAD diagnostics move to stderr (halving
-    # the line), and the one-line JSON is printed LAST — after spark.stop(),
-    # so no late JVM output can land after it — followed by an explicit
-    # flush. The parsed schema is otherwise identical to r15 minus the
-    # "spread" key (a diagnostic the driver never consumed; VERDICT r15
-    # explicitly asked for it to move out of the line).
+    # stdout carries exactly ONE JSON line (the driver's contract), printed
+    # LAST — after spark.stop(), so no late JVM output lands after it, and
+    # in a finally, so a failing stop cannot swallow it. Per-query spreads
+    # are diagnostics and go to stderr.
     print(json.dumps({"spread": spreads}), file=sys.stderr)
     line = json.dumps(
         {
@@ -195,9 +154,11 @@ def main() -> None:
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         }
     )
-    spark.stop()
-    print(line)
-    sys.stdout.flush()
+    try:
+        spark.stop()
+    finally:
+        print(line)
+        sys.stdout.flush()
 
 
 if __name__ == "__main__":

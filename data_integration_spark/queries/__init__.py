@@ -45,169 +45,10 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# --- staged registrations (the r15-staged r16 payload) -------------------
-# When a driver signing window is already fully planned, NEW queries stage
-# here instead of registering (each entry: name -> (fn, oracle_sql or
-# None)); tests/test_pending_r10.py runs every entry through the same
-# DuckDB parity harness as the live registry, so the eventual flip — move
-# each entry into @register, lead _SIGN_PRIORITY with the names, add
-# replaced names to _RESIGN — is attestation, not discovery. The round-9
-# payload (3 multimodal t2 certificates, the pinned-centroid IVF
-# persist/append full-oracle upgrades, q_image_dedup_dhash) flipped into
-# @register at the r10 window exactly as staged; the r11-staged payload
-# (q_streaming_bloom, q_bpe_apply) flipped at the r12 window; the
-# 9-entry r12-staged payload (F-S linkage family, Misra-Gries batch +
-# streaming, GK quantiles, OPQ, planted streaming semantic dedup)
-# flipped at the r13 window; the 4-entry r13-staged payload
-# (q_quality_nb_filter, q_crossmodal_dedup, q_overlap_kmv,
-# q_survey_covmat) flipped at the r14 window the same way; the 5-entry
-# r14-staged payload (q_semdedup, q_corpus_map, q_url_canonicalize,
-# q_crawl_frontier, q_quality_calibration) flipped at the r15 window.
-#
-# A name that ALREADY exists in QUERIES marks a REPLACEMENT: the staged
-# fn+oracle upgrade a currently rows-only query to full-oracle.
-PENDING_R10: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def register_pending(name: str, oracle: str | None = None):
-    """Stage a query for a future signing window (see ``PENDING_R10``)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in PENDING_R10:
-            raise ValueError(f"duplicate pending query name {name!r}")
-        PENDING_R10[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-# Names with no driver CORRECTNESS row in any prior round, in the order they
-# should be (re-)signed: the external driver checks exactly the FIRST 50
-# registered queries per round (CORRECTNESS_r01/r02 == the first 50 of their
-# round's registration order), so the unsigned remainder rotates to the front.
-# Statistical flagships (the reference's C1/C3 shapes) lead in case the window
-# ever shrinks. Maintained per round: names signed in CORRECTNESS_r{N} leave,
-# new queries join at the tail of the front block.
-_SIGN_PRIORITY: list[str] = [
-    # --- r15 window (VERDICT r14 #1/#6). The r14 signing run went 50/50
-    # (47 full-oracle + 3 contract-permitted rows-only, 0 failures), so
-    # every r14-window name has a current driver row and leaves the list.
-    # r15 slots:
-    # (a) the 5 r14-staged ops flipped live this round — q_semdedup
-    #     (SemDeDup cluster-then-dedup mapping) + q_corpus_map
-    #     (per-cluster cartography rollup), q_url_canonicalize +
-    #     q_crawl_frontier (RFC 3986-subset canonicalization + host
-    #     politeness frontier), q_quality_calibration (NB-filter
-    #     threshold sweep) — all full-oracle, parity-verified at all 3
-    #     driver SFs while staged AND independently re-verified by the
-    #     r14 judge (15/15 PASS);
-    # (b) the 11 remaining r7-era names (the oldest live signatures);
-    # (c) 34 of the 50 r8-era names (alphabetical).
-    # (a) flipped r15 payload ----------------------------------------------
-    "q_semdedup",
-    "q_corpus_map",
-    "q_url_canonicalize",
-    "q_crawl_frontier",
-    "q_quality_calibration",
-    # (b) r7-era rotation, all 11 remaining --------------------------------
-    "q_rolling_regression",
-    "q_sketch_bounds",
-    "q_streaming_index_append",
-    "q_streaming_pq_encode",
-    "q_substring_dedup",
-    "q_substring_dedup_apply",
-    "q_time_gapfill",
-    "q_training_order_shuffle",
-    "q_triangle_count",
-    "q_window_count_distinct",
-    "q_zorder_key",
-    # (c) r8-era rotation, 34 of 50 ----------------------------------------
-    "q_approx_distinct",
-    "q_approx_quantile",
-    "q_calibration_bins",
-    "q_changepoint",
-    "q_churn_labels",
-    "q_cohens_kappa",
-    "q_cuped",
-    "q_deletion_cascade",
-    "q_drop_cols",
-    "q_ece",
-    "q_freq_items",
-    "q_holt_linear",
-    "q_item_item_cf",
-    "q_k_anonymity",
-    "q_l_diversity",
-    "q_linear_interpolation",
-    "q_mrl_truncation_recall",
-    "q_multimodal_decode",
-    "q_mutual_information",
-    "q_ndcg",
-    "q_negative_sampling",
-    "q_oov_rate",
-    "q_out_of_order_audit",
-    "q_pr_curve",
-    "q_price_volume_mix",
-    "q_raking_weights",
-    "q_rank_fusion",
-    "q_rename",
-    "q_report_final",
-    "q_roc_auc",
-    "q_salted_join",
-    "q_scan_parquet",
-    "q_seasonal_decompose",
-    "q_select_project",
-]  # the driver's r15 window = first 50 registered
-#
-# r16 window sketch (VERDICT r14 #6): (a) whatever stages live this
-# round flips first (the SemDeDup trained-centroid production pair +
-# any new-capability entries — see PENDING_R10), then (b) the 16 r8-era
-# names left after this window's slot (c) —
-# q_semantic_threshold_sweep, q_setsim_prefix_join, q_sink_roundtrip,
-# q_skew_report, q_sorted_neighborhood, q_sorted_neighborhood_multipass,
-# q_spearman_rank_corr, q_streaming_late_drop,
-# q_survey_pipeline_certificate, q_target_encoding, q_tfidf_knn,
-# q_theil_sen, q_time_to_convert, q_todf_headers, q_welch_ttest,
-# q_zorder_pruning — then (c) r9-era names (alphabetical) to fill 50.
-# After r15 lands the signature-age histogram is r8: 16, r9–r14: 50
-# each, r15: 50 — oldest signature moves r7 → r8.
-
-# Names that HAVE a prior CORRECTNESS row but need a fresh signature anyway
-# because a code change invalidated what the row attests to. Empty for r15.
-#
-# Build-phase changes (the interrupted r15 build session): the only change
-# to an ALREADY-SIGNED query was the NB filter's token-key
-# dictionary-encode (operators/nb_classifier.py) — result-preserving by
-# VERIFICATION: outputs pinned bit-identical pre/post refactor at
-# sf0.001+sf0.01, oracle re-verified at sf0.1, and
-# tests/test_nb_classifier.py pins ZERO hash collisions on every driver
-# SF's actual vocabulary. The q_crawl_frontier _politeness_stats
-# extraction is expression-identical and the ivf.train_centroids
-# extraction verbatim (oracles re-verified).
-#
-# OPTIMIZATION-round changes (r15, OPTIMIZATION_r15.md): every rewrite is
-# result-preserving by verification, not just argument — the full
-# 54-query touched set (multimodal dedups, minhash, winnowing, KMV,
-# linkage certificate, unigram, BPE apply, IVF/PQ/OPQ/LSH, simhash,
-# substring, semdedup) passes its DuckDB oracle at ALL THREE driver SFs
-# on the final tree, and the full registry sweep is 366/366 at sf0.01.
-# The only float-path rewrites (coordinator KMV merge, driver-side F-S
-# pattern rollup, fused OPQ statistic passes) replay the engine
-# expressions term-for-term (incl. BigDecimal-HALF_UP rounding via
-# _np_round_half_up) or feed slack-bounded integer laws — detailed
-# per-query equivalence arguments live in OPTIMIZATION_r15.md.
-_RESIGN: frozenset[str] = frozenset()
-
-
 def load_all() -> None:
-    """Import every query module (side effect: registration), then rotate
-    ``_SIGN_PRIORITY`` names to the FRONT of the registry.
-
-    ORDER MATTERS for the external driver: rounds 1 and 2 each recorded
-    exactly the first 50 registered queries, so a 50-query budget taken in
-    registration order is assumed. Module import order alone cannot express
-    the needed order (signed and unsigned queries interleave within
-    modules), so the registry dicts are explicitly rebuilt with the
-    still-unsigned names first."""
+    """Import every query module. Registration is an import side effect,
+    so the registry is in the order the ``@register`` calls run during
+    these imports."""
     from data_integration_spark.queries import (  # noqa: F401
         multimodal_queries,
         similarity_queries,
@@ -233,11 +74,3 @@ def load_all() -> None:
         tokenizer_unigram,
     )
 
-    front = [n for n in _SIGN_PRIORITY if n in QUERIES]
-    ordered = front + [n for n in QUERIES if n not in set(front)]
-    for registry in (QUERIES, ORACLES):
-        snapshot = dict(registry)
-        registry.clear()
-        registry.update(
-            (n, snapshot[n]) for n in ordered if n in snapshot
-        )

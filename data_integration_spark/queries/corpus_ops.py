@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_spark.dedup.components import _truncate_lineage
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.similarity.ann import as_double_array, with_norm
 from data_integration_spark.sources.catalog import Catalog, spread_scan
 
@@ -1699,7 +1699,7 @@ def _bpe_apply_oracle() -> str:
     left ≠ right (no overlapping-occurrence ambiguity) and no symbol in
     the pinned system is a suffix/prefix of another in a way that lets
     'left right' match across token boundaries (argued merge-by-merge in
-    the staged query's docstring)."""
+    q_bpe_apply's docstring)."""
     expr = "ARRAY_TO_STRING(STRING_SPLIT(key, ''), ' ')"
     for _rank, left, right, _c in _BPE_PIN_MERGES:
         expr = f"REPLACE({expr}, '{left} {right}', '{left}{right}')"
@@ -1716,9 +1716,7 @@ def _bpe_apply_oracle() -> str:
 
 @register("q_bpe_apply", oracle=_bpe_apply_oracle())
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE/apply (staged r11 under the r9 PENDING precedent,
-    flipped live at the r12 window): a first-class query with a FULL
-    oracle — the
+    """BPE ENCODE/apply: a first-class query with a FULL oracle — the
     tokenizer-apply sibling of q_unigram_encode. The REAL greedy
     left-to-right merge replay (``operators/bpe.py::apply_merges`` — the
     exact fold training uses, certified train/apply-consistent by
@@ -2038,8 +2036,7 @@ def q_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- bytes-per-token compression-ratio quality signal (staged r15 for
-# the r16 window; VERDICT r14 #5 option (c), shipped alongside (b)) ------
+# --- bytes-per-token compression-ratio quality signal -------------------
 
 #: integer thresholds for the per-doc flags — both are SIGN TESTS on
 #: 64-bit integers, so no float ever decides a flag:
@@ -2087,13 +2084,13 @@ GROUP BY source
 """
 
 
-@register_pending("q_compression_ratio", oracle=_COMPRESSION_ORACLE)
+@register("q_compression_ratio", oracle=_COMPRESSION_ORACLE)
 def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source bytes-per-token compression-ratio quality card (staged
-    r15 — VERDICT r14 #5 option (c)): the tokenizer-aware cost signal a
-    pretraining pipeline reads before spending tokenizer/training
-    budget on a source. Two token denominators per document — greedy
-    whitespace tokens and a BPE-ish pre-tokenization regex
+    """Per-source bytes-per-token compression-ratio quality card: the
+    tokenizer-aware cost signal a pretraining pipeline reads before
+    spending tokenizer/training budget on a source. Two token
+    denominators per document — greedy whitespace tokens and a BPE-ish
+    pre-tokenization regex
     ``[A-Za-z0-9]+|[^A-Za-z0-9 ]`` (alnum runs + every other non-space
     byte, the word/punct split GPT-2-style pre-tokenizers make; the
     alternation counts identically under Java regex and RE2: at an

@@ -1,10 +1,6 @@
-"""Round-4 block, continued: training-data curation depth — rule-based
-quality gates (Gopher-style), embedding quantization, and overlapping
-context-window chunking.
-
-Wired into ``load_all()`` since r4 (the r3 advisor caught that the module
-was never imported); the names sit at the tail of ``_SIGN_PRIORITY``'s
-unsigned backlog.
+"""Training-data curation depth — rule-based quality gates
+(Gopher-style), embedding quantization, overlapping context-window
+chunking, and URL/crawl-frontier curation.
 """
 
 from __future__ import annotations
@@ -12,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "for")
@@ -554,15 +550,14 @@ def _politeness_stats(df, n_raw, n_pages) -> DataFrame:
     )
 
 
-# --- streaming/incremental crawl-frontier maintenance (staged r15 for
-# the r16 window; VERDICT r14 #5 option (a), shipped alongside (b)/(c))
+# --- streaming/incremental crawl-frontier maintenance ------------------
 
 
-@register_pending("q_streaming_crawl_frontier", oracle=_CRAWL_FRONTIER_ORACLE)
+@register("q_streaming_crawl_frontier", oracle=_CRAWL_FRONTIER_ORACLE)
 def q_streaming_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL crawl-frontier maintenance (staged r15 — VERDICT r14
-    #5 option (a)): the raw crawl manifest arrives as a STREAM (4-file
-    replay, maxFilesPerTrigger=1 → ≥ 4 real micro-batches), each batch
+    """INCREMENTAL crawl-frontier maintenance: the raw crawl manifest
+    arrives as a STREAM (4-file replay, maxFilesPerTrigger=1 → ≥ 4 real
+    micro-batches), each batch
     canonicalizes in-flight (functions/url.py — stateless narrow
     expressions, streaming-legal) and foreachBatch-merges into the
     per-(host, canon_url) frontier table with ADDITIVE counters

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 
 

@@ -34,7 +34,7 @@ from data_integration_spark.multimodal.binary_ops import (
     sample_frames,
     sample_video_frames,
 )
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 
 
@@ -208,8 +208,8 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(_payload_df(spark, sf_dir), every_n_bytes=64)
 
 
-# --- r10-staged queries (PENDING_R10): the r8 multimodal LIBRARY ops
-# (VERDICT r8 #4) as registry-grade t2 queries with arithmetic oracles.
+# --- the multimodal LIBRARY ops as registry-grade t2 queries with
+# arithmetic oracles.
 # Same fixture discipline as q_multimodal_decode: payload parameters are
 # SQL-expressible column arithmetic, the op runs the REAL codec path, and
 # DuckDB predicts the decoder's output from the base table alone.

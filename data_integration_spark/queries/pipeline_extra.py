@@ -1,9 +1,5 @@
-"""Round-4 block: large-scale pipeline operators beyond the r3-signed
-surface — quota sampling, snapshot diffing, SCD2 builds, inverted
-indexing, outlier filtering, and sequence packing.
-
-These register AFTER the 50-query sign window (see queries/__init__.py
-_SIGN_PRIORITY); next round rotates them to the front.
+"""Large-scale pipeline operators — quota sampling, snapshot diffing,
+SCD2 builds, inverted indexing, outlier filtering, and sequence packing.
 """
 
 from __future__ import annotations

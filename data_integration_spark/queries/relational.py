@@ -30,7 +30,7 @@ from data_integration_spark.operators.projections import (
     one_hot,
     set_headers,
 )
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]

@@ -890,8 +890,7 @@ def _bloom_certificate(spark, sf_dir, keys, fpos):
 
 @register("q_streaming_bloom", oracle=_BLOOM_ORACLE)
 def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING Bloom-filter maintenance (staged r11 under the r9
-    PENDING precedent, flipped live at the r12 window). Dim keys
+    """STREAMING Bloom-filter maintenance. Dim keys
     ('BUILDING' customers) arrive as micro-batches (file replay, even
     then odd c_custkey); each ``foreachBatch`` hashes ONLY its own keys
     and APPENDS the bit positions to the filter store; the read side

@@ -5,8 +5,7 @@ correlated derived tables, and recursive CTEs (Spark 4).
 
 SQL-native features run through ``spark.sql`` over ``register_views``
 (reference S3 bridge, zero data movement); set-shaped queries stay in the
-DataFrame API. Registers after the 50-query sign window — next round's
-rotation block.
+DataFrame API.
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_spark.dedup.minhash import minhash_lsh_pairs
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.similarity.ann import (
     as_double_array,
     cosine_pairs,
@@ -330,8 +330,7 @@ def q_ann_lsh_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r10 PINNED-CENTROID upgrades (flipped from PENDING_R10 in the r10
-# window, VERDICT r8 #7 → r9 #1):
+# --- PINNED-CENTROID IVF persist/append:
 # q_ann_ivf_persist / q_ann_ivf_append re-emitted with centroids set to
 # LITERAL vectors via the load-path mechanism (the r6 pinned-plane LSH
 # oracle pattern), so the ENTIRE persisted/appended-index search — cell
@@ -349,7 +348,7 @@ def q_ann_lsh_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # margin at the ~1e-13 reduction-noise scale. The measured margins on
 # the harness data are ≥ 3e-5 (assignment) / ≥ 4e-5 (probe boundary),
 # eight orders above the floor, and pinned per-SF by
-# tests/test_pending_r10.py::test_pinned_centroid_margins_dominate_fp_noise
+# tests/test_index_persist.py::test_pinned_centroid_margins_dominate_fp_noise
 # so a testdata change re-derives the argument before an oracle flake.
 
 _PIN_CELLS = 8
@@ -429,8 +428,8 @@ def pinned_centroid_grid() -> list[list[float]]:
     bit-identically; the grid spans the testdata embedding range
     ([-0.53, 0.46]) so cells are non-degenerate. SINGLE SOURCE OF TRUTH
     for the Spark builder below AND the float-safety margin pin
-    (tests/test_pending_r10.py) — only the DuckDB oracle necessarily
-    restates the formula in SQL, and the staged parity tests hash-check
+    (tests/test_index_persist.py) — only the DuckDB oracle necessarily
+    restates the formula in SQL, and the oracle parity tests hash-check
     that restatement against this one at every SF."""
     return [
         [((c * 7 + j * 13) % 11 - 5) / 10.0 for j in range(_PIN_DIM)]
@@ -2347,24 +2346,21 @@ def q_corpus_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- SemDeDup PRODUCTION-config attestation (staged r15 for the r16
-# window; VERDICT r14 #3). q_semdedup's signed artifact exercises the
+# --- SemDeDup PRODUCTION-config attestation. q_semdedup exercises the
 # pinned 8-cell ORACLE grid; the scale story (sf10: 3.77 s trained
 # K≈√N vs 209.7 s pinned-8 on the same 200k vectors, SCALING.md) rests
-# on the TRAINED-centroid path — which until now was only a rehearsal
-# measurement. The q_ann_ivf precedent closes that gap: a rows-only
-# fitted-centroid query (centroids are engine-internal — no SQL oracle
-# can restate a Lloyd fit) plus a full-oracle invariant CERTIFICATE
-# whose violation counts are engine-independent literals, so the path
-# that ships at scale is driver-attested, not just measured. ----------
+# on the TRAINED-centroid path. The q_ann_ivf precedent covers it: a
+# rows-only fitted-centroid query (centroids are engine-internal — no
+# SQL oracle can restate a Lloyd fit) plus a full-oracle invariant
+# CERTIFICATE whose violation counts are engine-independent literals. --
 
 
 def _semdedup_trained_decisions(spark: SparkSession, sf_dir: str):
     """The shared trained-path build: fit K ≈ √N centroids with the IVF
     family's OWN bounded deterministic trainer (ivf.py::train_centroids —
     content-keyed xxhash subsample, id-sorted collect, driver-side
-    Lloyd; seed 11), then run the SAME semdedup_decisions kernel the
-    signed q_semdedup runs — only the centroid source changes (the
+    Lloyd; seed 11), then run the SAME semdedup_decisions kernel
+    q_semdedup runs — only the centroid source changes (the
     q_ann_ivf pinned/fitted split). Returns the 5-tuple
     (decisions, corpus, centroids, n_real, k) — the certificate reuses
     ``corpus`` so the planted spec (every vec_id ≡ 5 mod 23 duplicated
@@ -2390,7 +2386,7 @@ def _semdedup_trained_decisions(spark: SparkSession, sf_dir: str):
     return dec, corpus, cents, n_real, k
 
 
-@register_pending("q_semdedup_trained")  # rows-only: trained centroids are
+@register("q_semdedup_trained")  # rows-only: trained centroids are
 # engine-internal (a Lloyd fit is not SQL-restatable); the invariant
 # certificate sibling below is the full-oracle attestation
 def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2399,12 +2395,12 @@ def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     K=50k on LAION; K ≈ √N keeps every cell GEMM-sized so the
     within-cell pair space is linear-times-constant, not quadratic).
     Same per-vector mapping (vec_id, cell, cent_cos, keep) and kernel
-    as the signed q_semdedup; only the centroid source changes."""
+    as q_semdedup; only the centroid source changes."""
     dec, _corpus, _c, _n, _k = _semdedup_trained_decisions(spark, sf_dir)
     return dec
 
 
-@register_pending(
+@register(
     "q_semdedup_certificate",
     # invariants-certificate oracle (the q_ann_ivf_invariants pattern):
     # the trained centroids stay engine-internal, but the properties any
@@ -2565,8 +2561,7 @@ def q_semdedup_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- MinHash candidate-verify EDIT-DISTANCE tier (staged r15 for the
-# r16 window; VERDICT r14 #5 option (b)) --------------------------------
+# --- MinHash candidate-verify EDIT-DISTANCE tier ------------------------
 
 _EDIT_VERIFY_ORACLE = """
 WITH docs_p AS (
@@ -2617,15 +2612,14 @@ FROM lv
 """
 
 
-@register_pending("q_dedup_edit_verify", oracle=_EDIT_VERIFY_ORACLE)
+@register("q_dedup_edit_verify", oracle=_EDIT_VERIFY_ORACLE)
 def q_dedup_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-verify EDIT-DISTANCE tier for MinHash dedup (staged r15
-    — VERDICT r14 #5 option (b)): banded-LSH candidates → exact shingle
-    Jaccard ≥ 0.4 (the signed q_dedup_minhash stage) → character-level
-    Levenshtein tiering on the surviving pairs only. Closes the
-    precision gap the shingle stage is structurally blind to: Jaccard
-    over distinct word bigrams cannot tell an identical copy from a
-    document CONCATENATED WITH ITSELF (both score J ≈ 1), while their
+    """Candidate-verify EDIT-DISTANCE tier for MinHash dedup: banded-LSH
+    candidates → exact shingle Jaccard ≥ 0.4 (the q_dedup_minhash stage)
+    → character-level Levenshtein tiering on the surviving pairs only.
+    Closes the precision gap the shingle stage is structurally blind to:
+    Jaccard over distinct word bigrams cannot tell an identical copy from
+    a document CONCATENATED WITH ITSELF (both score J ≈ 1), while their
     edit distances are 0 vs ≥ the document length. Two planted
     families keep every tier non-vacuous both ways:
 

@@ -17,7 +17,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_integration_spark.queries import register, register_pending
+from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 from data_integration_spark.streaming.joins import (
     clicks_before_purchase,
@@ -1386,10 +1386,7 @@ def q_streaming_semantic_dedup_planted(
     guarantees ≥ 6 emitted pairs at ANY SF, exercising the symmetric
     co-probe candidate rule, the cosine scorer, the canonicalization,
     and the registry append path on a NON-empty set. FULL oracle: the
-    natural oracle with the identical planting applied to its ``e`` CTE.
-    STAGED for the r13 window (the r9/r11 PENDING precedent — the r12
-    window is full); until the flip it rides the staging parity gate
-    (tests/test_pending_r10.py) and the order-independence pytest."""
+    natural oracle with the identical planting applied to its ``e`` CTE."""
     tag = os.path.basename(sf_dir.rstrip("/"))
     return _sem_stream_pairs(
         spark,

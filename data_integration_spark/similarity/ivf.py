@@ -273,7 +273,7 @@ class IVFIndex:
         the FIRST minimum = lowest cell id, bit-matching the struct-min
         (cdist, cell) tie-break; cross-formulation float-disagreement is
         bounded by reduction-order noise (~1e-13), eight orders under
-        the pinned decision margins (tests/test_pending_r10.py), and the
+        the pinned decision margins (tests/test_index_persist.py), and the
         invariants certificate re-checks every emitted cell against an
         independently written argmin every round."""
         import pandas as pd

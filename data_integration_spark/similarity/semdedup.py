@@ -17,7 +17,7 @@ discipline of similarity_queries.py):
   engine-independent);
 - cell assignment is squared-Euclidean argmin with (distance, cell)
   tie-break — decision margins on this grid/testdata are pinned ≥ 1e-5
-  (tests/test_pending_r10.py), eight orders above reduction-order noise,
+  (tests/test_index_persist.py), eight orders above reduction-order noise,
   and planted exact copies inherit their original's distances so they
   can never split cells;
 - the pairwise cosine and the centroid cosine are rounded on the

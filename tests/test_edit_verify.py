@@ -1,6 +1,5 @@
 """Laws for the MinHash candidate-verify edit-distance tier
-(dedup/minhash.py::edit_verify_pairs, staged q_dedup_edit_verify —
-VERDICT r14 #5 option (b)):
+(dedup/minhash.py::edit_verify_pairs, q_dedup_edit_verify):
 
 1. tier non-vacuity: the registered query exercises ALL THREE tiers on
    the driver corpora (a tier no pair ever reaches would make its
@@ -25,6 +24,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_integration_spark.dedup.minhash import edit_verify_pairs
+from data_integration_spark.queries import QUERIES, load_all
+
+load_all()
 
 
 def _py_lev(a: str, b: str) -> int:
@@ -78,18 +80,9 @@ def test_unit_semantics_match_python_reference(spark):
             assert r["tier"] == want_tier, (d1, d2)
 
 
-def _staged_query(spark, sf_dir):
-    from data_integration_spark.queries import PENDING_R10, QUERIES, load_all
-
-    load_all()
-    if "q_dedup_edit_verify" in QUERIES:  # post-flip
-        return QUERIES["q_dedup_edit_verify"](spark, sf_dir)
-    return PENDING_R10["q_dedup_edit_verify"][0](spark, sf_dir)
-
-
 def test_all_three_tiers_non_vacuous_and_planted_recall(spark):
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        rows = _staged_query(spark, sf).collect()
+        rows = QUERIES["q_dedup_edit_verify"](spark, sf).collect()
         tiers = {r["tier"] for r in rows}
         assert tiers == {"exact", "near_exact", "band_far"}, (sf, tiers)
         by_pair = {(r["d1"], r["d2"]): r for r in rows}

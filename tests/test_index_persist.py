@@ -627,3 +627,36 @@ def test_winnowing_registry_compaction_preserves_loads(spark):
     assert _rows(after_fp) == before_fp_rows
     assert _rows(after_df) == before_df_rows
     assert len(glob.glob(path + "/df/*.parquet")) < n_parts_before
+
+
+def test_pinned_centroid_margins_dominate_fp_noise():
+    """The pinned-centroid IVF oracles (q_ann_ivf_persist/_append, LIVE
+    since the r10 flip) compare UNROUNDED squared-distance argmins across
+    engines whose summation ORDERS differ (Spark: sequential zip_with
+    fold; DuckDB: unordered SUM over unnest) — safe only if the decision
+    margins dwarf reduction-order noise (~dd·ε·dims ≈ 1e-13 at dd≈6.5).
+    This pins the measured margins on every harness SF: the smallest
+    best-vs-second-best assignment gap and the smallest probe-boundary
+    (3rd-vs-4th cell) gap are ≥ 1e-5 — eight orders above the noise
+    floor, so a cross-engine argmin flip cannot occur on this data. (The
+    sf10 rehearsal corpus replicates sf0.1's embeddings, so its margins
+    are identical.) If the testdata ever changes, this test re-derives
+    the safety argument or fails loudly BEFORE an oracle flake would."""
+    import duckdb
+    import numpy as np
+
+    from data_integration_spark.queries.similarity_queries import (
+        pinned_centroid_grid,
+    )
+
+    C = np.array(pinned_centroid_grid())
+    for sf in ("0.001", "0.01", "0.1"):
+        pdf = duckdb.sql(
+            "SELECT embedding FROM "
+            f"'/root/testdata/sf{sf}/embeddings.parquet'"
+        ).df()
+        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        s = np.sort(d, axis=1)
+        assert (s[:, 1] - s[:, 0]).min() > 1e-5, sf  # assignment argmin
+        assert (s[:, 3] - s[:, 2]).min() > 1e-5, sf  # nprobe=3 boundary

@@ -384,54 +384,153 @@ _PLAN_LINT_EXCLUDED = {
 }
 
 
-def test_no_unexpected_nested_loop_joins(spark):
-    """Registry-wide plan lint: a CartesianProduct anywhere, or a
-    BroadcastNestedLoopJoin outside the bounded-by-construction allowlist,
-    is an all-pairs scale bug waiting for 100×. A query whose builder
-    errors is NOT silently exempt (ADVICE r4) — it fails the lint by name
-    so un-lintable plans are a visible, deliberate decision."""
-    from data_integration_spark.queries import PENDING_R10
+#: Queries whose UNPARTITIONED windows run over frames that are bounded
+#: by the DOMAIN of a post-aggregation group key — provably small at any
+#: corpus scale, but not detectable by `unbounded_global_windows`'s
+#: automatic rule (which only proves boundedness from an explicit
+#: limit-shaped operator below the window). Each entry documents the
+#: bounding argument; anything NOT listed here that
+#: windows an unaggregated or corpus-keyed frame without partitionBy
+#: fails the registry plan lint.
+_GLOBAL_WINDOW_BOUNDED = {
+    # total-sum window over the 9-row leading-digit aggregate
+    "q_benford",
+    # row_number over the per-DAY event aggregate (calendar-granularity)
+    "q_changepoint",
+    # margin/total windows over the |event_type|×7 contingency cells
+    "q_chi_square",
+    # at-risk prefix window over DISTINCT event durations (the KM grid)
+    "q_kaplan_meier",
+    # lag window over the per-MONTH revenue aggregate
+    "q_mom_growth",
+    # centered moving average over the per-DAY revenue aggregate
+    "q_seasonal_decompose",
+    # total-sum window over the |sources|-row token-count aggregate
+    "q_temperature_mix",
+}
 
-    failures = []
-    errored: dict[str, str] = {}
-    # r10-staged queries (PENDING_R10) are linted under the SAME per-name
-    # allowlist they will register with — plan discipline is part of what
-    # the staging gate pre-verifies
+
+def _lint_plans(spark, queries) -> tuple[dict[str, list[str]], dict[str, str]]:
+    """Build each ``(name, fn)`` once under ``capture_truncated_subtrees``
+    and run both registry plan lints on the final plan AND on every
+    checkpointed subtree's pre-truncation plan (a lineage cut hides its
+    input from the final plan):
+
+    - all-pairs join: a CartesianProduct anywhere, or a
+      BroadcastNestedLoopJoin outside ``_BNLJ_ALLOWED``, is an all-pairs
+      scale bug waiting for 100×;
+    - unbounded global window: an unpartitioned window over a frame that
+      is neither post-limit (TakeOrderedAndProject / GlobalLimit below
+      it) nor domain-bounded (``_GLOBAL_WINDOW_BOUNDED``) is a single-task
+      funnel at 100 TB.
+
+    Returns the failures per lint, plus the builders that errored: an
+    un-lintable plan must be a visible, deliberate decision, so callers
+    fail on those by name too."""
     from data_integration_spark.dedup.components import (
         capture_truncated_subtrees,
     )
+    from data_integration_spark.plans.explain import unbounded_global_windows
 
-    staged = [(f"{n} [staged]", n, fn) for n, (fn, _o) in PENDING_R10.items()]
-    live = [(n, n, fn) for n, fn in QUERIES.items()]
-    for label, name, fn in sorted(staged + live):
+    failures: dict[str, list[str]] = {
+        "all-pairs join": [],
+        "unbounded global window": [],
+    }
+    errored: dict[str, str] = {}
+    for name, fn in queries:
         if name in _PLAN_LINT_EXCLUDED:
             continue
-        # r16 (VERDICT r15 #2): checkpointed subtrees are invisible in the
-        # final plan, so each lineage cut's PRE-truncation plan is captured
-        # and linted too — a CartesianProduct hidden behind a checkpoint
-        # fails by name (tests/test_components.py proves the mechanism)
         try:
             with capture_truncated_subtrees() as subtrees:
-                plans = [(label, formatted_plan(fn(spark, SF)))]
-            plans += [
-                (f"{label} [subtree {i}]", formatted_plan(sub))
-                for i, sub in enumerate(subtrees)
+                dfs = [(name, fn(spark, SF))]
+            dfs += [
+                (f"{name} [subtree {i}]", sub) for i, sub in enumerate(subtrees)
             ]
+            window_hits = []
+            for label, df in dfs:
+                plan = formatted_plan(df)
+                if "CartesianProduct" in plan:
+                    failures["all-pairs join"].append(
+                        f"{label}: CartesianProduct"
+                    )
+                elif "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWED:
+                    failures["all-pairs join"].append(
+                        f"{label}: BroadcastNestedLoopJoin not allowlisted"
+                    )
+                if name not in _GLOBAL_WINDOW_BOUNDED:
+                    window_hits += [
+                        (label, h) for h in unbounded_global_windows(df)
+                    ]
         except Exception as exc:  # noqa: BLE001 — reported below, not swallowed
-            errored[label] = f"{type(exc).__name__}: {exc}"[:200]
+            errored[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
-        for plabel, plan in plans:
-            if "CartesianProduct" in plan:
-                failures.append(f"{plabel}: CartesianProduct")
-            elif "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWED:
-                failures.append(
-                    f"{plabel}: BroadcastNestedLoopJoin not allowlisted"
-                )
-    assert not failures, failures
+        if window_hits:
+            label, hit = window_hits[0]
+            failures["unbounded global window"].append(f"{label}: {hit[:120]}")
+    return failures, errored
+
+
+@pytest.fixture(scope="module")
+def registry_plan_lints(spark):
+    """One ``_lint_plans`` walk over the whole registry, shared by the two
+    lint tests below so each query is built once."""
+    return _lint_plans(spark, sorted(QUERIES.items()))
+
+
+def _assert_lint_clean(registry_plan_lints, lint: str) -> None:
+    """A query whose builder errors is NOT silently exempt — it fails by
+    name. Offenders get fixed, not allowlisted, so the anti-patterns
+    cannot come back."""
+    failures, errored = registry_plan_lints
+    assert not failures[lint], failures[lint]
     assert not errored, (
-        "query builders errored during plan lint — fix them or add to "
+        "query builders errored during the plan lints — fix them or add to "
         f"_PLAN_LINT_EXCLUDED deliberately: {errored}"
     )
+
+
+def test_no_unexpected_nested_loop_joins(registry_plan_lints):
+    """Registry-wide all-pairs-join lint (see ``_lint_plans``)."""
+    _assert_lint_clean(registry_plan_lints, "all-pairs join")
+
+
+def test_no_unbounded_global_windows(registry_plan_lints):
+    """Registry-wide unbounded-global-window lint (see ``_lint_plans``)."""
+    _assert_lint_clean(registry_plan_lints, "unbounded global window")
+
+
+def test_plan_lints_flag_planted_violations(spark):
+    """The folded lint still fails on each planted anti-pattern: a
+    CartesianProduct hidden behind a lineage cut, and an unpartitioned
+    window over an unbounded frame."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from data_integration_spark.dedup.components import _truncate_lineage
+
+    def hidden_cartesian(s, _sf):
+        a = s.range(3).hint("shuffle_replicate_nl")
+        b = s.range(3).withColumnRenamed("id", "id2")
+        return _truncate_lineage(a.crossJoin(b)).groupBy().count()
+
+    def global_window(s, _sf):
+        rn = F.row_number().over(Window.orderBy("id"))
+        return s.range(1000).withColumn("rn", rn)
+
+    failures, errored = _lint_plans(
+        spark,
+        [
+            ("q_planted_cartesian", hidden_cartesian),
+            ("q_planted_window", global_window),
+        ],
+    )
+    assert not errored, errored
+    assert failures["all-pairs join"] == [
+        "q_planted_cartesian [subtree 0]: CartesianProduct"
+    ], failures
+    assert [f.split(":")[0] for f in failures["unbounded global window"]] == [
+        "q_planted_window"
+    ], failures
 
 
 def test_lint_sees_through_checkpoint_boundaries(spark):
@@ -886,79 +985,6 @@ def test_bloom_semi_join_plan_prunes_before_join(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
 
 
-#: Queries whose UNPARTITIONED windows run over frames that are bounded
-#: by the DOMAIN of a post-aggregation group key — provably small at any
-#: corpus scale, but not detectable by `unbounded_global_windows`'s
-#: automatic rule (which only proves boundedness from an explicit
-#: limit-shaped operator below the window). Each entry documents the
-#: bounding argument (VERDICT r13 #3); anything NOT listed here that
-#: windows an unaggregated or corpus-keyed frame without partitionBy
-#: fails the lint below.
-_GLOBAL_WINDOW_BOUNDED = {
-    # total-sum window over the 9-row leading-digit aggregate
-    "q_benford",
-    # row_number over the per-DAY event aggregate (calendar-granularity)
-    "q_changepoint",
-    # margin/total windows over the |event_type|×7 contingency cells
-    "q_chi_square",
-    # at-risk prefix window over DISTINCT event durations (the KM grid)
-    "q_kaplan_meier",
-    # lag window over the per-MONTH revenue aggregate
-    "q_mom_growth",
-    # centered moving average over the per-DAY revenue aggregate
-    "q_seasonal_decompose",
-    # total-sum window over the |sources|-row token-count aggregate
-    "q_temperature_mix",
-}
-
-
-def test_no_unbounded_global_windows(spark):
-    """Registry-wide lint (VERDICT r13 #2/#3): an unpartitioned window
-    over a frame that is neither post-limit (TakeOrderedAndProject /
-    GlobalLimit below it — the scale-safe top-k shape q_top_orders and
-    q_term_cooccurrence now use) nor domain-bounded (the documented
-    whitelist above) is a single-task funnel at 100 TB. The two r13
-    offenders are FIXED, not whitelisted — this keeps the anti-pattern
-    from coming back."""
-    from data_integration_spark.plans.explain import unbounded_global_windows
-    from data_integration_spark.queries import PENDING_R10
-
-    failures = []
-    errored: dict[str, str] = {}
-    from data_integration_spark.dedup.components import (
-        capture_truncated_subtrees,
-    )
-
-    staged = [(f"{n} [staged]", n, fn) for n, (fn, _o) in PENDING_R10.items()]
-    live = [(n, n, fn) for n, fn in QUERIES.items()]
-    for label, name, fn in sorted(staged + live):
-        if name in _PLAN_LINT_EXCLUDED or name in _GLOBAL_WINDOW_BOUNDED:
-            continue
-        # r16 (VERDICT r15 #2): also walk each checkpointed subtree's
-        # pre-truncation plan — see test_no_unexpected_nested_loop_joins
-        try:
-            with capture_truncated_subtrees() as subtrees:
-                hits = [
-                    (label, h)
-                    for h in unbounded_global_windows(fn(spark, SF))
-                ]
-            for i, sub in enumerate(subtrees):
-                hits += [
-                    (f"{label} [subtree {i}]", h)
-                    for h in unbounded_global_windows(sub)
-                ]
-        except Exception as exc:  # noqa: BLE001 — reported below, not swallowed
-            errored[label] = f"{type(exc).__name__}: {exc}"[:200]
-            continue
-        if hits:
-            failures.append(f"{hits[0][0]}: {hits[0][1][:120]}")
-    assert not failures, failures
-    assert not errored, (
-        "query builders errored during the global-window lint — fix them "
-        f"or exclude deliberately: {errored}"
-    )
-
-
 def test_top_orders_and_cooccurrence_use_take_ordered(spark):
     """The VERDICT r13 #2 refactors' positive contract: the top-k cut
     compiles to TakeOrderedAndProject (distributed partial top-k), and
@@ -1009,9 +1035,8 @@ def test_boundedness_walk_semantics(spark):
     assert len(unbounded_global_windows(bad2)) == 1
 
 
-def test_r15_staged_plan_contracts(spark):
-    """Plan contracts for the r15-staged payload (the every-new-heavy-op
-    discipline):
+def test_compression_ratio_and_edit_verify_plan_contracts(spark):
+    """Plan contracts for two heavy curation queries:
 
     - q_compression_ratio is native end-to-end (no Python eval node —
       the regex token count must compile to the codegen builtin, not a
@@ -1021,17 +1046,14 @@ def test_r15_staged_plan_contracts(spark):
       join (every join in the LSH + verify + text-fetch chain is an
       equi-join) and computes lev via the levenshtein BUILTIN.
     """
-    from data_integration_spark.queries import PENDING_R10, load_all
-
-    load_all()
     sf = "/root/testdata/sf0.001"
 
-    comp = PENDING_R10["q_compression_ratio"][0](spark, sf)
+    comp = QUERIES["q_compression_ratio"](spark, sf)
     plan = formatted_plan(comp)
     assert "EvalPython" not in plan, "compression card fell off codegen"
     assert count_shuffles(comp) == 1, plan
 
-    edit = PENDING_R10["q_dedup_edit_verify"][0](spark, sf)
+    edit = QUERIES["q_dedup_edit_verify"](spark, sf)
     plan = formatted_plan(edit)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -5,8 +5,7 @@
    PRE-refactor tree — so the out-of-band-LL E-step refactor
    (``operators/unigram_lm.py::_estep`` now carries the per-batch
    log-likelihood in its own ``ll`` column on a piece-NULL row) is
-   proven result-preserving, which is what keeps q_unigram_* out of
-   ``_RESIGN`` this round.
+   proven result-preserving.
 2. The sentinel key space is GONE: a corpus where the literal
    ``"\\x00__LL__"`` string is a frequent, vocab-resident piece trains
    cleanly, and the distributed E-step matches a driver-side pure-Python

@@ -10,12 +10,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_integration_spark.queries import (  # noqa: E402
-    ORACLES,
-    PENDING_R10,
-    QUERIES,
-    load_all,
-)
+from data_integration_spark.queries import ORACLES, QUERIES, load_all  # noqa: E402
 
 
 def first_sentence(doc: str | None) -> str:
@@ -53,22 +48,6 @@ def main() -> None:
         f"{len(QUERIES) - n_oracle} rows-only.**",
         "",
     ]
-    if PENDING_R10:
-        lines += [
-            "## Staged for the r10 window (PENDING_R10 — not yet registered)",
-            "",
-            "Built and oracle-verified ahead of their signing round "
-            "(tests/test_pending_r10.py); names already in the table above "
-            "are rows-only → full-oracle upgrades at the flip.",
-            "",
-            "| staged query | module | what it does |",
-            "|---|---|---|",
-        ]
-        for name, (fn, _oracle) in PENDING_R10.items():
-            mod = fn.__module__.rsplit(".", 1)[-1]
-            desc = first_sentence(fn.__doc__).replace("|", "\\|")
-            lines.append(f"| `{name}` | {mod} | {desc} |")
-        lines.append("")
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "QUERIES.md",

@@ -36,6 +36,9 @@ def main() -> None:
     ap.add_argument("--tag", default="before")
     ap.add_argument("--no-plans", action="store_true")
     args = ap.parse_args()
+    # clamp to ≥1 like bench.py: with 0 passes there is no min and no
+    # first-pass job count
+    args.passes = max(1, args.passes)
 
     from bench import HEADLINE, LLM_OPS
     from data_integration_spark.queries import QUERIES, load_all
