@@ -10,7 +10,8 @@ re-expressed Spark-first:
   DataFrame / Spark SQL operations (SURVEY.md §2.1-2.9);
 - a statistical layer (GLMM via EM with adjusted maximum likelihood, EBP,
   survey-weighted direct estimation, parametric bootstrap MSPE) built on
-  MLlib + ``applyInPandas`` + driver-side SciPy with distributed objectives
+  ``applyInPandas`` + driver-side NumPy Newton solvers over collapsed
+  covariate-pattern cells, with distributed objectives
   (SURVEY.md §2.10-2.12);
 - large-scale training-data pipeline extensions: dedup (exact / MinHash-LSH /
   SimHash / n-gram Jaccard / embedding-cosine), similarity search, text

@@ -125,9 +125,10 @@ def q_em_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_glm_fit")  # rows-only: IRLS output
+@register("q_glm_fit")  # rows-only: optimizer output
 def q_glm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib GLR binomial baseline (§2.10 M1) on the synthesized survey."""
+    """Binomial GLM baseline (§2.10 M1) on the synthesized survey, Newton-fit
+    on its covariate-pattern cells."""
     from data_integration_spark.stats.glmm import FixedEffectsGLM
 
     glm = FixedEffectsGLM().fit(synth_survey(spark, sf_dir))
@@ -142,7 +143,7 @@ def q_glm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_doc_packing_invariants' conservation laws): the fitted β of a
     # converged logistic MLE satisfies the score equations X'(y − p̂) = 0,
     # so the rounded infinity-norm of the score vector is an
-    # engine-independent literal 0.0 — if the IRLS fit ever stops
+    # engine-independent literal 0.0 — if the Newton fit ever stops
     # converging (regression in the fitting path, bad design matrix, data
     # drift past the optimizer's tolerance), the hash breaks loudly.
     # n_obs pins that the fit consumed the whole synthesized survey.
@@ -154,7 +155,7 @@ def q_glm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_glm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Convergence CERTIFICATE for the GLM baseline: fit the binomial GLR
+    """Convergence CERTIFICATE for the GLM baseline: fit the binomial GLM
     (same path as q_glm_fit), then evaluate the score vector
     g = Σ xᵢ(yᵢ − expit(xᵢ'β̂)) as one distributed aggregation and emit
     (n_obs, n_params, round(‖g‖∞, 2)). The β̂ values themselves stay

@@ -2,18 +2,21 @@
 
 The reference builds x1..x7 indicator/transform columns row-by-row and keeps
 the unit-level table everywhere. Our engine adds the **covariate-pattern
-collapse** (SURVEY.md §7.4.1): the design has ≤ 2·2·3·4 discrete cells per
-area (x7 is area-constant), so the unit-level table collapses to weighted
-cells ``(state, x1..x7, y, m, w_sum)``. Every EM/EBP computation downstream
-is exact on cells — a constant-factor win the row-wise reference never
-exploits, and the reason the β-step scales: the optimizer touches
-|cells| × R rows, not |units| × R.
+collapse** (SURVEY.md §7.4.1): the design has ≤ 2·2·3·3 covariate patterns
+per area (x7 is area-constant), so the unit-level table collapses to
+weighted cells ``(state, x1..x7, y, m, w_sum)``. Every GLM/EM/EBP
+computation downstream is exact on cells — a constant-factor win the
+row-wise reference never exploits, and the reason the β-step scales: the
+optimizer touches |cells| × R rows, not |units| × R.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -62,7 +65,8 @@ def design_cells(
     """Collapse a prepped survey to covariate-pattern cells.
 
     Returns (state, x1..x7[, y], m, w_sum): m = unit count, w_sum = summed
-    survey weight. One shuffle; output is ≤ #areas × 96 rows regardless of
+    survey weight. One shuffle; output is ≤ #areas × 72 rows (2·2·3·3
+    covariate patterns × 2 outcomes; x7 is area-constant) regardless of
     input size — THE scalability lever for the iterative layer.
     """
     keys = ["state", *X_COLS] + (["y"] if with_outcome else [])
@@ -72,3 +76,50 @@ def design_cells(
     else:
         aggs.append(F.lit(None).cast("double").alias("w_sum"))
     return prepped.groupBy(*keys).agg(*aggs)
+
+
+# raw survey column behind each cell column that can carry a null/NaN
+# (the x1..x6 indicators map nulls to 0)
+_SOURCE_COL = {"x7": "obama12", "y": "demvote"}
+
+
+@dataclass(frozen=True)
+class CellArrays:
+    """A collected outcome cell table as NumPy arrays, one entry per cell,
+    cells sorted by (state, x1..x7, y) so every fit sums in one order."""
+
+    states: list  # sorted distinct areas
+    state_idx: np.ndarray  # cell -> index into states
+    X: np.ndarray  # (cells, 8): intercept, x1..x7
+    y: np.ndarray
+    m: np.ndarray  # unit count
+    w: np.ndarray  # likelihood weight: w_sum if weighted, else m
+
+
+def cell_arrays(cells: pd.DataFrame, weighted: bool = False) -> CellArrays:
+    """Convert a collected ``design_cells(..., with_outcome=True)`` table.
+
+    The cell likelihood Σ w·NLL(y, xβ) equals the unit-level one, so fits
+    on these arrays are exact. Raises ``ValueError`` naming the column when
+    any x1..x7, y, m or w is null or NaN — a null covariate or label would
+    otherwise surface as an opaque linear-algebra failure mid-fit."""
+    w_col = "w_sum" if weighted else "m"
+    for c in [*X_COLS, "y", "m", w_col]:
+        bad = int(cells[c].isna().sum())
+        if bad:
+            src = _SOURCE_COL.get(c)
+            src = f" (from survey column {src!r})" if src else ""
+            raise ValueError(
+                f"design cell column {c!r}{src} is null or NaN in {bad} cell(s)"
+            )
+    cells = cells.sort_values(["state", *X_COLS, "y"])
+    states = sorted(cells["state"].unique())
+    s_idx = {s: i for i, s in enumerate(states)}
+    return CellArrays(
+        states=states,
+        state_idx=cells["state"].map(s_idx).to_numpy(),
+        X=np.column_stack([np.ones(len(cells)), cells[X_COLS].to_numpy(float)]),
+        y=cells["y"].to_numpy(float),
+        m=cells["m"].to_numpy(float),
+        w=cells[w_col].to_numpy(float),
+    )

@@ -37,7 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_spark.functions.rng import seeded_normal
-from data_integration_spark.stats.design import X_COLS, design_cells, prep_design
+from data_integration_spark.stats.design import (
+    X_COLS,
+    cell_arrays,
+    design_cells,
+    prep_design,
+)
 from data_integration_spark.stats.optimize import golden_max, newton_minimize
 
 N_BETA = 8
@@ -133,32 +138,36 @@ class EMEstimator:
         )
         sigma = float(sigma_init)
 
-        cells_df = design_cells(prep_design(survey), with_outcome=True).cache()
-        n_cells = cells_df.count()
-        mode = self.mode
-        if mode == "auto":
-            mode = "driver" if n_cells <= self.driver_cells_limit else "distributed"
-
         # Driver metadata: both modes need (states, ni, n_total). Driver
         # mode collects the full cell table (bounded at ≤ areas×patterns by
-        # the covariate collapse AND gated by driver_cells_limit);
-        # distributed mode derives the per-area totals from ONE ≤areas-row
-        # aggregation — the driver never holds the cell table there.
+        # the covariate collapse AND gated by driver_cells_limit); auto mode
+        # decides from ONE bounded collect of limit+1 cells, which is the
+        # driver table itself when it fits: no count, no cache. Distributed
+        # mode caches the cells and derives the per-area totals from ONE
+        # ≤areas-row aggregation — the driver never holds the cell table.
+        cells_df = design_cells(prep_design(survey), with_outcome=True)
+        mode = self.mode
+        if mode == "auto":
+            cells_pd = cells_df.limit(self.driver_cells_limit + 1).toPandas()
+            mode = (
+                "driver"
+                if len(cells_pd) <= self.driver_cells_limit
+                else "distributed"
+            )
+        elif mode == "driver":
+            cells_pd = cells_df.toPandas()
+
         X = y = m = cell_state = None
         if mode == "driver":
-            cells_pd = cells_df.toPandas().sort_values(["state", *X_COLS, "y"])
-            states = sorted(cells_pd["state"].unique())
+            cells = cell_arrays(cells_pd)
+            states, cell_state = cells.states, cells.state_idx
+            X, y, m = cells.X, cells.y, cells.m
             s_idx = {s: i for i, s in enumerate(states)}
-            X = np.column_stack(
-                [np.ones(len(cells_pd)), cells_pd[X_COLS].to_numpy(float)]
-            )
-            y = cells_pd["y"].to_numpy(float)
-            m = cells_pd["m"].to_numpy(float)
-            cell_state = cells_pd["state"].map(s_idx).to_numpy()
             ni = np.zeros(len(states))
             np.add.at(ni, cell_state, m)
             n_total = float(m.sum())
         else:
+            cells_df = cells_df.cache()
             ni_pd = (
                 cells_df.groupBy("state")
                 .agg(F.sum("m").alias("ni"))
@@ -253,8 +262,8 @@ class EMEstimator:
                 converged = True
                 break
 
-        cells_df.unpersist()
         if skeleton is not None:
+            cells_df.unpersist()
             skeleton.unpersist()
             draws_sp.unpersist()
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from data_integration_spark.stats.em import EMEstimator
 from data_integration_spark.stats.fixtures import BETA_TRUE, SIGMA_TRUE, make_fixtures
@@ -103,3 +104,40 @@ def test_em_stationarity_certificate_margins(spark, fixtures):
     # 10x safety margin below the 2-decimal rounding threshold
     assert cert["beta_score_inf_norm"] < 5e-4
     assert cert["sigma_fixed_point_resid"] < 5e-4
+
+
+@pytest.mark.parametrize("column", ["obama12", "demvote"])
+def test_null_inputs_fail_loudly(small_df, column):
+    """A null covariate or label must fail the GLM and the EM's driver mode
+    with a ValueError naming the column, not an opaque solver error."""
+    df = small_df.withColumn(
+        column, F.when(F.col("ID") % 50 == 0, None).otherwise(F.col(column))
+    )
+    with pytest.raises(ValueError, match=column):
+        FixedEffectsGLM().fit(df)
+    with pytest.raises(ValueError, match=column):
+        EMEstimator(n_reps=10, max_iter=1, mode="driver").fit(df)
+
+
+def test_glm_and_em_job_counts(spark, fixtures):
+    """Pin the Spark jobs each fit issues: the GLM collects its cell table in
+    one query (2 jobs: the shuffle map stage and the result), and auto-mode
+    EM collects cells with one bounded query plus the draw table (3 jobs).
+    A plan or job regression fails here instead of hiding in wall time."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(fixtures["survey_small"]).cache()
+    df.count()  # materialize the cache outside the counted groups
+
+    def jobs(group: str, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        assert jobs("pin_glm_fit", lambda: FixedEffectsGLM().fit(df)) == 2
+        assert jobs("pin_em_fit", lambda: EMEstimator(max_iter=2).fit(df)) == 3
+    finally:
+        df.unpersist()

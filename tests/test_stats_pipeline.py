@@ -18,14 +18,11 @@ def fx():
 
 
 @pytest.fixture(scope="module")
-def result(spark, fx):
-    # round-trip the fixtures through parquet in .scratch so the pipeline
-    # runs off files exactly as the reference reads its survey inputs
-    # (load step included in the golden path, VERDICT r1 item 7)
-    import shutil
-
-    base = "/root/repo/.scratch/pipeline_fixtures"
-    shutil.rmtree(base, ignore_errors=True)
+def result(spark, fx, tmp_path_factory):
+    # round-trip the fixtures through parquet so the pipeline runs off
+    # files exactly as the reference reads its survey inputs (load step
+    # included in the golden path)
+    base = tmp_path_factory.mktemp("pipeline_fixtures")
     frames = {}
     for name in ("survey_small", "survey_big", "actual_result"):
         spark.createDataFrame(fx[name]).write.mode("overwrite").parquet(
