@@ -20,16 +20,22 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_integration_spark.functions.rng import seeded_normal
-from data_integration_spark.stats.bootstrap import mspe_table, parametric_bootstrap
+from data_integration_spark.stats.bootstrap import (
+    MSPE_SCHEMA,
+    mspe_table,
+    parametric_bootstrap,
+)
 from data_integration_spark.stats.ebp import (
+    area_frame,
+    comparison_frame,
     comparison_table,
     direct_estimates,
+    draw_table,
     ebp_estimates,
     error_summary,
     final_report,
+    scoring_cells,
 )
 from data_integration_spark.stats.em import EMEstimator, EMResult
 from data_integration_spark.stats.glmm import FixedEffectsGLM
@@ -46,8 +52,9 @@ class Engine:
         self.actuals: DataFrame | None = None
         self.glm: FixedEffectsGLM | None = None
         self.em_fit: EMResult | None = None
-        self._ebp: DataFrame | None = None
-        self._direct: DataFrame | None = None
+        self._big_cells: pd.DataFrame | None = None
+        self._ebp: pd.DataFrame | None = None
+        self._direct: pd.DataFrame | None = None
 
     # ---------------------------------------------------------------- load
     def load(
@@ -56,6 +63,7 @@ class Engine:
         """The 3-dataset ingest (``readRDS``, ``Rmd:41-42``) — any Spark
         DataFrames with the survey schema (FIXTURES.md)."""
         self.small, self.big, self.actuals = small, big, actuals
+        self._big_cells = self._ebp = self._direct = None
         return self
 
     def load_parquet(self, base_dir: str) -> "Engine":
@@ -91,56 +99,51 @@ class Engine:
     def ebp_draws(self, n_draws: int = 100) -> DataFrame:
         """v_tilde ~ N(v̂, τ̂) draw table for EBP scoring (``Rmd:415``)."""
         assert self.em_fit is not None, "fit_em first"
-        return (
-            self.em_fit.v_hat_df(self.spark)
-            .select(
-                "state",
-                "v_hat",
-                "tau_hat_sq",
-                F.explode(
-                    F.sequence(
-                        F.lit(1).cast("long"), F.lit(int(n_draws)).cast("long")
-                    )
-                ).alias("r"),
-            )
-            .withColumn(
-                "v_tilde",
-                F.col("v_hat")
-                + F.sqrt("tau_hat_sq") * seeded_normal("state", "r", salt=self.seed),
-            )
-            .select("state", "r", "v_tilde")
-        )
+        return draw_table(self.em_fit.v_hat_df(self.spark), n_draws, self.seed)
 
-    def ebp_estimates(self, n_draws: int = 100) -> DataFrame:
-        """EBP area proportions on the big survey (``Rmd:406-454``)."""
+    def _scoring_cells(self) -> pd.DataFrame:
+        """The big survey's covariate-pattern cells, collected once and
+        scored by both EBP and the bootstrap."""
+        if self._big_cells is None:
+            self._big_cells = scoring_cells(self.big)
+        return self._big_cells
+
+    def ebp_estimates(self, n_draws: int = 100) -> pd.DataFrame:
+        """EBP area proportions on the big survey (``Rmd:406-454``), one row
+        per area: (state, EM_est)."""
         assert self.em_fit is not None, "fit_em first"
         self._ebp = ebp_estimates(
-            self.big, self.em_fit.beta_hat, self.ebp_draws(n_draws)
+            self._scoring_cells(), self.em_fit.beta_hat, self.ebp_draws(n_draws)
         )
         return self._ebp
 
-    def direct_estimates(self) -> DataFrame:
-        """Survey-weighted direct estimates ± SE (``Rmd:456-473``)."""
+    def direct_estimates(self) -> pd.DataFrame:
+        """Survey-weighted direct estimates ± SE (``Rmd:456-473``), one row
+        per area: (state, direct, direct_SE)."""
         self._direct = direct_estimates(self.small)
         return self._direct
 
-    def comparison(self) -> DataFrame:
-        """Actuals ⋈ direct ⋈ EBP full-outer comparison (``Rmd:466-472``)."""
+    def _comparison_table(self) -> pd.DataFrame:
         if self._direct is None:
             self.direct_estimates()
         if self._ebp is None:
             self.ebp_estimates()
         return comparison_table(self.actuals, [self._direct, self._ebp])
 
+    def comparison(self) -> DataFrame:
+        """Actuals ⋈ direct ⋈ EBP full-outer comparison (``Rmd:466-472``)."""
+        return comparison_frame(self.spark, self.actuals, self._comparison_table())
+
     def error_measures(self) -> pd.DataFrame:
         """ASD/RASD/AAD of each estimator vs actuals (``Rmd:481-507``)."""
-        return error_summary(self.comparison(), "actual", ["direct", "EM_est"])
+        return error_summary(self._comparison_table(), "actual", ["direct", "EM_est"])
 
     # ------------------------------------------------------------- closing
     def bootstrap_mspe(
         self, n_reps: int = 10, em: EMEstimator | None = None
-    ) -> DataFrame:
-        """Parametric-bootstrap MSPE per area (``Rmd:557-757``)."""
+    ) -> pd.DataFrame:
+        """Parametric-bootstrap MSPE per area (``Rmd:557-757``):
+        (state, sqrt_MSPE)."""
         assert self.em_fit is not None, "fit_em first"
         long_df, _ = parametric_bootstrap(
             self.small,
@@ -150,6 +153,7 @@ class Engine:
             n_reps=n_reps,
             em=em,
             seed=self.seed + 100,
+            big_cells=self._scoring_cells(),
         )
         return mspe_table(long_df)
 
@@ -158,14 +162,16 @@ class Engine:
     ) -> DataFrame:
         """The closing SQL report (``Rmd:763-776``):
         (state, name, actual_val, direct_est, EBP_est, direct_SE, EBP_SE)."""
-        comp = self.comparison()
+        comp = self._comparison_table()
         if bootstrap_reps > 0:
             mspe = self.bootstrap_mspe(bootstrap_reps, em=em)
         else:
-            mspe = self.actuals.select(
-                "state", F.lit(None).cast("double").alias("sqrt_MSPE")
-            )
-        return final_report(self.spark, comp, mspe)
+            mspe = comp[["state"]].assign(sqrt_MSPE=np.nan)
+        return final_report(
+            self.spark,
+            comparison_frame(self.spark, self.actuals, comp),
+            area_frame(self.spark, mspe, MSPE_SCHEMA),
+        )
 
     def save_maps(self, out_dir: str, columns: tuple[str, ...] = ()) -> list[str]:
         """S4 choropleth sinks (``Rmd:513-549``: ``plot_usmap`` of actual /

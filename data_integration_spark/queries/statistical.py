@@ -58,8 +58,9 @@ _PIPELINE_MEMO: dict = {}
 
 def _fixture_pipeline(spark: SparkSession):
     """Run the reference's full pipeline on the FIXTURES.md family-B
-    surveys (parquet round-trip through .scratch, like the reference reads
-    its survey inputs); memoized per Spark context."""
+    surveys (parquet round-trip through the session's warehouse directory,
+    like the reference reads its survey inputs); memoized per Spark
+    context."""
     import os
 
     from data_integration_spark.stats.em import EMEstimator
@@ -72,7 +73,8 @@ def _fixture_pipeline(spark: SparkSession):
     key = spark.sparkContext.applicationId
     if key in _PIPELINE_MEMO:
         return _PIPELINE_MEMO[key]
-    base = "/root/repo/.scratch/survey_fixtures"
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    base = os.path.join(warehouse, "survey_fixtures")
     if not os.path.exists(os.path.join(base, "survey_small.parquet")):
         fx = make_fixtures()
         os.makedirs(base, exist_ok=True)
@@ -155,7 +157,8 @@ def q_survey_pipeline_certificate(
       present and non-negative.
 
     One 8-scalar row reaches the driver; every audit is a DataFrame
-    aggregation over the cached comparison table / small survey."""
+    aggregation over the pipeline's comparison table (a local DataFrame of
+    one row per area) or the small survey."""
     import pandas as pd
 
     res, small = _fixture_pipeline(spark)

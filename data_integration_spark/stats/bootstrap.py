@@ -1,8 +1,8 @@
 """Parametric bootstrap for MSPE (reference C3/C4,
 ``Method_code.Rmd:557-757``).
 
-Per replicate b (driver loop, each step internally distributed — the
-reference's strictly-sequential ``lapply(1:B, boot_func)``, SURVEY.md §3.3):
+Per replicate b (driver loop — the reference's strictly-sequential
+``lapply(1:B, boot_func)``, SURVEY.md §3.3):
 
 1. simulate the small survey's outcome from the fitted model:
    v_b ~ N(0, σ̂) per (rep, area) — hash-seeded per (rep, area), fixing the
@@ -11,26 +11,30 @@ reference's strictly-sequential ``lapply(1:B, boot_func)``, SURVEY.md §3.3):
    §5.3) — then demvote* ~ Bern(expit(xβ̂ + v_b)) per unit;
 2. re-run the full EM loop on the simulated small survey (``Rmd:612-657``);
 3. EBP-score the big survey with the re-fitted β (synthetic fixed-effects
-   predictor, v=0 — exactly the reference's Step 4-5, ``Rmd:660-682``);
-4. simulate the big survey's outcome under the SAME v_b ("model is true",
-   ``Rmd:687-696``) → per-area weighted "true" value;
+   predictor, v=0 — exactly the reference's Step 4-5, ``Rmd:660-682``) in
+   NumPy on the big survey's collected covariate-pattern cells — exact,
+   because the cells carry the summed weights.
 
-Results accumulate as ONE long (rep, state, est, true) DataFrame (not the
-reference's wide cbind-of-reps) → A6 sqrt-MSPE per area (``Rmd:744-757``).
+Step 4, the big survey's outcome simulated under the SAME v_b ("model is
+true", ``Rmd:687-696``) → per-area weighted "true" value, does not depend
+on the re-fit, so it runs for ALL reps as one aggregation over the big
+survey exploded by rep, collected as (rep, state, true). The replicates
+form ONE long (rep, state, est, true) table (not the reference's wide
+cbind-of-reps) → A6 sqrt-MSPE per area in NumPy (``Rmd:744-757``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_integration_spark.functions.math import expit
 from data_integration_spark.functions.rng import bernoulli, seeded_normal
-from data_integration_spark.functions.stats import mspe_by_group
-from data_integration_spark.operators.joins import union_all_by_name
+from data_integration_spark.stats import ebp
 from data_integration_spark.stats.design import prep_design, x_beta_col
 from data_integration_spark.stats.em import EMEstimator
 
@@ -39,34 +43,57 @@ def simulate_outcome(
     survey: DataFrame,
     beta: Sequence[float],
     sigma: float,
-    rep: int,
+    rep: int | Column,
     id_col: str = "ID",
     seed: int = 99,
     survey_tag: str = "",
 ) -> DataFrame:
     """Attach a simulated Bernoulli outcome under the fitted GLMM: distinct
-    v_b per (rep, area), distinct Bernoulli draw per (rep, unit).
+    v_b per (rep, area), distinct Bernoulli draw per (rep, unit). ``rep`` is
+    a replicate number or an ``int`` column of them.
 
     ``survey_tag`` enters the Bernoulli hash key so the SMALL and BIG surveys
     draw independent unit-level noise even when they share ID values — only
     the area effect v_b (keyed by (state, rep) alone) is intentionally shared
     between the two, matching the reference's independent ``rbinom`` calls
     under a common v_b (``Rmd:569-579, 687-696``)."""
+    rep = rep if isinstance(rep, Column) else F.lit(rep)
     prepped = prep_design(survey, with_outcome=False)
-    v_b = seeded_normal("state", F.lit(rep), mean=0.0, sd=float(sigma), salt=seed)
+    v_b = seeded_normal("state", rep, mean=0.0, sd=float(sigma), salt=seed)
     theta = expit(x_beta_col(beta) + v_b)
     return prepped.withColumn(
         "demvote",
-        bernoulli(
-            theta, F.lit(survey_tag), F.col(id_col), F.lit(rep), salt=seed + 1
-        ),
+        bernoulli(theta, F.lit(survey_tag), F.col(id_col), rep, salt=seed + 1),
     )
 
 
-def _area_weighted_mean(df: DataFrame, value_col: str, alias: str) -> DataFrame:
-    return df.groupBy("state").agg(
-        (F.lit(100.0) * F.sum(F.col(value_col) * F.col("weight")) / F.sum("weight"))
-        .alias(alias)
+def simulated_truth(
+    big_survey: DataFrame,
+    beta: Sequence[float],
+    sigma: float,
+    n_reps: int,
+    seed: int = 99,
+) -> pd.DataFrame:
+    """(rep, state, true) for reps 1..n_reps: the per-area weighted mean ×100
+    of the big survey's outcome simulated under the fitted model
+    (``Rmd:687-696``). One aggregation over the survey exploded by an
+    ``int`` rep column, so every draw equals ``simulate_outcome``'s for
+    that rep."""
+    reps = big_survey.withColumn(
+        "rep", F.explode(F.sequence(F.lit(1), F.lit(int(n_reps))))
+    )
+    sim = simulate_outcome(
+        reps, beta, sigma, F.col("rep"), seed=seed, survey_tag="big"
+    )
+    return (
+        sim.groupBy("rep", "state")
+        .agg(
+            (
+                F.lit(100.0) * F.sum(F.col("demvote") * F.col("weight"))
+                / F.sum("weight")
+            ).alias("true")
+        )
+        .toPandas()
     )
 
 
@@ -95,23 +122,29 @@ def parametric_bootstrap(
     em: EMEstimator | None = None,
     seed: int = 99,
     parallelism: int = 1,
+    big_cells: pd.DataFrame | None = None,
 ) -> tuple[DataFrame, pd.DataFrame]:
     """Returns (long (rep, state, est, true) DataFrame, per-rep EM estimates
     frame — the reference stores both, ``Rmd:700-718``).
 
     ``parallelism=1`` (default) is the reference-faithful strictly
-    sequential ``lapply`` (``Rmd:732``). ``parallelism>1`` runs reps on a
-    thread pool issuing CONCURRENT Spark jobs against the shared session
-    (SURVEY.md §3.3's scale-up: the scheduler interleaves each rep's
-    many small jobs, filling executor slots a single sequential rep
-    leaves idle). Results are bit-identical in any mode/order: every
+    sequential ``lapply`` (``Rmd:732``). ``parallelism>1`` runs the reps'
+    EM fits on a thread pool issuing CONCURRENT Spark jobs against the
+    shared session (SURVEY.md §3.3's scale-up: the scheduler interleaves
+    each rep's many small jobs, filling executor slots a single sequential
+    rep leaves idle). Results are bit-identical in any mode/order: every
     random draw is hash-seeded by (rep, area/unit) — no shared RNG state
     — and each thread gets its own EMEstimator clone (``fit`` keeps
     per-instance scratch). Replicate outputs are assembled in rep order
-    regardless of completion order."""
-    em = em or EMEstimator(n_reps=200, max_iter=50)
+    regardless of completion order.
 
-    def run_rep(b: int) -> tuple[DataFrame, dict]:
+    ``big_cells`` is the big survey's ``ebp.scoring_cells`` when the caller
+    already holds them (the pipeline shares EBP's); they are collected here
+    otherwise."""
+    em = em or EMEstimator(n_reps=200, max_iter=50)
+    cells = ebp.scoring_cells(big_survey) if big_cells is None else big_cells
+
+    def run_rep(b: int) -> tuple[pd.DataFrame, dict]:
         sim_small = simulate_outcome(
             small_survey, beta_fit, sigma_fit, b, seed=seed, survey_tag="small"
         )
@@ -122,16 +155,11 @@ def parametric_bootstrap(
             **{f"beta{k}": fit_b.beta_hat[k] for k in range(len(fit_b.beta_hat))},
         }
         # step 3: EBP with re-fitted β, v=0 (Rmd:660-682)
-        scored = prep_design(big_survey, with_outcome=False).withColumn(
-            "y_ebp", expit(x_beta_col(fit_b.beta_hat))
+        est = ebp.area_means(
+            cells, ebp.expit(ebp.cell_x_beta(cells, fit_b.beta_hat))
         )
-        est_b = _area_weighted_mean(scored, "y_ebp", "est")
-        # step 4: simulated truth under the same v_b (Rmd:687-696)
-        sim_big = simulate_outcome(
-            big_survey, beta_fit, sigma_fit, b, seed=seed, survey_tag="big"
-        )
-        true_b = _area_weighted_mean(sim_big, "demvote", "true")
-        return est_b.join(true_b, "state").withColumn("rep", F.lit(b)), em_row
+        est_b = pd.DataFrame({"rep": b, "state": est.index, "est": est.to_numpy()})
+        return est_b, em_row
 
     reps = range(1, n_reps + 1)
     if parallelism > 1:
@@ -142,14 +170,24 @@ def parametric_bootstrap(
     else:
         results = [run_rep(b) for b in reps]
 
-    parts = [r[0] for r in results]
-    em_rows = [r[1] for r in results]
-    long_df = union_all_by_name(parts).select("rep", "state", "est", "true")
-    return long_df, pd.DataFrame(em_rows)
-
-
-def mspe_table(boot_long: DataFrame) -> DataFrame:
-    """C4: per-area sqrt(mean_rep (est−true)²) (``Rmd:740-757``)."""
-    return mspe_by_group(
-        boot_long, group="state", est="est", truth="true", alias="sqrt_MSPE"
+    truth = simulated_truth(big_survey, beta_fit, sigma_fit, n_reps, seed=seed)
+    long_pd = pd.concat([r[0] for r in results]).merge(truth, on=["rep", "state"])
+    long_df = ebp.area_frame(
+        small_survey.sparkSession,
+        long_pd[["rep", "state", "est", "true"]],
+        "rep int, state string, est double, true double",
     )
+    return long_df, pd.DataFrame([r[1] for r in results])
+
+
+MSPE_SCHEMA = "state string, sqrt_MSPE double"
+
+
+def mspe_table(boot_long: DataFrame) -> pd.DataFrame:
+    """C4: per-area sqrt(mean_rep (est−true)²) (``Rmd:740-757``) as
+    (state, sqrt_MSPE), computed in NumPy. ``parametric_bootstrap``'s long
+    table is a local relation, so collecting it runs no Spark job."""
+    long_pd = pd.DataFrame(boot_long.collect(), columns=boot_long.columns)
+    d = long_pd["est"] - long_pd["true"]
+    mspe = np.sqrt((d * d).groupby(long_pd["state"], sort=True).mean())
+    return pd.DataFrame({"state": mspe.index, "sqrt_MSPE": mspe.to_numpy()})

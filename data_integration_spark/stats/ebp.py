@@ -1,78 +1,125 @@
 """EBP scoring, direct estimation, comparison & final report — the
 composite pipelines of the reference (SURVEY.md §2.12, C1/C2/C5).
 
-All pure DataFrame ops:
-- EBP (``Method_code.Rmd:406-454``): per-unit ŷ = mean_r expit(xβ + v_r,s)
-  over R draws, v=0 for areas absent from the small survey; then the A1
-  weighted mean per area. On cells, the unit dimension collapses: the draw
-  join touches |patterns| × R rows, not |units| × R.
-- Direct (``Rmd:456-473``): survey-weighted Hájek mean ± linearized SE ×100.
-- Comparison (``Rmd:466-507``): n-way full-outer fold on state + ASD/RASD/AAD.
-- Report (``Rmd:763-772``): the literal SQL left-join chain via spark.sql.
+Every table after the EM has a size fixed by the design, not by the
+number of units: the estimates have at most one row per area. So each
+Spark job here is ONE aggregation to such a table, collected once, and the
+combining steps run in NumPy/pandas on those area tables. Unit rows are
+read only inside Spark aggregations.
+
+- EBP (``Method_code.Rmd:406-454``): ŷ = mean_r expit(xβ + v_r,s) over R
+  draws, v=0 for areas absent from the small survey; then the A1 weighted
+  mean per area. On cells the unit dimension collapses: the big survey is
+  collected as ≤ areas × 36 covariate-pattern cells carrying w_sum, and the
+  (state, r, v_tilde) draw table as areas × R rows.
+- Direct (``Rmd:456-473``): survey-weighted Hájek mean ± linearized SE ×100,
+  one ``survey_mean_se`` plan collected once.
+- Comparison (``Rmd:466-507``): outer merge on state in pandas + ASD/RASD/AAD.
+- Report (``Rmd:763-772``): the literal SQL left-join chain via spark.sql,
+  over local DataFrames built from the area tables.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from data_integration_spark.functions.math import expit
+from data_integration_spark.functions.rng import seeded_normal
 from data_integration_spark.functions.stats import survey_mean_se
-from data_integration_spark.operators.joins import full_outer_fold
-from data_integration_spark.stats.design import (
-    X_COLS,
-    design_cells,
-    prep_design,
-    x_beta_col,
-)
+from data_integration_spark.stats.design import X_COLS, design_cells, prep_design
+
+
+def draw_table(v_hat: DataFrame, n_draws: int, seed: int) -> DataFrame:
+    """(state, r, v_tilde) EBP draws, v_tilde ~ N(v̂, τ̂²) per (r, area)
+    (``Rmd:415``: R=100) from the EM's (state, v_hat, tau_hat_sq) table.
+
+    ``r`` is an ``int`` column: xxhash64 hashes int and long keys
+    differently, so the type is part of the seeded draw."""
+    return (
+        v_hat.select(
+            "state",
+            "v_hat",
+            "tau_hat_sq",
+            F.explode(F.sequence(F.lit(1), F.lit(int(n_draws)))).alias("r"),
+        )
+        .withColumn(
+            "v_tilde",
+            F.col("v_hat")
+            + F.sqrt("tau_hat_sq") * seeded_normal("state", "r", salt=seed),
+        )
+        .select("state", "r", "v_tilde")
+    )
+
+
+def scoring_cells(survey: DataFrame) -> pd.DataFrame:
+    """The survey's (state, x1..x7, m, w_sum) covariate-pattern cells,
+    collected: ≤ areas × 36 rows whatever the number of units."""
+    return design_cells(
+        prep_design(survey, with_outcome=False), with_outcome=False
+    ).toPandas()
+
+
+def cell_x_beta(cells: pd.DataFrame, beta: Sequence[float]) -> np.ndarray:
+    """xβ per cell (``Rmd:245-247``)."""
+    beta = np.asarray(beta, dtype=float)
+    return beta[0] + cells[X_COLS].to_numpy(float) @ beta[1:]
+
+
+def expit(x: np.ndarray) -> np.ndarray:
+    """1/(1+exp(-x)), the formula of ``functions.math.expit``."""
+    return 1.0 / (1.0 + np.exp(-x))
+
+
+def area_means(cells: pd.DataFrame, y_hat: np.ndarray) -> pd.Series:
+    """100 × Σ w_sum·ŷ / Σ w_sum per area (A1), indexed by state. Exact on
+    cells: w_sum carries the summed unit weights of each pattern."""
+    w = cells["w_sum"].to_numpy(float)
+    sums = (
+        pd.DataFrame({"state": cells["state"], "wy": w * y_hat, "w": w})
+        .groupby("state", sort=True)
+        .sum()
+    )
+    return 100.0 * sums["wy"] / sums["w"]
 
 
 def ebp_estimates(
-    big_survey: DataFrame,
+    big_cells: pd.DataFrame,
     beta: Sequence[float],
     v_draws: DataFrame,
     est_alias: str = "EM_est",
-) -> DataFrame:
-    """Per-area EBP: 100 × Σ_u w_u·ŷ_u / Σ_u w_u with
-    ŷ_u = mean_r expit(xβ_u + v_r,area) (``Rmd:406-454``).
+) -> pd.DataFrame:
+    """Per-area EBP (state, ``est_alias``): 100 × Σ_u w_u·ŷ_u / Σ_u w_u with
+    ŷ_u = mean_r expit(xβ_u + v_r,area) (``Rmd:406-454``), scored on the
+    big survey's ``scoring_cells``.
 
-    ``v_draws`` is the long (r, state, v_tilde) table from the EM fit (the
-    reference reuses ``v_case_sim``, first 100 reps, ``Rmd:415``). Areas
-    missing from ``v_draws`` score with v=0 (generalized MT/SD,
-    ``Rmd:433-435``) via the left join + coalesce — no hard-coded states.
-
-    Plan shape: cells (one narrow shuffle) → broadcast-join draws →
-    two-level agg. Unit rows are touched exactly once, at the collapse.
-    """
-    cells = design_cells(
-        prep_design(big_survey, with_outcome=False), with_outcome=False
-    ).withColumn("xb", x_beta_col(beta))
-    # pattern × draw: mean over r of expit(xb + v); absent areas get one
-    # pseudo-draw v=0 via the left join + coalesce
-    joined = cells.join(F.broadcast(v_draws), "state", "left")
-    per_pattern = joined.groupBy("state", *X_COLS).agg(
-        F.min("w_sum").alias("w_sum"),
-        F.avg(
-            expit(F.col("xb") + F.coalesce(F.col("v_tilde"), F.lit(0.0)))
-        ).alias("y_hat"),
-    )
-    return per_pattern.groupBy("state").agg(
-        (
-            F.lit(100.0) * F.sum(F.col("y_hat") * F.col("w_sum")) / F.sum("w_sum")
-        ).alias(est_alias)
-    )
+    ``v_draws`` is the long (state, r, v_tilde) table of ``draw_table`` (the
+    reference reuses ``v_case_sim``, first 100 reps, ``Rmd:415``), collected
+    here. Areas missing from ``v_draws`` score with v=0 (generalized MT/SD,
+    ``Rmd:433-435``) — no hard-coded states."""
+    draws = v_draws.toPandas()
+    by_state = {s: g["v_tilde"].to_numpy(float) for s, g in draws.groupby("state")}
+    xb = cell_x_beta(big_cells, beta)
+    y_hat = np.empty(len(big_cells))
+    for state, idx in big_cells.groupby("state").indices.items():
+        v = by_state.get(state, np.zeros(1))
+        y_hat[idx] = expit(xb[idx, None] + v[None, :]).mean(axis=1)
+    est = area_means(big_cells, y_hat)
+    return pd.DataFrame({"state": est.index, est_alias: est.to_numpy()})
 
 
 def direct_estimates(
     small_survey: DataFrame,
     outcome: str = "demvote",
     weight: str = "weight",
-) -> DataFrame:
+) -> pd.DataFrame:
     """Per-area survey-weighted direct estimate ± SE, ×100 (``Rmd:456-473``:
-    ``svyby`` + the 100× scaling)."""
+    ``svyby`` + the 100× scaling) as (state, direct, direct_SE)."""
     out = survey_mean_se(
         small_survey,
         group="state",
@@ -85,43 +132,63 @@ def direct_estimates(
         "state",
         (F.lit(100.0) * F.col("mean_")).alias("direct"),
         (F.lit(100.0) * F.col("se_")).alias("direct_SE"),
-    )
+    ).toPandas()
 
 
 def comparison_table(
-    actuals: DataFrame, estimate_tables: Sequence[DataFrame]
-) -> DataFrame:
+    actuals: DataFrame, estimate_tables: Sequence[pd.DataFrame]
+) -> pd.DataFrame:
     """J1 full-outer fold of actuals + estimator tables on state
-    (``reduce(full_join, by='state')``, ``Rmd:466-469``)."""
-    return full_outer_fold([actuals, *estimate_tables], on="state")
+    (``reduce(full_join, by='state')``, ``Rmd:466-469``): actuals are
+    collected once, the fold is a pandas outer merge. A missing value is
+    NaN here and NULL in ``comparison_frame``."""
+    act = pd.DataFrame(actuals.collect(), columns=actuals.columns, dtype=object)
+    comp = reduce(
+        lambda a, b: a.merge(b, on="state", how="outer"), estimate_tables, act
+    )
+    return comp[["state", *[c for c in comp.columns if c != "state"]]]
+
+
+def area_frame(
+    spark: SparkSession, table: pd.DataFrame, schema: StructType | str
+) -> DataFrame:
+    """A pandas area table as a local Spark DataFrame; NaN becomes a
+    real NULL, as the Spark join it replaces would leave it."""
+    return spark.createDataFrame(
+        table.astype(object).where(table.notna(), None), schema
+    )
+
+
+def comparison_frame(
+    spark: SparkSession, actuals: DataFrame, comp: pd.DataFrame
+) -> DataFrame:
+    """``comparison_table``'s result as a Spark DataFrame: actuals keep
+    their column types, estimator columns are doubles."""
+    schema = StructType(
+        [
+            actuals.schema[c] if c in actuals.columns else StructField(c, DoubleType())
+            for c in comp.columns
+        ]
+    )
+    return area_frame(spark, comp, schema)
 
 
 def error_summary(
-    comp: DataFrame, actual_col: str, est_cols: Sequence[str]
+    comp: pd.DataFrame, actual_col: str, est_cols: Sequence[str]
 ) -> pd.DataFrame:
     """ASD/RASD/AAD per estimator against the actuals (``Rmd:481-507``),
-    NULL-skipping like the reference's ``na.rm=TRUE``.
-
-    All estimators' aggregates run in ONE ``agg()`` pass (one Spark job
-    regardless of ``len(est_cols)``) — a per-estimator job loop would be the
-    per-group-scan shape SURVEY §4.1 criticizes in the reference."""
-    import math
-
-    aggs = []
-    for i, est in enumerate(est_cols):
-        d = F.col(est) - F.col(actual_col)
-        aggs.append(F.avg(d * d).alias(f"_asd_{i}"))
-        aggs.append(F.avg(F.abs(d)).alias(f"_aad_{i}"))
-    r = comp.agg(*aggs).collect()[0]
+    NULL-skipping like the reference's ``na.rm=TRUE``: an area missing
+    either value drops out of that estimator's averages."""
     rows = []
-    for i, est in enumerate(est_cols):
-        asd = r[f"_asd_{i}"]
+    for est in est_cols:
+        d = (comp[est].astype(float) - comp[actual_col].astype(float)).dropna()
+        asd = float((d * d).mean()) if len(d) else None
         rows.append(
             {
                 "estimator": est,
                 "asd": asd,
-                "rasd": None if asd is None else math.sqrt(asd),
-                "aad": r[f"_aad_{i}"],
+                "rasd": None if asd is None else float(np.sqrt(asd)),
+                "aad": float(d.abs().mean()) if len(d) else None,
             }
         )
     return pd.DataFrame(rows)
@@ -145,7 +212,7 @@ def final_report(
     final_mspe: DataFrame,
 ) -> DataFrame:
     """The reference's closing sqldf query (``Rmd:763-772``) — run verbatim
-    as ANSI SQL over temp views (S3: no data copy, unlike sqldf→SQLite)."""
+    as ANSI SQL over temp views of the comparison and MSPE area tables."""
     comp_data.createOrReplaceTempView("comp_data")
     final_mspe.createOrReplaceTempView("final_MSPE")
     return spark.sql(REPORT_SQL)

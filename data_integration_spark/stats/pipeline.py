@@ -5,25 +5,36 @@ load → prep → GLM baseline → EM (adjusted ML) → EBP of area proportions 
 the big survey → direct survey-weighted estimates → comparison vs actuals
 (ASD/RASD/AAD) → parametric-bootstrap MSPE → final SQL report.
 
-Driver-side Python orchestrates; every data-touching step is a Spark plan.
+Driver-side Python orchestrates. Unit rows are read only inside Spark
+aggregations (the GLM/EM cells, the EBP and bootstrap scoring cells, the
+direct estimates, the simulated truth); everything after the EM combines
+the collected area tables in NumPy/pandas, and the report runs as SQL over
+local views of them.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_integration_spark.functions.rng import seeded_normal
-from data_integration_spark.stats.bootstrap import mspe_table, parametric_bootstrap
+from data_integration_spark.stats.bootstrap import (
+    MSPE_SCHEMA,
+    mspe_table,
+    parametric_bootstrap,
+)
 from data_integration_spark.stats.ebp import (
+    area_frame,
+    comparison_frame,
     comparison_table,
     direct_estimates,
+    draw_table,
     ebp_estimates,
     error_summary,
     final_report,
+    scoring_cells,
 )
 from data_integration_spark.stats.em import EMEstimator, EMResult
 from data_integration_spark.stats.glmm import FixedEffectsGLM
@@ -55,27 +66,19 @@ def run_pipeline(
     glm = FixedEffectsGLM().fit(survey_small)
     # 2. EM with random intercepts, initialized like the reference loop
     fit = em.fit(survey_small)
-    # 3. EBP draw table: v_tilde ~ N(v̂, τ̂) per (r, area) (Rmd:415: R=100)
-    v_hat_df = fit.v_hat_df(spark)
-    v_draws = (
-        v_hat_df.select(
-            "state",
-            "v_hat",
-            "tau_hat_sq",
-            F.explode(F.sequence(F.lit(1), F.lit(ebp_draws))).alias("r"),
-        )
-        .withColumn(
-            "v_tilde",
-            F.col("v_hat")
-            + F.sqrt("tau_hat_sq") * seeded_normal("state", "r", salt=seed),
-        )
-        .select("state", "r", "v_tilde")
+    # 3. EBP with v_tilde ~ N(v̂, τ̂) per (r, area) (Rmd:406-454, R=100), on
+    # the big survey's cells, which the bootstrap scores too
+    big_cells = scoring_cells(survey_big)
+    ebp = ebp_estimates(
+        big_cells,
+        fit.beta_hat,
+        draw_table(fit.v_hat_df(spark), ebp_draws, seed),
+        est_alias="EM_est",
     )
-    ebp = ebp_estimates(survey_big, fit.beta_hat, v_draws, est_alias="EM_est")
     # 4. direct estimates (Rmd:456-473)
     direct = direct_estimates(survey_small)
-    # 5. comparison vs actuals (full-outer fold, Rmd:466-472)
-    comp = comparison_table(actuals, [direct, ebp]).cache()
+    # 5. comparison vs actuals (outer merge on state, Rmd:466-472)
+    comp = comparison_table(actuals, [direct, ebp])
     errors = error_summary(comp, "actual", ["direct", "EM_est"])
     # 6. bootstrap MSPE (Rmd:557-757) + final report (Rmd:763-772)
     if bootstrap_reps > 0:
@@ -88,14 +91,14 @@ def run_pipeline(
             em=bootstrap_em,
             seed=seed + 100,
             parallelism=bootstrap_parallelism,
+            big_cells=big_cells,
         )
         mspe = mspe_table(boot_long)
     else:
-        mspe = v_hat_df.select(
-            "state", F.lit(None).cast("double").alias("sqrt_MSPE")
-        )
-    report = final_report(spark, comp, mspe)
+        mspe = comp[["state"]].assign(sqrt_MSPE=np.nan)
+    comp_df = comparison_frame(spark, actuals, comp)
+    report = final_report(spark, comp_df, area_frame(spark, mspe, MSPE_SCHEMA))
     return PipelineResult(
-        glm_beta=list(glm.beta_), em=fit, comparison=comp, errors=errors,
+        glm_beta=list(glm.beta_), em=fit, comparison=comp_df, errors=errors,
         report=report,
     )

@@ -19,3 +19,20 @@ def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` runs ``fn`` under the job group ``group``
+    and returns the number of Spark jobs it started."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -38,6 +38,28 @@ def test_reference_workflow_through_api(engine):
             "direct_SE", "EBP_SE"} == set(report.columns)
 
 
+def test_engine_and_pipeline_draw_the_same_ebp(spark):
+    """For the same fit and seed, ``Engine`` and ``run_pipeline`` must score
+    EBP with the same draws: both build them with ``ebp.draw_table``."""
+    from data_integration_spark.stats.pipeline import run_pipeline
+
+    fx = make_fixtures(n_states=6, big_per_state=(50, 80))
+    small, big, actuals = (
+        spark.createDataFrame(fx[k])
+        for k in ("survey_small", "survey_big", "actual_result")
+    )
+    em = dict(n_reps=60, tol=0.05, max_iter=5)
+    eng = Engine(spark, seed=7).load(small, big, actuals)
+    eng.fit_em(**em)
+    res = run_pipeline(
+        spark, small, big, actuals, em=EMEstimator(seed=7, **em), seed=7
+    )
+    engine_est = {r.state: r.EM_est for r in eng.comparison().collect()}
+    pipeline_est = {r.state: r.EM_est for r in res.comparison.collect()}
+    assert list(res.em.beta_hat) == list(eng.em_fit.beta_hat)
+    assert engine_est == pipeline_est
+
+
 def test_em_on_simulated_helper(spark, engine):
     _, fx = engine
     fit = em_on_simulated(

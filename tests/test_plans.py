@@ -64,30 +64,53 @@ def test_grouped_agg_single_shuffle(spark):
     assert count_shuffles(df) <= 1, formatted_plan(df)
 
 
-def test_ebp_scoring_single_shuffle_chain(spark):
-    """EBP on cells: collapse shuffle + final area agg — the draw join must
-    broadcast, adding no shuffle (stats/ebp.py scale contract)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_integration_spark.stats.ebp import ebp_estimates
+def test_ebp_and_pipeline_job_counts(spark, count_jobs):
+    """Pin the Spark jobs of the post-EM stages, which work on collected
+    area tables: the big survey's scoring cells are one query (2 jobs: the
+    shuffle map stage and the result), EBP on them runs only its draw-table
+    collect (1 job), and a whole pipeline with one bootstrap rep plus the
+    report collect runs 20. A new per-rep or per-estimator plan fails here
+    instead of hiding in wall time."""
+    from data_integration_spark.stats.ebp import (
+        draw_table,
+        ebp_estimates,
+        scoring_cells,
+    )
+    from data_integration_spark.stats.em import EMEstimator
     from data_integration_spark.stats.fixtures import make_fixtures
+    from data_integration_spark.stats.pipeline import run_pipeline
 
     fx = make_fixtures(n_states=6, big_per_state=(50, 80))
-    spark_big = spark.createDataFrame(fx["survey_big"])
-    draws = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "state": [s for s in fx["truth"]["v_state"] for _ in range(5)],
-                "r": list(range(5)) * len(fx["truth"]["v_state"]),
-                "v_tilde": 0.1,
-            }
-        )
+    small, big, actuals = (
+        spark.createDataFrame(fx[k]).cache()
+        for k in ("survey_small", "survey_big", "actual_result")
     )
-    df = ebp_estimates(spark_big, [0.0] * 8, draws)
-    plan = formatted_plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert count_shuffles(df) <= 3, plan
+    for df in (small, big, actuals):
+        df.count()  # materialize the caches outside the counted groups
+    v_hat = spark.createDataFrame(
+        [(s, 0.1, 0.04) for s in fx["truth"]["v_state"]],
+        "state string, v_hat double, tau_hat_sq double",
+    )
+
+    def pipeline():
+        res = run_pipeline(
+            spark, small, big, actuals,
+            em=EMEstimator(n_reps=20, tol=0.0, max_iter=2, seed=1),
+            ebp_draws=10,
+            bootstrap_reps=1,
+            bootstrap_em=EMEstimator(n_reps=20, tol=0.0, max_iter=2, seed=2),
+        )
+        res.report.collect()
+
+    cells = []
+    try:
+        assert count_jobs("pin_cells", lambda: cells.append(scoring_cells(big))) == 2
+        ebp = lambda: ebp_estimates(cells[0], [0.0] * 8, draw_table(v_hat, 5, 3))
+        assert count_jobs("pin_ebp", ebp) == 1
+        assert count_jobs("pin_pipeline", pipeline) == 20
+    finally:
+        for df in (small, big, actuals):
+            df.unpersist()
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):

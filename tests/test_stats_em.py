@@ -119,25 +119,15 @@ def test_null_inputs_fail_loudly(small_df, column):
         EMEstimator(n_reps=10, max_iter=1, mode="driver").fit(df)
 
 
-def test_glm_and_em_job_counts(spark, fixtures):
+def test_glm_and_em_job_counts(spark, fixtures, count_jobs):
     """Pin the Spark jobs each fit issues: the GLM collects its cell table in
     one query (2 jobs: the shuffle map stage and the result), and auto-mode
     EM collects cells with one bounded query plus the draw table (3 jobs).
     A plan or job regression fails here instead of hiding in wall time."""
-    sc = spark.sparkContext
     df = spark.createDataFrame(fixtures["survey_small"]).cache()
     df.count()  # materialize the cache outside the counted groups
-
-    def jobs(group: str, fn) -> int:
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     try:
-        assert jobs("pin_glm_fit", lambda: FixedEffectsGLM().fit(df)) == 2
-        assert jobs("pin_em_fit", lambda: EMEstimator(max_iter=2).fit(df)) == 3
+        assert count_jobs("pin_glm_fit", lambda: FixedEffectsGLM().fit(df)) == 2
+        assert count_jobs("pin_em_fit", lambda: EMEstimator(max_iter=2).fit(df)) == 3
     finally:
         df.unpersist()

@@ -202,3 +202,37 @@ def test_bootstrap_threaded_equals_sequential(spark, fx):
     assert seq_em.to_dict("records") == par_em.to_dict("records")
     # wall-clock is environment-dependent; record it without a hard gate
     print(f"bootstrap B=4: sequential {t_seq:.1f}s, threaded {t_par:.1f}s")
+
+
+def test_simulated_truth_equals_per_rep_simulation(spark, fx):
+    """The bootstrap's all-reps truth table (one aggregation over the big
+    survey exploded by an int rep column) must equal, bit for bit, the
+    per-rep truth built from ``simulate_outcome`` with a literal rep."""
+    from data_integration_spark.stats.bootstrap import (
+        simulate_outcome,
+        simulated_truth,
+    )
+
+    big_pdf = fx["survey_big"]
+    keep = sorted(big_pdf["state"].unique())[:8]
+    big = spark.createDataFrame(big_pdf[big_pdf["state"].isin(keep)]).cache()
+    beta, sigma, seed = [0.1] * 8, 0.3, 123
+    try:
+        got = {
+            (r.rep, r.state): r.true
+            for r in simulated_truth(big, beta, sigma, 3, seed=seed).itertuples()
+        }
+        want = {}
+        for b in (1, 2, 3):
+            sim = simulate_outcome(big, beta, sigma, b, seed=seed, survey_tag="big")
+            per_rep = sim.groupBy("state").agg(
+                (
+                    F.lit(100.0) * F.sum(F.col("demvote") * F.col("weight"))
+                    / F.sum("weight")
+                ).alias("true")
+            )
+            want.update({(b, r.state): r.true for r in per_rep.collect()})
+        assert len(want) == 24
+        assert got == want
+    finally:
+        big.unpersist()
