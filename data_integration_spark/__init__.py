@@ -9,9 +9,9 @@ re-expressed Spark-first:
   weighted aggregations, SQL entry point) built entirely on Catalyst-native
   DataFrame / Spark SQL operations (SURVEY.md §2.1-2.9);
 - a statistical layer (GLMM via EM with adjusted maximum likelihood, EBP,
-  survey-weighted direct estimation, parametric bootstrap MSPE) built on
-  ``applyInPandas`` + driver-side NumPy Newton solvers over collapsed
-  covariate-pattern cells, with distributed objectives
+  survey-weighted direct estimation, parametric bootstrap MSPE): Spark
+  collapses each survey to covariate-pattern cells bounded by the design,
+  and driver-side NumPy Newton solvers fit on the collected cells
   (SURVEY.md §2.10-2.12);
 - large-scale training-data pipeline extensions: dedup (exact / MinHash-LSH /
   SimHash / n-gram Jaccard / embedding-cosine), similarity search, text

@@ -86,12 +86,11 @@ class Engine:
         n_reps: int = 1000,
         tol: float = 0.01,
         max_iter: int = 1000,
-        mode: str = "auto",
     ) -> EMResult:
         """The adjusted-maximum-likelihood EM loop (``EM_func`` + outer
         convergence loop, ``Rmd:217-390``)."""
         self.em_fit = EMEstimator(
-            n_reps=n_reps, tol=tol, max_iter=max_iter, mode=mode, seed=self.seed
+            n_reps=n_reps, tol=tol, max_iter=max_iter, seed=self.seed
         ).fit(self.small)
         return self.em_fit
 
@@ -193,15 +192,3 @@ class Engine:
             for c in cols
         ]
 
-
-def em_on_simulated(
-    spark: SparkSession,
-    survey: DataFrame,
-    beta_init: np.ndarray | None = None,
-    sigma_init: float = 0.1,
-    **em_kwargs,
-) -> EMResult:
-    """README.md:12's advertised usage — 'the EM function can be used on
-    simulated datasets with the required column names' — as a one-call
-    helper."""
-    return EMEstimator(**em_kwargs).fit(survey, beta_init, sigma_init)

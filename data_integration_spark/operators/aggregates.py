@@ -1,9 +1,10 @@
 """Aggregation operators beyond the expression helpers in functions/stats.py.
 
 - A3 grouped vector collection (``Method_code.Rmd:259-260``): the reference
-  pulls per-state vectors into an optimizer closure. The scalable form is
-  ``groupBy().applyInPandas`` (see stats/em.py); for deterministic testing we
-  also expose a sorted collect_list whose output is order-stable.
+  pulls per-state vectors into an optimizer closure. stats/em.py instead
+  collects the design-bounded cell table once and solves each area in
+  NumPy; for deterministic testing we also expose a sorted collect_list
+  whose output is order-stable.
 """
 
 from __future__ import annotations

@@ -59,9 +59,9 @@ def q_em_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row (β̂, σ̂, iterations) table."""
     from data_integration_spark.stats.em import EMEstimator
 
-    fit = EMEstimator(
-        n_reps=50, tol=0.05, max_iter=10, mode="driver", seed=5
-    ).fit(synth_survey(spark, sf_dir))
+    fit = EMEstimator(n_reps=50, tol=0.05, max_iter=10, seed=5).fit(
+        synth_survey(spark, sf_dir)
+    )
     row = {f"beta{k}": float(b) for k, b in enumerate(fit.beta_hat)}
     row.update(sigma=float(fit.sigma_hat), n_iter=fit.n_iter)
     return spark.createDataFrame(pd.DataFrame([row]))
@@ -70,7 +70,7 @@ def q_em_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_em_convergence",
     # stationarity-certificate oracle for the reference's CORE method
-    # (VERDICT r6 #1, mirroring q_glm_convergence): a converged EM fit's
+    # (mirroring q_glm_convergence): a converged EM fit's
     # (β̂, σ̂) must satisfy both M-step optimality conditions when the
     # E-step is re-run at the returned parameters — the σ closed-form
     # residual and the per-observation β score norm are engine-independent
@@ -91,9 +91,9 @@ def q_em_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     method (``Rmd:217-390``) gains an oracle-grade driver check: fit with
     a TIGHT outer tolerance (1e-4 vs q_em_fit's demo 0.05), then re-run
     one E-step at (β̂, σ̂) and evaluate both M-step fixed-point residuals
-    as distributed aggregations (stats/em.py::em_stationarity_certificate
-    — E1 via applyInPandas, the σ moment and the β score as single agg
-    passes; driver holds per-area scalars only). β̂/σ̂ themselves stay
+    (stats/em.py::em_stationarity_certificate — the fit's own E-step and
+    β-objective in NumPy on the collected cell table, so the certificate
+    checks the arithmetic the fit optimized). β̂/σ̂ themselves stay
     rows-only in q_em_fit (optimizer floats); the stationarity conditions
     they must satisfy are exactly checkable and are what this query
     hashes — an E-step drift, draw-seeding change, or optimizer
@@ -103,7 +103,7 @@ def q_em_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         em_stationarity_certificate,
     )
 
-    est = EMEstimator(n_reps=50, tol=1e-4, max_iter=400, mode="driver", seed=5)
+    est = EMEstimator(n_reps=50, tol=1e-4, max_iter=400, seed=5)
     survey = synth_survey(spark, sf_dir)
     cert = em_stationarity_certificate(survey, est.fit(survey), est)
     return spark.createDataFrame(

@@ -473,7 +473,8 @@ def q_groupby_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 grouped vector collection (``Rmd:259-260``) in its deterministic
-    sorted form (full oracle; the applyInPandas form lives in stats/em.py)."""
+    sorted form (full oracle; stats/em.py solves each area on its collected
+    cells instead)."""
     return group_collect_sorted(
         Catalog(spark, sf_dir)["lineitem"],
         group="l_orderkey",

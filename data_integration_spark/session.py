@@ -8,8 +8,8 @@ same code runs unchanged on a 1000-executor cluster against ~100 TB:
   counts adapt to real data sizes instead of a hardcoded number;
 - broadcast threshold raised so dimension tables (region/nation/supplier,
   per-area statistics <= 51 rows) never shuffle;
-- Arrow enabled for every pandas boundary (applyInPandas in the EM step,
-  toPandas on small results).
+- Arrow enabled for every pandas boundary (pandas UDFs, and toPandas on
+  small results such as the statistical layer's cell tables).
 """
 
 from __future__ import annotations

@@ -97,22 +97,6 @@ def simulated_truth(
     )
 
 
-def _clone_em(em: EMEstimator) -> EMEstimator:
-    """Fresh estimator with identical parameters — ``fit`` mutates
-    per-instance scratch (``_z_base``), so concurrent reps must never
-    share one instance."""
-    return EMEstimator(
-        n_reps=em.n_reps,
-        tol=em.tol,
-        max_iter=em.max_iter,
-        v_bounds=em.v_bounds,
-        sigma_sq_bounds=em.sigma_sq_bounds,
-        mode=em.mode,
-        seed=em.seed,
-        driver_cells_limit=em.driver_cells_limit,
-    )
-
-
 def parametric_bootstrap(
     small_survey: DataFrame,
     big_survey: DataFrame,
@@ -148,7 +132,7 @@ def parametric_bootstrap(
         sim_small = simulate_outcome(
             small_survey, beta_fit, sigma_fit, b, seed=seed, survey_tag="small"
         )
-        fit_b = _clone_em(em).fit(sim_small)
+        fit_b = em.fit(sim_small)
         em_row = {
             "rep": b,
             "sigma": fit_b.sigma_hat,

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_integration_spark.api import Engine, em_on_simulated
+from data_integration_spark.api import Engine
 from data_integration_spark.stats.em import EMEstimator
 from data_integration_spark.stats.fixtures import make_fixtures
 
@@ -61,14 +61,11 @@ def test_engine_and_pipeline_draw_the_same_ebp(spark):
 
 
 def test_em_on_simulated_helper(spark, engine):
+    """README.md:12's usage — 'the EM function can be used on simulated
+    datasets with the required column names' — is one direct call."""
     _, fx = engine
-    fit = em_on_simulated(
-        spark,
-        spark.createDataFrame(fx["survey_small"]),
-        n_reps=100,
-        tol=0.05,
-        max_iter=10,
-        seed=3,
+    fit = EMEstimator(n_reps=100, tol=0.05, max_iter=10, seed=3).fit(
+        spark.createDataFrame(fx["survey_small"])
     )
     assert len(fit.beta_hat) == 8 and fit.sigma_hat > 0
 

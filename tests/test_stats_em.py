@@ -1,5 +1,6 @@
 """Statistical-layer tests: parameter recovery (the reference README's
-intended validation), mode equivalence, GLM cross-check (SURVEY.md §5.2.4)."""
+intended validation), the β-objective's analytic derivatives, GLM
+cross-check (SURVEY.md §5.2.4)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from data_integration_spark.stats.em import EMEstimator
+from data_integration_spark.stats.em import (
+    EMEstimator,
+    beta_objective,
+    collect_cells,
+    draw_matrix,
+    e_step,
+    em_stationarity_certificate,
+)
 from data_integration_spark.stats.fixtures import BETA_TRUE, SIGMA_TRUE, make_fixtures
 from data_integration_spark.stats.glmm import FixedEffectsGLM
 
@@ -32,7 +40,7 @@ def test_glm_recovers_fixed_effects(small_df):
 def test_em_parameter_recovery(small_df):
     """README.md:12: the EM function 'can be used on simulated datasets' —
     parameter recovery on data generated from known (β, σ)."""
-    em = EMEstimator(n_reps=300, tol=0.01, max_iter=100, mode="driver", seed=42)
+    em = EMEstimator(n_reps=300, tol=0.01, max_iter=100, seed=42)
     fit = em.fit(small_df)
     assert fit.converged
     err = np.abs(fit.beta_hat - BETA_TRUE)
@@ -45,29 +53,42 @@ def test_em_parameter_recovery(small_df):
     assert (fit.v_hat["tau_hat_sq"] > 0).all()
 
 
-def test_em_draws_differ_across_areas_and_reps(small_df):
+def test_em_draws_differ_across_areas_and_reps(spark, fixtures):
     """SURVEY.md §5.3: the reference's seed bug made all areas/reps draw the
     SAME v; our per-(area, rep) hash seeding must not."""
-    em = EMEstimator(n_reps=50, max_iter=1, mode="driver", seed=1)
-    em.fit(small_df)
-    z = em._z_base
+    states = sorted(fixtures["survey_small"]["state"].unique())
+    z = draw_matrix(spark, states, n_reps=50, seed=1)
+    assert z.shape == (50, len(states))
     # distinct across areas within a rep, and across reps within an area
     assert len(np.unique(np.round(z[0, :], 12))) == z.shape[1]
     assert len(np.unique(np.round(z[:, 0], 12))) == z.shape[0]
 
 
-def test_em_modes_agree(spark, fixtures):
-    """driver (NumPy) and distributed (Spark-agg) modes share draws and must
-    produce near-identical estimates (fp association order only)."""
+def test_beta_objective_derivatives_match_finite_differences(spark, fixtures):
+    """The M-step Newton and the stationarity certificate both trust
+    ``beta_objective``'s analytic gradient and Hessian: check them against
+    central differences of its own f and gradient at a non-optimal β."""
     pdf = fixtures["survey_small"]
     sub = pdf[pdf["state"].isin(sorted(pdf["state"].unique())[:8])]
-    df = spark.createDataFrame(sub)
-    kw = dict(n_reps=100, tol=0.05, max_iter=5, seed=42)
-    fit_d = EMEstimator(mode="driver", **kw).fit(df)
-    fit_s = EMEstimator(mode="distributed", **kw).fit(df)
-    assert fit_d.n_iter == fit_s.n_iter
-    np.testing.assert_allclose(fit_d.beta_hat, fit_s.beta_hat, atol=1e-6)
-    assert abs(fit_d.sigma_hat - fit_s.sigma_hat) < 1e-8
+    cells, ni = collect_cells(spark.createDataFrame(sub))
+    z = draw_matrix(spark, cells.states, n_reps=50, seed=5)
+    beta = np.linspace(-0.6, 0.8, 8)
+    _, _, v_tilde, _ = e_step(cells, ni, z, beta, 0.5, (-3.0, 3.0))
+    fgh = beta_objective(cells, v_tilde)
+    _, g, H = fgh(beta)
+    assert np.abs(g).max() > 1.0  # far from the optimum
+    h = 1e-5
+    fd_g = np.zeros(8)
+    fd_H = np.zeros((8, 8))
+    for k in range(8):
+        e = np.zeros(8)
+        e[k] = h
+        f_p, g_p, _ = fgh(beta + e)
+        f_m, g_m, _ = fgh(beta - e)
+        fd_g[k] = (f_p - f_m) / (2 * h)
+        fd_H[:, k] = (g_p - g_m) / (2 * h)
+    np.testing.assert_allclose(g, fd_g, rtol=1e-5, atol=1e-5 * np.abs(g).max())
+    np.testing.assert_allclose(H, fd_H, rtol=1e-5, atol=1e-5 * np.abs(H).max())
 
 
 def test_weighted_glm_equals_duplicated_rows(spark, fixtures):
@@ -90,12 +111,10 @@ def test_em_stationarity_certificate_margins(spark, fixtures):
     the literal-0.0 oracle implies — pin the raw (pre-round) margins so a
     slow fitting-path drift is caught here before it reaches the driver
     hash. Also pins the certificate's engine-independent fields."""
-    from data_integration_spark.stats.em import em_stationarity_certificate
-
     pdf = fixtures["survey_small"]
     sub = pdf[pdf["state"].isin(sorted(pdf["state"].unique())[:8])]
     df = spark.createDataFrame(sub)
-    est = EMEstimator(n_reps=50, tol=1e-4, max_iter=400, mode="driver", seed=5)
+    est = EMEstimator(n_reps=50, tol=1e-4, max_iter=400, seed=5)
     fit = est.fit(df)
     cert = em_stationarity_certificate(df, fit, est)
     assert cert["converged"] == 1
@@ -108,26 +127,44 @@ def test_em_stationarity_certificate_margins(spark, fixtures):
 
 @pytest.mark.parametrize("column", ["obama12", "demvote"])
 def test_null_inputs_fail_loudly(small_df, column):
-    """A null covariate or label must fail the GLM and the EM's driver mode
-    with a ValueError naming the column, not an opaque solver error."""
+    """A null covariate or label must fail the GLM and the EM with a
+    ValueError naming the column, not an opaque solver error."""
     df = small_df.withColumn(
         column, F.when(F.col("ID") % 50 == 0, None).otherwise(F.col(column))
     )
     with pytest.raises(ValueError, match=column):
         FixedEffectsGLM().fit(df)
     with pytest.raises(ValueError, match=column):
-        EMEstimator(n_reps=10, max_iter=1, mode="driver").fit(df)
+        EMEstimator(n_reps=10, max_iter=1).fit(df)
+
+
+@pytest.mark.parametrize("param", ["n_reps", "max_iter"])
+def test_em_rejects_non_positive_counts(small_df, param):
+    """n_reps or max_iter below 1 must fail with a ValueError naming the
+    parameter, not an opaque error from inside the fit."""
+    with pytest.raises(ValueError, match=param):
+        EMEstimator(**{param: 0}).fit(small_df)
 
 
 def test_glm_and_em_job_counts(spark, fixtures, count_jobs):
     """Pin the Spark jobs each fit issues: the GLM collects its cell table in
-    one query (2 jobs: the shuffle map stage and the result), and auto-mode
-    EM collects cells with one bounded query plus the draw table (3 jobs).
-    A plan or job regression fails here instead of hiding in wall time."""
+    one query (2 jobs: the shuffle map stage and the result), and the EM
+    and its stationarity certificate each collect the cell table plus the
+    draw table (3 jobs). A plan or job regression fails here instead of
+    hiding in wall time."""
     df = spark.createDataFrame(fixtures["survey_small"]).cache()
     df.count()  # materialize the cache outside the counted groups
+    em = EMEstimator(max_iter=2)
+    fits = []
     try:
         assert count_jobs("pin_glm_fit", lambda: FixedEffectsGLM().fit(df)) == 2
-        assert count_jobs("pin_em_fit", lambda: EMEstimator(max_iter=2).fit(df)) == 3
+        assert count_jobs("pin_em_fit", lambda: fits.append(em.fit(df))) == 3
+        assert (
+            count_jobs(
+                "pin_em_certificate",
+                lambda: em_stationarity_certificate(df, fits[0], em),
+            )
+            == 3
+        )
     finally:
         df.unpersist()

@@ -165,8 +165,9 @@ def test_golden_report_values(result):
 def test_bootstrap_threaded_equals_sequential(spark, fx):
     """VERDICT r6 #8 / SURVEY §3.3: the thread-pool bootstrap must produce
     BIT-IDENTICAL replicate tables to the reference-faithful sequential
-    loop (hash-seeded draws, per-thread estimator clones — no shared RNG
-    or scratch), while overlapping each rep's Spark jobs."""
+    loop (hash-seeded draws, one shared estimator that keeps no per-fit
+    state — no shared RNG or scratch), while overlapping each rep's Spark
+    jobs."""
     import time
 
     from data_integration_spark.stats.bootstrap import parametric_bootstrap
