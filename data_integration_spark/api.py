@@ -26,6 +26,7 @@ from data_integration_spark.stats.bootstrap import (
     mspe_table,
     parametric_bootstrap,
 )
+from data_integration_spark.stats.design import outcome_cells
 from data_integration_spark.stats.ebp import (
     area_frame,
     comparison_frame,
@@ -52,6 +53,7 @@ class Engine:
         self.actuals: DataFrame | None = None
         self.glm: FixedEffectsGLM | None = None
         self.em_fit: EMResult | None = None
+        self._small_cells: pd.DataFrame | None = None
         self._big_cells: pd.DataFrame | None = None
         self._ebp: pd.DataFrame | None = None
         self._direct: pd.DataFrame | None = None
@@ -63,7 +65,7 @@ class Engine:
         """The 3-dataset ingest (``readRDS``, ``Rmd:41-42``) — any Spark
         DataFrames with the survey schema (FIXTURES.md)."""
         self.small, self.big, self.actuals = small, big, actuals
-        self._big_cells = self._ebp = self._direct = None
+        self._small_cells = self._big_cells = self._ebp = self._direct = None
         return self
 
     def load_parquet(self, base_dir: str) -> "Engine":
@@ -75,10 +77,17 @@ class Engine:
         )
 
     # --------------------------------------------------------------- models
+    def _outcome_cells(self) -> pd.DataFrame:
+        """The small survey's outcome cells, collected once and fit by both
+        the GLM and the EM."""
+        if self._small_cells is None:
+            self._small_cells = outcome_cells(self.small)
+        return self._small_cells
+
     def fit_glm(self) -> FixedEffectsGLM:
         """Fixed-effects logistic baseline (``glmer`` fixed part,
         ``Rmd:68-80``)."""
-        self.glm = FixedEffectsGLM().fit(self.small)
+        self.glm = FixedEffectsGLM().fit(self._outcome_cells())
         return self.glm
 
     def fit_em(
@@ -91,7 +100,7 @@ class Engine:
         convergence loop, ``Rmd:217-390``)."""
         self.em_fit = EMEstimator(
             n_reps=n_reps, tol=tol, max_iter=max_iter, seed=self.seed
-        ).fit(self.small)
+        ).fit(self._outcome_cells())
         return self.em_fit
 
     # ----------------------------------------------------------- estimates

@@ -61,3 +61,13 @@ def bernoulli(theta: Column | str, *key_cols: Column | str, salt: int = 0) -> Co
     ``rbinom(1,1,θ)`` per row, ``Rmd:576-579``)."""
     u = hash_uniform(*key_cols, salt=salt)
     return (u < _c(theta)).cast("int")
+
+
+def replicate_numbers(n: int, name: str) -> Column:
+    """``explode`` of the replicate numbers 1..n as ``int``: one row each.
+    The type is part of every draw keyed by it, since xxhash64 hashes int
+    and long keys differently. Raises ``ValueError`` naming ``name`` when
+    n < 1, because ``sequence(1, 0)`` counts down to replicates 1 and 0."""
+    if n < 1:
+        raise ValueError(f"{name} must be >= 1, got {n}")
+    return F.explode(F.sequence(F.lit(1), F.lit(int(n))))

@@ -50,7 +50,7 @@ def q_ebp_scoring_skeleton(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q_survey_pipeline and its r8 certificate share ONE pipeline execution
+# q_survey_pipeline and its certificate share ONE pipeline execution
 # per Spark context (the EM + bootstrap fit is the expensive part; the
 # certificate audits the SAME result the rows-only query returns).
 _PIPELINE_MEMO: dict = {}
@@ -117,13 +117,13 @@ def q_survey_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_survey_pipeline_certificate",
-    # FULL-ORACLE certificate (r8, VERDICT r7 #6) for the reference's
-    # flagship end-to-end (``Rmd:406-507``), mirroring q_em_convergence:
-    # the pipeline's report values are optimizer outputs (rows-only in
-    # q_survey_pipeline), but the INVARIANTS they must satisfy are
-    # engine-independent literals under the driver hash. Fixture
-    # constants: 51 areas, 2 held out of the small survey
-    # (stats/fixtures.py N_STATES / n_absent defaults, seed 42).
+    # FULL-ORACLE certificate for the reference's flagship end-to-end
+    # (``Rmd:406-507``), mirroring q_em_convergence: the pipeline's report
+    # values are optimizer outputs (rows-only in q_survey_pipeline), but
+    # the INVARIANTS they must satisfy are engine-independent literals
+    # under the driver hash. Fixture constants: 51 areas, 2 held out of
+    # the small survey (stats/fixtures.py N_STATES / n_absent defaults,
+    # seed 42).
     oracle="""
     SELECT CAST(51 AS BIGINT) AS n_areas,
            CAST(2 AS BIGINT) AS n_absent_direct,

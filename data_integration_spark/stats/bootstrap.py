@@ -1,24 +1,27 @@
 """Parametric bootstrap for MSPE (reference C3/C4,
-``Method_code.Rmd:557-757``).
+``Method_code.Rmd:557-757``), for B replicates (the reference's
+``lapply(1:B, boot_func)``, ``Rmd:729-733``) in the same Spark jobs
+whatever B is:
 
-Per replicate b (driver loop — the reference's strictly-sequential
-``lapply(1:B, boot_func)``, SURVEY.md §3.3):
-
-1. simulate the small survey's outcome from the fitted model:
-   v_b ~ N(0, σ̂) per (rep, area) — hash-seeded per (rep, area), fixing the
-   reference's seed bug where every state and every replicate draws the SAME
-   noise (``set.seed`` inside ``state_func``, ``Rmd:569-571``; SURVEY.md
-   §5.3) — then demvote* ~ Bern(expit(xβ̂ + v_b)) per unit;
-2. re-run the full EM loop on the simulated small survey (``Rmd:612-657``);
+1. simulate the small survey's outcome from the fitted model for every
+   replicate in one aggregation over the survey exploded by an ``int``
+   rep: v_b ~ N(0, σ̂) per (rep, area) — hash-seeded per (rep, area),
+   fixing the reference's seed bug where every state and every replicate
+   draws the SAME noise (``set.seed`` inside ``state_func``,
+   ``Rmd:569-571``; SURVEY.md §5.3) — then demvote* ~ Bern(expit(xβ̂ + v_b))
+   per unit, collected as (rep, state, x1..x7, y, m, w_sum) cells;
+2. re-run the full EM loop (``Rmd:612-657``) on each replicate's cells on
+   the driver; the replicates share one MC draw matrix (same areas, same
+   estimator seed);
 3. EBP-score the big survey with the re-fitted β (synthetic fixed-effects
    predictor, v=0 — exactly the reference's Step 4-5, ``Rmd:660-682``) in
    NumPy on the big survey's collected covariate-pattern cells — exact,
-   because the cells carry the summed weights.
+   because the cells carry the summed weights;
+4. the big survey's outcome simulated under the SAME v_b ("model is true",
+   ``Rmd:687-696``) → per-area weighted "true" value, for every replicate
+   in one aggregation collected as (rep, state, true).
 
-Step 4, the big survey's outcome simulated under the SAME v_b ("model is
-true", ``Rmd:687-696``) → per-area weighted "true" value, does not depend
-on the re-fit, so it runs for ALL reps as one aggregation over the big
-survey exploded by rep, collected as (rep, state, true). The replicates
+Each replicate equals the one a per-replicate loop simulates and fits. They
 form ONE long (rep, state, est, true) table (not the reference's wide
 cbind-of-reps) → A6 sqrt-MSPE per area in NumPy (``Rmd:744-757``).
 """
@@ -33,10 +36,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_integration_spark.functions.math import expit
-from data_integration_spark.functions.rng import bernoulli, seeded_normal
+from data_integration_spark.functions.rng import (
+    bernoulli,
+    replicate_numbers,
+    seeded_normal,
+)
 from data_integration_spark.stats import ebp
-from data_integration_spark.stats.design import prep_design, x_beta_col
-from data_integration_spark.stats.em import EMEstimator
+from data_integration_spark.stats.design import design_cells, prep_design, x_beta_col
+from data_integration_spark.stats.em import EMEstimator, draw_matrix
 
 
 def simulate_outcome(
@@ -76,15 +83,9 @@ def simulated_truth(
 ) -> pd.DataFrame:
     """(rep, state, true) for reps 1..n_reps: the per-area weighted mean ×100
     of the big survey's outcome simulated under the fitted model
-    (``Rmd:687-696``). One aggregation over the survey exploded by an
-    ``int`` rep column, so every draw equals ``simulate_outcome``'s for
-    that rep."""
-    reps = big_survey.withColumn(
-        "rep", F.explode(F.sequence(F.lit(1), F.lit(int(n_reps))))
-    )
-    sim = simulate_outcome(
-        reps, beta, sigma, F.col("rep"), seed=seed, survey_tag="big"
-    )
+    (``Rmd:687-696``), in one aggregation."""
+    reps = big_survey.withColumn("rep", replicate_numbers(n_reps, "n_reps"))
+    sim = simulate_outcome(reps, beta, sigma, F.col("rep"), seed=seed, survey_tag="big")
     return (
         sim.groupBy("rep", "state")
         .agg(
@@ -105,63 +106,43 @@ def parametric_bootstrap(
     n_reps: int = 10,
     em: EMEstimator | None = None,
     seed: int = 99,
-    parallelism: int = 1,
     big_cells: pd.DataFrame | None = None,
 ) -> tuple[DataFrame, pd.DataFrame]:
     """Returns (long (rep, state, est, true) DataFrame, per-rep EM estimates
-    frame — the reference stores both, ``Rmd:700-718``).
-
-    ``parallelism=1`` (default) is the reference-faithful strictly
-    sequential ``lapply`` (``Rmd:732``). ``parallelism>1`` runs the reps'
-    EM fits on a thread pool issuing CONCURRENT Spark jobs against the
-    shared session (SURVEY.md §3.3's scale-up: the scheduler interleaves
-    each rep's many small jobs, filling executor slots a single sequential
-    rep leaves idle). Results are bit-identical in any mode/order: every
-    random draw is hash-seeded by (rep, area/unit) — no shared RNG state
-    — and each thread gets its own EMEstimator clone (``fit`` keeps
-    per-instance scratch). Replicate outputs are assembled in rep order
-    regardless of completion order.
-
-    ``big_cells`` is the big survey's ``ebp.scoring_cells`` when the caller
-    already holds them (the pipeline shares EBP's); they are collected here
-    otherwise."""
+    frame — the reference stores both, ``Rmd:700-718``). ``big_cells`` is
+    the big survey's ``ebp.scoring_cells`` when the caller already holds
+    them (the pipeline shares EBP's); they are collected here otherwise.
+    The Spark jobs are the same for any ``n_reps``."""
     em = em or EMEstimator(n_reps=200, max_iter=50)
+    reps = small_survey.withColumn("rep", replicate_numbers(n_reps, "n_reps"))
+    sim = simulate_outcome(
+        reps, beta_fit, sigma_fit, F.col("rep"), seed=seed, survey_tag="small"
+    )
+    sim_cells = design_cells(prep_design(sim), by=["rep"]).toPandas()
     cells = ebp.scoring_cells(big_survey) if big_cells is None else big_cells
+    # every replicate simulates the same units, so the same areas
+    states = sorted(sim_cells["state"].unique())
+    draws = draw_matrix(small_survey.sparkSession, states, em.n_reps, em.seed)
 
-    def run_rep(b: int) -> tuple[pd.DataFrame, dict]:
-        sim_small = simulate_outcome(
-            small_survey, beta_fit, sigma_fit, b, seed=seed, survey_tag="small"
-        )
-        fit_b = em.fit(sim_small)
-        em_row = {
-            "rep": b,
-            "sigma": fit_b.sigma_hat,
-            **{f"beta{k}": fit_b.beta_hat[k] for k in range(len(fit_b.beta_hat))},
-        }
+    ests, em_rows = [], []
+    for b, rep_cells in sim_cells.groupby("rep", sort=True):
+        fit_b = em.fit(rep_cells, draws=draws)
+        betas = {f"beta{k}": v for k, v in enumerate(fit_b.beta_hat)}
+        em_rows.append({"rep": int(b), "sigma": fit_b.sigma_hat, **betas})
         # step 3: EBP with re-fitted β, v=0 (Rmd:660-682)
-        est = ebp.area_means(
-            cells, ebp.expit(ebp.cell_x_beta(cells, fit_b.beta_hat))
+        est = ebp.area_means(cells, ebp.expit(ebp.cell_x_beta(cells, fit_b.beta_hat)))
+        ests.append(
+            pd.DataFrame({"rep": int(b), "state": est.index, "est": est.to_numpy()})
         )
-        est_b = pd.DataFrame({"rep": b, "state": est.index, "est": est.to_numpy()})
-        return est_b, em_row
-
-    reps = range(1, n_reps + 1)
-    if parallelism > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            results = list(pool.map(run_rep, reps))  # preserves rep order
-    else:
-        results = [run_rep(b) for b in reps]
 
     truth = simulated_truth(big_survey, beta_fit, sigma_fit, n_reps, seed=seed)
-    long_pd = pd.concat([r[0] for r in results]).merge(truth, on=["rep", "state"])
+    long_pd = pd.concat(ests).merge(truth, on=["rep", "state"])
     long_df = ebp.area_frame(
         small_survey.sparkSession,
         long_pd[["rep", "state", "est", "true"]],
         "rep int, state string, est double, true double",
     )
-    return long_df, pd.DataFrame([r[1] for r in results])
+    return long_df, pd.DataFrame(em_rows)
 
 
 MSPE_SCHEMA = "state string, sqrt_MSPE double"

@@ -60,22 +60,37 @@ def x_beta_col(beta: Sequence[float]) -> Column:
 
 
 def design_cells(
-    prepped: DataFrame, with_outcome: bool = True, weight_col: str | None = "weight"
+    prepped: DataFrame,
+    with_outcome: bool = True,
+    weight_col: str | None = "weight",
+    by: Sequence[str] = (),
 ) -> DataFrame:
     """Collapse a prepped survey to covariate-pattern cells.
 
-    Returns (state, x1..x7[, y], m, w_sum): m = unit count, w_sum = summed
-    survey weight. One shuffle; output is ≤ #areas × 72 rows (2·2·3·3
-    covariate patterns × 2 outcomes; x7 is area-constant) regardless of
-    input size — THE scalability lever for the iterative layer.
+    Returns ([by..,] state, x1..x7[, y], m, w_sum): m = unit count, w_sum =
+    summed survey weight; ``by`` adds leading keys (the bootstrap's rep). One
+    shuffle; output is ≤ #areas × 72 rows (2·2·3·3 covariate patterns × 2
+    outcomes; x7 is area-constant) per ``by`` group regardless of input size
+    — THE scalability lever for the iterative layer.
     """
-    keys = ["state", *X_COLS] + (["y"] if with_outcome else [])
+    keys = [*by, "state", *X_COLS] + (["y"] if with_outcome else [])
     aggs = [F.count("*").alias("m")]
     if weight_col is not None and weight_col in prepped.columns:
         aggs.append(F.sum(weight_col).alias("w_sum"))
     else:
         aggs.append(F.lit(None).cast("double").alias("w_sum"))
     return prepped.groupBy(*keys).agg(*aggs)
+
+
+def outcome_cells(
+    survey: DataFrame | pd.DataFrame, weight_col: str | None = "weight"
+) -> pd.DataFrame:
+    """The survey's (state, x1..x7, y, m, w_sum) outcome cells, collected in
+    one query: the table the GLM and the EM fit on. A pandas frame is taken
+    as these cells, collected already."""
+    if isinstance(survey, pd.DataFrame):
+        return survey
+    return design_cells(prep_design(survey), weight_col=weight_col).toPandas()
 
 
 # raw survey column behind each cell column that can carry a null/NaN

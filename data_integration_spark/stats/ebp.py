@@ -30,23 +30,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from data_integration_spark.functions.rng import seeded_normal
+from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
 from data_integration_spark.functions.stats import survey_mean_se
 from data_integration_spark.stats.design import X_COLS, design_cells, prep_design
 
 
 def draw_table(v_hat: DataFrame, n_draws: int, seed: int) -> DataFrame:
     """(state, r, v_tilde) EBP draws, v_tilde ~ N(v̂, τ̂²) per (r, area)
-    (``Rmd:415``: R=100) from the EM's (state, v_hat, tau_hat_sq) table.
-
-    ``r`` is an ``int`` column: xxhash64 hashes int and long keys
-    differently, so the type is part of the seeded draw."""
+    (``Rmd:415``: R=100) from the EM's (state, v_hat, tau_hat_sq) table,
+    for the ``int`` draw numbers r = 1..n_draws."""
     return (
         v_hat.select(
             "state",
             "v_hat",
             "tau_hat_sq",
-            F.explode(F.sequence(F.lit(1), F.lit(int(n_draws)))).alias("r"),
+            replicate_numbers(n_draws, "n_draws").alias("r"),
         )
         .withColumn(
             "v_tilde",

@@ -5,8 +5,8 @@ Spark-first re-architecture (SURVEY.md §2.11):
 
 - The unit-level survey collapses in Spark to covariate-pattern **cells**
   (design.py): at most areas × 72 rows whatever the number of units, and
-  every E/M step below is mathematically exact on cells. The fit collects
-  the cell table once and runs every step in NumPy on it.
+  every E/M step below is mathematically exact on cells. The fit runs
+  every step in NumPy on the collected cell table.
 - E1 per-area Laplace approximation: golden-section search per area, as
   the reference loops states on the driver (``Rmd:252-274``).
 - E2 MC draws: one (R, areas) matrix of hash-seeded normals generated in
@@ -32,15 +32,9 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_integration_spark.functions.rng import seeded_normal
-from data_integration_spark.stats.design import (
-    CellArrays,
-    cell_arrays,
-    design_cells,
-    prep_design,
-)
+from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
+from data_integration_spark.stats.design import CellArrays, cell_arrays, outcome_cells
 from data_integration_spark.stats.optimize import golden_max, newton_minimize
 
 N_BETA = 8
@@ -82,10 +76,10 @@ def laplace_one_area(
     return v_hat, tau_sq
 
 
-def collect_cells(survey: DataFrame) -> tuple[CellArrays, np.ndarray]:
-    """The survey's outcome cells, collected in one query, and the unit
-    count ni per area (aligned with ``cells.states``)."""
-    cells = cell_arrays(design_cells(prep_design(survey)).toPandas())
+def collect_cells(survey: DataFrame | pd.DataFrame) -> tuple[CellArrays, np.ndarray]:
+    """The survey's ``outcome_cells`` as arrays, and the unit count ni per
+    area (aligned with ``cells.states``)."""
+    cells = cell_arrays(outcome_cells(survey))
     ni = np.zeros(len(cells.states))
     np.add.at(ni, cells.state_idx, cells.m)
     return cells, ni
@@ -95,15 +89,11 @@ def draw_matrix(
     spark: SparkSession, states: list[str], n_reps: int, seed: int
 ) -> np.ndarray:
     """(n_reps, areas) standard normals: row r−1, column s holds
-    ``seeded_normal(state, r, salt=seed)``, bit-stable across partitionings.
-    ``r`` is an ``int`` column: xxhash64 hashes int and long keys
-    differently, so the type is part of the seeded draw."""
+    ``seeded_normal(state, r, salt=seed)`` for the ``int`` replicate
+    number r, bit-stable across partitionings."""
     draws = (
         spark.createDataFrame(pd.DataFrame({"state": states}))
-        .select(
-            "state",
-            F.explode(F.sequence(F.lit(1), F.lit(int(n_reps)))).alias("r"),
-        )
+        .select("state", replicate_numbers(n_reps, "n_reps").alias("r"))
         .withColumn("z", seeded_normal("state", "r", salt=seed))
         .toPandas()
     )
@@ -217,22 +207,30 @@ class EMEstimator:
 
     def fit(
         self,
-        survey: DataFrame,
+        survey: DataFrame | pd.DataFrame,
         beta_init: np.ndarray | None = None,
         sigma_init: float = 0.1,
+        draws: np.ndarray | None = None,
     ) -> EMResult:
+        """Fit on the survey or its ``outcome_cells``. ``draws`` is this
+        estimator's ``draw_matrix`` for the cells' areas when the caller
+        holds it (bootstrap replicates share one); it is computed otherwise."""
         beta = (
             np.full(N_BETA, 0.1) if beta_init is None else np.asarray(beta_init, float)
         )
         sigma = float(sigma_init)
         cells, ni = collect_cells(survey)
-        z = draw_matrix(survey.sparkSession, cells.states, self.n_reps, self.seed)
+        if draws is None:
+            spark = SparkSession.active()
+            draws = draw_matrix(spark, cells.states, self.n_reps, self.seed)
+        if draws.shape != (self.n_reps, len(cells.states)):
+            raise ValueError(f"draws must be (n_reps, areas), got {draws.shape}")
 
         history: list[dict] = []
         converged = False
         for it in range(1, self.max_iter + 1):
             v_hat, tau_sq, v_tilde, sigma_sq = e_step(
-                cells, ni, z, beta, sigma, self.v_bounds
+                cells, ni, draws, beta, sigma, self.v_bounds
             )
             sigma_new = math.sqrt(
                 min(max(sigma_sq, self.sigma_sq_bounds[0]), self.sigma_sq_bounds[1])

@@ -19,13 +19,14 @@ the fit is exact.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_integration_spark.functions.math import expit
 from data_integration_spark.stats.design import (
     cell_arrays,
-    design_cells,
+    outcome_cells,
     prep_design,
     x_beta_col,
 )
@@ -40,11 +41,13 @@ class FixedEffectsGLM:
         self.weight_col = weight_col  # survey-weighted fit (svyglm analog)
         self.beta_: np.ndarray | None = None
 
-    def fit(self, survey: DataFrame) -> "FixedEffectsGLM":
+    def fit(self, survey: DataFrame | pd.DataFrame) -> "FixedEffectsGLM":
         """Minimize Σ w·[y·softplus(−xβ) + (1−y)·softplus(xβ)] over cells;
-        w = unit count, or summed ``weight_col`` for a weighted fit."""
+        w = unit count, or summed ``weight_col`` for a weighted fit.
+        ``survey`` may be its ``outcome_cells``, whose w_sum a weighted fit
+        then reads."""
         cells = cell_arrays(
-            design_cells(prep_design(survey), weight_col=self.weight_col).toPandas(),
+            outcome_cells(survey, self.weight_col),
             weighted=self.weight_col is not None,
         )
         X, y, w = cells.X, cells.y, cells.w

@@ -6,10 +6,11 @@ the big survey → direct survey-weighted estimates → comparison vs actuals
 (ASD/RASD/AAD) → parametric-bootstrap MSPE → final SQL report.
 
 Driver-side Python orchestrates. Unit rows are read only inside Spark
-aggregations (the GLM/EM cells, the EBP and bootstrap scoring cells, the
-direct estimates, the simulated truth); everything after the EM combines
-the collected area tables in NumPy/pandas, and the report runs as SQL over
-local views of them.
+aggregations, each collected once and none per bootstrap replicate: the
+small survey's outcome cells (fit by the GLM and the EM), the big survey's
+scoring cells (scored by EBP and the bootstrap), the direct estimates, and
+the bootstrap's simulated cells and truth. The rest runs in NumPy/pandas on
+those design-bounded tables, and the report as SQL over local views of them.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from data_integration_spark.stats.bootstrap import (
     mspe_table,
     parametric_bootstrap,
 )
+from data_integration_spark.stats.design import outcome_cells
 from data_integration_spark.stats.ebp import (
     area_frame,
     comparison_frame,
@@ -59,13 +61,16 @@ def run_pipeline(
     bootstrap_reps: int = 0,
     bootstrap_em: EMEstimator | None = None,
     seed: int = 7,
-    bootstrap_parallelism: int = 1,
 ) -> PipelineResult:
+    """The reference's program on the three input tables. ``ebp_draws`` (≥ 1)
+    is the EBP's draws per area; ``bootstrap_reps`` is the number of
+    bootstrap replicates, 0 for none (the report's EBP_SE is then NULL)."""
     em = em or EMEstimator()
+    small_cells = outcome_cells(survey_small)
     # 1. fixed-effects baseline (reference glmer step, Rmd:68-80)
-    glm = FixedEffectsGLM().fit(survey_small)
+    glm = FixedEffectsGLM().fit(small_cells)
     # 2. EM with random intercepts, initialized like the reference loop
-    fit = em.fit(survey_small)
+    fit = em.fit(small_cells)
     # 3. EBP with v_tilde ~ N(v̂, τ̂) per (r, area) (Rmd:406-454, R=100), on
     # the big survey's cells, which the bootstrap scores too
     big_cells = scoring_cells(survey_big)
@@ -90,7 +95,6 @@ def run_pipeline(
             n_reps=bootstrap_reps,
             em=bootstrap_em,
             seed=seed + 100,
-            parallelism=bootstrap_parallelism,
             big_cells=big_cells,
         )
         mspe = mspe_table(boot_long)

@@ -60,6 +60,31 @@ def test_engine_and_pipeline_draw_the_same_ebp(spark):
     assert engine_est == pipeline_est
 
 
+def test_engine_collects_small_cells_once(spark, count_jobs):
+    """``fit_glm`` and ``fit_em`` fit one collected cell table of the small
+    survey: together they run its query once (2 jobs: the shuffle map
+    stage and the result) plus the EM's draw matrix (1 job). ``load``
+    drops the cells, so the same pair after a reload costs the same."""
+    fx = make_fixtures(n_states=6, big_per_state=(50, 80))
+    small, big, actuals = (
+        spark.createDataFrame(fx[k]).cache()
+        for k in ("survey_small", "survey_big", "actual_result")
+    )
+    small.count()  # materialize the cache outside the counted groups
+    eng = Engine(spark, seed=7)
+
+    def fits():
+        eng.fit_glm()
+        eng.fit_em(n_reps=20, tol=0.0, max_iter=2)
+
+    try:
+        for load in (1, 2):
+            eng.load(small, big, actuals)
+            assert count_jobs(f"pin_engine_fits_{load}", fits) == 3
+    finally:
+        small.unpersist()
+
+
 def test_em_on_simulated_helper(spark, engine):
     """README.md:12's usage — 'the EM function can be used on simulated
     datasets with the required column names' — is one direct call."""

@@ -68,9 +68,10 @@ def test_ebp_and_pipeline_job_counts(spark, count_jobs):
     """Pin the Spark jobs of the post-EM stages, which work on collected
     area tables: the big survey's scoring cells are one query (2 jobs: the
     shuffle map stage and the result), EBP on them runs only its draw-table
-    collect (1 job), and a whole pipeline with one bootstrap rep plus the
-    report collect runs 20. A new per-rep or per-estimator plan fails here
-    instead of hiding in wall time."""
+    collect (1 job), and a whole pipeline plus the report collect runs 18,
+    with 1 bootstrap replicate as with 10: the bootstrap simulates all
+    replicates in one aggregation. A new per-rep or per-estimator plan
+    fails here instead of hiding in wall time."""
     from data_integration_spark.stats.ebp import (
         draw_table,
         ebp_estimates,
@@ -92,12 +93,12 @@ def test_ebp_and_pipeline_job_counts(spark, count_jobs):
         "state string, v_hat double, tau_hat_sq double",
     )
 
-    def pipeline():
+    def pipeline(bootstrap_reps):
         res = run_pipeline(
             spark, small, big, actuals,
             em=EMEstimator(n_reps=20, tol=0.0, max_iter=2, seed=1),
             ebp_draws=10,
-            bootstrap_reps=1,
+            bootstrap_reps=bootstrap_reps,
             bootstrap_em=EMEstimator(n_reps=20, tol=0.0, max_iter=2, seed=2),
         )
         res.report.collect()
@@ -107,7 +108,8 @@ def test_ebp_and_pipeline_job_counts(spark, count_jobs):
         assert count_jobs("pin_cells", lambda: cells.append(scoring_cells(big))) == 2
         ebp = lambda: ebp_estimates(cells[0], [0.0] * 8, draw_table(v_hat, 5, 3))
         assert count_jobs("pin_ebp", ebp) == 1
-        assert count_jobs("pin_pipeline", pipeline) == 20
+        for reps in (1, 10):
+            assert count_jobs(f"pin_pipeline_{reps}", lambda: pipeline(reps)) == 18
     finally:
         for df in (small, big, actuals):
             df.unpersist()

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from data_integration_spark.stats.design import outcome_cells
 from data_integration_spark.stats.em import (
     EMEstimator,
     beta_objective,
@@ -144,6 +145,27 @@ def test_em_rejects_non_positive_counts(small_df, param):
     parameter, not an opaque error from inside the fit."""
     with pytest.raises(ValueError, match=param):
         EMEstimator(**{param: 0}).fit(small_df)
+
+
+def test_fits_on_collected_cells_equal_fits_on_survey(spark, fixtures):
+    """The GLM and the EM fit on the survey's collected ``outcome_cells``,
+    with or without the caller's draw matrix, exactly as on the survey;
+    a draw matrix of the wrong shape is refused."""
+    sub = fixtures["survey_small"]
+    keep = sorted(sub["state"].unique())[:8]
+    df = spark.createDataFrame(sub[sub["state"].isin(keep)])
+    cells = outcome_cells(df)
+    glm_beta = FixedEffectsGLM().fit(df).beta_
+    assert list(FixedEffectsGLM().fit(cells).beta_) == list(glm_beta)
+    em = EMEstimator(n_reps=30, tol=0.0, max_iter=3, seed=5)
+    want = em.fit(df)
+    draws = draw_matrix(spark, keep, em.n_reps, em.seed)
+    for got in (em.fit(cells), em.fit(cells, draws=draws)):
+        assert list(got.beta_hat) == list(want.beta_hat)
+        assert got.sigma_hat == want.sigma_hat
+        assert got.v_hat.equals(want.v_hat)
+    with pytest.raises(ValueError, match="draws"):
+        em.fit(cells, draws=draws[:, 1:])
 
 
 def test_glm_and_em_job_counts(spark, fixtures, count_jobs):

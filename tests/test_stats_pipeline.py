@@ -162,47 +162,97 @@ def test_golden_report_values(result):
             assert abs(r.direct_SE - dse) < 0.02, (state, "direct_se")
 
 
-def test_bootstrap_threaded_equals_sequential(spark, fx):
-    """VERDICT r6 #8 / SURVEY §3.3: the thread-pool bootstrap must produce
-    BIT-IDENTICAL replicate tables to the reference-faithful sequential
-    loop (hash-seeded draws, one shared estimator that keeps no per-fit
-    state — no shared RNG or scratch), while overlapping each rep's Spark
-    jobs."""
-    import time
+def test_bootstrap_equals_per_rep_loop(spark, fx):
+    """The batched bootstrap (one simulation of all replicates, fits on the
+    driver with one shared draw matrix) must equal, BIT FOR BIT, the
+    per-replicate loop it replaces: simulate the small survey for rep b,
+    fit the EM on it, score the big survey's cells with the re-fitted β.
+    The truth column comes from ``simulated_truth``, which the next test
+    pins against per-rep simulation."""
+    import pandas as pd
 
-    from data_integration_spark.stats.bootstrap import parametric_bootstrap
-    from data_integration_spark.stats.em import EMEstimator
+    from data_integration_spark.stats import ebp
+    from data_integration_spark.stats.bootstrap import (
+        parametric_bootstrap,
+        simulate_outcome,
+        simulated_truth,
+    )
 
     pdf_small = fx["survey_small"]
     keep = sorted(pdf_small["state"].unique())[:8]
-    small = spark.createDataFrame(
-        pdf_small[pdf_small["state"].isin(keep)]
-    ).cache()
+    small = spark.createDataFrame(pdf_small[pdf_small["state"].isin(keep)]).cache()
     big_pdf = fx["survey_big"]
     big = spark.createDataFrame(big_pdf[big_pdf["state"].isin(keep)]).cache()
-    beta = [0.1] * 8
-    kw = dict(
-        n_reps=4,
-        em=EMEstimator(n_reps=50, tol=0.05, max_iter=5, seed=43),
-        seed=123,
-    )
+    beta, sigma, seed, n_reps = [0.1] * 8, 0.3, 123, 4
+    em = EMEstimator(n_reps=50, tol=0.05, max_iter=5, seed=43)
+    try:
+        got_long, got_em = parametric_bootstrap(
+            small, big, beta, sigma, n_reps=n_reps, em=em, seed=seed
+        )
 
-    t0 = time.time()
-    seq_long, seq_em = parametric_bootstrap(small, big, beta, 0.3, **kw)
-    t_seq = time.time() - t0
-    t0 = time.time()
-    par_long, par_em = parametric_bootstrap(
-        small, big, beta, 0.3, parallelism=4, **kw
-    )
-    t_par = time.time() - t0
+        cells = ebp.scoring_cells(big)
+        ests, em_rows = [], []
+        for b in range(1, n_reps + 1):
+            sim = simulate_outcome(
+                small, beta, sigma, b, seed=seed, survey_tag="small"
+            )
+            fit = em.fit(sim)
+            em_rows.append(
+                {"rep": b, "sigma": fit.sigma_hat,
+                 **{f"beta{k}": v for k, v in enumerate(fit.beta_hat)}}
+            )
+            est = ebp.area_means(
+                cells, ebp.expit(ebp.cell_x_beta(cells, fit.beta_hat))
+            )
+            ests.append(
+                pd.DataFrame({"rep": b, "state": est.index, "est": est.to_numpy()})
+            )
+        truth = simulated_truth(big, beta, sigma, n_reps, seed=seed)
+        want_long = pd.concat(ests).merge(truth, on=["rep", "state"])
 
-    key = ["rep", "state"]
-    seq_rows = [r.asDict() for r in seq_long.orderBy(*key).collect()]
-    par_rows = [r.asDict() for r in par_long.orderBy(*key).collect()]
-    assert seq_rows == par_rows
-    assert seq_em.to_dict("records") == par_em.to_dict("records")
-    # wall-clock is environment-dependent; record it without a hard gate
-    print(f"bootstrap B=4: sequential {t_seq:.1f}s, threaded {t_par:.1f}s")
+        key = ["rep", "state"]
+        got_rows = [r.asDict() for r in got_long.orderBy(*key).collect()]
+        want_rows = want_long.sort_values(key)[["rep", "state", "est", "true"]]
+        assert len(got_rows) == n_reps * len(keep)
+        assert got_rows == want_rows.to_dict("records")
+        assert got_em.to_dict("records") == em_rows
+    finally:
+        small.unpersist()
+        big.unpersist()
+
+
+@pytest.mark.parametrize(
+    "call",
+    ["draw_table", "simulated_truth", "parametric_bootstrap"],
+)
+def test_counts_below_one_raise(spark, fx, call):
+    """``sequence(1, 0)`` counts down, so a count of 0 would silently draw
+    replicates 1 and 0; every entry point that builds one must refuse a
+    count below 1, naming the parameter."""
+    from data_integration_spark.stats.bootstrap import (
+        parametric_bootstrap,
+        simulated_truth,
+    )
+    from data_integration_spark.stats.ebp import draw_table
+
+    small = spark.createDataFrame(fx["survey_small"].head(50))
+    big = spark.createDataFrame(fx["survey_big"].head(50))
+    v_hat = spark.createDataFrame(
+        [("S00", 0.1, 0.04)], "state string, v_hat double, tau_hat_sq double"
+    )
+    calls = {
+        "draw_table": (lambda: draw_table(v_hat, 0, 3), "n_draws"),
+        "simulated_truth": (
+            lambda: simulated_truth(big, [0.1] * 8, 0.3, 0), "n_reps"
+        ),
+        "parametric_bootstrap": (
+            lambda: parametric_bootstrap(small, big, [0.1] * 8, 0.3, n_reps=0),
+            "n_reps",
+        ),
+    }
+    fn, name = calls[call]
+    with pytest.raises(ValueError, match=f"{name} must be >= 1, got 0"):
+        fn()
 
 
 def test_simulated_truth_equals_per_rep_simulation(spark, fx):

@@ -1,6 +1,7 @@
 """Generate a LOCAL sf1 rehearsal dataset by scaling sf0.1 10× with
-key-shifted copies (VERDICT r5 #7). /root/testdata is read-only, so the
-output goes to /root/repo/.scratch/sf1/.
+key-shifted copies. The source data is read-only, so the output goes to
+``.scratch/sf1/`` in the checkout that holds this script, unless
+``out_dir`` is given.
 
 Scaling strategy — 10 shifted copies, copy 0 = identity:
 - dims (region, nation) stay single-copy: they are fixed-cardinality in
@@ -25,7 +26,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -52,7 +54,7 @@ DIMS = ("region", "nation")
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf1")
     # --shared-tokens: copies keep the ORIGINAL token space (true Zipf hot
     # keys at scale — the skew-REALISTIC corpus for join experiments).
     # Near-dup queries are NOT meaningful on it: every copy is an exact
