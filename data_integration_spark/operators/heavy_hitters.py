@@ -33,6 +33,8 @@ import heapq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_integration_spark.sources.local import local_table
+
 
 def _mg_stream(tokens, k: int) -> dict[str, int]:
     """Textbook Misra-Gries over an iterable of items: ≤ k counters."""
@@ -180,7 +182,8 @@ def mg_certificate_rows(
                 "summary_within_k": ok_k,
             }
         )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "token string, exact_count long, n_tokens long,"
         " guarantee_ok long, summary_within_k long",

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -511,16 +512,14 @@ def q_funnel_conversion_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     na, nb, nc = a.count(), b.count(), c.count()
 
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {"stage": 1, "n_users": na, "conversion": 1.0},
-                {"stage": 2, "n_users": nb, "conversion": round(nb / na, 6)},
-                {"stage": 3, "n_users": nc, "conversion": round(nc / na, 6)},
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {"stage": 1, "n_users": na, "conversion": 1.0},
+            {"stage": 2, "n_users": nb, "conversion": round(nb / na, 6)},
+            {"stage": 3, "n_users": nc, "conversion": round(nc / na, 6)},
+        ],
+        "stage long, n_users long, conversion double",
     )
 
 
@@ -709,22 +708,24 @@ def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         )
     )
-    import pandas as pd
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_a": na,
-                    "conv_a": ca,
-                    "n_b": nb,
-                    "conv_b": cb,
-                    "rate_a": round(ca / na, 6),
-                    "rate_b": round(cb / nb, 6),
-                    "z_stat": z,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_a": na,
+                "conv_a": ca,
+                "n_b": nb,
+                "conv_b": cb,
+                "rate_a": round(ca / na, 6),
+                "rate_b": round(cb / nb, 6),
+                "z_stat": z,
+            }
+        ],
+        (
+            "n_a long, conv_a long, n_b long, conv_b long, rate_a double,"
+            " rate_b double, z_stat double"
+        ),
     )
 
 
@@ -906,8 +907,6 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     delta aggregation + one MV-keyed merge join. Float discipline: sums
     compare on the data's 2dp grid (rounded at comparison, the repo
     convention)."""
-    import pandas as pd
-
     orders = Catalog(spark, sf_dir)["orders"]
     base = (
         orders.filter(F.col("o_orderkey") % 10 < 8)
@@ -949,10 +948,10 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         | (F.col("n") != F.col("rn"))
         | (F.round("rev", 2) != F.round("rrev", 2))
     ).count()
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [{"n_groups": n_groups, "n_mismatch": n_mismatch}]
-        )
+    return local_table(
+        spark,
+        [{"n_groups": n_groups, "n_mismatch": n_mismatch}],
+        "n_groups long, n_mismatch long",
     )
 
 

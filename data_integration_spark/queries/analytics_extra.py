@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -1017,7 +1018,8 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the MI algebra on a literal frame, so the fact table is scanned and
     # shuffled exactly once (without this, each marginal's lineage would
     # re-run the fact aggregation)
-    cells = spark.createDataFrame(
+    cells = local_table(
+        spark,
         cells_dist.collect(), "feature string, level string, y int, c double"
     )
     nx = cells.groupBy("feature", "level").agg(F.sum("c").alias("nx"))

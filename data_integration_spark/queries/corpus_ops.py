@@ -18,6 +18,7 @@ from data_integration_spark.dedup.components import _truncate_lineage
 from data_integration_spark.queries import register
 from data_integration_spark.similarity.ann import as_double_array, with_norm
 from data_integration_spark.sources.catalog import Catalog, spread_scan
+from data_integration_spark.sources.local import local_table
 
 
 def _bigram_shingles(docs: DataFrame, key: str) -> DataFrame:
@@ -981,7 +982,10 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-1 (driver sees one row per iteration); the merge is
     applied in-row with a single left-to-right F.aggregate fold (no
     shuffle); lineage checkpointed every 4 merges. At 100 TB the type
-    table is O(10^8) rows — never driver-collected."""
+    table is O(10^8) rows — never driver-collected. The merge list comes
+    back to the driver in rank order and is returned as a local table
+    (``sources.local``) that keeps that order, so the action is one job
+    with no sort and no Python worker."""
     from data_integration_spark.operators.bpe import train_bpe
 
     words = _bpe_word_table(spark, sf_dir)
@@ -990,7 +994,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold pass over the type table at any scale)
     merges, final = train_bpe(words, _BPE_MERGES, materialize_final=False)
     final.unpersist()
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             {
                 "merge_rank": r,
@@ -1001,7 +1006,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             for (r, l, rt, c) in merges
         ],
         schema="merge_rank long, left_sym string, right_sym string, pair_count long",
-    ).orderBy("merge_rank")
+    )
 
 
 @register(
@@ -1091,7 +1096,8 @@ def q_bpe_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "parts_closed", F.lit(closed).cast("long")
     ).collect()[0]
     final.unpersist()
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [row.asDict()],
         schema=(
             "n_words long, total_chars long, n_merges long,"
@@ -2029,7 +2035,8 @@ def q_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "kmv_jaccard": r6(inter / u_est),
                 }
             )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         out,
         "src_a string, src_b string, kmv_a double, kmv_b double,"
         " kmv_union double, kmv_inter double, kmv_jaccard double",

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -870,10 +871,12 @@ def q_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs at all, which is precisely when the oracle emits nothing
     # (ADVICE r10).
     if n_block == 0:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [], "threshold double, n_pairs long, n_block_docs long"
         )
-    th_df = spark.createDataFrame(
+    th_df = local_table(
+        spark,
         [(float(t),) for t in thresholds], "threshold double"
     )
     th = F.explode(F.array(*[F.lit(t) for t in thresholds]))
@@ -1156,7 +1159,8 @@ def q_linkage_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recall_ge_090": int(int(agg["tp"]) >= 0.90 * n_true),
         "fpr_le_001": int(int(agg["fp"]) <= 0.01 * n_false),
     }
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [row],
         "n_pairs long, n_true long, ll_monotone long,"
         " m_gt_u_all_fields long, recall_ge_090 long, fpr_le_001 long",

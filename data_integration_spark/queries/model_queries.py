@@ -9,7 +9,6 @@ end-to-end inside the driver's harness."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,6 +16,7 @@ from data_integration_spark.functions.math import expit
 from data_integration_spark.functions.rng import bernoulli
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 AGE4 = ["18-29", "30-44", "45-64", "65+"]
 GENDER = ["female", "male"]
@@ -64,7 +64,8 @@ def q_em_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = {f"beta{k}": float(b) for k, b in enumerate(fit.beta_hat)}
     row.update(sigma=float(fit.sigma_hat), n_iter=fit.n_iter)
-    return spark.createDataFrame(pd.DataFrame([row]))
+    schema = ", ".join(f"{c} double" for c in row if c != "n_iter")
+    return local_table(spark, [row], schema + ", n_iter long")
 
 
 @register(
@@ -106,22 +107,25 @@ def q_em_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = EMEstimator(n_reps=50, tol=1e-4, max_iter=400, seed=5)
     survey = synth_survey(spark, sf_dir)
     cert = em_stationarity_certificate(survey, est.fit(survey), est)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_obs": cert["n_obs"],
-                    "n_areas": cert["n_areas"],
-                    "converged": cert["converged"],
-                    "beta_score_inf_norm": round(
-                        cert["beta_score_inf_norm"], 2
-                    ),
-                    "sigma_fixed_point_resid": round(
-                        cert["sigma_fixed_point_resid"], 2
-                    ),
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_obs": cert["n_obs"],
+                "n_areas": cert["n_areas"],
+                "converged": cert["converged"],
+                "beta_score_inf_norm": round(
+                    cert["beta_score_inf_norm"], 2
+                ),
+                "sigma_fixed_point_resid": round(
+                    cert["sigma_fixed_point_resid"], 2
+                ),
+            }
+        ],
+        (
+            "n_obs long, n_areas long, converged long, beta_score_inf_norm double,"
+            " sigma_fixed_point_resid double"
+        ),
     )
 
 
@@ -132,9 +136,8 @@ def q_glm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_integration_spark.stats.glmm import FixedEffectsGLM
 
     glm = FixedEffectsGLM().fit(synth_survey(spark, sf_dir))
-    return spark.createDataFrame(
-        pd.DataFrame([{f"beta{k}": float(b) for k, b in enumerate(glm.beta_)}])
-    )
+    row = {f"beta{k}": float(b) for k, b in enumerate(glm.beta_)}
+    return local_table(spark, [row], ", ".join(f"{c} double" for c in row))
 
 
 @register(

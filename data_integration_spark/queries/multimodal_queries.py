@@ -36,6 +36,7 @@ from data_integration_spark.multimodal.binary_ops import (
 )
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 def _spread_scan(df: DataFrame) -> DataFrame:
@@ -1080,7 +1081,8 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query block — build them driver-side instead of re-running the
     # whole BMP→decode→DCT→GEMM lineage a second time inside the join
     pl_pd = proj_pd[proj_pd["item_id"] % 29 == 5]
-    planted = spark.createDataFrame(
+    planted = local_table(
+        spark,
         pl_pd.assign(vec_id=pl_pd["item_id"] + 1_000_000_000)[
             ["vec_id", "y"]
         ].rename(columns={"y": "e"}),

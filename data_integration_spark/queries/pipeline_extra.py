@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from data_integration_spark.operators.packing import pack_documents
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -826,20 +827,21 @@ def q_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_resid = max(abs(m["m1"]), abs(m["m2"]))
     eig_resid = max(abs(m["v1"] - float(vals[0])), abs(m["v2"] - float(vals[1])))
 
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_vectors": m["n"],
-                    "ortho_resid": round(ortho_resid, 6),
-                    "mean_resid": round(mean_resid, 6),
-                    "eig_resid": round(eig_resid, 6),
-                    "var_ordered": int(m["v1"] >= m["v2"]),
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_vectors": m["n"],
+                "ortho_resid": round(ortho_resid, 6),
+                "mean_resid": round(mean_resid, 6),
+                "eig_resid": round(eig_resid, 6),
+                "var_ordered": int(m["v1"] >= m["v2"]),
+            }
+        ],
+        (
+            "n_vectors long, ortho_resid double, mean_resid double, eig_resid double,"
+            " var_ordered long"
+        ),
     )
 
 

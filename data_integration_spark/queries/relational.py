@@ -32,6 +32,7 @@ from data_integration_spark.operators.projections import (
 )
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
@@ -851,20 +852,18 @@ def q_rng_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
 
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_obs": n,
-                    "mean_ok": int(abs(m["mz"]) < bound),
-                    "sd_ok": int(abs(m["sz"] - 1.0) < bound),
-                    "rate_ok": int(abs(m["rate"] - 0.3) < rate_bound),
-                    "n_partition_mismatch": n_mismatch,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_obs": n,
+                "mean_ok": int(abs(m["mz"]) < bound),
+                "sd_ok": int(abs(m["sz"] - 1.0) < bound),
+                "rate_ok": int(abs(m["rate"] - 0.3) < rate_bound),
+                "n_partition_mismatch": n_mismatch,
+            }
+        ],
+        "n_obs long, mean_ok long, sd_ok long, rate_ok long, n_partition_mismatch long",
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql.functions import pandas_udf
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 _SCRATCH = "/root/repo/.scratch"
 
@@ -227,7 +228,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop on the tiny interval side (the right physical choice; an
     O(N·B) scan with B≈4, not a shuffle)."""
     ev = Catalog(spark, sf_dir)["events"]
-    buckets = ev.sparkSession.createDataFrame(
+    buckets = local_table(
+        ev.sparkSession,
         [(0, 0.0, 50.0), (1, 50.0, 150.0), (2, 150.0, 300.0), (3, 300.0, 1000.0)],
         "bucket_id int, lo double, hi double",
     )

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -266,8 +267,6 @@ def q_sketch_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All exact counterparts are single agg passes; five scalars reach the
     driver."""
-    import pandas as pd
-
     li = Catalog(spark, sf_dir)["lineitem"]
 
     # HLL per-group bound
@@ -346,18 +345,21 @@ def q_sketch_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     n_missing_heavy = sum(1 for h in heavy if h not in found)
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_lineitem": n,
-                    "n_hll_violations": n_hll_violations,
-                    "hll_merge_ok": hll_merge_ok,
-                    "n_quantile_violations": n_quantile_violations,
-                    "n_missing_heavy": n_missing_heavy,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_lineitem": n,
+                "n_hll_violations": n_hll_violations,
+                "hll_merge_ok": hll_merge_ok,
+                "n_quantile_violations": n_quantile_violations,
+                "n_missing_heavy": n_missing_heavy,
+            }
+        ],
+        (
+            "n_lineitem long, n_hll_violations long, hll_merge_ok long,"
+            " n_quantile_violations long, n_missing_heavy long"
+        ),
     )
 
 
@@ -748,11 +750,10 @@ def q_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one sketch aggregation (4 quantiles share the pass),
     one conditional-count aggregation for all rank intervals; two 1-row
     collects reach the driver — the bounded-certificate-scalar pattern."""
-    import pandas as pd
-
     li = Catalog(spark, sf_dir)["lineitem"]
     accuracy = 10_000
     pcts = (25, 50, 75, 95)
+    schema = "pct long, n_rows long, rank_in_bound long"
     row = li.agg(
         F.count("*").alias("n"),
         *[
@@ -767,10 +768,10 @@ def q_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty input: percentile_approx returns NULL and there is no rank
         # to violate — emit the vacuously-true certificate the oracle's
         # literal SELECT also produces (rows must exist either way)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                [{"pct": p, "n_rows": 0, "rank_in_bound": 1} for p in pcts]
-            )
+        return local_table(
+            spark,
+            [{"pct": p, "n_rows": 0, "rank_in_bound": 1} for p in pcts],
+            schema,
         )
     slack = max(2.0 * n / accuracy, 2.0)
     rank_aggs = []
@@ -798,7 +799,7 @@ def q_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rank_in_bound": int(lo - slack <= target <= hi + slack),
             }
         )
-    return spark.createDataFrame(pd.DataFrame(out))
+    return local_table(spark, out, schema)
 
 
 @register(
@@ -1144,6 +1145,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "est_is_member": int(checks[f"in_{i}"]),
             }
         )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows, "p double, n_rows long, within_bound long, est_is_member long"
     )

@@ -18,6 +18,7 @@ from data_integration_spark.similarity.ann import (
     lsh_cosine_pairs,
 )
 from data_integration_spark.sources.catalog import Catalog, table_rowcount
+from data_integration_spark.sources.local import local_table
 
 # hard bound on driver-side query collection in the vectorized ANN path —
 # guards the only .toPandas() in a registered query's hot path (VERDICT r1 #2)
@@ -439,7 +440,7 @@ def pinned_centroid_grid() -> list[list[float]]:
 
 def _pinned_ivf_centroids_df(spark: SparkSession):
     rows = [(c, v) for c, v in enumerate(pinned_centroid_grid())]
-    return spark.createDataFrame(rows, "cell int, ce array<double>")
+    return local_table(spark, rows, "cell int, ce array<double>")
 
 
 def _set_pinned_centroids(index, spark: SparkSession) -> None:
@@ -717,7 +718,6 @@ def q_ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     Checks run distributed where data-sized (encode, joins, counts);
     the ADC recheck touches only the bounded emitted pairs."""
     import numpy as np
-    import pandas as pd
 
     from data_integration_spark.similarity.pq import PQIndex
     from data_integration_spark.similarity.persist import (
@@ -779,18 +779,21 @@ def q_ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     codes.unpersist()
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_vectors": n_vectors,
-                    "n_distinct_ids": n_distinct,
-                    "n_code_range_violations": n_range,
-                    "n_adc_identity_violations": n_adc_bad,
-                    "n_load_mismatch": n_load_mismatch,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_vectors": n_vectors,
+                "n_distinct_ids": n_distinct,
+                "n_code_range_violations": n_range,
+                "n_adc_identity_violations": n_adc_bad,
+                "n_load_mismatch": n_load_mismatch,
+            }
+        ],
+        (
+            "n_vectors long, n_distinct_ids long, n_code_range_violations long,"
+            " n_adc_identity_violations long, n_load_mismatch long"
+        ),
     )
 
 
@@ -877,7 +880,6 @@ def q_ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer load diff); the ADC/probe rechecks touch only the
     bounded emitted pairs."""
     import numpy as np
-    import pandas as pd
 
     from data_integration_spark.similarity.ivf import _sq_dists
     from data_integration_spark.similarity.ivfpq import IVFPQIndex
@@ -993,20 +995,24 @@ def q_ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     codes.unpersist()
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_vectors": n_vectors,
-                    "n_distinct_ids": n_distinct,
-                    "n_cell_mismatch": n_cell_mismatch,
-                    "n_code_range_violations": n_range,
-                    "n_adc_identity_violations": n_adc_bad,
-                    "n_probe_violations": n_probe_bad,
-                    "n_load_mismatch": n_load_mismatch,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_vectors": n_vectors,
+                "n_distinct_ids": n_distinct,
+                "n_cell_mismatch": n_cell_mismatch,
+                "n_code_range_violations": n_range,
+                "n_adc_identity_violations": n_adc_bad,
+                "n_probe_violations": n_probe_bad,
+                "n_load_mismatch": n_load_mismatch,
+            }
+        ],
+        (
+            "n_vectors long, n_distinct_ids long, n_cell_mismatch long,"
+            " n_code_range_violations long, n_adc_identity_violations long,"
+            " n_probe_violations long, n_load_mismatch long"
+        ),
     )
 
 
@@ -1116,20 +1122,21 @@ def q_ann_ivf_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned.unpersist()
 
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_vectors": n_vectors,
-                    "n_distinct_ids": n_distinct,
-                    "n_suboptimal": n_suboptimal,
-                    "n_out_of_range": n_out_of_range,
-                    "n_load_mismatch": n_load_mismatch,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_vectors": n_vectors,
+                "n_distinct_ids": n_distinct,
+                "n_suboptimal": n_suboptimal,
+                "n_out_of_range": n_out_of_range,
+                "n_load_mismatch": n_load_mismatch,
+            }
+        ],
+        (
+            "n_vectors long, n_distinct_ids long, n_suboptimal long,"
+            " n_out_of_range long, n_load_mismatch long"
+        ),
     )
 
 
@@ -2164,7 +2171,8 @@ def q_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mse_opq_within_pq": int(mse_opq <= 1.02 * mse_plain),
         "balance_not_worse": int(alloc_spread <= nat_spread + 1e-9),
     }
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [row],
         "n_vectors long, dim long, rotation_orthonormal long,"
         " variance_preserved long, mse_opq_within_pq long,"
@@ -2542,22 +2550,27 @@ def q_semdedup_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_suboptimal = (rc["bad"] or 0) + abs(n_vectors - (rc["n"] or 0))
     dec.unpersist()
 
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_vectors": n_vectors,
-                    "n_distinct_ids": n_distinct,
-                    "n_planted": n_planted,
-                    "n_assign_suboptimal": int(n_suboptimal),
-                    "n_cell_overflow": n_overflow,
-                    "n_first_dropped": n_first_dropped,
-                    "n_keep_domain_violations": n_keep_domain,
-                    "n_planted_split_cells": n_planted_split,
-                    "n_planted_kept": n_planted_kept,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_vectors": n_vectors,
+                "n_distinct_ids": n_distinct,
+                "n_planted": n_planted,
+                "n_assign_suboptimal": int(n_suboptimal),
+                "n_cell_overflow": n_overflow,
+                "n_first_dropped": n_first_dropped,
+                "n_keep_domain_violations": n_keep_domain,
+                "n_planted_split_cells": n_planted_split,
+                "n_planted_kept": n_planted_kept,
+            }
+        ],
+        (
+            "n_vectors long, n_distinct_ids long, n_planted long,"
+            " n_assign_suboptimal long, n_cell_overflow long, n_first_dropped long,"
+            " n_keep_domain_violations long, n_planted_split_cells long,"
+            " n_planted_kept long"
+        ),
     )
 
 

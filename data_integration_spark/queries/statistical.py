@@ -20,6 +20,7 @@ from data_integration_spark.functions.math import expit
 from data_integration_spark.functions.rng import seeded_normal
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 @register(
@@ -79,7 +80,7 @@ def _fixture_pipeline(spark: SparkSession):
         fx = make_fixtures()
         os.makedirs(base, exist_ok=True)
         for name in ("survey_small", "survey_big", "actual_result"):
-            spark.createDataFrame(fx[name]).write.mode("overwrite").parquet(
+            local_table(spark, fx[name]).write.mode("overwrite").parquet(
                 os.path.join(base, f"{name}.parquet")
             )
     small = spark.read.parquet(os.path.join(base, "survey_small.parquet"))
@@ -159,8 +160,6 @@ def q_survey_pipeline_certificate(
     One 8-scalar row reaches the driver; every audit is a DataFrame
     aggregation over the pipeline's comparison table (a local DataFrame of
     one row per area) or the small survey."""
-    import pandas as pd
-
     res, small = _fixture_pipeline(spark)
     comp = res.comparison  # unrounded: state, name, actual, direct,
     # direct_SE, EM_est
@@ -199,25 +198,29 @@ def q_survey_pipeline_certificate(
     mspe_violations = res.report.filter(
         F.col("EBP_SE").isNull() | (F.col("EBP_SE") < 0)
     ).count()
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_areas": stats["n_areas"],
-                    "n_absent_direct": stats["n_absent"],
-                    "ebp_nonnull": stats["ebp_nonnull"],
-                    "direct_recompute_resid": float(resid),
-                    "ebp_beats_direct_asd": int(
-                        err.loc["EM_est", "asd"] < err.loc["direct", "asd"]
-                    ),
-                    "ebp_beats_direct_aad": int(
-                        err.loc["EM_est", "aad"] < err.loc["direct", "aad"]
-                    ),
-                    "range_violations": stats["range_violations"],
-                    "mspe_violations": mspe_violations,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_areas": stats["n_areas"],
+                "n_absent_direct": stats["n_absent"],
+                "ebp_nonnull": stats["ebp_nonnull"],
+                "direct_recompute_resid": float(resid),
+                "ebp_beats_direct_asd": int(
+                    err.loc["EM_est", "asd"] < err.loc["direct", "asd"]
+                ),
+                "ebp_beats_direct_aad": int(
+                    err.loc["EM_est", "aad"] < err.loc["direct", "aad"]
+                ),
+                "range_violations": stats["range_violations"],
+                "mspe_violations": mspe_violations,
+            }
+        ],
+        (
+            "n_areas long, n_absent_direct long, ebp_nonnull long,"
+            " direct_recompute_resid double, ebp_beats_direct_asd long,"
+            " ebp_beats_direct_aad long, range_violations long, mspe_violations long"
+        ),
     )
 
 

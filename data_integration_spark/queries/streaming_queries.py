@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 from data_integration_spark.streaming.joins import (
     clicks_before_purchase,
     dedupe_events,
@@ -551,8 +552,6 @@ def q_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the release artifact), each micro-batch is one narrow
     broadcast-centroids map, and the sink appends partition-local files
     — no shuffle anywhere in the maintenance loop."""
-    import pandas as pd
-
     from data_integration_spark.similarity.ann import as_double_array
     from data_integration_spark.similarity.ivf import IVFIndex
     from data_integration_spark.similarity.persist import (
@@ -618,16 +617,16 @@ def q_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_oor = streamed.filter(
         (F.col("cell") < 0) | (F.col("cell") >= n_cells)
     ).count()
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_new_vectors": n_new,
-                    "n_batch_mismatch": n_mismatch,
-                    "n_out_of_range": n_oor,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_new_vectors": n_new,
+                "n_batch_mismatch": n_mismatch,
+                "n_out_of_range": n_oor,
+            }
+        ],
+        "n_new_vectors long, n_batch_mismatch long, n_out_of_range long",
     )
 
 
@@ -654,8 +653,6 @@ def q_streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches. Certificate: conservation across batches, streamed
     codes == direct batch encode row-for-row (pure function of vector ×
     frozen codebooks), every code in range."""
-    import pandas as pd
-
     from data_integration_spark.similarity.ann import as_double_array
     from data_integration_spark.similarity.pq import PQIndex
     from data_integration_spark.similarity.persist import (
@@ -719,16 +716,16 @@ def q_streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_range = streamed.filter(
         F.exists("codes", lambda c: (c < 0) | (c >= F.lit(index.k_codes)))
     ).count()
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_new_vectors": n_new,
-                    "n_batch_mismatch": n_mismatch,
-                    "n_code_range_violations": n_range,
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_new_vectors": n_new,
+                "n_batch_mismatch": n_mismatch,
+                "n_code_range_violations": n_range,
+            }
+        ],
+        "n_new_vectors long, n_batch_mismatch long, n_code_range_violations long",
     )
 
 
@@ -1363,7 +1360,7 @@ def _planted_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"].select(
         "vec_id", as_double_array("embedding", "e")
     )
-    pmap = spark.createDataFrame(_SEM_PLANT_MAP, "vec_id long, src long")
+    pmap = local_table(spark, _SEM_PLANT_MAP, "vec_id long, src long")
     donors = emb.select(
         F.col("vec_id").alias("src"), F.col("e").alias("src_e")
     )
@@ -1843,7 +1840,8 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the batch's stream length rides the store as a tok-NULL
             # row (the misra_gries_summary rider pattern), so the read
             # side recovers the total n WITHOUT a second corpus scan
-            s.createDataFrame(
+            local_table(
+                s,
                 [
                     {"batch_id": int(batch_id), "tok": t, "c": int(c)}
                     for t, c in summary.items()

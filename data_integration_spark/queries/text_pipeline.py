@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 
 def _word_grams_expr(n: int) -> str:
@@ -1166,18 +1167,16 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_inf_norm = float(np.max(np.abs(g_final))) / n_docs
     labeled.unpersist()
 
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "n_docs": n_docs,
-                    "n_params": P,
-                    "score_inf_norm": round(score_inf_norm, 2),
-                }
-            ]
-        )
+    return local_table(
+        spark,
+        [
+            {
+                "n_docs": n_docs,
+                "n_params": P,
+                "score_inf_norm": round(score_inf_norm, 2),
+            }
+        ],
+        "n_docs long, n_params long, score_inf_norm double",
     )
 
 
@@ -1433,7 +1432,8 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = nb_quality_classifier(
         docs, min_df=3, include_prior=True, include_label=True
     )
-    thr = spark.createDataFrame(
+    thr = local_table(
+        spark,
         [(t,) for t in _CALIB_THRS], "thr_fp long"
     )
     kp = (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.local import local_table
 
 _CAP = 256  # per-doc char cap of the training sample (bounded-by-design)
 _VOCAB_TARGET = 96
@@ -86,7 +87,10 @@ def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; each EM iteration is ONE mapInPandas pass emitting
     per-batch pre-aggregated (piece, expected-count) partials + one
     groupBy shuffle of ≤|vocab| keys + one bounded driver collect —
-    the bpe.train_bpe one-bounded-collect-per-step shape."""
+    the bpe.train_bpe one-bounded-collect-per-step shape. The vocabulary
+    is ranked on the driver and returned as a local table
+    (``sources.local``) that keeps the rank order, so the action is one
+    job with no sort and no Python worker."""
     from data_integration_spark.operators.unigram_lm import em_train
 
     sample = _train_sample(spark, sf_dir).cache()
@@ -101,13 +105,14 @@ def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         sample.unpersist()
     ordered = sorted(vocab.items(), key=lambda kv: (-round(kv[1], 9), kv[0]))
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             {"rank": r, "piece": p, "logp": round(lp, 6)}
             for r, (p, lp) in enumerate(ordered, start=1)
         ],
         schema="rank long, piece string, logp double",
-    ).orderBy("rank")
+    )
 
 
 @register(
@@ -200,7 +205,8 @@ def q_unigram_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "roundtrip_mismatch": stats["roundtrip_mismatch"],
         "compressed": stats["compressed"],
     }
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [row],
         schema=(
             "n_docs_sampled long, n_chars_capped long,"

@@ -9,7 +9,9 @@ same code runs unchanged on a 1000-executor cluster against ~100 TB:
 - broadcast threshold raised so dimension tables (region/nation/supplier,
   per-area statistics <= 51 rows) never shuffle;
 - Arrow enabled for every pandas boundary (pandas UDFs, and toPandas on
-  small results such as the statistical layer's cell tables).
+  small results such as the statistical layer's cell tables), with its
+  silent fallback to the row-at-a-time path switched off, so a failed
+  Arrow conversion raises instead of changing the plan.
 """
 
 from __future__ import annotations
@@ -49,6 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_integration_spark.dedup.components import _truncate_lineage
+from data_integration_spark.sources.local import local_table
 
 
 def _np_round_half_up(arr, decimals: int):
@@ -335,7 +336,8 @@ def cosine_pairs_vectorized(
         keep_q = q_norms.reshape(-1) != 0.0
         q_ids, Q, q_norms = q_ids[keep_q], Q[keep_q], q_norms[keep_q]
         if not len(q_ids):  # every query was degenerate: no pairs exist
-            return corpus.sparkSession.createDataFrame(
+            return local_table(
+                corpus.sparkSession,
                 [], "qid long, mid long, cosine double"
             )
     else:

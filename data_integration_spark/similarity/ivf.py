@@ -23,6 +23,7 @@ from data_integration_spark.similarity.ann import (
     _guard_packable_ids,
     _norm,
 )
+from data_integration_spark.sources.local import local_table
 
 
 def _sq_dists(
@@ -221,7 +222,8 @@ class IVFIndex:
             corpus, self.n_cells, self.seed, id_col, vec_col, train_per_cell,
             n_rows=n_rows,
         )
-        self.centroids = spark.createDataFrame(
+        self.centroids = local_table(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
             "cell int, ce array<double>",
         )

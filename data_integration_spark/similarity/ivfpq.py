@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_integration_spark.similarity.ivf import IVFIndex, _lloyd, _sq_dists
+from data_integration_spark.sources.local import local_table
 
 
 class IVFPQIndex:
@@ -448,13 +449,13 @@ class IVFPQIndex:
             ),
             "mid",
         )
-        qdf = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "qid": queries_pd[id_col].to_numpy(),
-                    "qe": [list(map(float, v)) for v in queries_pd[vec_col]],
-                }
-            )
+        qdf = local_table(
+            spark,
+            [
+                (int(q), [float(x) for x in v])
+                for q, v in zip(queries_pd[id_col], queries_pd[vec_col])
+            ],
+            "qid long, qe array<double>",
         )
         dist = F.round(
             F.aggregate(

@@ -29,6 +29,7 @@ from pyspark.sql import SparkSession
 
 from data_integration_spark.similarity.ann import make_planes
 from data_integration_spark.similarity.ivf import IVFIndex
+from data_integration_spark.sources.local import local_table
 
 _FORMAT = 1
 # On-disk layout marker for the corpus-sized IVF/IVF-PQ tables. Pre-r9
@@ -452,7 +453,8 @@ def save_unigram_vocab(
     to encode-from-trained (pinned by q_unigram_persist's shared
     oracle)."""
     os.makedirs(path, exist_ok=True)
-    spark.createDataFrame(
+    local_table(
+        spark,
         [{"piece": p, "cost": float(c)} for p, c in sorted(costs.items())],
         schema="piece string, cost double",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "vocab"))

@@ -32,6 +32,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
 from data_integration_spark.functions.stats import survey_mean_se
+from data_integration_spark.sources.local import local_table
 from data_integration_spark.stats.design import X_COLS, design_cells, prep_design
 
 
@@ -152,9 +153,7 @@ def area_frame(
 ) -> DataFrame:
     """A pandas area table as a local Spark DataFrame; NaN becomes a
     real NULL, as the Spark join it replaces would leave it."""
-    return spark.createDataFrame(
-        table.astype(object).where(table.notna(), None), schema
-    )
+    return local_table(spark, table, schema)
 
 
 def comparison_frame(

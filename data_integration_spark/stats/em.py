@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
+from data_integration_spark.sources.local import local_table
 from data_integration_spark.stats.design import CellArrays, cell_arrays, outcome_cells
 from data_integration_spark.stats.optimize import golden_max, newton_minimize
 
@@ -92,7 +93,7 @@ def draw_matrix(
     ``seeded_normal(state, r, salt=seed)`` for the ``int`` replicate
     number r, bit-stable across partitionings."""
     draws = (
-        spark.createDataFrame(pd.DataFrame({"state": states}))
+        local_table(spark, [(s,) for s in states], "state string")
         .select("state", replicate_numbers(n_reps, "n_reps").alias("r"))
         .withColumn("z", seeded_normal("state", "r", salt=seed))
         .toPandas()
@@ -174,7 +175,9 @@ class EMResult:
     history: list[dict] = field(default_factory=list)
 
     def v_hat_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.v_hat)
+        return local_table(
+            spark, self.v_hat, "state string, ni long, v_hat double, tau_hat_sq double"
+        )
 
 
 class EMEstimator:

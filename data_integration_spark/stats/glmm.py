@@ -20,16 +20,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from data_integration_spark.functions.math import expit
-from data_integration_spark.stats.design import (
-    cell_arrays,
-    outcome_cells,
-    prep_design,
-    x_beta_col,
-)
+from data_integration_spark.stats.design import cell_arrays, outcome_cells
 from data_integration_spark.stats.em import N_BETA, _expit, _softplus
 from data_integration_spark.stats.optimize import newton_minimize
 
@@ -62,25 +55,3 @@ class FixedEffectsGLM:
 
         self.beta_ = newton_minimize(fgh, np.zeros(N_BETA))
         return self
-
-    def predict_col(self, v_col: Column | None = None) -> Column:
-        """θ = expit(xβ [+ v]) as a native expression over a prepped frame
-        (reference M3 ``predict(type='response')``, ``Rmd:171-181``) —
-        no model object needed at scoring time."""
-        assert self.beta_ is not None, "fit first"
-        xb = x_beta_col(self.beta_)
-        if v_col is not None:
-            xb = xb + v_col
-        return expit(xb)
-
-    def score(self, survey: DataFrame, v_df: DataFrame | None = None) -> DataFrame:
-        """Attach θ to every unit; per-area v̂ arrives by broadcast join with
-        ``coalesce(v_hat, 0)`` for areas absent from the model (the
-        generalized MT/SD path, ``Rmd:433-435``)."""
-        prepped = prep_design(survey, with_outcome=False)
-        if v_df is not None:
-            prepped = prepped.join(F.broadcast(v_df), "state", "left")
-            v = F.coalesce(F.col("v_hat"), F.lit(0.0))
-        else:
-            v = None
-        return prepped.withColumn("theta", self.predict_col(v))
