@@ -1980,12 +1980,12 @@ def q_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # convention (q_cosine_pairs); estimates replay the engine
     # expressions value-for-value: single divisions of exact integers,
     # the same left-associated inter = (a + b) − u, and F.round's
-    # BigDecimal HALF_UP via _np_round_half_up (similarity/ann.py), so
+    # BigDecimal HALF_UP via _np_round_half_up (similarity/kernel.py), so
     # the emitted doubles are bit-identical to the retired join form
     # (oracle re-verified at all 3 SFs).
     import numpy as np
 
-    from data_integration_spark.similarity.ann import _np_round_half_up
+    from data_integration_spark.similarity.kernel import _np_round_half_up
 
     rows = sk.select("source", "h").limit(_KMV_MAX_COORD_ROWS + 1).collect()
     if len(rows) > _KMV_MAX_COORD_ROWS:  # not assert: survives python -O

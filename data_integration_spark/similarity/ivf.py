@@ -15,13 +15,15 @@ of |corpus| per query. Centroids are tiny and always broadcast.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_spark.similarity.ann import (
-    _dot,
-    _guard_packable_ids,
-    _norm,
+from data_integration_spark.similarity.ann import _dot, _norm, _rank_topk
+from data_integration_spark.similarity.kernel import (
+    Vectors,
+    cosine_blocks,
+    threshold_pairs,
+    topk_cut,
 )
 from data_integration_spark.sources.local import local_table
 
@@ -410,12 +412,7 @@ class IVFIndex:
             6,
         )
         scored = cand.select("qid", "mid", cos.alias("cosine"))
-        w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("mid"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "cosine", "rank")
-        )
+        return _rank_topk(scored, "cosine", k, descending=True)
 
     def search_all(
         self,
@@ -432,21 +429,20 @@ class IVFIndex:
 
         ``search`` materializes every (query, candidate) pair as a ROW
         and scores it with an interpreted HOF cosine — Q·N·nprobe/n_cells
-        interpreted rows, the exact pattern the r10/r11 GEMM reworks
-        retired from assign and cell ranking (measured: 19.5 s at
-        sf0.1 for Q=N=2000). Here stage 2 is a COGROUPED applyInPandas
-        on the cell id: each cell gets its probing queries and its
-        members as two NumPy matrices, scores them with ONE GEMM, and
-        emits only its per-query partial top-k (≤ k rows per (query,
-        probed cell)). The global pass then ranks ≤ nprobe·k survivors
-        per query — a window over Q·nprobe·k rows instead of the full
-        candidate space. The cut is LOSSLESS: every candidate lives in
-        exactly one cell, so a global top-k member necessarily ranks
-        ≤ k inside its own cell under the same total order (the r4
-        ``cosine_topk_vectorized`` batch-cut argument, per cell instead
-        of per batch). Rounding (``_np_round_half_up``) and tie-break
-        (int64 composite key: rounded-cosine-millionths then id) match
-        ``search`` bit-for-bit — pinned by
+        interpreted rows (measured: 19.5 s at sf0.1 for Q=N=2000). Here
+        stage 2 is a COGROUPED applyInPandas on the cell id: each cell
+        gets its probing queries and its members as two NumPy matrices,
+        scores them with the shared kernel's chunked GEMM
+        (``similarity/kernel.py``), and emits only its per-query partial
+        top-k (≤ k rows per (query, probed cell)). The global pass then
+        ranks ≤ nprobe·k survivors per query — a window over Q·nprobe·k
+        rows instead of the full candidate space. The cut is LOSSLESS:
+        every candidate lives in exactly one cell, so a global top-k
+        member necessarily ranks ≤ k inside its own cell under the same
+        total order (the ``cosine_topk_vectorized`` batch-cut argument,
+        per cell instead of per batch). Rounding (``_np_round_half_up``)
+        and tie-break (rounded cosine, then id) match ``search``
+        bit-for-bit — pinned by
         tests/test_ivf_search_gemm.py::test_search_all_matches_search.
 
         Scale shape: one shuffle of corpus + probes on the cell id (the
@@ -456,89 +452,25 @@ class IVFIndex:
         assert self.assigned is not None, "fit first"
         import pandas as pd
 
-        from data_integration_spark.similarity.ann import _np_round_half_up
-
         probed = self._probe(queries, nprobe, id_col, vec_col)
         qid_type = probed.schema["qid"].dataType.simpleString()
 
-        def score_cell(probes: pd.DataFrame, members: pd.DataFrame):
-            empty = pd.DataFrame({"qid": [], "mid": [], "cosine": []}).astype(
-                {"qid": "int64", "mid": "int64", "cosine": "float64"}
-            )
-            if not len(probes) or not len(members):
-                return empty
-            M = np.ascontiguousarray(
-                np.stack(members["me"].to_numpy()), dtype=np.float64
-            )
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+        def score_cell(probes, members):
+            M = Vectors(members["me"].to_numpy(), "cell members")
+            Q = Vectors(probes["qe"].to_numpy(), "probing queries")
             mids = members["mid"].to_numpy().astype(np.int64)
-            _guard_packable_ids(mids)
-            cut = min(k + 1, len(mids))  # +1 absorbs a possible self-pair
-            # probe-CHUNKED scoring: a hot cell at corpus scale can hold
-            # tens of thousands of members AND be probed by a comparable
-            # query count — the full nq×nm cosine matrix would be GBs per
-            # task (e.g. 75k×25k doubles = 15 GB at the sf10 pinned-8
-            # worst case). Chunk the probe side so peak task memory is
-            # CHUNK×nm doubles (~200 MB at 1024×25k) while each chunk is
-            # still one BLAS GEMM; results are per-query partial top-k
-            # either way, so chunking is invisible downstream.
-            CHUNK = max(1, int(128 * 1024 * 1024 / (8 * len(mids))))
-            outs = []
-            for lo in range(0, len(probes), CHUNK):
-                pchunk = probes.iloc[lo : lo + CHUNK]
-                Q = np.ascontiguousarray(
-                    np.stack(pchunk["qe"].to_numpy()), dtype=np.float64
+            qids = probes["qid"].to_numpy().astype(np.int64)
+            for sl, cos in cosine_blocks(Q, M):
+                qi, mi = topk_cut(cos, qids[sl], mids, k, descending=True)
+                yield pd.DataFrame(
+                    {"qid": qids[sl][qi], "mid": mids[mi], "cosine": cos[qi, mi]}
                 )
-                qids = pchunk["qid"].to_numpy().astype(np.int64)
-                cos = _np_round_half_up(
-                    (Q / np.linalg.norm(Q, axis=1, keepdims=True)) @ Mn.T, 6
-                )
-                # composite int64 key = (-cosine in exact millionths) then
-                # mid: rounded cosine · 1e6 is integer-valued, |...| ≤ 1e6
-                # < 2^21, and ids are < 2^31 — so (key_cos << 32) + mid
-                # sorts by (cosine DESC, mid ASC) in pure integer
-                # arithmetic, the same total order as search()'s window
-                key = (-np.rint(cos * 1e6)).astype(np.int64) * (
-                    1 << 32
-                ) + mids[None, :]
-                # argpartition (O(nm) per row) + a sort of only the cut —
-                # a full per-row argsort is O(nm log nm) and dominated the
-                # sf10 rehearsal (25k-member cells × 75k probes)
-                if cut < key.shape[1]:
-                    part = np.argpartition(key, cut - 1, axis=1)[:, :cut]
-                    sub = np.take_along_axis(key, part, axis=1)
-                    top = np.take_along_axis(
-                        part, np.argsort(sub, axis=1, kind="stable"), axis=1
-                    )
-                else:
-                    top = np.argsort(key, axis=1, kind="stable")
-                rows_q = np.repeat(np.arange(len(qids)), cut)
-                cols_m = top.ravel()
-                keep = qids[rows_q] != mids[cols_m]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[rows_q][keep],
-                            "mid": mids[cols_m][keep],
-                            "cosine": cos[rows_q[keep], cols_m[keep]],
-                        }
-                    )
-                )
-            return pd.concat(outs, ignore_index=True) if outs else empty
 
-        partials = (
-            probed.groupBy("cell")
-            .cogroup(self.assigned.groupBy("cell"))
-            .applyInPandas(
-                score_cell, f"qid {qid_type}, mid {qid_type}, cosine double"
-            )
+        partials = _score_cells(
+            probed, self.assigned, score_cell,
+            f"qid {qid_type}, mid {qid_type}, cosine double",
         )
-        w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("mid"))
-        return (
-            partials.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "cosine", "rank")
-        )
+        return _rank_topk(partials, "cosine", k, descending=True)
 
     def near_pairs(self, threshold: float, nprobe: int = 4) -> DataFrame:
         """ALL near-duplicate pairs of the indexed corpus at ``cosine >=
@@ -561,59 +493,57 @@ class IVFIndex:
         assert self.assigned is not None, "fit first"
         import pandas as pd
 
-        from data_integration_spark.similarity.ann import _np_round_half_up
-
         mid_type = self.assigned.schema["mid"].dataType.simpleString()
         probed = self._probe(
             self.assigned, nprobe, id_col="mid", vec_col="me"
         )
 
-        def score_cell(probes: pd.DataFrame, members: pd.DataFrame):
-            empty = pd.DataFrame({"d1": [], "d2": [], "cosine": []}).astype(
-                {"d1": "int64", "d2": "int64", "cosine": "float64"}
-            )
-            if not len(probes) or not len(members):
-                return empty
-            M = np.ascontiguousarray(
-                np.stack(members["me"].to_numpy()), dtype=np.float64
-            )
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
+        def score_cell(probes, members):
+            M = Vectors(members["me"].to_numpy(), "cell members")
+            Q = Vectors(probes["qe"].to_numpy(), "probing vectors")
             mids = members["mid"].to_numpy().astype(np.int64)
-            CHUNK = max(1, int(128 * 1024 * 1024 / (8 * len(mids))))
-            outs = []
-            for lo in range(0, len(probes), CHUNK):
-                pchunk = probes.iloc[lo : lo + CHUNK]
-                Q = np.ascontiguousarray(
-                    np.stack(pchunk["qe"].to_numpy()), dtype=np.float64
+            qids = probes["qid"].to_numpy().astype(np.int64)
+            for sl, cos in cosine_blocks(Q, M):
+                qi, mi = threshold_pairs(cos, qids[sl], mids, threshold)
+                a, b = qids[sl][qi], mids[mi]
+                yield pd.DataFrame(
+                    {
+                        "d1": np.minimum(a, b),
+                        "d2": np.maximum(a, b),
+                        "cosine": cos[qi, mi],
+                    }
                 )
-                qids = pchunk["qid"].to_numpy().astype(np.int64)
-                cos = _np_round_half_up(
-                    (Q / np.linalg.norm(Q, axis=1, keepdims=True)) @ Mn.T, 6
-                )
-                qi, mi = np.nonzero(
-                    (cos >= threshold) & (qids[:, None] != mids[None, :])
-                )
-                if not len(qi):
-                    continue
-                a, b = qids[qi], mids[mi]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "d1": np.minimum(a, b),
-                            "d2": np.maximum(a, b),
-                            "cosine": cos[qi, mi],
-                        }
-                    )
-                )
-            return pd.concat(outs, ignore_index=True) if outs else empty
 
-        pairs = (
-            probed.groupBy("cell")
-            .cogroup(self.assigned.groupBy("cell"))
-            .applyInPandas(
-                score_cell, f"d1 {mid_type}, d2 {mid_type}, cosine double"
-            )
+        pairs = _score_cells(
+            probed, self.assigned, score_cell,
+            f"d1 {mid_type}, d2 {mid_type}, cosine double",
         )
         # both orientations (and nothing else) can surface the same pair —
         # the distinct is over at most 2 rows per true pair
         return pairs.distinct()
+
+
+def _score_cells(
+    probed: DataFrame, members: DataFrame, score_cell, schema: str
+) -> DataFrame:
+    """Stage 2 of the corpus-scale paths: cogroup the probe rows and the
+    inverted lists on the cell id and concatenate the frames that
+    ``score_cell(probes, members)`` yields for every cell holding both.
+    A one-sided cell (probes but no members, or members nobody probes)
+    emits nothing."""
+    import pandas as pd
+
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(probes, members):
+        if len(probes) and len(members):
+            parts = list(score_cell(probes, members))
+            if parts:
+                return pd.concat(parts, ignore_index=True)
+        return pd.DataFrame({n: [] for n in names})
+
+    return (
+        probed.groupBy("cell")
+        .cogroup(members.groupBy("cell"))
+        .applyInPandas(run, schema)
+    )

@@ -30,10 +30,21 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_spark.similarity.ivf import IVFIndex, _lloyd, _sq_dists
+from data_integration_spark.similarity.ann import _rank_topk
+from data_integration_spark.similarity.ivf import (
+    IVFIndex,
+    _lloyd,
+    _score_cells,
+    _sq_dists,
+)
+from data_integration_spark.similarity.kernel import (
+    _np_round_half_up,
+    row_blocks,
+    topk_cut,
+)
 from data_integration_spark.sources.local import local_table
 
 
@@ -211,7 +222,8 @@ class IVFPQIndex:
         before the scan (partition pruning when stored partitioned by
         cell), streams through ``mapInPandas``, and only batch-local
         top-k survivors reach the ranking shuffle — nq·k·n_batches rows,
-        never nq·|corpus|."""
+        never nq·|corpus|. Distances round HALF-UP and rank through the
+        shared kernel (``similarity/kernel.py``), as in ``search_all``."""
         assert self.codes is not None, "fit first"
         cb, cent = self.codebooks, self.centroids_np
         m, kc, dsub = cb.shape
@@ -258,19 +270,16 @@ class IVFPQIndex:
                         dist = np.zeros(len(Cc))
                         for j in range(m):
                             dist += lut[j, Cc[:, j]]
-                        d_parts.append(np.round(dist, round_decimals))
+                        d_parts.append(_np_round_half_up(dist, round_decimals))
                         m_parts.append(mids[mask])
                     if not d_parts:
                         continue
-                    dall = np.concatenate(d_parts)
+                    dall = np.concatenate(d_parts)[None, :]
                     mall = np.concatenate(m_parts)
-                    keep = mall != q_ids[qi]  # self-pairs never emitted
-                    dall, mall = dall[keep], mall[keep]
-                    kk = min(k, len(dall))
-                    sel = np.lexsort((mall, dall))[:kk]
+                    _, sel = topk_cut(dall, q_ids[qi : qi + 1], mall, k, round_decimals)
                     out_q.append(np.full(len(sel), q_ids[qi]))
                     out_m.append(mall[sel])
-                    out_d.append(dall[sel])
+                    out_d.append(dall[0, sel])
                 if not out_q:
                     continue
                 yield pd.DataFrame(
@@ -285,12 +294,7 @@ class IVFPQIndex:
             self.codes.filter(F.col("cell").isin(probed_cells))
             .mapInPandas(score, "qid long, mid long, adc_dist double")
         )
-        w = Window.partitionBy("qid").orderBy(F.col("adc_dist"), F.col("mid"))
-        return (
-            pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "adc_dist", "rank")
-        )
+        return _rank_topk(pairs, "adc_dist", k)
 
     def search_all(
         self,
@@ -320,9 +324,9 @@ class IVFPQIndex:
         survivors per query. The cut is lossless (a member lives in
         exactly one cell — the ``IVFIndex.search_all`` batch-cut
         argument). Rounding is HALF-UP (``_np_round_half_up``) so a SQL
-        oracle's ROUND can restate the emitted distances; ranking uses
-        an exact integer composite key (rounded-distance-millionths
-        then id — distances are < 2^31/1e6 by the loud guard below).
+        oracle's ROUND can restate the emitted distances; ranking is the
+        shared kernel's exact integer key (``kernel.topk_cut``; distances
+        must stay < 2^31 millionths, a loud guard).
 
         Scale shape: one shuffle of probes + codes on the cell id (the
         layout a persisted index already has on disk), LUT work
@@ -330,11 +334,6 @@ class IVFPQIndex:
         candidate — the code table is never decoded and no pair-space
         rows materialize below the per-cell top-k."""
         assert self.codes is not None, "fit or load first"
-        from data_integration_spark.similarity.ann import (
-            _guard_packable_ids,
-            _np_round_half_up,
-        )
-
         cb, cent = self.codebooks, self.centroids_np
         assert cb is not None and cent is not None, "fit or load first"
         m, kc, dsub = cb.shape
@@ -342,32 +341,16 @@ class IVFPQIndex:
         qid_type = probed.schema["qid"].dataType.simpleString()
 
         def score_cell(probes: pd.DataFrame, members: pd.DataFrame):
-            empty = pd.DataFrame(
-                {"qid": [], "mid": [], "adc_dist": []}
-            ).astype(
-                {"qid": "int64", "mid": "int64", "adc_dist": "float64"}
-            )
-            if not len(probes) or not len(members):
-                return empty
-            cell = int(
-                (probes if len(probes) else members)["cell"].iloc[0]
-            )
+            cell = int(probes["cell"].iloc[0])
             C = np.stack(members["codes"].to_numpy()).astype(np.int64)
             mids = members["mid"].to_numpy().astype(np.int64)
-            _guard_packable_ids(mids)
-            cut = min(k + 1, len(mids))  # +1 absorbs a possible self-pair
-            # probe-chunked (the IVFIndex.search_all memory argument):
-            # peak per task is CHUNK×nm doubles for the distance matrix
-            CHUNK = max(1, int(128 * 1024 * 1024 / (8 * len(mids))))
-            outs = []
-            for lo in range(0, len(probes), CHUNK):
-                pchunk = probes.iloc[lo : lo + CHUNK]
-                Q = np.ascontiguousarray(
-                    np.stack(pchunk["qe"].to_numpy()), dtype=np.float64
-                )
-                qids = pchunk["qid"].to_numpy().astype(np.int64)
-                R = Q - cent[cell][None, :]
-                dist = np.zeros((len(qids), len(mids)))
+            qids = probes["qid"].to_numpy().astype(np.int64)
+            Q = np.ascontiguousarray(
+                np.stack(probes["qe"].to_numpy()), dtype=np.float64
+            )
+            for sl in row_blocks(len(qids), len(mids)):
+                R = Q[sl] - cent[cell][None, :]
+                dist = np.zeros((len(R), len(mids)))
                 for j in range(m):
                     sub = R[:, j * dsub : (j + 1) * dsub]
                     # direct (x−c)² form, matching the encode kernel and
@@ -377,52 +360,16 @@ class IVFPQIndex:
                     )  # (nq_c, kc)
                     dist += lut[:, C[:, j]]
                 dist = _np_round_half_up(dist, round_decimals)
-                dkey = np.rint(dist * 10**round_decimals).astype(np.int64)
-                if dkey.max(initial=0) >= (1 << 31):
-                    raise ValueError(
-                        "ADC distance exceeds the composite-key range "
-                        "(≥ 2^31 rounded millionths) — raise the key "
-                        "width before trusting the ranking"
-                    )
-                key = dkey * (1 << 32) + mids[None, :]
-                if cut < key.shape[1]:
-                    part = np.argpartition(key, cut - 1, axis=1)[:, :cut]
-                    subk = np.take_along_axis(key, part, axis=1)
-                    top = np.take_along_axis(
-                        part, np.argsort(subk, axis=1, kind="stable"), axis=1
-                    )
-                else:
-                    top = np.argsort(key, axis=1, kind="stable")
-                rows_q = np.repeat(np.arange(len(qids)), top.shape[1])
-                cols_m = top.ravel()
-                keep = qids[rows_q] != mids[cols_m]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[rows_q][keep],
-                            "mid": mids[cols_m][keep],
-                            "adc_dist": dist[rows_q[keep], cols_m[keep]],
-                        }
-                    )
+                qi, mi = topk_cut(dist, qids[sl], mids, k, round_decimals)
+                yield pd.DataFrame(
+                    {"qid": qids[sl][qi], "mid": mids[mi], "adc_dist": dist[qi, mi]}
                 )
-            return pd.concat(outs, ignore_index=True) if outs else empty
 
-        partials = (
-            probed.groupBy("cell")
-            .cogroup(self.codes.groupBy("cell"))
-            .applyInPandas(
-                score_cell,
-                f"qid {qid_type}, mid {qid_type}, adc_dist double",
-            )
+        partials = _score_cells(
+            probed, self.codes, score_cell,
+            f"qid {qid_type}, mid {qid_type}, adc_dist double",
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("adc_dist"), F.col("mid")
-        )
-        return (
-            partials.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "adc_dist", "rank")
-        )
+        return _rank_topk(partials, "adc_dist", k)
 
     def search_rerank(
         self,
@@ -470,9 +417,4 @@ class IVFPQIndex:
         scored = cand.join(F.broadcast(qdf), "qid").select(
             "qid", "mid", dist.alias("l2_dist")
         )
-        w = Window.partitionBy("qid").orderBy(F.col("l2_dist"), F.col("mid"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "l2_dist", "rank")
-        )
+        return _rank_topk(scored, "l2_dist", k)

@@ -34,10 +34,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_integration_spark.similarity.ann import _rank_topk
 from data_integration_spark.similarity.ivf import _lloyd
+from data_integration_spark.similarity.kernel import _np_round_half_up, topk_cut
 from data_integration_spark.sources.local import local_table
 
 
@@ -72,8 +74,8 @@ class PQIndex:
         partitioning; the sample is collected SORTED by id so the
         k-means result is partition-order independent."""
         target = self.k_codes * (train_per_code or 256)
-        # n_rows: caller-supplied corpus count (r15 — saves a redundant
-        # count job when the caller already ran one)
+        # n_rows: caller-supplied corpus count (saves a redundant count
+        # job when the caller already ran one)
         n = corpus.count() if n_rows is None else n_rows
         train = corpus
         if train_per_code is not None and n > target:
@@ -160,7 +162,9 @@ class PQIndex:
         ``queries_pd`` is a BOUNDED pandas frame (the caller guards size,
         as in the cosine vectorized path): its m×k_codes LUT tensor rides
         the closure; the CODES table — not the float corpus — streams
-        through in batches."""
+        through in batches. Distances round HALF-UP, like Spark's
+        ``F.round``, and each batch keeps its per-query top-k through the
+        shared kernel (``similarity/kernel.py``), self-pairs excluded."""
         assert self.codes is not None, "fit first"
         cb = self.codebooks
         m, kc, dsub = cb.shape
@@ -185,35 +189,16 @@ class PQIndex:
                 dist = np.zeros((len(q_ids), len(C)))
                 for j in range(m):
                     dist += lut[:, j, C[:, j]]
-                dist = np.round(dist, round_decimals)
-                dist = np.where(
-                    mids[None, :] == q_ids[:, None], np.inf, dist
-                )  # self-pairs lose before the local cut
-                kk = min(k, len(C))
-                out_q, out_m, out_d = [], [], []
-                for qi in range(len(q_ids)):
-                    sel = np.lexsort((mids, dist[qi]))[:kk]
-                    sel = sel[dist[qi, sel] != np.inf]
-                    out_q.append(np.full(len(sel), q_ids[qi]))
-                    out_m.append(mids[sel])
-                    out_d.append(dist[qi, sel])
+                dist = _np_round_half_up(dist, round_decimals)
+                qi, mi = topk_cut(dist, q_ids, mids, k, round_decimals)
                 yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "mid": np.concatenate(out_m),
-                        "adc_dist": np.concatenate(out_d),
-                    }
+                    {"qid": q_ids[qi], "mid": mids[mi], "adc_dist": dist[qi, mi]}
                 )
 
         pairs = self.codes.mapInPandas(
             score, "qid long, mid long, adc_dist double"
         )
-        w = Window.partitionBy("qid").orderBy(F.col("adc_dist"), F.col("mid"))
-        return (
-            pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "adc_dist", "rank")
-        )
+        return _rank_topk(pairs, "adc_dist", k)
 
     def search_rerank(
         self,
@@ -262,9 +247,4 @@ class PQIndex:
         scored = cand.join(F.broadcast(qdf), "qid").select(
             "qid", "mid", dist.alias("l2_dist")
         )
-        w = Window.partitionBy("qid").orderBy(F.col("l2_dist"), F.col("mid"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "mid", "l2_dist", "rank")
-        )
+        return _rank_topk(scored, "l2_dist", k)

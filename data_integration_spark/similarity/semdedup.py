@@ -22,7 +22,7 @@ discipline of similarity_queries.py):
   can never split cells;
 - the pairwise cosine and the centroid cosine are rounded on the
   registry's 6-decimal grid, evaluated dot-then-ONE-divide (the SQL
-  oracles' order, ADVICE r13); every DECISION (≥ τ, the keep rule's
+  oracles' order); every DECISION (≥ τ, the keep rule's
   lexicographic (cent_cos, vec_id) compare) reads only grid-rounded
   values plus integer ids.
 
@@ -44,7 +44,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_integration_spark.similarity.ann import _np_round_half_up
+from data_integration_spark.similarity.kernel import (
+    Vectors,
+    _np_round_half_up,
+    cosine_blocks,
+    threshold_pairs,
+)
 
 #: per-cell row guard: a cell past this is a misconfigured clustering
 #: (K far too small for the corpus), not a bigger GEMM to grind through
@@ -135,22 +140,14 @@ def semdedup_decisions(
             (pdf["vid"].to_numpy(), pdf["cent_cos"].to_numpy())
         )
         p = pdf.iloc[order]
-        X = np.ascontiguousarray(np.stack(p["e"].to_numpy()), dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1)
+        X = Vectors(p["e"].to_numpy(), "semdedup cell")
+        pos = np.arange(m)
         dropped = np.zeros(m, dtype=bool)
-        chunk = max(1, int(chunk_bytes / (8 * m)))
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            # oracle evaluation order: raw dot, ONE divide, then round
-            cos = _np_round_half_up(
-                (X[lo:hi] @ X.T) / (norms[lo:hi, None] * norms[None, :]),
-                round_decimals,
-            )
-            hit = cos >= threshold  # (hi-lo, m)
-            # row i (global lo+i) drops column j iff i-th sorts EARLIER
-            ii = np.arange(lo, hi)[:, None]
-            jj = np.arange(m)[None, :]
-            dropped |= (hit & (ii < jj)).any(axis=0)
+        # oracle evaluation order: raw dot, ONE divide, then round
+        for sl, cos in cosine_blocks(X, X, round_decimals, "raw_dot", chunk_bytes):
+            ri, ci = threshold_pairs(cos, pos[sl], pos, threshold)
+            # a hit drops its column iff its row sorts EARLIER
+            dropped[ci[pos[sl][ri] < ci]] = True
         return pd.DataFrame(
             {
                 "vid": p["vid"].to_numpy(),

@@ -21,7 +21,15 @@ TABLES = (
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """DuckDB views over the testdata tables. DuckDB shares this process
+    with the Spark driver's collects, so it gets a quarter of physical
+    memory (its default is 80%, which the sf0.1 sweep outgrew) and the
+    cores Spark is told to use."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    threads = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    con = duckdb.connect(
+        config={"memory_limit": f"{ram // 4 // 2**20}MB", "threads": int(threads)}
+    )
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         # driver testdata is a flat file per table; locally generated

@@ -241,7 +241,7 @@ def test_near_pairs_matches_bruteforce_within_probed_cells(spark, emb):
         for r in index.near_pairs(threshold=0.9, nprobe=3).collect()
     )
     # reference, all in numpy off the same index state
-    from data_integration_spark.similarity.ann import _np_round_half_up
+    from data_integration_spark.similarity.kernel import _np_round_half_up
     from data_integration_spark.similarity.ivf import _sq_dists
 
     rows = index.assigned.select("mid", "me", "cell").collect()

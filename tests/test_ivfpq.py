@@ -6,6 +6,7 @@ persist frozen-boundary equality, and probe-time partition pruning."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -180,9 +181,9 @@ def test_probe_filter_prunes_partitions_on_persisted_codes(spark, emb, tmp_path)
 def test_search_all_matches_search_at_q_equals_n(index, corpus_np):
     """The cogrouped corpus-scale ADC self-join (search_all, r11) must
     reproduce the driver-LUT search at Q = N: same (qid, mid, rank)
-    triples, distances equal to 1e-6 (search_all rounds HALF-UP for SQL
-    oracle parity; search uses np.round — values only differ at exact
-    .5-millionth boundaries, absent in this fixture)."""
+    triples, distances equal to 1e-6 (both round HALF-UP through the
+    shared kernel; the half-boundary case is pinned by
+    test_search_rounds_half_up_like_search_all)."""
     pdf, _ids, _X = corpus_np
     ref = {
         (r["qid"], r["rank"]): (r["mid"], r["adc_dist"])
@@ -213,3 +214,39 @@ def test_search_all_degenerate_shapes(spark, index):
     crash) for one-sided groups."""
     empty = spark.createDataFrame([], "vec_id long, e array<double>")
     assert index.search_all(empty, k=3, nprobe=2).count() == 0
+
+
+def test_search_rounds_half_up_like_search_all(spark):
+    """A planted half-boundary ADC distance. Query (1/16, 1/16) against an
+    all-zero centroid and codebook gives exactly 1/128 = 0.0078125, which
+    half-to-even rounding takes to 0.007812 and Spark's ``F.round`` to
+    0.007813. ``IVFPQIndex.search``, ``IVFPQIndex.search_all`` and
+    ``PQIndex.search`` must all emit Spark's value."""
+    from data_integration_spark.sources.local import local_table
+
+    expected = spark.range(1).select(F.round(F.lit(0.0078125), 6)).first()[0]
+    assert expected == 0.007813
+    q = [(0, [1 / 16, 1 / 16])]
+    q_pd = pd.DataFrame({"vec_id": [0], "e": [q[0][1]]})
+    q_df = local_table(spark, q, "vec_id long, e array<double>")
+
+    idx = IVFPQIndex(n_cells=1, m=1, k_codes=1, seed=0)
+    idx.ivf.centroids = local_table(
+        spark, [(0, [0.0, 0.0])], "cell int, ce array<double>"
+    )
+    idx.centroids_np = np.zeros((1, 2))
+    idx.codebooks = np.zeros((1, 1, 2))
+    idx.codes = local_table(
+        spark, [(1, 0, [0]), (2, 0, [0])], "mid long, cell int, codes array<bigint>"
+    )
+    pq = PQIndex(m=1, k_codes=1)
+    pq.codebooks = np.zeros((1, 1, 2))
+    pq.codes = local_table(spark, [(1, [0]), (2, [0])], "mid long, codes array<bigint>")
+
+    def ranked(df):
+        return [(r.mid, r.adc_dist) for r in df.orderBy("rank").collect()]
+
+    want = [(1, expected), (2, expected)]
+    assert ranked(idx.search(q_pd, k=5, nprobe=1)) == want
+    assert ranked(idx.search_all(q_df, k=5, nprobe=1)) == want
+    assert ranked(pq.search(q_pd, k=5)) == want

@@ -23,10 +23,8 @@ from data_integration_spark.queries import QUERIES, load_all
 from data_integration_spark.queries.similarity_queries import (
     pinned_centroid_grid,
 )
-from data_integration_spark.similarity.ann import (
-    _np_round_half_up,
-    as_double_array,
-)
+from data_integration_spark.similarity.ann import as_double_array
+from data_integration_spark.similarity.kernel import _np_round_half_up
 from data_integration_spark.similarity.semdedup import semdedup_decisions
 
 load_all()

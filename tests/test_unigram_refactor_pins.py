@@ -14,17 +14,12 @@
    each other (ADVICE r11).
 3. ``viterbi_encode`` emits the id column under the CALLER'S ``id_col``
    name instead of hardcoding ``doc_id`` (ADVICE r11).
-4. ``_guard_packable_ids``: member ids outside [0, 2^32) fail LOUDLY in
-   the composite-int64-key top-k kernels (IVF ``search_all`` stage 2 and
-   the IVFADC scorer) instead of silently corrupting per-cell order
-   (ADVICE r11).
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
 import pytest
 
 from data_integration_spark.operators.unigram_lm import (
@@ -34,7 +29,6 @@ from data_integration_spark.operators.unigram_lm import (
     seed_vocab,
     viterbi_encode,
 )
-from data_integration_spark.similarity.ann import _guard_packable_ids
 
 _SENT = "\x00__LL__"
 
@@ -146,31 +140,3 @@ def test_viterbi_encode_honors_id_col(spark):
     assert out.columns == ["my_key", "pieces", "n_pieces", "cost"]
     rows = {r["my_key"]: r["pieces"] for r in out.collect()}
     assert rows == {7: ["a", "b"], 8: ["b", "a"]}
-
-
-def test_guard_packable_ids_unit():
-    _guard_packable_ids(np.array([0, 5, (1 << 32) - 1], dtype=np.int64))
-    _guard_packable_ids(np.array([], dtype=np.int64))
-    with pytest.raises(ValueError, match="composite"):
-        _guard_packable_ids(np.array([1, 1 << 32], dtype=np.int64))
-    with pytest.raises(ValueError, match="composite"):
-        _guard_packable_ids(np.array([-1, 3], dtype=np.int64))
-
-
-def test_search_all_rejects_unpackable_ids(spark):
-    """End-to-end: an id ≥ 2^32 in the corpus must fail the IVF
-    ``search_all`` kernel loudly, not corrupt the top-k ordering."""
-    from data_integration_spark.similarity.ann import as_double_array
-    from data_integration_spark.similarity.ivf import IVFIndex
-
-    rng = np.random.default_rng(3)
-    vecs = rng.normal(size=(40, 6))
-    ids = list(range(39)) + [(1 << 32) + 7]
-    emb = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
-        "vec_id long, e array<double>",
-    ).select("vec_id", as_double_array("e", "e"))
-    idx = IVFIndex(n_cells=2, seed=5)
-    idx.fit(emb, train_per_cell=None)
-    with pytest.raises(Exception, match="composite"):
-        idx.search_all(emb, k=3, nprobe=2).collect()

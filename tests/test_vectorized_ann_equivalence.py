@@ -71,7 +71,7 @@ def test_round_half_up_matches_spark_at_half_boundaries(spark):
     """ADVICE r4: np.round (half-to-even) vs Spark F.round (HALF_UP over the
     shortest decimal repr) diverge exactly at 6th-decimal halves. The numpy
     helper must match Spark element-for-element on a boundary grid."""
-    from data_integration_spark.similarity.ann import _np_round_half_up
+    from data_integration_spark.similarity.kernel import _np_round_half_up
 
     vals = [
         0.1234565,    # np.round → …456 (even), Spark → …457
@@ -99,7 +99,7 @@ def test_round_half_up_matches_spark_on_bulk_random_and_boundaries(spark):
     """Bulk agreement: 4k random doubles in [-1, 1] (cosine range) plus
     every constructed 6th/7th-decimal half-boundary — the numpy helper and
     Spark F.round must agree element-for-element in one pass."""
-    from data_integration_spark.similarity.ann import _np_round_half_up
+    from data_integration_spark.similarity.kernel import _np_round_half_up
 
     rng = np.random.default_rng(17)
     vals = list(rng.uniform(-1, 1, 4000))
@@ -119,7 +119,7 @@ def test_round_half_up_matches_spark_on_bulk_random_and_boundaries(spark):
 
 
 def test_round_half_up_passes_nan_inf_through():
-    from data_integration_spark.similarity.ann import _np_round_half_up
+    from data_integration_spark.similarity.kernel import _np_round_half_up
 
     out = _np_round_half_up(np.array([np.nan, np.inf, -np.inf, 0.1234565]), 6)
     assert np.isnan(out[0]) and out[1] == np.inf and out[2] == -np.inf
