@@ -665,8 +665,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"].select(
         "vec_id", as_double_array("embedding", "e")
     )
-    # r15b: the corpus count that bounds the trainer sample comes from
-    # parquet footer metadata (catalog.table_rowcount) — no count job
+    # the corpus count that bounds the trainer sample comes from parquet
+    # footer metadata (catalog.table_rowcount) — no count job
     index = PQIndex(m=16, k_codes=64, seed=13).fit(
         emb, n_rows=table_rowcount(sf_dir, "embeddings")
     )
@@ -728,8 +728,8 @@ def q_ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"].select(
         "vec_id", as_double_array("embedding", "e")
     )
-    # r15b: the corpus count that bounds the trainer sample comes from
-    # parquet footer metadata (catalog.table_rowcount) — no count job
+    # the corpus count that bounds the trainer sample comes from parquet
+    # footer metadata (catalog.table_rowcount) — no count job
     index = PQIndex(m=16, k_codes=64, seed=13).fit(
         emb, n_rows=table_rowcount(sf_dir, "embeddings")
     )
@@ -759,7 +759,7 @@ def q_ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         # adc_dist is round(.,6) of one summation order, `exact` of
         # another; a true distance within float error of a 0.5e-6
         # boundary can legitimately round one grid step apart, so the
-        # identity bound is one 6dp grid step, not zero (review r7c2)
+        # identity bound is one 6dp grid step, not zero
         if abs(round(exact, 6) - r["adc_dist"]) > 1.5e-6:
             n_adc_bad += 1
 
@@ -818,7 +818,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"].select(
         "vec_id", as_double_array("embedding", "e")
     )
-    # r15b: footer-metadata corpus count — no count job (see q_ann_pq)
+    # footer-metadata corpus count — no count job (see q_ann_pq)
     index = IVFPQIndex(n_cells=8, m=16, k_codes=16, seed=17).fit(
         emb, n_rows=table_rowcount(sf_dir, "embeddings")
     )
@@ -892,7 +892,7 @@ def q_ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double_array("embedding", "e")
     )
     nprobe = 4
-    # r15b: footer-metadata corpus count — no count job (see q_ann_pq)
+    # footer-metadata corpus count — no count job (see q_ann_pq)
     index = IVFPQIndex(n_cells=8, m=16, k_codes=16, seed=17).fit(
         emb, n_rows=table_rowcount(sf_dir, "embeddings")
     )
@@ -962,7 +962,7 @@ def q_ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         # adc_dist is round(.,6) of one summation order, `exact` of
         # another; a true distance within float error of a 0.5e-6
         # boundary can legitimately round one grid step apart, so the
-        # identity bound is one 6dp grid step, not zero (review r7c2)
+        # identity bound is one 6dp grid step, not zero
         if abs(round(exact, 6) - r["adc_dist"]) > 1.5e-6:
             n_adc_bad += 1
         if cell not in probed_of[int(r["qid"])]:
@@ -2068,7 +2068,7 @@ def q_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
         opq_rotation,
         rotate_vectors,
     )
-    from data_integration_spark.similarity.pq import PQIndex
+    from data_integration_spark.similarity.pq import PQIndex, subspace_dists
 
     m, k_codes = 8, 16
     # both corpora are consumed by several actions each (PQ fit's
@@ -2084,22 +2084,20 @@ def q_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rot = rotate_vectors(emb, mu, R, "vec_id", "e").persist()
 
     # one count serves both bounded-sample fits and the conservation law
-    # (r15: each fit used to re-count its corpus — rot is row-for-row emb)
+    # (rot is row-for-row emb, so no fit re-counts its corpus)
     n_vectors = int(emb.count())
     pq_plain = PQIndex(m=m, k_codes=k_codes, seed=13).fit(emb, n_rows=n_vectors)
     pq_opq = PQIndex(m=m, k_codes=k_codes, seed=13).fit(rot, n_rows=n_vectors)
 
-    # r15: ONE fused pass per corpus computes both the quantization SSE
-    # and the variance moments (was two mapInPandas jobs each — §1.2,
-    # don't re-scan for a second statistic the same batch already held).
-    # The laws consuming these are slack-bounded (≤1.02× MSE ratio, 1e-6
-    # relative variance), so the driver-side partial summation order is
-    # immaterial by design.
+    # ONE fused pass per corpus computes both the quantization SSE and
+    # the variance moments (don't re-scan for a second statistic the
+    # same batch already held). The laws consuming these are
+    # slack-bounded (≤1.02× MSE ratio, 1e-6 relative variance), so the
+    # driver-side partial summation order is immaterial by design.
     def mse_var_of(index: PQIndex, vectors: DataFrame) -> tuple[float, float]:
         import pandas as pd
 
         cb = index.codebooks
-        mm, dsub = cb.shape[0], cb.shape[2]
 
         def part(batches):
             for pdf in batches:
@@ -2107,12 +2105,8 @@ def q_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
                     continue
                 X = np.stack(pdf["e"].to_numpy()).astype(np.float64)
                 err = 0.0
-                for j in range(mm):
-                    sub = X[:, j * dsub : (j + 1) * dsub]
-                    dists = (
-                        (sub[:, None, :] - cb[j][None, :, :]) ** 2
-                    ).sum(-1)
-                    err += float(dists.min(axis=1).sum())
+                for j in range(len(cb)):
+                    err += float(subspace_dists(X, cb, j).min(axis=1).sum())
                 yield pd.DataFrame(
                     {
                         "sse": [err],

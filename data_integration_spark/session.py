@@ -22,6 +22,18 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def session_sizing() -> tuple[str, str]:
+    """``(cpus, driver_mem)`` for a local session: ``SPARK_GRAFT_CPUS``
+    and ``SPARK_DRIVER_MEM`` when set, else the cores this process may
+    run on and a quarter of physical memory between 1 and 8 GiB."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    heap_mb = max(1024, min(8192, phys // 4 // 2**20))
+    return (
+        os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0))),
+        os.environ.get("SPARK_DRIVER_MEM") or f"{heap_mb}m",
+    )
+
+
 def get_spark(
     app_name: str = "data_integration_spark",
     master: str | None = None,
@@ -32,9 +44,10 @@ def get_spark(
 
     ``master=None`` respects an externally-provided cluster master
     (spark-submit); tests pass ``local[N]`` or rely on the SPARK_GRAFT_CPUS
-    env var.
+    env var. Cores and driver heap default to the machine
+    (``session_sizing``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = session_sizing()
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -53,7 +66,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # static config — must be set before session start (bucketed tables)

@@ -107,6 +107,45 @@ def _lloyd(X: np.ndarray, k: int, seed: int, n_iter: int = 25,
     return C
 
 
+def training_sample(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    target: int,
+    n_rows: int | None = None,
+    sample: bool = True,
+    extra_cols: tuple[str, ...] = (),
+):
+    """The bounded deterministic training set every quantizer in this
+    package fits on: a content-keyed ``pmod(xxhash64(id), 1e6) < frac``
+    subsample of about ``target`` rows (reproducible on any
+    partitioning), collected SORTED by id (so the fit is partition-order
+    independent) and capped at ``target * 4`` rows, so it stays a few MB
+    at ANY corpus size. ``sample=False`` keeps the whole (small) corpus
+    up to that cap. ``n_rows``: the corpus row count when the caller
+    already has it (saves re-counting the same frame).
+
+    Returns ``(X, pdf)``: the (n, dim) float64 training matrix and the
+    collected frame, whose ``extra_cols`` ride along (IVF-PQ takes each
+    row's ``cell``)."""
+    train = corpus
+    n = corpus.count() if sample and n_rows is None else n_rows
+    if sample and n > target:
+        frac_ppm = int(target * 1_000_000 / n)
+        train = corpus.filter(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000)) < frac_ppm
+        )
+    pdf = (
+        train.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_e"), *extra_cols
+        )
+        .orderBy("_id")
+        .limit(target * 4)
+        .toPandas()
+    )
+    return np.stack(pdf["_e"].to_numpy()).astype(np.float64), pdf
+
+
 def train_centroids(
     corpus: DataFrame,
     n_cells: int,
@@ -116,35 +155,15 @@ def train_centroids(
     train_per_cell: int | None = 256,
     n_rows: int | None = None,
 ) -> np.ndarray:
-    """The bounded deterministic quantizer-training leg, extracted from
-    ``IVFIndex.fit`` VERBATIM (r15) so non-IVF consumers — SemDeDup's
-    trained-K production path — fit centroids with the SAME machinery:
-    a content-keyed ``pmod(xxhash64(id), 1e6) < frac`` subsample
-    (reproducible on any partitioning), collected SORTED by id (so
-    centroids are partition-order independent) and bounded by
-    construction (~``n_cells * train_per_cell`` rows at ANY corpus
-    size), then driver-side Lloyd (``_lloyd``). Returns the
-    (n_cells, dim) float64 centroid matrix. ``n_rows``: the corpus row
-    count, when the caller already has it (saves re-counting the same
-    frame; callers that sized n_cells off a count always do)."""
-    train = corpus
-    target = n_cells * (train_per_cell or 4096)
-    n = corpus.count() if n_rows is None else n_rows
-    if train_per_cell is not None and n > target:
-        frac_ppm = int(target * 1_000_000 / n)
-        train = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000)) < frac_ppm
-        )
-    # bounded by the sample predicate (or the corpus itself when the
-    # caller opted out of sampling on a small corpus) — never collect
-    # an unbounded training set
-    sample_pd = (
-        train.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_e"))
-        .orderBy("_id")
-        .limit(target * 4)
-        .toPandas()
+    """The quantizer-training leg of ``IVFIndex.fit``, shared with
+    non-IVF consumers (SemDeDup's trained-K production path): driver-side
+    Lloyd (``_lloyd``) on ``training_sample``'s bounded set of
+    ~``n_cells * train_per_cell`` rows. Returns the (n_cells, dim)
+    float64 centroid matrix."""
+    X, _ = training_sample(
+        corpus, id_col, vec_col, n_cells * (train_per_cell or 4096),
+        n_rows=n_rows, sample=train_per_cell is not None,
     )
-    X = np.stack(sample_pd["_e"].to_numpy()).astype(np.float64)
     return _lloyd(X, n_cells, seed)
 
 

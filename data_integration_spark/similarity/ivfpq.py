@@ -4,7 +4,8 @@ big-index design, composing this package's two scale paths:
 - the IVF coarse quantizer (ivf.py) prunes WHICH vectors a query touches
   (nprobe of n_cells inverted lists — compute pruning);
 - product quantization (pq.py) compresses WHAT each list stores — but
-  over the RESIDUAL (vector − its cell centroid), not the raw vector:
+  over the RESIDUAL (vector − its cell centroid), not the raw vector
+  (the same codec functions as ``PQIndex``, applied to residuals):
   residuals concentrate around 0 with far lower variance than the
   corpus, so the same code budget quantizes them much more precisely
   (the core IVFADC insight of Jégou/Douze/Schmid, "Product Quantization
@@ -36,16 +37,17 @@ from pyspark.sql import functions as F
 from data_integration_spark.similarity.ann import _rank_topk
 from data_integration_spark.similarity.ivf import (
     IVFIndex,
-    _lloyd,
     _score_cells,
     _sq_dists,
+    training_sample,
 )
-from data_integration_spark.similarity.kernel import (
-    _np_round_half_up,
-    row_blocks,
-    topk_cut,
+from data_integration_spark.similarity.pq import (
+    adc_topk,
+    decode,
+    encode,
+    rerank_l2,
+    train_codebooks,
 )
-from data_integration_spark.sources.local import local_table
 
 
 class IVFPQIndex:
@@ -79,56 +81,33 @@ class IVFPQIndex:
         n_rows: int | None = None,
     ) -> "IVFPQIndex":
         """Coarse quantizer via ``IVFIndex.fit`` (bounded-sample driver
-        Lloyd — the r7 FAISS-style shape), then residual codebooks on a
-        bounded deterministic residual sample, then ONE distributed pass
-        encoding the full corpus.
+        Lloyd, FAISS-style), then residual codebooks (``train_codebooks``)
+        on a bounded deterministic sample of the assigned corpus, then ONE
+        distributed pass encoding the full corpus.
 
-        Both training sets are pure-function-of-id subsamples
-        (``pmod(xxhash64(id), 1e6)``), collected SORTED, so refits
+        Both training sets come from ``ivf.training_sample``
+        (pure-function-of-id subsamples collected SORTED), so refits
         reproduce on any partitioning and stay a few MB at any corpus
-        size."""
-        # n_rows: caller-supplied corpus count (r15 — one count serves the
-        # coarse fit, the residual sample bound, and nothing else; callers
-        # over a whole catalog table pass the parquet-footer count)
+        size. ``n_rows``: the corpus count when the caller already has
+        it; one count serves the coarse fit and the residual sample
+        bound."""
         n = corpus.count() if n_rows is None else n_rows
         self.ivf.fit(corpus, id_col=id_col, vec_col=vec_col, n_rows=n)
         self._pull_centroids()
         assigned = self.ivf.assigned  # (mid, me, cell)
-
-        target = self.k_codes * (train_per_code or 256)
-        train = assigned
-        if train_per_code is not None and n > target:
-            frac_ppm = int(target * 1_000_000 / n)
-            train = assigned.filter(
-                F.pmod(F.xxhash64(F.col("mid")), F.lit(1_000_000)) < frac_ppm
-            )
-        sample_pd = (
-            train.select("mid", "me", "cell").orderBy("mid").limit(target * 4)
-        ).toPandas()
-        X = np.stack(sample_pd["me"].to_numpy()).astype(np.float64)
-        cells = sample_pd["cell"].to_numpy()
-        R = X - self.centroids_np[cells]  # residual training matrix
-        d = X.shape[1]
-        if d % self.m:
-            raise ValueError(f"dim {d} not divisible by m={self.m}")
-        dsub = d // self.m
-        self.codebooks = np.stack(
-            [
-                _lloyd(
-                    R[:, j * dsub : (j + 1) * dsub],
-                    self.k_codes,
-                    self.seed + 101 * j,
-                )
-                for j in range(self.m)
-            ]
+        X, sample_pd = training_sample(
+            assigned, "mid", "me", self.k_codes * (train_per_code or 256),
+            n_rows=n, sample=train_per_code is not None, extra_cols=("cell",),
         )
+        R = X - self.centroids_np[sample_pd["cell"].to_numpy()]
+        self.codebooks = train_codebooks(R, self.m, self.k_codes, self.seed)
         self.codes = self._encode_assigned(assigned)
         return self
 
     def _pull_centroids(self) -> None:
-        # r15: ride the IVFIndex's once-per-index matrix cache instead of
-        # a second toPandas of the same table (zero jobs when the cache
-        # was seeded driver-side — fit and the pinned fixtures both do)
+        # ride the IVFIndex's once-per-index matrix cache instead of a
+        # second toPandas of the same table (zero jobs when the cache was
+        # seeded driver-side — fit and the pinned fixtures both do)
         C, cells = self.ivf._centroid_matrix()
         if list(cells) != list(range(len(cells))):
             raise ValueError("centroid cell ids must be dense 0..n-1")
@@ -137,13 +116,11 @@ class IVFPQIndex:
     # --------------------------------------------------------------- encode
     def _encode_assigned(self, assigned: DataFrame) -> DataFrame:
         """(mid, cell, codes) from an already-assigned (mid, me, cell)
-        frame: residual = me − centroid[cell], per-subspace argmin with
-        the lowest-code tie-break (np.argmin). One vectorized
-        ``mapInPandas`` pass; centroids + codebooks ride the closure
-        (KBs)."""
+        frame: ``encode`` of the residual me − centroid[cell]. One
+        vectorized ``mapInPandas`` pass; centroids + codebooks ride the
+        closure (KBs)."""
         assert self.codebooks is not None, "fit or load first"
         cb, cent = self.codebooks, self.centroids_np
-        m, dsub = cb.shape[0], cb.shape[2]
 
         def enc(batches):
             for pdf in batches:
@@ -151,17 +128,11 @@ class IVFPQIndex:
                     continue
                 X = np.stack(pdf["me"].to_numpy()).astype(np.float64)
                 cells = pdf["cell"].to_numpy()
-                R = X - cent[cells]
-                codes = np.empty((len(X), m), dtype=np.int64)
-                for j in range(m):
-                    sub = R[:, j * dsub : (j + 1) * dsub]
-                    dist = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                    codes[:, j] = dist.argmin(axis=1)
                 yield pd.DataFrame(
                     {
                         "mid": pdf["mid"].to_numpy(),
                         "cell": cells,
-                        "codes": list(codes),
+                        "codes": list(encode(X - cent[cells], cb)),
                     }
                 )
 
@@ -191,14 +162,10 @@ class IVFPQIndex:
 
     # --------------------------------------------------------------- decode
     def decode_np(self, cells: np.ndarray, codes: np.ndarray) -> np.ndarray:
-        """Reconstruct (n, d) vectors: cell centroid + concatenated
-        per-subspace residual codewords. NumPy helper for
-        certificates/tests."""
+        """Reconstruct (n, d) vectors: cell centroid + decoded residual.
+        NumPy helper for certificates/tests."""
         assert self.codebooks is not None and self.centroids_np is not None
-        recon = np.concatenate(
-            [self.codebooks[j][codes[:, j]] for j in range(self.m)], axis=1
-        )
-        return self.centroids_np[cells] + recon
+        return self.centroids_np[cells] + decode(codes, self.codebooks)
 
     # --------------------------------------------------------------- search
     def search(
@@ -214,42 +181,24 @@ class IVFPQIndex:
         adc_dist, rank), ascending distance, (dist, mid) tie-break.
 
         ``queries_pd`` is BOUNDED (callers guard size as in the other
-        vectorized ANN paths). Driver work is tiny and exact: rank cells
-        per query against the (n_cells × d) centroid matrix, then build
-        one (m × k_codes) LUT per (query, probed cell) over the query's
-        residual in that cell — nq·nprobe·m·k_codes doubles in the
-        closure. The codes table is FILTERED to the probed cell set
-        before the scan (partition pruning when stored partitioned by
-        cell), streams through ``mapInPandas``, and only batch-local
-        top-k survivors reach the ranking shuffle — nq·k·n_batches rows,
-        never nq·|corpus|. Distances round HALF-UP and rank through the
-        shared kernel (``similarity/kernel.py``), as in ``search_all``."""
+        vectorized ANN paths) and rides the closure with each query's
+        nprobe nearest cells, ranked on the driver against the
+        (n_cells × d) centroid matrix with a (distance, cell) tie-break.
+        The codes table is FILTERED to the probed cell set before the
+        scan (a static IN-list: partition pruning when stored partitioned
+        by cell) and streams through ``mapInPandas``. Each batch is
+        scored per cell, as in ``search_all``: the cell's members against
+        the residuals of the queries that probe it, through ``adc_topk``.
+        Only per-(query, cell) batch-local top-k survivors reach the
+        ranking shuffle — never nq·|corpus| rows."""
         assert self.codes is not None, "fit first"
         cb, cent = self.codebooks, self.centroids_np
-        m, kc, dsub = cb.shape
         q_ids = queries_pd[id_col].to_numpy()
         Q = np.stack(queries_pd[vec_col].to_numpy()).astype(np.float64)
-
-        cd = _sq_dists(Q, cent)  # (nq, n_cells)
-        probed: dict[int, np.ndarray] = {}
-        luts: dict[tuple[int, int], np.ndarray] = {}
-        for qi in range(len(q_ids)):
-            order = np.lexsort((np.arange(cent.shape[0]), cd[qi]))
-            cells = order[: min(nprobe, cent.shape[0])]
-            probed[qi] = cells
-            for cell in cells:
-                r = Q[qi] - cent[cell]  # query residual in this cell
-                luts[(qi, int(cell))] = np.stack(
-                    [
-                        (
-                            (r[j * dsub : (j + 1) * dsub][None, :] - cb[j])
-                            ** 2
-                        ).sum(-1)
-                        for j in range(m)
-                    ]
-                )  # (m, kc)
-
-        probed_cells = sorted({int(c) for cs in probed.values() for c in cs})
+        probes = np.argsort(_sq_dists(Q, cent), axis=1, kind="stable")[
+            :, : min(nprobe, cent.shape[0])
+        ]  # (nq, nprobe) cell ids
+        probed_cells = sorted({int(c) for c in probes.ravel()})
 
         def score(batches):
             for pdf in batches:
@@ -258,37 +207,13 @@ class IVFPQIndex:
                 C = np.stack(pdf["codes"].to_numpy())  # (nb, m)
                 cells = pdf["cell"].to_numpy()
                 mids = pdf["mid"].to_numpy()
-                out_q, out_m, out_d = [], [], []
-                for qi in range(len(q_ids)):
-                    d_parts, m_parts = [], []
-                    for cell in probed[qi]:
-                        mask = cells == cell
-                        if not mask.any():
-                            continue
-                        lut = luts[(qi, int(cell))]
-                        Cc = C[mask]
-                        dist = np.zeros(len(Cc))
-                        for j in range(m):
-                            dist += lut[j, Cc[:, j]]
-                        d_parts.append(_np_round_half_up(dist, round_decimals))
-                        m_parts.append(mids[mask])
-                    if not d_parts:
-                        continue
-                    dall = np.concatenate(d_parts)[None, :]
-                    mall = np.concatenate(m_parts)
-                    _, sel = topk_cut(dall, q_ids[qi : qi + 1], mall, k, round_decimals)
-                    out_q.append(np.full(len(sel), q_ids[qi]))
-                    out_m.append(mall[sel])
-                    out_d.append(dall[0, sel])
-                if not out_q:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "mid": np.concatenate(out_m),
-                        "adc_dist": np.concatenate(out_d),
-                    }
-                )
+                for cell in np.unique(cells):
+                    qs = (probes == cell).any(axis=1)
+                    mask = cells == cell
+                    yield from adc_topk(
+                        Q[qs] - cent[cell], cb, C[mask], q_ids[qs], mids[mask],
+                        k, round_decimals,
+                    )
 
         pairs = (
             self.codes.filter(F.col("cell").isin(probed_cells))
@@ -313,20 +238,16 @@ class IVFPQIndex:
         index — same cogrouped shape, ADC gathers instead of a cosine
         GEMM).
 
-        ``search`` holds per-(query, cell) LUTs on the driver — bounded
-        queries only. Here stage 1 is the shared ``IVFIndex._probe``
-        GEMM (queries keep their float vectors only until the LUT is
-        built), and stage 2 is a COGROUPED ``applyInPandas`` on the
-        cell id: each cell builds the (nq_cell, m, k_codes) LUT tensor
-        over its probing queries' residuals, scores every member with m
-        table GATHERS (never decoding a member vector), and emits only
-        per-query partial top-k. The global pass ranks ≤ nprobe·k
-        survivors per query. The cut is lossless (a member lives in
-        exactly one cell — the ``IVFIndex.search_all`` batch-cut
-        argument). Rounding is HALF-UP (``_np_round_half_up``) so a SQL
-        oracle's ROUND can restate the emitted distances; ranking is the
-        shared kernel's exact integer key (``kernel.topk_cut``; distances
-        must stay < 2^31 millionths, a loud guard).
+        ``search`` holds the query set on the driver — bounded queries
+        only. Here stage 1 is the shared ``IVFIndex._probe`` GEMM
+        (queries keep their float vectors only until the LUT is built),
+        and stage 2 is a COGROUPED ``applyInPandas`` on the cell id: each
+        cell scores its members against its probing queries' residuals
+        through ``adc_topk`` (m table GATHERS per candidate, never
+        decoding a member vector) and emits only per-query partial top-k.
+        The global pass ranks ≤ nprobe·k survivors per query. The cut is
+        lossless (a member lives in exactly one cell — the
+        ``IVFIndex.search_all`` batch-cut argument).
 
         Scale shape: one shuffle of probes + codes on the cell id (the
         layout a persisted index already has on disk), LUT work
@@ -336,34 +257,23 @@ class IVFPQIndex:
         assert self.codes is not None, "fit or load first"
         cb, cent = self.codebooks, self.centroids_np
         assert cb is not None and cent is not None, "fit or load first"
-        m, kc, dsub = cb.shape
         probed = self.ivf._probe(queries, nprobe, id_col, vec_col)
         qid_type = probed.schema["qid"].dataType.simpleString()
 
         def score_cell(probes: pd.DataFrame, members: pd.DataFrame):
             cell = int(probes["cell"].iloc[0])
-            C = np.stack(members["codes"].to_numpy()).astype(np.int64)
-            mids = members["mid"].to_numpy().astype(np.int64)
-            qids = probes["qid"].to_numpy().astype(np.int64)
             Q = np.ascontiguousarray(
                 np.stack(probes["qe"].to_numpy()), dtype=np.float64
             )
-            for sl in row_blocks(len(qids), len(mids)):
-                R = Q[sl] - cent[cell][None, :]
-                dist = np.zeros((len(R), len(mids)))
-                for j in range(m):
-                    sub = R[:, j * dsub : (j + 1) * dsub]
-                    # direct (x−c)² form, matching the encode kernel and
-                    # a SQL oracle's SUM((r−b)²) arithmetic shape
-                    lut = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(
-                        -1
-                    )  # (nq_c, kc)
-                    dist += lut[:, C[:, j]]
-                dist = _np_round_half_up(dist, round_decimals)
-                qi, mi = topk_cut(dist, qids[sl], mids, k, round_decimals)
-                yield pd.DataFrame(
-                    {"qid": qids[sl][qi], "mid": mids[mi], "adc_dist": dist[qi, mi]}
-                )
+            return adc_topk(
+                Q - cent[cell][None, :],
+                cb,
+                np.stack(members["codes"].to_numpy()).astype(np.int64),
+                probes["qid"].to_numpy().astype(np.int64),
+                members["mid"].to_numpy().astype(np.int64),
+                k,
+                round_decimals,
+            )
 
         partials = _score_cells(
             probed, self.codes, score_cell,
@@ -382,39 +292,12 @@ class IVFPQIndex:
         vec_col: str = "e",
     ) -> DataFrame:
         """The production IVFADC pipeline: probed-cell ADC SHORTLIST +
-        exact L2 rerank — only the nq×shortlist candidates' float
-        vectors are ever read. Returns (qid, mid, l2_dist, rank),
-        ascending exact distance, (dist, mid) tie-break."""
-        spark = corpus.sparkSession
+        exact L2 rerank (``pq.rerank_l2``) — only the nq×shortlist
+        candidates' float vectors are ever read. Returns (qid, mid,
+        l2_dist, rank), ascending exact distance, (dist, mid)
+        tie-break."""
         short = self.search(
             queries_pd, k=shortlist, nprobe=nprobe,
             id_col=id_col, vec_col=vec_col,
-        ).select("qid", "mid")
-        cand = short.join(
-            corpus.select(
-                F.col(id_col).alias("mid"), F.col(vec_col).alias("me")
-            ),
-            "mid",
         )
-        qdf = local_table(
-            spark,
-            [
-                (int(q), [float(x) for x in v])
-                for q, v in zip(queries_pd[id_col], queries_pd[vec_col])
-            ],
-            "qid long, qe array<double>",
-        )
-        dist = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qe"), F.col("me"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        scored = cand.join(F.broadcast(qdf), "qid").select(
-            "qid", "mid", dist.alias("l2_dist")
-        )
-        return _rank_topk(scored, "l2_dist", k)
+        return rerank_l2(short, queries_pd, corpus, k, id_col, vec_col)

@@ -5,7 +5,7 @@ blocks of vectors, a row side and a column side:
 
 1. score every (row, column) pair, one row chunk at a time so that a
    chunk's score matrix fits one memory budget (``cosine_blocks`` for
-   cosine; the ADC scorers build their own distance blocks over
+   cosine; the ADC scorers build theirs in ``pq.adc_topk`` over
    ``row_blocks``);
 2. round the scores onto the decimal grid of Spark's ``F.round``
    (``_np_round_half_up``);

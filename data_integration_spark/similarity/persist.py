@@ -194,13 +194,40 @@ def load_lsh_spec(path: str) -> dict:
     return spec
 
 
-def save_pq_index(index, path: str) -> None:
-    """Persist a fitted PQ index: explicit codebook coefficients (JSON —
-    m × k_codes × dsub doubles, KBs; coefficients, not the seed, for the
-    same reason as the LSH spec) + the encoded corpus (``codes/`` parquet
-    — the 8-bytes-per-vector table that IS the index at scale)."""
-    from data_integration_spark.similarity.pq import PQIndex  # noqa: F401
+def _codebooks_json(codebooks) -> list:
+    """Codebook coefficients as nested JSON lists (m × k_codes × dsub
+    doubles, KBs): explicit values, not the seed, for the same reason as
+    the LSH spec. Python floats round-trip float64 exactly."""
+    return [[[float(x) for x in row] for row in book] for book in codebooks]
 
+
+def _codebooks_from_meta(meta: dict, kind: str, dim: int | None = None):
+    """The (m, k_codes, dsub) codebook array of a PQ-family ``meta.json``,
+    checked against the params it declares: a shape mismatch would encode
+    and search with the wrong subspace split and no error. ``dim``: the
+    vector dim the codebooks must cover (IVF-PQ's centroid dim)."""
+    import numpy as np
+
+    cb = np.asarray(meta["codebooks"], dtype=np.float64)
+    if cb.ndim != 3:
+        raise ValueError(f"{kind} codebooks must be 3-d, got shape {cb.shape}")
+    if cb.shape[0] != meta["m"] or cb.shape[1] > meta["k_codes"]:
+        raise ValueError(
+            f"{kind} codebooks shape mismatch: shape {cb.shape}, declared "
+            f"m={meta['m']}, k_codes={meta['k_codes']}"
+        )
+    if dim is not None and cb.shape[0] * cb.shape[2] != dim:
+        raise ValueError(
+            f"{kind} codebooks cover dim {cb.shape[0] * cb.shape[2]}, "
+            f"centroids have dim {dim}"
+        )
+    return cb
+
+
+def save_pq_index(index, path: str) -> None:
+    """Persist a fitted PQ index: explicit codebook coefficients (JSON)
+    + the encoded corpus (``codes/`` parquet — the 8-bytes-per-vector
+    table that IS the index at scale)."""
     if index.codebooks is None or index.codes is None:
         raise ValueError("fit the index before saving")
     os.makedirs(path, exist_ok=True)
@@ -210,10 +237,7 @@ def save_pq_index(index, path: str) -> None:
         "m": int(index.m),
         "k_codes": int(index.k_codes),
         "seed": int(index.seed),
-        "codebooks": [
-            [[float(x) for x in row] for row in book]
-            for book in index.codebooks
-        ],
+        "codebooks": _codebooks_json(index.codebooks),
     }
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
@@ -225,20 +249,18 @@ def save_ivfpq_index(index, path: str) -> None:
     JSON — same rationale as the PQ/LSH specs), and the codes table
     (``codes/`` parquet — (mid, cell, codes), the corpus-sized artifact;
     partition by ``cell`` at scale so probes prune files)."""
-    from data_integration_spark.similarity.ivfpq import IVFPQIndex  # noqa: F401
-
     if index.codebooks is None or index.codes is None:
         raise ValueError("fit the index before saving")
     os.makedirs(path, exist_ok=True)
     index.ivf.centroids.write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
-    # partitioned by cell (r9): search filters the codes table with a
-    # STATIC probed-cell IN-list, so on a loaded index that filter lands
-    # in PartitionFilters — nprobe/n_cells of the codes files are read,
-    # the rest never opened (cheaper even than the IVF DPP path: no
-    # broadcast subquery needed). repartition("cell") keeps it to one
-    # file per cell instead of (tasks × n_cells) small files.
+    # partitioned by cell: search filters the codes table with a STATIC
+    # probed-cell IN-list, so on a loaded index that filter lands in
+    # PartitionFilters — nprobe/n_cells of the codes files are read, the
+    # rest never opened (cheaper even than the IVF DPP path: no broadcast
+    # subquery needed). repartition("cell") keeps it to one file per cell
+    # instead of (tasks × n_cells) small files.
     index.codes.repartition("cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(os.path.join(path, "codes"))
@@ -249,10 +271,7 @@ def save_ivfpq_index(index, path: str) -> None:
         "m": int(index.m),
         "k_codes": int(index.k_codes),
         "seed": int(index.seed),
-        "codebooks": [
-            [[float(x) for x in row] for row in book]
-            for book in index.codebooks
-        ],
+        "codebooks": _codebooks_json(index.codebooks),
     }
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
@@ -262,9 +281,8 @@ def load_ivfpq_index(spark: SparkSession, path: str):
     """Reload a persisted IVF-PQ index; ``search``/``assign_encode``/
     ``append`` work without a re-fit — centroid AND codebook values are
     frozen, so appended batches land in the same cells with the same
-    codes any other job would produce."""
-    import numpy as np
-
+    codes any other job would produce. Codebooks whose shape disagrees
+    with the declared params or the centroid dim raise."""
     from data_integration_spark.similarity.ivfpq import IVFPQIndex
 
     with open(os.path.join(path, "meta.json")) as f:
@@ -287,7 +305,9 @@ def load_ivfpq_index(spark: SparkSession, path: str):
     )
     index.ivf.centroids = spark.read.parquet(os.path.join(path, "centroids"))
     index._pull_centroids()
-    index.codebooks = np.asarray(meta["codebooks"], dtype=np.float64)
+    index.codebooks = _codebooks_from_meta(
+        meta, "IVF-PQ", dim=index.centroids_np.shape[1]
+    )
     index.codes = spark.read.parquet(os.path.join(path, "codes"))
     return index
 
@@ -295,9 +315,8 @@ def load_ivfpq_index(spark: SparkSession, path: str):
 def load_pq_index(spark: SparkSession, path: str):
     """Reload a persisted PQ index; ``search``/``encode`` work without a
     re-fit (re-fitting changes codebooks and breaks cross-job
-    reproducibility)."""
-    import numpy as np
-
+    reproducibility). Codebooks whose shape disagrees with the declared
+    params raise."""
     from data_integration_spark.similarity.pq import PQIndex
 
     with open(os.path.join(path, "meta.json")) as f:
@@ -305,7 +324,7 @@ def load_pq_index(spark: SparkSession, path: str):
     if meta.get("format") != _FORMAT:
         raise ValueError(f"unsupported PQ index format: {meta.get('format')}")
     index = PQIndex(m=meta["m"], k_codes=meta["k_codes"], seed=meta["seed"])
-    index.codebooks = np.asarray(meta["codebooks"], dtype=np.float64)
+    index.codebooks = _codebooks_from_meta(meta, "PQ")
     index.codes = spark.read.parquet(os.path.join(path, "codes"))
     return index
 

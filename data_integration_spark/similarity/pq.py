@@ -12,18 +12,25 @@ query-subvector↔centroid squared distances is built once, and each
 corpus vector's approximate distance is ``m`` table gathers summed —
 no float vector is ever read at query time.
 
+The codec is the NumPy functions below, and it is the only one in the
+package: ``train_codebooks``, ``encode``, ``decode``, ``adc_table``,
+``adc_topk`` and the Spark-side ``rerank_l2``. ``PQIndex`` applies them
+to raw vectors; ``IVFPQIndex`` (ivfpq.py) applies them to residuals
+(vector − cell centroid).
+
 Spark-first shape (mirrors ann.py's vectorized scorers):
 
 - codebooks train DRIVER-SIDE on a bounded deterministic sample
-  (``ivf._lloyd`` per subspace — the same FAISS-style bounded-sample
-  argument as the IVF coarse quantizer);
+  (``ivf.training_sample``, then ``ivf._lloyd`` per subspace — the same
+  FAISS-style bounded-sample argument as the IVF coarse quantizer);
 - encoding is one distributed ``mapInPandas`` pass (argmin over
   broadcast codebooks per Arrow batch, vectorized);
-- search streams the CODES table through ``mapInPandas`` with the query
-  LUT tensor in the closure: per batch, distances are NumPy gathers +
-  sum, the batch-local top-k per query is cut under the exact global
-  total order, and an engine-side window merges survivors — the ranking
-  shuffle receives nq·k·n_batches rows, never nq·|corpus|.
+- search streams the CODES table through ``mapInPandas`` with the
+  bounded query set in the closure: per batch, the LUT tensor is built,
+  distances are NumPy gathers + sum, the batch-local top-k per query is
+  cut under the exact global total order, and an engine-side window
+  merges survivors — the ranking shuffle receives nq·k·n_batches rows,
+  never nq·|corpus|.
 
 The ADC identity — ADC(q, codes) == ‖q − decode(codes)‖² exactly — is
 the family's oracle certificate (q_ann_pq_invariants): quantization
@@ -38,9 +45,137 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_integration_spark.similarity.ann import _rank_topk
-from data_integration_spark.similarity.ivf import _lloyd
-from data_integration_spark.similarity.kernel import _np_round_half_up, topk_cut
+from data_integration_spark.similarity.ivf import _lloyd, training_sample
+from data_integration_spark.similarity.kernel import (
+    _np_round_half_up,
+    row_blocks,
+    topk_cut,
+)
 from data_integration_spark.sources.local import local_table
+
+
+# ------------------------------------------------------------------ codec
+def subspace_dists(X: np.ndarray, codebooks: np.ndarray, j: int) -> np.ndarray:
+    """(n, k_codes) exact squared distances from the j-th subvector of
+    each row of ``X`` to every codeword of subspace j. Written as the
+    direct (x − c)² sum, the arithmetic shape of a SQL oracle's
+    SUM((r − b)²)."""
+    dsub = codebooks.shape[2]
+    sub = X[:, j * dsub : (j + 1) * dsub]
+    return ((sub[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
+
+
+def train_codebooks(
+    X: np.ndarray, m: int, k_codes: int, seed: int
+) -> np.ndarray:
+    """(m, k_codes, dsub) codebooks: driver-side Lloyd per subspace of the
+    training matrix, seeded ``seed + 101 * j``. ``_lloyd`` caps the code
+    count at the sample size."""
+    d = X.shape[1]
+    if d % m:
+        raise ValueError(f"dim {d} not divisible by m={m}")
+    dsub = d // m
+    return np.stack(
+        [
+            _lloyd(X[:, j * dsub : (j + 1) * dsub], k_codes, seed + 101 * j)
+            for j in range(m)
+        ]
+    )
+
+
+def encode(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, m) int64 codes: the nearest codeword per subspace, lowest code
+    on a tie (``np.argmin`` takes the first minimum)."""
+    codes = np.empty((len(X), len(codebooks)), dtype=np.int64)
+    for j in range(len(codebooks)):
+        codes[:, j] = subspace_dists(X, codebooks, j).argmin(axis=1)
+    return codes
+
+
+def decode(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, d) reconstruction of (n, m) codes: the concatenated codewords."""
+    return np.concatenate(
+        [codebooks[j][codes[:, j]] for j in range(len(codebooks))], axis=1
+    )
+
+
+def adc_table(Q: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """The ADC lookup table: LUT[q, j, c] = ‖Q[q]_j − codebooks[j][c]‖²,
+    shape (nq, m, k_codes), exact doubles."""
+    return np.stack(
+        [subspace_dists(Q, codebooks, j) for j in range(len(codebooks))],
+        axis=1,
+    )
+
+
+def adc_topk(
+    Q: np.ndarray,
+    codebooks: np.ndarray,
+    C: np.ndarray,
+    qids: np.ndarray,
+    mids: np.ndarray,
+    k: int,
+    decimals: int = 6,
+):
+    """Yield (qid, mid, adc_dist) frames: each query's first ``k`` coded
+    members under the (distance, mid) order, self pairs dropped.
+
+    ``Q`` holds the query side in the space the codes quantize (raw
+    vectors for PQ, residuals to the cell centroid for IVF-PQ); ``C`` the
+    (n, m) codes. Per row chunk of the shared kernel's budget: the ADC
+    table, the gather-and-sum dist[q, v] = Σ_j LUT[q, j, C[v, j]],
+    rounding HALF-UP like Spark's ``F.round``, and the kernel's top-k
+    cut (``similarity/kernel.py``; distances must stay < 2^31 units of
+    1e-``decimals``, a loud guard)."""
+    for sl in row_blocks(len(Q), len(C)):
+        lut = adc_table(Q[sl], codebooks)
+        dist = np.zeros((len(lut), len(C)))
+        for j in range(len(codebooks)):
+            dist += lut[:, j, C[:, j]]
+        dist = _np_round_half_up(dist, decimals)
+        qi, mi = topk_cut(dist, qids[sl], mids, k, decimals)
+        yield pd.DataFrame(
+            {"qid": qids[sl][qi], "mid": mids[mi], "adc_dist": dist[qi, mi]}
+        )
+
+
+def rerank_l2(
+    shortlist: DataFrame,
+    queries_pd: pd.DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "e",
+) -> DataFrame:
+    """Exact L2 rerank of an ADC shortlist: only the shortlisted (qid,
+    mid) candidates' float vectors are read, joined against the bounded
+    query set, and ranked by the exact squared distance rounded to 6
+    decimals. Returns (qid, mid, l2_dist, rank), ascending distance,
+    (dist, mid) tie-break."""
+    cand = shortlist.select("qid", "mid").join(
+        corpus.select(F.col(id_col).alias("mid"), F.col(vec_col).alias("me")),
+        "mid",
+    )
+    qdf = local_table(
+        corpus.sparkSession,
+        [
+            (int(q), [float(x) for x in v])
+            for q, v in zip(queries_pd[id_col], queries_pd[vec_col])
+        ],
+        "qid long, qe array<double>",
+    )
+    dist = F.round(
+        F.aggregate(
+            F.zip_with(F.col("qe"), F.col("me"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
+    scored = cand.join(F.broadcast(qdf), "qid").select(
+        "qid", "mid", dist.alias("l2_dist")
+    )
+    return _rank_topk(scored, "l2_dist", k)
 
 
 class PQIndex:
@@ -67,43 +202,16 @@ class PQIndex:
         n_rows: int | None = None,
     ) -> "PQIndex":
         """Train m per-subspace codebooks on a bounded deterministic
-        sample, then encode the FULL corpus (one distributed pass).
-
-        The sample predicate is a pure function of the id
-        (``pmod(xxhash64(id), 1e6)``) so refits reproduce on any
-        partitioning; the sample is collected SORTED by id so the
-        k-means result is partition-order independent."""
-        target = self.k_codes * (train_per_code or 256)
-        # n_rows: caller-supplied corpus count (saves a redundant count
-        # job when the caller already ran one)
-        n = corpus.count() if n_rows is None else n_rows
-        train = corpus
-        if train_per_code is not None and n > target:
-            frac_ppm = int(target * 1_000_000 / n)
-            train = corpus.filter(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000)) < frac_ppm
-            )
-        sample_pd = (
-            train.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_e"))
-            .orderBy("_id")
-            .limit(target * 4)
-            .toPandas()
+        sample (``ivf.training_sample``: a pure function of the id,
+        collected sorted by id, so refits reproduce on any partitioning),
+        then encode the FULL corpus (one distributed pass). ``n_rows``:
+        the corpus count when the caller already has it (saves a count
+        job)."""
+        X, _ = training_sample(
+            corpus, id_col, vec_col, self.k_codes * (train_per_code or 256),
+            n_rows=n_rows, sample=train_per_code is not None,
         )
-        X = np.stack(sample_pd["_e"].to_numpy()).astype(np.float64)
-        d = X.shape[1]
-        if d % self.m:
-            raise ValueError(f"dim {d} not divisible by m={self.m}")
-        dsub = d // self.m
-        self.codebooks = np.stack(
-            [
-                _lloyd(
-                    X[:, j * dsub : (j + 1) * dsub],
-                    self.k_codes,
-                    self.seed + 101 * j,
-                )
-                for j in range(self.m)
-            ]
-        )  # (m, k_codes, dsub)
+        self.codebooks = train_codebooks(X, self.m, self.k_codes, self.seed)
         self.codes = self.encode(corpus, id_col, vec_col)
         return self
 
@@ -111,41 +219,30 @@ class PQIndex:
     def encode(
         self, vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "e"
     ) -> DataFrame:
-        """(mid, codes array<int>) — nearest per-subspace centroid, plain
-        squared distance with lowest-code tie-break (np.argmin). One
-        vectorized ``mapInPandas`` pass; codebooks broadcast via closure
+        """(mid, codes array<int>) through ``encode``: one vectorized
+        ``mapInPandas`` pass; codebooks broadcast via closure
         (m·k_codes·dsub doubles — KBs)."""
         assert self.codebooks is not None, "fit or load first"
         cb = self.codebooks
-        m, dsub = cb.shape[0], cb.shape[2]
 
         def enc(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
                 X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = np.empty((len(X), m), dtype=np.int64)
-                for j in range(m):
-                    sub = X[:, j * dsub : (j + 1) * dsub]
-                    dists = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                    codes[:, j] = dists.argmin(axis=1)
                 yield pd.DataFrame(
-                    {"mid": pdf[id_col].to_numpy(), "codes": list(codes)}
+                    {"mid": pdf[id_col].to_numpy(), "codes": list(encode(X, cb))}
                 )
 
         return vectors.select(id_col, vec_col).mapInPandas(
             enc, "mid long, codes array<bigint>"
         )
 
-    # --------------------------------------------------------------- decode
     def decode_np(self, codes: np.ndarray) -> np.ndarray:
-        """Reconstruct (n, d) vectors from (n, m) codes — concatenated
-        per-subspace centroids. NumPy helper for certificates/tests."""
+        """Reconstruct (n, d) vectors from (n, m) codes. NumPy helper for
+        certificates/tests."""
         assert self.codebooks is not None
-        return np.concatenate(
-            [self.codebooks[j][codes[:, j]] for j in range(self.codebooks.shape[0])],
-            axis=1,
-        )
+        return decode(codes, self.codebooks)
 
     # --------------------------------------------------------------- search
     def search(
@@ -160,24 +257,13 @@ class PQIndex:
         adc_dist, rank), ascending distance, (dist, mid) tie-break.
 
         ``queries_pd`` is a BOUNDED pandas frame (the caller guards size,
-        as in the cosine vectorized path): its m×k_codes LUT tensor rides
-        the closure; the CODES table — not the float corpus — streams
-        through in batches. Distances round HALF-UP, like Spark's
-        ``F.round``, and each batch keeps its per-query top-k through the
-        shared kernel (``similarity/kernel.py``), self-pairs excluded."""
+        as in the cosine vectorized path) and rides the closure; the CODES
+        table — not the float corpus — streams through in batches, each
+        scored and cut by ``adc_topk``."""
         assert self.codes is not None, "fit first"
         cb = self.codebooks
-        m, kc, dsub = cb.shape
         q_ids = queries_pd[id_col].to_numpy()
         Q = np.stack(queries_pd[vec_col].to_numpy()).astype(np.float64)
-        # LUT[q, j, c] = ||q_sub_j − codebook[j][c]||², exact doubles
-        lut = np.stack(
-            [
-                ((Q[:, j * dsub : (j + 1) * dsub][:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                for j in range(m)
-            ],
-            axis=1,
-        )  # (nq, m, kc)
 
         def score(batches):
             for pdf in batches:
@@ -185,15 +271,7 @@ class PQIndex:
                     continue
                 C = np.stack(pdf["codes"].to_numpy())  # (nm, m)
                 mids = pdf["mid"].to_numpy()
-                # gather-and-sum: dist[q, v] = Σ_j LUT[q, j, C[v, j]]
-                dist = np.zeros((len(q_ids), len(C)))
-                for j in range(m):
-                    dist += lut[:, j, C[:, j]]
-                dist = _np_round_half_up(dist, round_decimals)
-                qi, mi = topk_cut(dist, q_ids, mids, k, round_decimals)
-                yield pd.DataFrame(
-                    {"qid": q_ids[qi], "mid": mids[mi], "adc_dist": dist[qi, mi]}
-                )
+                yield from adc_topk(Q, cb, C, q_ids, mids, k, round_decimals)
 
         pairs = self.codes.mapInPandas(
             score, "qid long, mid long, adc_dist double"
@@ -213,38 +291,10 @@ class PQIndex:
         memory-bound code scan retrieves ``shortlist`` candidates per
         query (approximate, cheap — no float vector touched), then ONLY
         those nq×shortlist candidates' float vectors are read for an
-        exact L2 rerank to top-k. Recall@k equals the shortlist's
-        containment rate (measured 0.92 at R=20 / 0.99 at R=50 with
-        m=16, k_codes=64 on the test corpus) while the full corpus is
-        only ever scanned as codes. Returns (qid, mid, l2_dist, rank),
-        ascending exact distance, (dist, mid) tie-break."""
-        spark = corpus.sparkSession
-        short = self.search(
-            queries_pd, k=shortlist, id_col=id_col, vec_col=vec_col
-        ).select("qid", "mid")
-        cand = short.join(
-            corpus.select(
-                F.col(id_col).alias("mid"), F.col(vec_col).alias("me")
-            ),
-            "mid",
-        )
-        qdf = local_table(
-            spark,
-            [
-                (int(q), [float(x) for x in v])
-                for q, v in zip(queries_pd[id_col], queries_pd[vec_col])
-            ],
-            "qid long, qe array<double>",
-        )
-        dist = F.round(
-            F.aggregate(
-                F.zip_with(F.col("qe"), F.col("me"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        scored = cand.join(F.broadcast(qdf), "qid").select(
-            "qid", "mid", dist.alias("l2_dist")
-        )
-        return _rank_topk(scored, "l2_dist", k)
+        exact L2 rerank to top-k (``rerank_l2``). Recall@k equals the
+        shortlist's containment rate (measured 0.92 at R=20 / 0.99 at
+        R=50 with m=16, k_codes=64 on the test corpus) while the full
+        corpus is only ever scanned as codes. Returns (qid, mid, l2_dist,
+        rank), ascending exact distance, (dist, mid) tie-break."""
+        short = self.search(queries_pd, k=shortlist, id_col=id_col, vec_col=vec_col)
+        return rerank_l2(short, queries_pd, corpus, k, id_col, vec_col)

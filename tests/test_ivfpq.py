@@ -18,6 +18,7 @@ from data_integration_spark.similarity.persist import (
     save_ivfpq_index,
 )
 from data_integration_spark.sources.catalog import Catalog
+from tests.test_pq import CODEBOOK_TAMPERS, tamper_meta
 
 SF = "/root/testdata/sf0.001"
 
@@ -250,3 +251,34 @@ def test_search_rounds_half_up_like_search_all(spark):
     assert ranked(idx.search(q_pd, k=5, nprobe=1)) == want
     assert ranked(idx.search_all(q_df, k=5, nprobe=1)) == want
     assert ranked(pq.search(q_pd, k=5)) == want
+
+
+def _halve_dsub(meta):
+    """(16, kc, 2) codebooks against 64-dim centroids: encode would read
+    only the first 32 residual dims."""
+    meta["codebooks"] = [
+        [row[: len(row) // 2] for row in book] for book in meta["codebooks"]
+    ]
+
+
+@pytest.fixture(scope="module")
+def saved_index(index, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ivfpq_saved") / "index")
+    save_ivfpq_index(index, path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "tamper, match",
+    CODEBOOK_TAMPERS + [(_halve_dsub, "centroids have dim 64")],
+)
+def test_load_rejects_tampered_codebooks(spark, saved_index, tmp_path, tamper, match):
+    """A ``meta.json`` whose residual codebooks disagree with its declared
+    (m, k_codes) or with the centroid dim must fail to load."""
+    import shutil
+
+    path = str(tmp_path / "index")
+    shutil.copytree(saved_index, path)
+    tamper_meta(path, tamper)
+    with pytest.raises(ValueError, match=match):
+        load_ivfpq_index(spark, path)

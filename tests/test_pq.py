@@ -111,3 +111,50 @@ def test_pq_rejects_indivisible_dim(spark):
     )
     with pytest.raises(ValueError, match="not divisible"):
         PQIndex(m=2, k_codes=2, seed=1).fit(bad, train_per_code=None)
+
+
+def _flatten_books(meta):
+    meta["codebooks"] = [row for book in meta["codebooks"] for row in book]
+
+
+def _drop_book(meta):
+    meta["codebooks"] = meta["codebooks"][:-1]
+
+
+def _shrink_k_codes(meta):
+    meta["k_codes"] = len(meta["codebooks"][0]) - 1
+
+
+#: (edit of a saved ``meta.json``, the load error it must raise) — shared
+#: with the IVF-PQ loader test
+CODEBOOK_TAMPERS = [
+    (_flatten_books, "3-d"),
+    (_drop_book, "shape mismatch"),
+    (_shrink_k_codes, "shape mismatch"),
+]
+
+
+def tamper_meta(path: str, tamper) -> None:
+    import json
+
+    with open(f"{path}/meta.json") as f:
+        meta = json.load(f)
+    tamper(meta)
+    with open(f"{path}/meta.json", "w") as f:
+        json.dump(meta, f)
+
+
+@pytest.mark.parametrize("tamper, match", CODEBOOK_TAMPERS)
+def test_pq_load_rejects_tampered_codebooks(spark, index, tmp_path, tamper, match):
+    """A ``meta.json`` whose codebooks disagree with its declared (m,
+    k_codes) must fail to load, not encode with a wrong subspace split."""
+    from data_integration_spark.similarity.persist import (
+        load_pq_index,
+        save_pq_index,
+    )
+
+    path = str(tmp_path / "pq")
+    save_pq_index(index, path)
+    tamper_meta(path, tamper)
+    with pytest.raises(ValueError, match=match):
+        load_pq_index(spark, path)

@@ -5,8 +5,9 @@ Pins that chunked cosine blocks equal one unchunked block in both
 evaluation orders, that the int64-key top-k cut equals a per-row
 ``np.lexsort`` reference (planted ties, self pairs, ids of any int64
 value), that threshold pairs equal a brute-force reference, that zero
-norms and out-of-range scores raise, and that no other module in
-``similarity/`` keeps its own cut or cosine GEMM."""
+norms and out-of-range scores raise, that no other module in
+``similarity/`` keeps its own cut or cosine GEMM, and that the PQ
+codec's ADC table and L2 rerank are written once."""
 
 from __future__ import annotations
 
@@ -180,10 +181,30 @@ def _strip(node):
     return node
 
 
-def _kernel_copies(tree) -> list[int]:
-    """Line numbers of a top-k partition or a cosine normalize-and-GEMM:
-    a matmul over rows divided by their norms (inline, or through a name
-    bound to such a division), or a matmul divided by norms."""
+def _is_sq_diff(node) -> bool:
+    """``(x - y) ** 2`` or ``(x - y) * (x - y)``."""
+    if not (isinstance(node, ast.BinOp) and isinstance(node.left, ast.BinOp)):
+        return False
+    if not isinstance(node.left.op, ast.Sub):
+        return False
+    if isinstance(node.op, ast.Pow):
+        return isinstance(node.right, ast.Constant) and node.right.value == 2
+    return isinstance(node.op, ast.Mult) and ast.dump(node.left) == ast.dump(
+        node.right
+    )
+
+
+def _kernel_copies(tree) -> dict[str, list[int]]:
+    """Line numbers, by kind, of:
+
+    - ``cut``: a top-k partition;
+    - ``cosine``: a cosine normalize-and-GEMM — a matmul over rows
+      divided by their norms (inline, or through a name bound to such a
+      division), or a matmul divided by norms;
+    - ``adc_table``: a squared-difference sum in NumPy, the per-subspace
+      table ``((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)``;
+    - ``l2_rerank``: a ``zip_with`` over squared differences, the exact
+      L2 rerank expression."""
     normalized = {
         t.id
         for n in ast.walk(tree)
@@ -203,13 +224,13 @@ def _kernel_copies(tree) -> list[int]:
             and _mentions_norm(node.right)
         )
 
-    hits = []
+    hits = {"cut": [], "cosine": [], "adc_table": [], "l2_rerank": []}
     for n in ast.walk(tree):
         if isinstance(n, ast.Attribute) and n.attr == "argpartition":
-            hits.append(n.lineno)
+            hits["cut"].append(n.lineno)
         elif isinstance(n, ast.BinOp) and isinstance(n.op, ast.MatMult):
             if is_unit(n.left) or is_unit(n.right):
-                hits.append(n.lineno)
+                hits["cosine"].append(n.lineno)
         elif (
             isinstance(n, ast.BinOp)
             and isinstance(n.op, ast.Div)
@@ -217,18 +238,36 @@ def _kernel_copies(tree) -> list[int]:
             and isinstance(n.left.op, ast.MatMult)
             and _mentions_norm(n.right)
         ):
-            hits.append(n.lineno)
-    return hits
+            hits["cosine"].append(n.lineno)
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+            if n.func.attr == "sum" and _is_sq_diff(n.func.value):
+                hits["adc_table"].append(n.lineno)
+            elif n.func.attr == "zip_with" and any(
+                isinstance(arg, ast.Lambda) and _is_sq_diff(arg.body)
+                for arg in n.args
+            ):
+                hits["l2_rerank"].append(n.lineno)
+    return {kind: lines for kind, lines in hits.items() if lines}
 
 
 def test_cut_and_cosine_gemm_only_in_the_kernel():
     """Within ``similarity/``, ``np.argpartition`` and the cosine
-    normalize-and-GEMM appear only in ``kernel.py``."""
+    normalize-and-GEMM appear only in ``kernel.py``; the per-subspace
+    squared-distance table and the ``zip_with`` L2 rerank expression
+    appear exactly once each, in the PQ codec (``pq.py``)."""
     found = {}
     for f in sorted(os.listdir(SIM)):
         if f.endswith(".py"):
             with open(os.path.join(SIM, f), encoding="utf-8") as fh:
-                hits = _kernel_copies(ast.parse(fh.read()))
-            if hits:
-                found[f] = hits
-    assert list(found) == ["kernel.py"], found
+                for kind, lines in _kernel_copies(ast.parse(fh.read())).items():
+                    found.setdefault(kind, {})[f] = lines
+    kernel_only = {
+        f for kind in ("cut", "cosine") for f in found.get(kind, {})
+    }
+    assert kernel_only == {"kernel.py"}, found
+    for kind in ("adc_table", "l2_rerank"):
+        sites = found.get(kind, {})
+        assert list(sites) == ["pq.py"] and len(sites["pq.py"]) == 1, (
+            kind,
+            sites,
+        )
