@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 
 #: When a capture list is installed (see ``capture_truncated_subtrees``),
 #: every ``_truncate_lineage`` call appends its PRE-truncation DataFrame
-#: here. r16 (VERDICT r15 #2): checkpointed subtrees vanish from final
-#: query plans, so the registry-wide plan lints (CartesianProduct /
-#: unbounded-window walkers) were blind inside them — the lints now run
-#: inside this capture and walk each subtree plan too.
+#: here. Checkpointed subtrees vanish from final query plans, so the
+#: registry-wide plan lints (CartesianProduct / unbounded-window walkers)
+#: would be blind inside them; the lints run inside this capture and
+#: walk each subtree plan too.
 _SUBTREE_CAPTURE: list[DataFrame] | None = None
 
 

@@ -19,14 +19,19 @@ import json
 import os
 import shutil
 
+import pytest
+
 from data_integration_spark.streaming.sinks import counter_merge_batch
 
-_DIR = "/root/repo/.scratch/test_counter_merge"
+
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("test_counter_merge"))
 
 
-def _table(spark):
-    shutil.rmtree(_DIR, ignore_errors=True)
-    return os.path.join(_DIR, "t")
+def _table(scratch):
+    shutil.rmtree(scratch, ignore_errors=True)
+    return os.path.join(scratch, "t")
 
 
 def _rows(spark, pairs):
@@ -40,8 +45,8 @@ def _read(spark, path):
     }
 
 
-def test_additivity_and_new_key_survival(spark):
-    t = _table(spark)
+def test_additivity_and_new_key_survival(spark, scratch):
+    t = _table(scratch)
     keys = ["host", "canon"]
     assert counter_merge_batch(
         spark, _rows(spark, [("a", "u1"), ("a", "u1"), ("a", "u2")]),
@@ -56,8 +61,8 @@ def test_additivity_and_new_key_survival(spark):
         assert json.load(fh)["applied"] == [0, 1]
 
 
-def test_redelivered_batch_is_a_noop(spark):
-    t = _table(spark)
+def test_redelivered_batch_is_a_noop(spark, scratch):
+    t = _table(scratch)
     keys = ["host", "canon"]
     b = _rows(spark, [("a", "u1"), ("a", "u1")])
     assert counter_merge_batch(spark, b, 0, t, keys)
@@ -70,11 +75,11 @@ def test_redelivered_batch_is_a_noop(spark):
     assert _read(spark, t) == {("a", "u1"): 4}
 
 
-def test_ledger_ignored_by_parquet_reader(spark):
+def test_ledger_ignored_by_parquet_reader(spark, scratch):
     """The underscore-prefixed ledger file must be invisible to
     spark.read.parquet — otherwise every downstream read of the
     maintained table would fail on a non-parquet file."""
-    t = _table(spark)
+    t = _table(scratch)
     counter_merge_batch(spark, _rows(spark, [("a", "u1")]), 0, t, ["host", "canon"])
     assert os.path.exists(os.path.join(t, "_last_batch.json"))
     assert spark.read.parquet(t).count() == 1

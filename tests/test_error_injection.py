@@ -11,22 +11,26 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-SCRATCH = "/root/repo/.scratch/errinj"
+
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("errinj"))
 
 
-def _fresh(name: str) -> str:
-    p = f"{SCRATCH}/{name}"
+def _fresh(scratch: str, name: str) -> str:
+    p = f"{scratch}/{name}"
     shutil.rmtree(p, ignore_errors=True)
     return p
 
 
-def test_malformed_csv_permissive_quarantine(spark):
+def test_malformed_csv_permissive_quarantine(spark, scratch):
     """PERMISSIVE + columnNameOfCorruptRecord: damaged rows land in a
     quarantine column instead of poisoning the load."""
-    p = _fresh("csv")
+    p = _fresh(scratch, "csv")
     os.makedirs(p)
     with open(f"{p}/part.csv", "w") as f:
         f.write("a,b\n1,2\n3,4\nnot_an_int,5\n6,7\n")
@@ -44,8 +48,8 @@ def test_malformed_csv_permissive_quarantine(spark):
     assert "not_an_int" in bad.collect()[0]["_corrupt"]
 
 
-def test_malformed_csv_dropmalformed(spark):
-    p = _fresh("csv_drop")
+def test_malformed_csv_dropmalformed(spark, scratch):
+    p = _fresh(scratch, "csv_drop")
     os.makedirs(p)
     with open(f"{p}/part.csv", "w") as f:
         f.write("a,b\n1,2\nbroken_row_only_one_field\n3,4\n")
@@ -58,8 +62,8 @@ def test_malformed_csv_dropmalformed(spark):
     assert sorted((r.a, r.b) for r in df.collect()) == [(1, 2), (3, 4)]
 
 
-def test_malformed_jsonl_permissive(spark):
-    p = _fresh("jsonl")
+def test_malformed_jsonl_permissive(spark, scratch):
+    p = _fresh(scratch, "jsonl")
     os.makedirs(p)
     with open(f"{p}/part.json", "w") as f:
         f.write('{"k": 1}\nTHIS IS NOT JSON\n{"k": 3}\n')
@@ -74,11 +78,11 @@ def test_malformed_jsonl_permissive(spark):
     assert sum(1 for r in rows if r._corrupt is not None) == 1
 
 
-def test_corrupt_parquet_file_skipped_by_policy(spark):
+def test_corrupt_parquet_file_skipped_by_policy(spark, scratch):
     """A garbage file inside a parquet directory: default read FAILS
     (loud), ignoreCorruptFiles=true reads the healthy files (explicit
     policy) — both behaviors pinned."""
-    p = _fresh("pq")
+    p = _fresh(scratch, "pq")
     spark.createDataFrame([Row(x=i) for i in range(10)]).coalesce(1).write.mode(
         "overwrite"
     ).parquet(p)

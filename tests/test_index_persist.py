@@ -27,7 +27,11 @@ from data_integration_spark.similarity.persist import (
 from data_integration_spark.sources.catalog import Catalog
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/test_index_persist"
+
+
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("test_index_persist"))
 
 
 @pytest.fixture(scope="module")
@@ -43,18 +47,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_ivf_loaded_search_equals_fit_search(spark, emb):
-    shutil.rmtree(SCRATCH + "/ivf", ignore_errors=True)
+def test_ivf_loaded_search_equals_fit_search(spark, emb, scratch):
+    shutil.rmtree(scratch + "/ivf", ignore_errors=True)
     index = IVFIndex(n_cells=6, seed=11).fit(emb)
     queries = emb.filter(F.col("vec_id") < 12)
     direct = _rows(index.search(queries, k=4, nprobe=2))
-    save_ivf_index(index, SCRATCH + "/ivf")
-    loaded = load_ivf_index(spark, SCRATCH + "/ivf")
+    save_ivf_index(index, scratch + "/ivf")
+    loaded = load_ivf_index(spark, scratch + "/ivf")
     assert _rows(loaded.search(queries, k=4, nprobe=2)) == direct
     assert (loaded.n_cells, loaded.seed) == (6, 11)
 
 
-def test_ivf_loaded_search_prunes_cell_partitions(spark, emb):
+def test_ivf_loaded_search_prunes_cell_partitions(spark, emb, scratch):
     """r9: the persisted inverted lists are partitionBy("cell") parquet,
     and a loaded-index search must hit them through DYNAMIC PARTITION
     PRUNING (the probed-cells side broadcasts, the scan's
@@ -64,7 +68,7 @@ def test_ivf_loaded_search_prunes_cell_partitions(spark, emb):
 
     # always rebuild: a stale pre-r9 artifact (written without
     # partitionBy) loads fine but has no cell= directories to prune
-    path = SCRATCH + "/ivf_dpp"
+    path = scratch + "/ivf_dpp"
     shutil.rmtree(path, ignore_errors=True)
     save_ivf_index(IVFIndex(n_cells=6, seed=11).fit(emb), path)
     loaded = load_ivf_index(spark, path)
@@ -76,9 +80,9 @@ def test_ivf_loaded_search_prunes_cell_partitions(spark, emb):
     )
 
 
-def test_ivf_save_requires_fit(spark):
+def test_ivf_save_requires_fit(spark, scratch):
     with pytest.raises(ValueError, match="fit"):
-        save_ivf_index(IVFIndex(n_cells=4), SCRATCH + "/ivf_unfit")
+        save_ivf_index(IVFIndex(n_cells=4), scratch + "/ivf_unfit")
 
 
 def test_ivf_pinned_centroid_assignment_matches_numpy(spark, emb):
@@ -115,7 +119,7 @@ def test_ivf_pinned_centroid_assignment_matches_numpy(spark, emb):
     assert got == want
 
 
-def test_pre_partitioned_layout_artifacts_refused(spark, emb):
+def test_pre_partitioned_layout_artifacts_refused(spark, emb, scratch):
     """A pre-r9 artifact (no layout marker in meta.json) must FAIL to
     load, not silently search without partition pruning — the loader
     checks the on-disk-layout contract the search path is built
@@ -123,7 +127,7 @@ def test_pre_partitioned_layout_artifacts_refused(spark, emb):
     import json
     import os
 
-    path = SCRATCH + "/ivf_stale"
+    path = scratch + "/ivf_stale"
     shutil.rmtree(path, ignore_errors=True)
     save_ivf_index(IVFIndex(n_cells=6, seed=11).fit(emb), path)
     meta_path = os.path.join(path, "meta.json")
@@ -136,11 +140,11 @@ def test_pre_partitioned_layout_artifacts_refused(spark, emb):
         load_ivf_index(spark, path)
 
 
-def test_lsh_spec_roundtrip_and_search_equivalence(spark, emb):
-    shutil.rmtree(SCRATCH + "/lsh", ignore_errors=True)
+def test_lsh_spec_roundtrip_and_search_equivalence(spark, emb, scratch):
+    shutil.rmtree(scratch + "/lsh", ignore_errors=True)
     spec = build_lsh_spec(dim=64, n_planes=6, n_tables=3, seed=7)
-    save_lsh_spec(spec, SCRATCH + "/lsh")
-    loaded = load_lsh_spec(SCRATCH + "/lsh")
+    save_lsh_spec(spec, scratch + "/lsh")
+    loaded = load_lsh_spec(scratch + "/lsh")
     assert loaded == spec  # JSON round-trip keeps float coefficients exact
     queries = emb.filter(F.col("vec_id") < 12)
     seed_derived = lsh_topk(
@@ -158,13 +162,13 @@ def test_lsh_spec_roundtrip_and_search_equivalence(spark, emb):
     assert _rows(from_spec) == _rows(seed_derived)
 
 
-def test_lsh_spec_shape_validation(spark):
-    shutil.rmtree(SCRATCH + "/lsh_bad", ignore_errors=True)
+def test_lsh_spec_shape_validation(spark, scratch):
+    shutil.rmtree(scratch + "/lsh_bad", ignore_errors=True)
     spec = build_lsh_spec(dim=8, n_planes=4, n_tables=2, seed=1)
     spec["tables"][0] = spec["tables"][0][:-1]  # drop a plane
-    save_lsh_spec(spec, SCRATCH + "/lsh_bad")
+    save_lsh_spec(spec, scratch + "/lsh_bad")
     with pytest.raises(ValueError, match="shape mismatch"):
-        load_lsh_spec(SCRATCH + "/lsh_bad")
+        load_lsh_spec(scratch + "/lsh_bad")
 
 
 def test_ivf_append_matches_quantizer_assignment(spark, emb):
@@ -300,7 +304,7 @@ def test_minhash_cross_pairs_same_id_both_sides_not_merged(spark):
     assert all(r.jaccard >= 0.5 for r in pairs)
 
 
-def test_minhash_bucket_persist_roundtrip(spark):
+def test_minhash_bucket_persist_roundtrip(spark, scratch):
     """Loaded release index == recomputed: identical buckets, and the
     cross-corpus pairs from the LOADED artifact equal the direct call."""
     import os
@@ -320,7 +324,7 @@ def test_minhash_bucket_persist_roundtrip(spark):
     docs = Catalog(spark, SF)["documents"].select("doc_id", "text")
     old = docs.filter(F.col("doc_id") % 5 != 4)
     new = docs.filter(F.col("doc_id") % 5 == 4)
-    path = os.path.join(SCRATCH, "mh_idx")
+    path = os.path.join(scratch, "mh_idx")
     shutil.rmtree(path, ignore_errors=True)
     recomputed = band_buckets(
         minhash_signatures(old, "doc_id", "text", params["n_gram"],
@@ -345,7 +349,7 @@ def test_minhash_bucket_persist_roundtrip(spark):
     assert _rows(from_artifact) == _rows(direct)
 
 
-def test_minhash_bucket_persist_param_mismatch_raises(spark):
+def test_minhash_bucket_persist_param_mismatch_raises(spark, scratch):
     """An artifact banded under different params can never collide with
     the caller's signatures — load must fail loudly, not match nothing."""
     import os
@@ -363,7 +367,7 @@ def test_minhash_bucket_persist_param_mismatch_raises(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "c d e f")], "doc_id long, text string"
     )
-    path = os.path.join(SCRATCH, "mh_idx_small")
+    path = os.path.join(scratch, "mh_idx_small")
     shutil.rmtree(path, ignore_errors=True)
     save_minhash_index(
         band_buckets(
@@ -505,7 +509,7 @@ def _winnow_docs(spark):
     return Catalog(spark, SF)["documents"].select("doc_id", "text")
 
 
-def test_winnowing_registry_roundtrip_fingerprints(spark):
+def test_winnowing_registry_roundtrip_fingerprints(spark, scratch):
     """Loaded fingerprints == recomputed; loaded df == recomputed per-hash
     document frequency."""
     from data_integration_spark.queries.corpus_ops import winnow_fingerprints
@@ -514,12 +518,12 @@ def test_winnowing_registry_roundtrip_fingerprints(spark):
         save_winnowing_registry,
     )
 
-    shutil.rmtree(SCRATCH + "/winnow_rt", ignore_errors=True)
+    shutil.rmtree(scratch + "/winnow_rt", ignore_errors=True)
     docs = _winnow_docs(spark).filter(F.col("doc_id") >= 60)
     fp = winnow_fingerprints(docs, k=4, w=4)
-    save_winnowing_registry(fp, SCRATCH + "/winnow_rt", k=4, w=4)
+    save_winnowing_registry(fp, scratch + "/winnow_rt", k=4, w=4)
     loaded_fp, loaded_df = load_winnowing_registry(
-        spark, SCRATCH + "/winnow_rt", k=4, w=4
+        spark, scratch + "/winnow_rt", k=4, w=4
     )
     assert _rows(loaded_fp) == _rows(fp)
     direct_df = fp.groupBy("h").agg(F.count("*").cast("long").alias("df"))
@@ -539,7 +543,7 @@ def test_winnowing_registry_pairs_equal_inline_form(spark):
     assert len(registry) > 0  # the corpus plants near-dups; empty = broken
 
 
-def test_winnowing_registry_append_grows_without_rewriting(spark):
+def test_winnowing_registry_append_grows_without_rewriting(spark, scratch):
     """Append adds a batch's fingerprints + df partials; a later dedup
     sees old+batch1 as the registry side. df partials merge at load."""
     from data_integration_spark.queries.corpus_ops import winnow_fingerprints
@@ -549,16 +553,16 @@ def test_winnowing_registry_append_grows_without_rewriting(spark):
         save_winnowing_registry,
     )
 
-    shutil.rmtree(SCRATCH + "/winnow_app", ignore_errors=True)
+    shutil.rmtree(scratch + "/winnow_app", ignore_errors=True)
     docs = _winnow_docs(spark)
     base = winnow_fingerprints(docs.filter(F.col("doc_id") >= 80), k=4, w=4)
     batch1 = winnow_fingerprints(
         docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 80)), k=4, w=4
     )
-    save_winnowing_registry(base, SCRATCH + "/winnow_app", k=4, w=4)
-    append_winnowing_registry(batch1, SCRATCH + "/winnow_app", k=4, w=4)
+    save_winnowing_registry(base, scratch + "/winnow_app", k=4, w=4)
+    append_winnowing_registry(batch1, scratch + "/winnow_app", k=4, w=4)
     loaded_fp, loaded_df = load_winnowing_registry(
-        spark, SCRATCH + "/winnow_app", k=4, w=4
+        spark, scratch + "/winnow_app", k=4, w=4
     )
     combined = winnow_fingerprints(docs.filter(F.col("doc_id") >= 60), k=4, w=4)
     assert _rows(loaded_fp) == _rows(combined)
@@ -569,7 +573,7 @@ def test_winnowing_registry_append_grows_without_rewriting(spark):
     assert _rows(loaded_df) == _rows(direct_df)
 
 
-def test_winnowing_registry_param_mismatch_raises(spark):
+def test_winnowing_registry_param_mismatch_raises(spark, scratch):
     from data_integration_spark.queries.corpus_ops import winnow_fingerprints
     from data_integration_spark.similarity.persist import (
         append_winnowing_registry,
@@ -577,17 +581,17 @@ def test_winnowing_registry_param_mismatch_raises(spark):
         save_winnowing_registry,
     )
 
-    shutil.rmtree(SCRATCH + "/winnow_pm", ignore_errors=True)
+    shutil.rmtree(scratch + "/winnow_pm", ignore_errors=True)
     docs = _winnow_docs(spark).filter(F.col("doc_id") >= 90)
     fp = winnow_fingerprints(docs, k=4, w=4)
-    save_winnowing_registry(fp, SCRATCH + "/winnow_pm", k=4, w=4)
+    save_winnowing_registry(fp, scratch + "/winnow_pm", k=4, w=4)
     with pytest.raises(ValueError, match="param mismatch"):
-        load_winnowing_registry(spark, SCRATCH + "/winnow_pm", k=5, w=4)
+        load_winnowing_registry(spark, scratch + "/winnow_pm", k=5, w=4)
     with pytest.raises(ValueError, match="param mismatch"):
-        append_winnowing_registry(fp, SCRATCH + "/winnow_pm", k=4, w=5)
+        append_winnowing_registry(fp, scratch + "/winnow_pm", k=4, w=5)
 
 
-def test_winnowing_registry_compaction_preserves_loads(spark):
+def test_winnowing_registry_compaction_preserves_loads(spark, scratch):
     """compact_winnowing_registry rewrites the df partials into one
     aggregated table: loads before/after are value-identical, and the
     partial part-file count shrinks (merge-on-read tail paid down)."""
@@ -601,7 +605,7 @@ def test_winnowing_registry_compaction_preserves_loads(spark):
         save_winnowing_registry,
     )
 
-    path = SCRATCH + "/winnow_compact"
+    path = scratch + "/winnow_compact"
     shutil.rmtree(path, ignore_errors=True)
     docs = _winnow_docs(spark)
     save_winnowing_registry(

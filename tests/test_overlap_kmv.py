@@ -84,12 +84,11 @@ def test_kmv_engine_merge_fallback_matches_coordinator(spark, monkeypatch):
             assert rf[c] == rs[c], (key, c, rf[c], rs[c])
 
 
-def test_kmv_small_sets_are_exact(spark):
+def test_kmv_small_sets_are_exact(spark, tmp_path):
     """Two tiny sources (far below K=256 distinct bigrams): the sketch
     holds the whole set, so the 'estimates' must be exactly the true
     distinct counts and the true Jaccard."""
     from data_integration_spark.queries.corpus_ops import q_overlap_kmv
-    import os
     import shutil
 
     rows = [
@@ -98,8 +97,7 @@ def test_kmv_small_sets_are_exact(spark):
         (2, "alpha beta gamma delta", "en", "sB", 22),
         (3, "eta theta iota kappa", "en", "sB", 20),
     ]
-    tmp = f"/root/repo/.scratch/kmv_tiny_{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = str(tmp_path)
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")

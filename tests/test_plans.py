@@ -3,8 +3,6 @@ on must be visible in the plans Catalyst produces (SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
-import pytest
-
 from data_integration_spark.plans.explain import (
     count_shuffles,
     formatted_plan,
@@ -341,172 +339,11 @@ def test_cosine_pairs_corpus_never_shuffles(spark):
     assert count_shuffles(df) == 0, formatted_plan(df)
 
 
-#: Queries ALLOWED to plan a BroadcastNestedLoopJoin — each has a bounded
-#: build side by construction (1-row scalar aggregates, a 4-row static
-#: bucket table, broadcast k-means centroids, an explicit doc_id<15 pair
-#: bound). Anything else planning a BNLJ/Cartesian is a scale bug.
-_BNLJ_ALLOWED = {
-    "q_ann_ivf",      # broadcast centroids × corpus (k×N by design)
-    "q_ann_ivf_persist",  # same probe shape, centroids loaded from parquet
-    "q_ann_ivf_append",   # broadcast centroids × new batch (assign) + probe
-    "q_ann_ivfpq",    # broadcast coarse centroids × corpus (assign, k×N)
-    "q_hard_negatives",  # bounded query block × corpus (vectorized ANN shape)
-    "q_bm25",         # 1-row avgdl scalar cross
-    "q_ks_test",      # 1-row (n_a, n_b) totals aggregate cross (r6)
-    "q_levenshtein",  # all-pairs on an explicit doc_id<15 bound
-    "q_range_join",   # 4-row static interval table
-    "q_tpch_q11",     # 1-row threshold aggregate cross
-    "q_tpch_q20",     # 1-row half-avg aggregate cross
-    "q_tpch_q22",     # 1-row avg-acctbal scalar cross
-    "q_anova",        # 1-row grand-mean/SSB/SSW scalar crosses
-    "q_triangle_count",  # 1-row census × 1-row triangle-count cross
-    "q_ann_recall_certificate",  # 1-row truth-agg × 1-row hit-agg cross
-    "q_gini",         # 1-row (n, total) scalar cross onto the rank frame
-    "q_association_rules",  # 1-row order-count scalar cross
-    "q_dau_wau",      # 1-row max-day bounds scalar cross
-    "q_welch_ttest",  # 1-row-per-group scalar cross (n/mean/var algebra)
-    "q_theil_sen",    # calendar-bounded daily frame: pairwise-slope
-                      # inequality self-join + 1-row median crosses
-    "q_target_encoding",  # 1-row global-prior scalar cross
-    "q_zorder_pruning",   # 1-row files-touched scalar crosses
-    "q_mutual_information",  # bounded (<=40-row) local contingency frames
-    "q_ndcg",             # 1-row DCG x ideal-curve x grade-count crosses
-    "q_deletion_cascade", # 1-row cascade-count scalar crosses
-    "q_mrl_truncation_recall",  # bounded 20-query block x corpus scoring
-                                # (the guarded cosine_topk brute path x2)
-    "q_semantic_threshold_sweep",  # bounded 100-probe block x corpus
-    "q_quality_nb_filter",  # 1-row vocab-totals + 1-row prior scalar crosses
-    # bounded 200-vector slice brute cosine pair stage (qid != mid
-    # broadcast) feeding components — surfaced by the r16 subtree capture
-    # (it was visible pre-r15 too, before the edge list was checkpointed)
-    "q_semantic_dedup_clusters",
-    "q_overlap_kmv",  # |sources|² pairing joins on a 20-row source list
-    "q_survey_covmat",  # |domains|² matrix assembly + 1-row n cross
-    # inherits the NB filter's two scalar crosses + a 7-row literal
-    # threshold-grid cross (the sweep frame is bounded by construction)
-    "q_quality_calibration",
-}
-
-
-#: Building these executes a full file-replay streaming job (scratch-dir
-#: side effects, minutes of wall time) just to return the sink DataFrame —
-#: excluded from plan-ONLY linting; their plan/runtime behavior is covered
-#: by the streaming tests and their batch siblings (ADVICE r4).
-_PLAN_LINT_EXCLUDED = {
-    "q_streaming_tumbling",
-    "q_session_window",
-    "q_sliding_window",
-    "q_streaming_dedup",
-    "q_stream_stream_join",
-    "q_stream_static_join",
-    "q_stateful_stream",
-    "q_streaming_upsert",
-    "q_transform_with_state",
-    "q_streaming_minhash_dedup",
-    "q_streaming_index_append",
-    "q_streaming_pq_encode",
-    "q_streaming_late_drop",
-}
-
-
-#: Queries whose UNPARTITIONED windows run over frames that are bounded
-#: by the DOMAIN of a post-aggregation group key — provably small at any
-#: corpus scale, but not detectable by `unbounded_global_windows`'s
-#: automatic rule (which only proves boundedness from an explicit
-#: limit-shaped operator below the window). Each entry documents the
-#: bounding argument; anything NOT listed here that
-#: windows an unaggregated or corpus-keyed frame without partitionBy
-#: fails the registry plan lint.
-_GLOBAL_WINDOW_BOUNDED = {
-    # total-sum window over the 9-row leading-digit aggregate
-    "q_benford",
-    # row_number over the per-DAY event aggregate (calendar-granularity)
-    "q_changepoint",
-    # margin/total windows over the |event_type|×7 contingency cells
-    "q_chi_square",
-    # at-risk prefix window over DISTINCT event durations (the KM grid)
-    "q_kaplan_meier",
-    # lag window over the per-MONTH revenue aggregate
-    "q_mom_growth",
-    # centered moving average over the per-DAY revenue aggregate
-    "q_seasonal_decompose",
-    # total-sum window over the |sources|-row token-count aggregate
-    "q_temperature_mix",
-}
-
-
-def _lint_plans(spark, queries) -> tuple[dict[str, list[str]], dict[str, str]]:
-    """Build each ``(name, fn)`` once under ``capture_truncated_subtrees``
-    and run both registry plan lints on the final plan AND on every
-    checkpointed subtree's pre-truncation plan (a lineage cut hides its
-    input from the final plan):
-
-    - all-pairs join: a CartesianProduct anywhere, or a
-      BroadcastNestedLoopJoin outside ``_BNLJ_ALLOWED``, is an all-pairs
-      scale bug waiting for 100×;
-    - unbounded global window: an unpartitioned window over a frame that
-      is neither post-limit (TakeOrderedAndProject / GlobalLimit below
-      it) nor domain-bounded (``_GLOBAL_WINDOW_BOUNDED``) is a single-task
-      funnel at 100 TB.
-
-    Returns the failures per lint, plus the builders that errored: an
-    un-lintable plan must be a visible, deliberate decision, so callers
-    fail on those by name too."""
-    from data_integration_spark.dedup.components import (
-        capture_truncated_subtrees,
-    )
-    from data_integration_spark.plans.explain import unbounded_global_windows
-
-    failures: dict[str, list[str]] = {
-        "all-pairs join": [],
-        "unbounded global window": [],
-    }
-    errored: dict[str, str] = {}
-    for name, fn in queries:
-        if name in _PLAN_LINT_EXCLUDED:
-            continue
-        try:
-            with capture_truncated_subtrees() as subtrees:
-                dfs = [(name, fn(spark, SF))]
-            dfs += [
-                (f"{name} [subtree {i}]", sub) for i, sub in enumerate(subtrees)
-            ]
-            window_hits = []
-            for label, df in dfs:
-                plan = formatted_plan(df)
-                if "CartesianProduct" in plan:
-                    failures["all-pairs join"].append(
-                        f"{label}: CartesianProduct"
-                    )
-                elif "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWED:
-                    failures["all-pairs join"].append(
-                        f"{label}: BroadcastNestedLoopJoin not allowlisted"
-                    )
-                if name not in _GLOBAL_WINDOW_BOUNDED:
-                    window_hits += [
-                        (label, h) for h in unbounded_global_windows(df)
-                    ]
-        except Exception as exc:  # noqa: BLE001 — reported below, not swallowed
-            errored[name] = f"{type(exc).__name__}: {exc}"[:200]
-            continue
-        if window_hits:
-            label, hit = window_hits[0]
-            failures["unbounded global window"].append(f"{label}: {hit[:120]}")
-    return failures, errored
-
-
-@pytest.fixture(scope="module")
-def registry_plan_lints(spark):
-    """One ``_lint_plans`` walk over the whole registry, shared by the two
-    lint tests below so each query is built once."""
-    return _lint_plans(spark, sorted(QUERIES.items()))
-
-
-def _assert_lint_clean(registry_plan_lints, lint: str) -> None:
+def _assert_lint_clean(registry_walk, lint: str) -> None:
     """A query whose builder errors is NOT silently exempt — it fails by
     name. Offenders get fixed, not allowlisted, so the anti-patterns
     cannot come back."""
-    failures, errored = registry_plan_lints
+    _, failures, errored = registry_walk
     assert not failures[lint], failures[lint]
     assert not errored, (
         "query builders errored during the plan lints — fix them or add to "
@@ -514,24 +351,27 @@ def _assert_lint_clean(registry_plan_lints, lint: str) -> None:
     )
 
 
-def test_no_unexpected_nested_loop_joins(registry_plan_lints):
-    """Registry-wide all-pairs-join lint (see ``_lint_plans``)."""
-    _assert_lint_clean(registry_plan_lints, "all-pairs join")
+def test_no_unexpected_nested_loop_joins(registry_walk):
+    """Registry-wide all-pairs-join lint (see ``oracle_harness.lint_plans``)."""
+    _assert_lint_clean(registry_walk, "all-pairs join")
 
 
-def test_no_unbounded_global_windows(registry_plan_lints):
-    """Registry-wide unbounded-global-window lint (see ``_lint_plans``)."""
-    _assert_lint_clean(registry_plan_lints, "unbounded global window")
+def test_no_unbounded_global_windows(registry_walk):
+    """Registry-wide unbounded-global-window lint (see
+    ``oracle_harness.lint_plans``)."""
+    _assert_lint_clean(registry_walk, "unbounded global window")
 
 
 def test_plan_lints_flag_planted_violations(spark):
-    """The folded lint still fails on each planted anti-pattern: a
-    CartesianProduct hidden behind a lineage cut, and an unpartitioned
-    window over an unbounded frame."""
+    """The registry walk's lints still fail on each planted anti-pattern:
+    a CartesianProduct hidden behind a lineage cut, an unpartitioned
+    window over an unbounded frame, and an allowlisted query that plans
+    one BroadcastNestedLoopJoin more than its count."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from data_integration_spark.dedup.components import _truncate_lineage
+    from tests.oracle_harness import _BNLJ_ALLOWED, walk
 
     def hidden_cartesian(s, _sf):
         a = s.range(3).hint("shuffle_replicate_nl")
@@ -542,12 +382,14 @@ def test_plan_lints_flag_planted_violations(spark):
         rn = F.row_number().over(Window.orderBy("id"))
         return s.range(1000).withColumn("rn", rn)
 
-    failures, errored = _lint_plans(
+    _, failures, errored = walk(
         spark,
+        SF,
         [
             ("q_planted_cartesian", hidden_cartesian),
             ("q_planted_window", global_window),
         ],
+        None,
     )
     assert not errored, errored
     assert failures["all-pairs join"] == [
@@ -557,12 +399,30 @@ def test_plan_lints_flag_planted_violations(spark):
         "q_planted_window"
     ], failures
 
+    def bnlj(s):
+        bound = F.broadcast(s.range(3).withColumnRenamed("id", "k"))
+        return s.range(10).join(bound, F.col("id") < F.col("k"))
+
+    def one_bnlj_too_many(s, _sf):
+        # as many checkpointed BNLJ subtrees as allowed, plus the final plan
+        for _ in range(_BNLJ_ALLOWED["q_range_join"]):
+            _truncate_lineage(bnlj(s))
+        return bnlj(s)
+
+    _, failures, errored = walk(
+        spark, SF, [("q_range_join", one_bnlj_too_many)], None
+    )
+    assert not errored, errored
+    assert [f.split(":")[0] for f in failures["all-pairs join"]] == [
+        "q_range_join"
+    ], failures
+
 
 def test_lint_sees_through_checkpoint_boundaries(spark):
-    """The r16 capture mechanism's positive proof (VERDICT r15 #2): an
-    all-pairs join hidden behind a lineage cut is INVISIBLE in the final
-    plan (the r15 blind spot) but visible in the captured subtree plan —
-    exactly what the registry-wide lints now walk."""
+    """The subtree capture's positive proof: an all-pairs join hidden
+    behind a lineage cut is INVISIBLE in the final plan (a blind spot for
+    any lint that reads only final plans) but visible in the captured
+    subtree plan — exactly what the registry walk's lints read."""
     from data_integration_spark.dedup.components import (
         _truncate_lineage,
         capture_truncated_subtrees,

@@ -78,13 +78,15 @@ def test_pq_rerank_recall_vs_exact_l2(spark, emb):
     assert hits_a / total >= 0.3, f"adc recall {hits_a}/{total}"
 
 
-def test_pq_persist_roundtrip_reproduces_codes_and_search(spark, index, emb):
+def test_pq_persist_roundtrip_reproduces_codes_and_search(
+    spark, index, emb, tmp_path
+):
     from data_integration_spark.similarity.persist import (
         load_pq_index,
         save_pq_index,
     )
 
-    path = "/root/repo/.scratch/test_pq_index"
+    path = str(tmp_path / "test_pq_index")
     save_pq_index(index, path)
     loaded = load_pq_index(spark, path)
     np.testing.assert_array_equal(loaded.codebooks, index.codebooks)

@@ -14,17 +14,21 @@ from data_integration_spark.sources.catalog import load_table
 from data_integration_spark.streaming.stateful import running_user_stats
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/test_stateful"
 
 
-def test_running_stats_stateful(spark):
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("test_stateful"))
+
+
+def test_running_stats_stateful(spark, scratch):
     ev = (
         load_table(spark, SF, "events")
         .select("user_id", "ts", "value")
         .filter(F.col("user_id") < 40)
     )
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    src = f"{SCRATCH}/src"
+    shutil.rmtree(scratch, ignore_errors=True)
+    src = f"{scratch}/src"
     # two single-file batches → state must carry across the two triggers
     first = ev.filter(F.col("ts") < F.lit("2024-01-15"))
     second = ev.filter(F.col("ts") >= F.lit("2024-01-15"))

@@ -4,13 +4,18 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_integration_spark.sources.catalog import load_table
 from data_integration_spark.streaming.joins import clicks_before_purchase, dedupe_events
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/test_sjoin"
+
+
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("test_sjoin"))
 
 
 def _events(spark):
@@ -19,10 +24,10 @@ def _events(spark):
     )
 
 
-def test_stream_stream_join_matches_batch(spark):
+def test_stream_stream_join_matches_batch(spark, scratch):
     ev = _events(spark)
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    src = f"{SCRATCH}/src"
+    shutil.rmtree(scratch, ignore_errors=True)
+    src = f"{scratch}/src"
     ev.coalesce(2).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -58,10 +63,10 @@ def test_stream_stream_join_matches_batch(spark):
     assert len(got) >= 0.8 * len(want)
 
 
-def test_streaming_dedup(spark):
+def test_streaming_dedup(spark, scratch):
     ev = _events(spark).limit(500)
-    shutil.rmtree(f"{SCRATCH}/dup", ignore_errors=True)
-    src = f"{SCRATCH}/dup"
+    shutil.rmtree(f"{scratch}/dup", ignore_errors=True)
+    src = f"{scratch}/dup"
     # feed every event twice (two identical files)
     ev.coalesce(1).write.mode("overwrite").parquet(src)
     ev.coalesce(1).write.mode("append").parquet(src)
@@ -87,13 +92,13 @@ def test_streaming_dedup(spark):
     assert dedupe_events(spark.read.parquet(src)).count() == 500
 
 
-def test_streaming_dedup_with_rocksdb_state_store(spark):
+def test_streaming_dedup_with_rocksdb_state_store(spark, scratch):
     """The scale-grade state backend: RocksDB state store (spillable,
     incremental checkpoints) must produce the same dedup result as the
     default HDFS-backed in-memory store — at 100 TB the state for
     watermarked dedup/joins does not fit a JVM heap."""
     ev = _events(spark).limit(300)
-    src = f"{SCRATCH}/rocks"
+    src = f"{scratch}/rocks"
     shutil.rmtree(src, ignore_errors=True)
     ev.coalesce(1).write.mode("overwrite").parquet(src)
     ev.coalesce(1).write.mode("append").parquet(src)
@@ -127,7 +132,7 @@ def test_streaming_dedup_with_rocksdb_state_store(spark):
             )
 
 
-def test_foreachbatch_streaming_upsert(spark):
+def test_foreachbatch_streaming_upsert(spark, scratch):
     """foreachBatch upsert sink: replaying events (with duplicate key
     deliveries across files) into a keyed parquet table must converge to
     the per-key LATEST row — the streaming-maintained-table pattern."""
@@ -138,9 +143,9 @@ def test_foreachbatch_streaming_upsert(spark):
     ev = _events(spark).limit(400).select(
         (F.col("event_id") % 100).alias("k"), "event_id", "value"
     )
-    src = f"{SCRATCH}/upsert_src"
-    table = f"{SCRATCH}/upsert_table"
-    ck = f"{SCRATCH}/upsert_ck"
+    src = f"{scratch}/upsert_src"
+    table = f"{scratch}/upsert_table"
+    ck = f"{scratch}/upsert_ck"
     for d in (src, table, ck):
         shutil.rmtree(d, ignore_errors=True)
     # two files -> two micro-batches with maxFilesPerTrigger=1; keys repeat
@@ -170,7 +175,7 @@ def test_foreachbatch_streaming_upsert(spark):
     assert sum(1 for eid in rows.values() if eid >= 200) >= 90
 
 
-def test_checkpoint_recovery_exactly_once_across_restarts(spark):
+def test_checkpoint_recovery_exactly_once_across_restarts(spark, scratch):
     """Restart semantics: a file-sink streaming agg stopped after batch 1
     and RESTARTED with the same checkpoint must process only the new
     files and end with exactly the batch answer — no duplicates, no loss.
@@ -178,9 +183,9 @@ def test_checkpoint_recovery_exactly_once_across_restarts(spark):
     or driver failure."""
     from pyspark.sql import functions as F
 
-    src = f"{SCRATCH}/ckpt_src"
-    out = f"{SCRATCH}/ckpt_out"
-    ck = f"{SCRATCH}/ckpt_ck"
+    src = f"{scratch}/ckpt_src"
+    out = f"{scratch}/ckpt_out"
+    ck = f"{scratch}/ckpt_ck"
     for d in (src, out, ck):
         shutil.rmtree(d, ignore_errors=True)
     ev = _events(spark).select("event_id", "event_type", "value")

@@ -23,15 +23,19 @@ from data_integration_spark.streaming.windows import (
 )
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/test_stream"
 
 
-def test_stream_batch_equivalence(spark):
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("test_stream"))
+
+
+def test_stream_batch_equivalence(spark, scratch):
     """The SAME transformation on readStream vs batch must agree on every
     window the watermark has closed — Structured Streaming's contract."""
     ev = load_table(spark, SF, "events")
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    src, out, ck = f"{SCRATCH}/src", f"{SCRATCH}/out", f"{SCRATCH}/ck"
+    shutil.rmtree(scratch, ignore_errors=True)
+    src, out, ck = f"{scratch}/src", f"{scratch}/out", f"{scratch}/ck"
     ev.repartition(3).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     q = streaming_tumbling_agg(spark, src, schema, ck, out, watermark="0 seconds")
@@ -49,10 +53,10 @@ def test_stream_batch_equivalence(spark):
     assert stream_rows == batch_rows
 
 
-def test_streaming_restart_is_incremental(spark):
+def test_streaming_restart_is_incremental(spark, scratch):
     """Restarting from the checkpoint with no new files emits nothing new
     (exactly-once over the file source)."""
-    src, out, ck = f"{SCRATCH}/src", f"{SCRATCH}/out", f"{SCRATCH}/ck"
+    src, out, ck = f"{scratch}/src", f"{scratch}/out", f"{scratch}/ck"
     assert os.path.exists(ck), "run after test_stream_batch_equivalence"
     n_before = spark.read.parquet(out).count()
     schema = spark.read.parquet(src).schema

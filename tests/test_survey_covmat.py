@@ -40,7 +40,7 @@ def _numpy_covmat(rows):
     return flags, C
 
 
-def test_matches_numpy_reference(spark):
+def test_matches_numpy_reference(spark, tmp_path):
     rows = [
         ("A", 1.0, 10.0),
         ("A", 2.0, 14.0),
@@ -49,11 +49,9 @@ def test_matches_numpy_reference(spark):
         ("B", 2.5, 31.0),
         ("B", 0.5, 18.0),
     ]
-    import os
     import shutil
 
-    tmp = f"/root/repo/.scratch/covmat_tiny_{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = str(tmp_path)
     spark.createDataFrame(
         [(f, w, y) for f, w, y in rows],
         "l_returnflag string, l_quantity double, l_extendedprice double",
