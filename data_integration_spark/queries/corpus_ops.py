@@ -1637,15 +1637,15 @@ def q_winnowing_registry_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     loaded fingerprints == recomputed, registry pairs == inline pairs,
     append-then-dedup behavior, and the param-mismatch ValueError
     (tests/test_index_persist.py)."""
-    from data_integration_spark.queries.similarity_queries import _index_path
     from data_integration_spark.similarity.persist import (
         load_winnowing_registry,
         save_winnowing_registry,
     )
+    from data_integration_spark.streaming.replay import scratch_dir
 
     K, W, DF_CAP = 4, 4, 45
     docs = Catalog(spark, sf_dir)["documents"].select("doc_id", "text")
-    path = _index_path("winnow_registry", sf_dir)
+    path = scratch_dir("winnow_registry")
     # once-per-release: fingerprint + save the old corpus (spread before
     # the gram+md5 kernel — the save job is the archive-sized leg)
     save_winnowing_registry(

@@ -120,7 +120,7 @@ def q_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4x smaller than float32 before any index build).
 
     An all-zero vector makes max|x| = 0; under Spark 4's default ANSI mode
-    the unguarded x/scale raises DIVIDE_BY_ZERO (ADVICE r3), so the scale
+    the unguarded x/scale raises DIVIDE_BY_ZERO, so the scale
     divisor is NULLIF-guarded — both engines emit NULL scale/rmse/max_q
     for degenerate vectors instead of diverging (crash vs inf).
 
@@ -347,11 +347,11 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- URL/host-level crawl curation (staged r14, LIVE since r15) ----------
-# VERDICT r13 #5 option (c) — the second branch, alongside q_semdedup's
-# option (b): URL canonicalization + host-level dedup + frontier
-# politeness stats, the curation layer that runs BEFORE content dedup in
-# a crawl pipeline (CCNet §2). The documents table carries no URL
+# --- URL/host-level crawl curation ------------------------------------
+# The second curation branch, alongside q_semdedup's content dedup:
+# URL canonicalization + host-level dedup + frontier politeness stats,
+# the curation layer that runs BEFORE content dedup in a crawl pipeline
+# (CCNet §2). The documents table carries no URL
 # column, so a deterministic synthetic manifest derives from
 # (source, doc_id) with REAL canonicalization work injected (mixed-case
 # scheme/host, default :443 ports, utm_* tracking params, fragments,
@@ -464,7 +464,7 @@ def _raw_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_url_canonicalize", oracle=_URL_CANONICALIZE_ORACLE)
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization over the crawl manifest (staged r14, live r15):
+    """URL canonicalization over the crawl manifest:
     per-doc (doc_id, raw_url, host, canon_url) — scheme/host lowercase,
     default port stripped, fragment dropped, utm_*/fbclid params
     filtered with survivor order preserved, trailing slashes collapsed
@@ -506,7 +506,7 @@ GROUP BY host
 
 @register("q_crawl_frontier", oracle=_CRAWL_FRONTIER_ORACLE)
 def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level frontier politeness stats (staged r14, live r15): per host —
+    """Host-level frontier politeness stats: per host —
     raw manifest rows, DISTINCT canonical pages (the post-URL-dedup
     fetch set), the dedup rate, the serial crawl time at a 2 s/request
     politeness delay, and a depth tier for scheduler prioritization.
@@ -531,8 +531,8 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _politeness_stats(df, n_raw, n_pages) -> DataFrame:
     """The per-host politeness aggregation, shared by the batch
-    q_crawl_frontier and the streaming q_streaming_crawl_frontier (r15
-    review: a drifted copy of the dup-rate formula / 2 s politeness
+    q_crawl_frontier and the streaming q_streaming_crawl_frontier (a
+    drifted copy of the dup-rate formula / 2 s politeness
     delay / 100-20 tier thresholds in one of the two would silently
     break their batch==streaming equivalence between parity runs).
     ``n_raw`` / ``n_pages`` are the caller's aggregate EXPRESSIONS over
@@ -578,52 +578,31 @@ def q_streaming_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces."""
     import json
     import os
-    import shutil
 
     from data_integration_spark.functions.url import (
         canonicalize_url,
         url_host,
     )
-    from data_integration_spark.queries.streaming_queries import _SCRATCH
+    from data_integration_spark.streaming.replay import replay_source, scratch_dir
     from data_integration_spark.streaming.sinks import (
         streaming_counter_merge_sink,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    src = f"{_SCRATCH}/frontier_src_{tag}"
-    table = f"{_SCRATCH}/frontier_table_{tag}"
-    ck = f"{_SCRATCH}/frontier_ck_{tag}"
-    for d in (src, table, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
+    table = scratch_dir("frontier_table")
     raw = _raw_manifest(spark, sf_dir)
     # 4 files → 4 micro-batches under maxFilesPerTrigger=1: the merge
     # path must actually merge (a single-batch run would certify only
     # the initial write)
-    raw.repartition(4, "doc_id").write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream_in = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select(
-            url_host(F.col("raw_url")).alias("host"),
-            canonicalize_url(F.col("raw_url")).alias("canon_url"),
-        )
+    quarters = [raw.filter(F.pmod(F.hash("doc_id"), 4) == i) for i in range(4)]
+    stream_in = replay_source(spark, quarters, max_files_per_trigger=1).select(
+        url_host(F.col("raw_url")).alias("host"),
+        canonicalize_url(F.col("raw_url")).alias("canon_url"),
     )
-    q = streaming_counter_merge_sink(
-        stream_in, table, keys=["host", "canon_url"], checkpoint=ck,
-        query_name="t2_frontier",
+    # the sink replays to the end, so the table below is never read
+    # mid-append
+    streaming_counter_merge_sink(
+        stream_in, table, keys=["host", "canon_url"], query_name="t2_frontier",
     )
-    # never read a sink mid-append (the q_streaming_* hardened pattern,
-    # r15 review: an unchecked timeout would fall through with >= 2
-    # batches committed, pass the merge-count guard, and return stats
-    # silently missing the remaining batches — against a table a
-    # concurrent merge is still atomically swapping)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("frontier replay did not finish within 300 s")
 
     with open(os.path.join(table, "_last_batch.json")) as fh:
         applied = json.load(fh)["applied"]
@@ -637,7 +616,7 @@ def q_streaming_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one table row per (host, canon_url) KEY — but a NULL canon_url
     # (NULL raw_url input) must not count as a page: the batch query's
     # count_distinct skips NULLs, and batch==streaming equivalence is
-    # this query's contract (r15 review). Its raw rows still count.
+    # this query's contract. Its raw rows still count.
     return _politeness_stats(
         t,
         F.sum("n_raw"),

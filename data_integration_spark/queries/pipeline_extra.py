@@ -1685,24 +1685,21 @@ def q_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest layout, not the processing layout — q_compaction is the
     documented consolidation step."""
     import os
-    import shutil
 
-    from data_integration_spark.queries.relational_extra import _SCRATCH
+    from data_integration_spark.streaming.replay import scratch_dir
 
     docs = (
         Catalog(spark, sf_dir)["documents"]
         .filter(F.col("doc_id") < 50)
         .select("doc_id", "text")
     )
-    blob_dir = os.path.join(_SCRATCH, "binaryfile_source")
-    shutil.rmtree(blob_dir, ignore_errors=True)
-    os.makedirs(blob_dir, exist_ok=True)
+    blob_dir = scratch_dir("binaryfile_source")
+    os.makedirs(blob_dir)
 
     # one blob per document, named by id (ingest layout), written FROM THE
-    # EXECUTORS (VERDICT r6 #1 of "What's wrong": no per-row driver loops
-    # in registered queries) — each task writes its partition's docs; on a
-    # real cluster blob_dir is shared storage, exactly where an external
-    # ingest would land the files
+    # EXECUTORS (no per-row driver loops in registered queries) — each
+    # task writes its partition's docs; on a real cluster blob_dir is
+    # shared storage, exactly where an external ingest would land the files
     def _write_blobs(rows):
         for row in rows:
             with open(

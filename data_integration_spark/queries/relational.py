@@ -7,8 +7,6 @@ query (``Rmd:`` = ``/root/reference/Method_code.Rmd``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -33,6 +31,7 @@ from data_integration_spark.operators.projections import (
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 from data_integration_spark.sources.local import local_table
+from data_integration_spark.streaming.replay import scratch_dir
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
@@ -70,7 +69,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r_name").alias("region_name"),
         )
     )
-    path = os.path.join("/root/repo/.scratch", "sink_roundtrip")
+    path = scratch_dir("sink_roundtrip")
     out.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 

@@ -5,8 +5,6 @@ partition pruning."""
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -17,8 +15,12 @@ from pyspark.sql.functions import pandas_udf
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 from data_integration_spark.sources.local import local_table
-
-_SCRATCH = "/root/repo/.scratch"
+from data_integration_spark.streaming.replay import (
+    parity_halves,
+    replay_source,
+    run,
+    scratch_dir,
+)
 
 
 @register(
@@ -36,7 +38,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("nation_name"),
         F.col("n_regionkey").alias("regionkey"),
     )
-    path = os.path.join(_SCRATCH, "csv_roundtrip")
+    path = scratch_dir("csv_roundtrip")
     out.write.mode("overwrite").option("header", "true").csv(path)
     return spark.read.option("header", "true").schema(
         "nationkey int, nation_name string, regionkey int"
@@ -54,8 +56,7 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned parquet write + partition-pruned read: the
     filter on the partition column prunes directories, not rows (the layout
     choice that makes 100 TB scans selective)."""
-    path = os.path.join(_SCRATCH, "orders_by_status")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("orders_by_status")
     Catalog(spark, sf_dir)["orders"].write.partitionBy("o_orderstatus").mode(
         "overwrite"
     ).parquet(path)
@@ -371,7 +372,7 @@ def q_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read with an explicit schema, filtered — content equals the parquet
     path, proving the format adapter is lossless for these types."""
     ev = Catalog(spark, sf_dir)["events"].select("event_id", "event_type", "value")
-    path = os.path.join(_SCRATCH, "events_jsonl")
+    path = scratch_dir("events_jsonl")
     ev.write.mode("overwrite").json(path)
     return (
         spark.read.schema("event_id long, event_type string, value double")
@@ -420,7 +421,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_name", "s_nationkey",
         F.round("s_acctbal", 2).alias("acctbal"),
     )
-    path = os.path.join(_SCRATCH, "orc_roundtrip")
+    path = scratch_dir("orc_roundtrip")
     out.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -435,7 +436,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 JSON-lines sink + schema'd re-read (the interchange format LLM
     data pipelines actually move documents in)."""
     out = Catalog(spark, sf_dir)["region"].select("r_regionkey", "r_name")
-    path = os.path.join(_SCRATCH, "jsonl_roundtrip")
+    path = scratch_dir("jsonl_roundtrip")
     out.write.mode("overwrite").json(path)
     return spark.read.schema("r_regionkey int, r_name string").json(path)
 
@@ -481,8 +482,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows surface NULL for the new column. The lake-ingest reality every
     long-lived 100 TB table hits; without mergeSchema the scan would pin
     whichever footer it sampled."""
-    path = os.path.join(_SCRATCH, "schema_evolution")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("schema_evolution")
     region = Catalog(spark, sf_dir)["region"]
     region.filter(F.col("r_regionkey") < 3).select("r_regionkey").write.mode(
         "overwrite"
@@ -512,8 +512,7 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = Catalog(spark, sf_dir)["part"].select(
         "p_partkey", "p_name", F.round("p_retailprice", 2).alias("price")
     )
-    path = os.path.join(_SCRATCH, "compaction_t2")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("compaction_t2")
     out.repartition(40).write.parquet(path)
     compact_parquet(spark, path, target_rows_per_file=100_000)
     return spark.read.parquet(path)
@@ -529,21 +528,19 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located join: both sides written ``bucketBy(8, custkey)``
-    + ``sortBy`` into a managed warehouse pinned under ``.scratch``, then
+    + ``sortBy`` into a managed warehouse in a scratch directory, then
     sort-merge-joined with ZERO exchanges — each bucket pair joins where it
     sits, the layout that replaces the fact-fact shuffle at 100 TB when one
     join key dominates the workload (write once bucketed, join forever
     shuffle-free). ``test_plans.py`` pins the no-Exchange property."""
     cat = Catalog(spark, sf_dir)
     db = "graft_bucketed"
-    loc = os.path.join(_SCRATCH, "bucketed_warehouse")
+    # the location is fresh per process, so no earlier session's table
+    # directory can be left in it; DROP handles a same-session rerun
+    loc = scratch_dir("bucketed_warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     for t in ("orders_b", "customer_b"):
-        # DROP handles a same-session rerun; the rmtree handles a PREVIOUS
-        # session's leftover dir (in-memory catalog forgets the table but the
-        # managed location persists -> LOCATION_ALREADY_EXISTS otherwise)
         spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-        shutil.rmtree(os.path.join(loc, t), ignore_errors=True)
     cat["orders"].write.bucketBy(8, "o_custkey").sortBy("o_custkey").mode(
         "overwrite"
     ).saveAsTable(f"{db}.orders_b")
@@ -903,29 +900,13 @@ def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     monoid). The certificate aggregation is the SHARED
     ``_bloom_certificate`` helper — the streaming and batch paths
     cannot drift on membership arithmetic."""
-    import os
-    import shutil
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    store = f"/root/repo/.scratch/bloom_stream_store_{tag}_{os.getpid()}"
-    src = f"/root/repo/.scratch/bloom_stream_src_{tag}_{os.getpid()}"
-    ck = f"/root/repo/.scratch/bloom_stream_ck_{tag}_{os.getpid()}"
-    for d in (store, src, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
+    store = scratch_dir("bloom_stream_store")
     cust = Catalog(spark, sf_dir)["customer"]
     keys = (
         cust.filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
         .distinct()
     )
-    keys.filter(F.col("c_custkey") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    keys.filter(F.col("c_custkey") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    schema = spark.read.parquet(src).schema
 
     def update_filter(batch_df: DataFrame, batch_id: int) -> None:
         key_str = F.col("c_custkey").cast("string")
@@ -942,16 +923,11 @@ def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(update_filter)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    run(
+        replay_source(spark, parity_halves(keys, "c_custkey"), max_files_per_trigger=1)
+        .writeStream.foreachBatch(update_filter),
+        "q_streaming_bloom",
     )
-    q.awaitTermination(120)
 
     # OR-merge on read: distinct positions over all appended partials
     fpos = sorted(

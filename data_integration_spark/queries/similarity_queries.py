@@ -19,22 +19,12 @@ from data_integration_spark.similarity.ann import (
 )
 from data_integration_spark.sources.catalog import Catalog, table_rowcount
 from data_integration_spark.sources.local import local_table
+from data_integration_spark.streaming.replay import scratch_dir
 
 # hard bound on driver-side query collection in the vectorized ANN path —
 # guards the only .toPandas() in a registered query's hot path (VERDICT r1 #2)
 _MAX_VECTORIZED_QUERIES = 10_000
 
-
-def _index_path(kind: str, sf_dir: str) -> str:
-    """Scratch path for a persistence-demo index artifact, namespaced by
-    PID: two concurrent sessions on the same SF (bench alongside a
-    correctness sweep) must never race overwrite-vs-read on the same
-    centroids/buckets parquet (ADVICE r5). Results are path-independent —
-    the artifact is written and read back within the same call."""
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"/root/repo/.scratch/indexes/{os.getpid()}/{kind}_{tag}"
 
 # DuckDB-side double-precision cosine over FLOAT[] lists: unnest positions,
 # cast each element to DOUBLE, aggregate — mirrors the Spark double promotion.
@@ -317,7 +307,7 @@ def q_ann_lsh_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"].select(
         "vec_id", as_double_array("embedding", "e")
     )
-    path = _index_path("lsh", sf_dir)
+    path = scratch_dir("lsh")
     save_lsh_spec(build_lsh_spec(dim=64, n_planes=8, n_tables=4, seed=7), path)
     spec = load_lsh_spec(path)
     return lsh_topk(
@@ -490,7 +480,7 @@ def q_ann_ivf_persist_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = IVFIndex(n_cells=_PIN_CELLS, seed=0)
     _set_pinned_centroids(index, spark)
     index.assigned = index.assign(emb)
-    path = _index_path("ivf_pin", sf_dir)
+    path = scratch_dir("ivf_pin")
     save_ivf_index(index, path)
     loaded = load_ivf_index(spark, path)
     return loaded.search(emb.filter(F.col("vec_id") < 20), k=5, nprobe=3)
@@ -764,7 +754,7 @@ def q_ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_adc_bad += 1
 
     # persisted codebooks must reproduce every code
-    path = _index_path("pq", sf_dir)
+    path = scratch_dir("pq")
     save_pq_index(index, path)
     re_codes = load_pq_index(spark, path).encode(emb)
     n_load_mismatch = (
@@ -969,7 +959,7 @@ def q_ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_probe_bad += 1
 
     # persisted artifact must reproduce every (cell, codes) row
-    path = _index_path("ivfpq", sf_dir)
+    path = scratch_dir("ivfpq")
     save_ivfpq_index(index, path)
     re_codes = load_ivfpq_index(spark, path).assign_encode(emb)
     n_load_mismatch = (
@@ -1103,7 +1093,7 @@ def q_ann_ivf_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_suboptimal = best.filter(F.col("b.c") != F.col("emitted")).count()
 
     # save/load round-trip: loaded centroids must reproduce every cell
-    path = _index_path("ivf_inv", sf_dir)
+    path = scratch_dir("ivf_inv")
     save_ivf_index(index, path)
     re_assigned = load_ivf_index(spark, path).assign(emb)
     n_load_mismatch = (
@@ -1237,7 +1227,7 @@ def q_minhash_lsh_bucket_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = Catalog(spark, sf_dir)["documents"]
     new = docs.filter(F.col("doc_id") % 5 == 4)
     old = docs.filter(F.col("doc_id") % 5 != 4)
-    path = _index_path("mh_buckets", sf_dir)
+    path = scratch_dir("mh_buckets")
     save_minhash_index(
         band_buckets(
             minhash_signatures(
@@ -2004,7 +1994,7 @@ def q_ann_ivfpq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     index._pull_centroids()
     index.codebooks = _pinned_pq_codebooks()
     index.codes = index.assign_encode(emb)
-    path = _index_path("ivfpq_pin", sf_dir)
+    path = scratch_dir("ivfpq_pin")
     save_ivfpq_index(index, path)
     loaded = load_ivfpq_index(spark, path)
     return loaded.search_all(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from data_integration_spark.queries import register
 from data_integration_spark.sources.catalog import Catalog
 from data_integration_spark.sources.local import local_table
+from data_integration_spark.streaming.replay import scratch_dir
 
 _CAP = 256  # per-doc char cap of the training sample (bounded-by-design)
 _VOCAB_TARGET = 96
@@ -379,16 +380,13 @@ def q_unigram_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_unigram_encode — persistence must not change a single parse
     (the q_winnowing_registry_persist precedent: the round-trip is
     hash-checked by value, not by trusting the save path)."""
-    import os
-
     from data_integration_spark.operators.unigram_lm import viterbi_encode
     from data_integration_spark.similarity.persist import (
         load_unigram_vocab,
         save_unigram_vocab,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.scratch/unigram_vocab_{tag}_{os.getpid()}"
+    path = scratch_dir("unigram_vocab")
     save_unigram_vocab(spark, _pinned_unigram_costs(), path)
     costs, max_len = load_unigram_vocab(spark, path)
     # spread the single-split scan before the per-doc DP kernel (r15,

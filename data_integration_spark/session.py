@@ -21,6 +21,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from data_integration_spark.streaming.replay import scratch_dir
+
 
 def session_sizing() -> tuple[str, str]:
     """``(cpus, driver_mem)`` for a local session: ``SPARK_GRAFT_CPUS``
@@ -72,9 +74,7 @@ def get_spark(
         # static config — must be set before session start (bucketed tables)
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", "/root/repo/.scratch/spark-warehouse"
-            ),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or scratch_dir("spark-warehouse"),
         )
         # testdata's events.ts is TIMESTAMP(NANOS) which the vectorized parquet
         # reader rejects; read as long and convert in the catalog (µs truncation,

@@ -22,18 +22,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from data_integration_spark.operators.merge import merge_upsert
 from data_integration_spark.sources.atomic import atomic_replace_dir, recover_dir
+from data_integration_spark.streaming.replay import run
 
 
 def streaming_upsert_sink(
     stream: DataFrame,
     table_path: str,
     keys: list[str],
-    checkpoint: str,
+    checkpoint: str | None = None,
     query_name: str = "upsert_sink",
     latest_by: str | None = None,
 ):
     """Maintain ``table_path`` (parquet) as the keyed upsert of every
-    micro-batch: latest batch wins per key. Returns the started query.
+    micro-batch: latest batch wins per key. Replays ``stream`` to its end
+    (streaming/replay.py::run) and returns the finished query.
 
     ``latest_by``: when a micro-batch itself carries several rows per key
     (redeliveries, rapid updates), keep only the row with the max value of
@@ -68,20 +70,14 @@ def streaming_upsert_sink(
         merged.write.mode("overwrite").parquet(tmp)
         atomic_replace_dir(tmp, table_path)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run(stream.writeStream.foreachBatch(merge_batch), query_name, checkpoint)
 
 
 def streaming_counter_merge_sink(
     stream: DataFrame,
     table_path: str,
     keys: list[str],
-    checkpoint: str,
+    checkpoint: str | None = None,
     query_name: str = "counter_merge_sink",
     count_col: str = "n_raw",
 ):
@@ -89,7 +85,8 @@ def streaming_counter_merge_sink(
     of every micro-batch: each batch groups to (keys, COUNT(*)) and the
     counts MERGE BY ADDITION into the table (full-outer coalesce-add —
     count is a commutative monoid, so the merge is exact in any arrival
-    order). Returns the started query.
+    order). Replays ``stream`` to its end (streaming/replay.py::run) and
+    returns the finished query.
 
     The latest-wins upsert sink above is naturally idempotent under
     foreachBatch's at-least-once redelivery; an ADDITIVE merge is not —
@@ -113,13 +110,7 @@ def streaming_counter_merge_sink(
             spark, batch_df, batch_id, table_path, keys, count_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run(stream.writeStream.foreachBatch(merge_batch), query_name, checkpoint)
 
 
 def counter_merge_batch(

@@ -17,6 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from data_integration_spark.streaming.replay import file_stream, run
 
 
 def tumbling_agg(
@@ -87,27 +90,21 @@ def sessionize(
 def streaming_tumbling_agg(
     spark,
     source_dir: str,
-    schema: str,
+    schema: StructType | None,
     checkpoint_dir: str,
     out_dir: str,
     window_len: str = "1 hour",
     watermark: str = "2 hours",
 ):
-    """File-source → watermarked tumbling agg → parquet sink, append mode.
-    Returns the StreamingQuery (caller awaits/stops). The batch/stream
-    transformation is shared — ``tumbling_agg`` — so batch tests certify the
-    streaming semantics up to late-data handling."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
+    """File-source → watermarked tumbling agg → parquet sink, append mode,
+    replayed to the end of ``source_dir`` (streaming/replay.py::run).
+    Returns the finished StreamingQuery. The batch/stream transformation
+    is shared — ``tumbling_agg`` — so batch tests certify the streaming
+    semantics up to late-data handling."""
+    stream = file_stream(spark, source_dir, max_files_per_trigger=4, schema=schema)
     agg = tumbling_agg(stream, window_len, watermark, streaming=True)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run(
+        agg.writeStream.outputMode("append").format("parquet").option("path", out_dir),
+        "tumbling_agg",
+        checkpoint=checkpoint_dir,
     )

@@ -3,7 +3,8 @@ physical plans, and check it against its DuckDB oracle (row count, schema
 and order-insensitive values) on the same DataFrame.
 
 The battery reads one walk through the ``registry_walk`` fixture
-(tests/conftest.py). Standalone, it prints oracle parity per query:
+(tests/conftest.py). Standalone, it prints oracle parity per query, then
+every plan-lint failure, and exits non-zero if either failed:
     python tests/oracle_harness.py [sf_dir] [query ...]
 """
 
@@ -182,8 +183,6 @@ _BNLJ_ALLOWED = {
 #: covered by the streaming tests and their batch siblings.
 _PLAN_LINT_EXCLUDED = {
     "q_streaming_tumbling",
-    "q_session_window",
-    "q_sliding_window",
     "q_streaming_dedup",
     "q_stream_stream_join",
     "q_stream_static_join",
@@ -311,7 +310,7 @@ if __name__ == "__main__":
     load_all()
     queries = [(name, QUERIES[name]) for name in sys.argv[2:] or sorted(QUERIES)]
     spark = get_spark(app_name="oracle_harness", shuffle_partitions=8)
-    res = walk(spark, sf, queries, duck_connection(sf))[0]
+    res, lints, _errored = walk(spark, sf, queries, duck_connection(sf))
     n_fail = 0
     for name in sorted(res):
         errs = res[name]
@@ -321,5 +320,8 @@ if __name__ == "__main__":
         print(f"[{status}] {name}")
         for e in errs:
             print(f"    {e[:500]}")
-    print(f"\n{len(res) - n_fail}/{len(res)} pass")
-    sys.exit(1 if n_fail else 0)
+    lint_hits = [f"[LINT] {lint}: {hit[:500]}" for lint, hits in lints.items() for hit in hits]
+    for line in lint_hits:
+        print(line)
+    print(f"\n{len(res) - n_fail}/{len(res)} pass, {len(lint_hits)} lint failures")
+    sys.exit(1 if n_fail or lint_hits else 0)

@@ -1,13 +1,13 @@
-"""The streaming semantic-dedup certificates VERDICT r11 asked for.
+"""The streaming semantic-dedup certificates.
 
 1. NON-VACUOUS recovery: the planted near-dups (exact copies across the
    parity replay files — ``_SEM_PLANT_MAP``) are recovered as a
    non-empty pair set, so the foreachBatch cosine expression, the
    symmetric OR-candidate rule, and the pair-emission path are attested
-   on real rows (the r11 driver row was 0 = 0).
+   on real rows (the natural corpus's row is 0 = 0).
 2. ORDER INDEPENDENCE: the same pair set comes back under BOTH
    file-replay orders (even-file-first and odd-file-first) — the
-   symmetry claim the r11 docstring only argued.
+   symmetry claim the loop's docstring argues.
 3. GATE EQUIVALENCE: the candidate-count-gated scorer emits identical
    rounded cosines on both sides of the gate — ``gemm_gate=0`` forces
    every batch through the vectorized pair-frame kernel
@@ -17,12 +17,9 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from data_integration_spark.queries.streaming_queries import (
-    _SCRATCH,
     _planted_embeddings,
     _sem_stream_pairs,
 )
@@ -40,12 +37,7 @@ _EXPECTED_PLANTED = {
 
 
 def _pairs(spark, tag: str, **kw) -> set[tuple]:
-    df = _sem_stream_pairs(
-        spark,
-        _planted_embeddings(spark, SF),
-        f"{_SCRATCH}/sem_test_{tag}_{os.getpid()}",
-        **kw,
-    )
+    df = _sem_stream_pairs(spark, _planted_embeddings(spark, SF), f"sem_test_{tag}", **kw)
     return {(r["d1"], r["d2"], r["cosine"]) for r in df.collect()}
 
 

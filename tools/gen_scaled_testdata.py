@@ -1,7 +1,7 @@
 """Generate a LOCAL sf1 rehearsal dataset by scaling sf0.1 10× with
-key-shifted copies. The source data is read-only, so the output goes to
-``.scratch/sf1/`` in the checkout that holds this script, unless
-``out_dir`` is given.
+key-shifted copies. The source is the checkout's ``perfbench/data/sf0.1``
+unless ``src_dir`` is given; the output goes to ``.scratch/sf1/`` in the
+checkout that holds this script, unless ``out_dir`` is given.
 
 Scaling strategy — 10 shifted copies, copy 0 = identity:
 - dims (region, nation) stay single-copy: they are fixed-cardinality in
@@ -18,7 +18,8 @@ Scaling strategy — 10 shifted copies, copy 0 = identity:
 - embeddings replicate unchanged (denser corpus, same geometry); query
   slices (vec_id < 20) stay in copy 0.
 
-Usage: python tools/gen_scaled_testdata.py [copies=10] [out_dir]
+Usage: python tools/gen_scaled_testdata.py [copies=10] [out_dir] [src_dir]
+    [--shared-tokens]
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from pyspark.sql import functions as F
 from data_integration_spark.session import get_spark
 from data_integration_spark.sources.catalog import Catalog
 
-SRC = "/root/testdata/sf0.1"
 K = 1_000_000       # entity-key stride (customer/supplier/part/doc/vec/user)
 B = 10_000_000      # big-key stride (orderkey/event_id)
 
@@ -53,8 +53,10 @@ DIMS = ("region", "nation")
 
 
 def main() -> None:
-    copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf1")
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    copies = int(args[0]) if len(args) > 0 else 10
+    out = args[1] if len(args) > 1 else os.path.join(REPO, ".scratch", "sf1")
+    src = args[2] if len(args) > 2 else os.path.join(REPO, "perfbench", "data", "sf0.1")
     # --shared-tokens: copies keep the ORIGINAL token space (true Zipf hot
     # keys at scale — the skew-REALISTIC corpus for join experiments).
     # Near-dup queries are NOT meaningful on it: every copy is an exact
@@ -62,7 +64,7 @@ def main() -> None:
     shared_tokens = "--shared-tokens" in sys.argv
     os.makedirs(out, exist_ok=True)
     spark = get_spark(app_name="gen_sf1")
-    cat = Catalog(spark, SRC)
+    cat = Catalog(spark, src)
     for name in DIMS:
         cat[name].write.mode("overwrite").parquet(f"{out}/{name}.parquet")
         print(f"{name}: dim copied")
