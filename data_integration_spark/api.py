@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_spark.sources.local import local_table
 from data_integration_spark.stats.bootstrap import (
     MSPE_SCHEMA,
     mspe_table,
@@ -28,6 +29,7 @@ from data_integration_spark.stats.bootstrap import (
 )
 from data_integration_spark.stats.design import outcome_cells
 from data_integration_spark.stats.ebp import (
+    DRAW_SCHEMA,
     area_frame,
     comparison_frame,
     comparison_table,
@@ -78,8 +80,8 @@ class Engine:
 
     # --------------------------------------------------------------- models
     def _outcome_cells(self) -> pd.DataFrame:
-        """The small survey's outcome cells, collected once and fit by both
-        the GLM and the EM."""
+        """The small survey's outcome cells, collected once: the GLM and
+        the EM fit on them and the direct estimates sum them."""
         if self._small_cells is None:
             self._small_cells = outcome_cells(self.small)
         return self._small_cells
@@ -104,10 +106,14 @@ class Engine:
         return self.em_fit
 
     # ----------------------------------------------------------- estimates
-    def ebp_draws(self, n_draws: int = 100) -> DataFrame:
-        """v_tilde ~ N(v̂, τ̂) draw table for EBP scoring (``Rmd:415``)."""
+    def _draws(self, n_draws: int) -> pd.DataFrame:
         assert self.em_fit is not None, "fit_em first"
-        return draw_table(self.em_fit.v_hat_df(self.spark), n_draws, self.seed)
+        return draw_table(self.em_fit.v_hat, n_draws, self.seed)
+
+    def ebp_draws(self, n_draws: int = 100) -> DataFrame:
+        """v_tilde ~ N(v̂, τ̂) draw table for EBP scoring (``Rmd:415``),
+        made on the driver and returned as a local table."""
+        return local_table(self.spark, self._draws(n_draws), DRAW_SCHEMA)
 
     def _scoring_cells(self) -> pd.DataFrame:
         """The big survey's covariate-pattern cells, collected once and
@@ -119,16 +125,15 @@ class Engine:
     def ebp_estimates(self, n_draws: int = 100) -> pd.DataFrame:
         """EBP area proportions on the big survey (``Rmd:406-454``), one row
         per area: (state, EM_est)."""
-        assert self.em_fit is not None, "fit_em first"
-        self._ebp = ebp_estimates(
-            self._scoring_cells(), self.em_fit.beta_hat, self.ebp_draws(n_draws)
-        )
+        draws = self._draws(n_draws)
+        self._ebp = ebp_estimates(self._scoring_cells(), self.em_fit.beta_hat, draws)
         return self._ebp
 
     def direct_estimates(self) -> pd.DataFrame:
         """Survey-weighted direct estimates ± SE (``Rmd:456-473``), one row
-        per area: (state, direct, direct_SE)."""
-        self._direct = direct_estimates(self.small)
+        per area: (state, direct, direct_SE), from the small survey's
+        outcome cells that the fits share."""
+        self._direct = direct_estimates(self._outcome_cells())
         return self._direct
 
     def _comparison_table(self) -> pd.DataFrame:

@@ -15,7 +15,7 @@ Reference parity (SURVEY.md §2.6):
   ``Σ(w(y−ŷ))²`` aggregated directly). The earlier single-pass
   sufficient-statistics expansion ``Σw²y² − 2ŷΣw²y + ŷ²Σw²`` suffers
   catastrophic cancellation on (near-)constant-y groups — the residue is
-  O(‖y‖²·ε·n), which a round-8 Hypothesis probe surfaced as SE≈1.4e-4
+  O(‖y‖²·ε·n), which a Hypothesis probe surfaced as SE≈1.4e-4
   where the true SE is exactly 0 — so the stable form is not optional.
 
 Scale notes: every helper shuffles only map-side-combined partial rows (one
@@ -77,7 +77,7 @@ def survey_mean_se(
     cancellation residue of order ‖y‖²·ε·n that survives a
     ``greatest(·, 0)`` clip when positive — on a constant-y group the true
     SE is exactly 0 but the expansion reported ~1e-4·|y| (Hypothesis
-    counterexample ``[(1.05, w=1.0), (1.05, w=2.0)]``, round 8). The
+    counterexample ``[(1.05, w=1.0), (1.05, w=2.0)]``). The
     centered form is exact at 0 for constant y by construction.
 
     NULL semantics = ``svymean(na.rm=TRUE)``: rows with NULL y are dropped

@@ -14,14 +14,36 @@ tables are exposed lazily — no eager materialization.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_spark.streaming.replay import scratch_dir
+
 _PYFILE_SHIPPED: set[str] = set()
+_PKG_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """A zip of this package under the process's scratch root
+    (``streaming.replay.scratch_dir``), built on first use."""
+    global _PKG_ZIP
+    if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
+        pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        parent = os.path.dirname(pkg_dir)
+        out = scratch_dir("pyfiles")
+        os.makedirs(out)
+        path = os.path.join(out, "data_integration_spark.zip")
+        with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+            for root, dirs, files in os.walk(pkg_dir):
+                dirs.sort()
+                for f in sorted(files):
+                    if f.endswith(".py"):
+                        p = os.path.join(root, f)
+                        z.write(p, os.path.relpath(p, parent))
+        _PKG_ZIP = path
+    return _PKG_ZIP
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -31,42 +53,15 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     arbitrary cwd and patches only the DRIVER process's ``sys.path``;
     executor Python workers inherit neither, so any closure that references
     a module-level symbol (mapInPandas decoders, applyInPandasWithState
-    folds, the Laplace solver) dies with ModuleNotFoundError unless the
-    package travels with the job. A zip of the package is (re)built under
-    ``.scratch`` when stale and added once per SparkContext — executors
-    zipimport it on their next task."""
+    folds) dies with ModuleNotFoundError unless the package travels with
+    the job. A zip of the package is built once per process, outside the
+    checkout, and added once per SparkContext — executors zipimport it on
+    their next task."""
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _PYFILE_SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    repo = os.path.dirname(pkg_dir)
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for f in files:
-            if f.endswith(".py"):
-                sources.append(os.path.join(root, f))
-    # Staleness key = hash of the sorted (path, mtime, size) manifest, baked
-    # into the zip NAME. A bare max-mtime check misses deletes/renames (max
-    # mtime unchanged → executors keep importing the removed module), and a
-    # content-addressed name means concurrent processes either agree on the
-    # file or write distinct ones — no shared .tmp to corrupt.
-    manifest = "\n".join(
-        f"{os.path.relpath(p, repo)}\t{os.path.getmtime(p)}\t{os.path.getsize(p)}"
-        for p in sorted(sources)
-    )
-    digest = hashlib.sha256(manifest.encode()).hexdigest()[:16]
-    zip_path = os.path.join(scratch, f"data_integration_spark_pkg_{digest}.zip")
-    if not os.path.exists(zip_path):
-        fd, tmp = tempfile.mkstemp(dir=scratch, suffix=".zip.tmp")
-        os.close(fd)
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for p in sorted(sources):
-                z.write(p, os.path.relpath(p, repo))
-        os.replace(tmp, zip_path)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(_package_zip())
     # right-size shuffles for the local test scale, but ONLY when the
     # session still carries Spark's out-of-the-box default — a deliberate
     # driver/user setting is never overridden
@@ -80,7 +75,7 @@ def ensure_worker_imports(spark: SparkSession) -> None:
 
 def spread_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Round-robin-spread a small scan before a CPU-heavy per-row stage
-    (r15, guide §2.5's unsplittable-input fix): the driver testdata is
+    (the unsplittable-input fix): the driver testdata is
     one small parquet file per table → ONE input split → every
     gram-explode / hash / codec kernel above it ran single-core. The
     exchange carries only the caller's (projected, filtered) rows, once;
@@ -205,7 +200,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # defensive: normalize_timestamps' NTZ→LTZ cast (and every downstream
     # unix_micros/window comparison vs DuckDB's naive reading) is
     # value-preserving only under a UTC session — a foreign session with a
-    # local timezone would shift every event time (ADVICE r4)
+    # local timezone would shift every event time
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:

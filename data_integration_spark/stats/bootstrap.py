@@ -122,7 +122,7 @@ def parametric_bootstrap(
     cells = ebp.scoring_cells(big_survey) if big_cells is None else big_cells
     # every replicate simulates the same units, so the same areas
     states = sorted(sim_cells["state"].unique())
-    draws = draw_matrix(small_survey.sparkSession, states, em.n_reps, em.seed)
+    draws = draw_matrix(states, em.n_reps, em.seed)
 
     ests, em_rows = [], []
     for b, rep_cells in sim_cells.groupby("rep", sort=True):

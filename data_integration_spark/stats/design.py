@@ -67,19 +67,23 @@ def design_cells(
 ) -> DataFrame:
     """Collapse a prepped survey to covariate-pattern cells.
 
-    Returns ([by..,] state, x1..x7[, y], m, w_sum): m = unit count, w_sum =
-    summed survey weight; ``by`` adds leading keys (the bootstrap's rep). One
+    Returns ([by..,] state, x1..x7[, y], m, w_sum, w2_sum, w_n): m = unit
+    count, w_sum = summed survey weight, w2_sum = summed squared weight,
+    w_n = count of non-null weights (the last three null/0 without a
+    weight column); ``by`` adds leading keys (the bootstrap's rep). One
     shuffle; output is ≤ #areas × 72 rows (2·2·3·3 covariate patterns × 2
     outcomes; x7 is area-constant) per ``by`` group regardless of input size
     — THE scalability lever for the iterative layer.
     """
     keys = [*by, "state", *X_COLS] + (["y"] if with_outcome else [])
-    aggs = [F.count("*").alias("m")]
-    if weight_col is not None and weight_col in prepped.columns:
-        aggs.append(F.sum(weight_col).alias("w_sum"))
-    else:
-        aggs.append(F.lit(None).cast("double").alias("w_sum"))
-    return prepped.groupBy(*keys).agg(*aggs)
+    w = F.col(weight_col) if weight_col in prepped.columns else F.lit(None)
+    w = w.cast("double")
+    return prepped.groupBy(*keys).agg(
+        F.count("*").alias("m"),
+        F.sum(w).alias("w_sum"),
+        F.sum(w * w).alias("w2_sum"),
+        F.count(w).alias("w_n"),
+    )
 
 
 def outcome_cells(

@@ -11,9 +11,10 @@ read only inside Spark aggregations.
   draws, v=0 for areas absent from the small survey; then the A1 weighted
   mean per area. On cells the unit dimension collapses: the big survey is
   collected as ≤ areas × 36 covariate-pattern cells carrying w_sum, and the
-  (state, r, v_tilde) draw table as areas × R rows.
+  (state, r, v_tilde) draw table of areas × R rows is made on the driver.
 - Direct (``Rmd:456-473``): survey-weighted Hájek mean ± linearized SE ×100,
-  one ``survey_mean_se`` plan collected once.
+  in NumPy on the small survey's outcome cells, which the GLM and the EM
+  fit on: no Spark job of its own.
 - Comparison (``Rmd:466-507``): outer merge on state in pandas + ASD/RASD/AAD.
 - Report (``Rmd:763-772``): the literal SQL left-join chain via spark.sql,
   over local DataFrames built from the area tables.
@@ -27,32 +28,36 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
-from data_integration_spark.functions.stats import survey_mean_se
+from data_integration_spark.functions.rng import replicate_normals
 from data_integration_spark.sources.local import local_table
-from data_integration_spark.stats.design import X_COLS, design_cells, prep_design
+from data_integration_spark.stats.design import (
+    X_COLS,
+    design_cells,
+    outcome_cells,
+    prep_design,
+)
+
+DRAW_SCHEMA = "state string, r int, v_tilde double"
 
 
-def draw_table(v_hat: DataFrame, n_draws: int, seed: int) -> DataFrame:
+def draw_table(v_hat: pd.DataFrame, n_draws: int, seed: int) -> pd.DataFrame:
     """(state, r, v_tilde) EBP draws, v_tilde ~ N(v̂, τ̂²) per (r, area)
     (``Rmd:415``: R=100) from the EM's (state, v_hat, tau_hat_sq) table,
-    for the ``int`` draw numbers r = 1..n_draws."""
-    return (
-        v_hat.select(
-            "state",
-            "v_hat",
-            "tau_hat_sq",
-            replicate_numbers(n_draws, "n_draws").alias("r"),
-        )
-        .withColumn(
-            "v_tilde",
-            F.col("v_hat")
-            + F.sqrt("tau_hat_sq") * seeded_normal("state", "r", salt=seed),
-        )
-        .select("state", "r", "v_tilde")
+    for the ``int`` draw numbers r = 1..n_draws: v̂ + τ̂·z with z the
+    driver's ``seeded_normal(state, r, salt=seed)``. Rows run by state,
+    then r; ``DRAW_SCHEMA`` is their Spark schema."""
+    states = v_hat["state"].tolist()
+    z = replicate_normals(states, n_draws, seed, "n_draws")
+    tau = np.sqrt(v_hat["tau_hat_sq"].to_numpy(float))
+    v = v_hat["v_hat"].to_numpy(float) + tau * z
+    return pd.DataFrame(
+        {
+            "state": np.repeat(np.asarray(states, dtype=object), n_draws),
+            "r": np.tile(np.arange(1, n_draws + 1, dtype=np.int32), len(states)),
+            "v_tilde": v.T.ravel(),
+        }
     )
 
 
@@ -90,7 +95,7 @@ def area_means(cells: pd.DataFrame, y_hat: np.ndarray) -> pd.Series:
 def ebp_estimates(
     big_cells: pd.DataFrame,
     beta: Sequence[float],
-    v_draws: DataFrame,
+    v_draws: pd.DataFrame,
     est_alias: str = "EM_est",
 ) -> pd.DataFrame:
     """Per-area EBP (state, ``est_alias``): 100 × Σ_u w_u·ŷ_u / Σ_u w_u with
@@ -98,11 +103,11 @@ def ebp_estimates(
     big survey's ``scoring_cells``.
 
     ``v_draws`` is the long (state, r, v_tilde) table of ``draw_table`` (the
-    reference reuses ``v_case_sim``, first 100 reps, ``Rmd:415``), collected
-    here. Areas missing from ``v_draws`` score with v=0 (generalized MT/SD,
-    ``Rmd:433-435``) — no hard-coded states."""
-    draws = v_draws.toPandas()
-    by_state = {s: g["v_tilde"].to_numpy(float) for s, g in draws.groupby("state")}
+    reference reuses ``v_case_sim``, first 100 reps, ``Rmd:415``); each
+    area's draws are taken in row order. Areas missing from ``v_draws``
+    score with v=0 (generalized MT/SD, ``Rmd:433-435``) — no hard-coded
+    states."""
+    by_state = {s: g["v_tilde"].to_numpy(float) for s, g in v_draws.groupby("state")}
     xb = cell_x_beta(big_cells, beta)
     y_hat = np.empty(len(big_cells))
     for state, idx in big_cells.groupby("state").indices.items():
@@ -112,26 +117,34 @@ def ebp_estimates(
     return pd.DataFrame({"state": est.index, est_alias: est.to_numpy()})
 
 
-def direct_estimates(
-    small_survey: DataFrame,
-    outcome: str = "demvote",
-    weight: str = "weight",
-) -> pd.DataFrame:
+def direct_estimates(small: DataFrame | pd.DataFrame) -> pd.DataFrame:
     """Per-area survey-weighted direct estimate ± SE, ×100 (``Rmd:456-473``:
-    ``svyby`` + the 100× scaling) as (state, direct, direct_SE)."""
-    out = survey_mean_se(
-        small_survey,
-        group="state",
-        value=F.col(outcome).cast("double"),
-        weight=F.col(weight),
-        mean_alias="mean_",
-        se_alias="se_",
+    ``svyby`` + the 100× scaling) as (state, direct, direct_SE), from the
+    small survey's ``outcome_cells`` (collected here when given the survey).
+
+    ``survey_mean_se``'s Hájek mean and linearized SE, summed over cells:
+    y is a cell key, so Σ_u (w_u(y_u − ŷ))² = Σ_cells (y − ŷ)²·w2_sum
+    exactly. Its rules hold: units with a null y are dropped, n counts the
+    units with a y and a weight, the n/(n−1) factor applies when n > 1 (so
+    a one-unit area has SE 0), and an area with no weight has a null
+    estimate and SE."""
+    cells = outcome_cells(small)
+    cells = cells[cells["y"].notna()]
+    idx, states = pd.factorize(cells["state"], sort=True, use_na_sentinel=False)
+
+    def total(values) -> np.ndarray:
+        return np.bincount(idx, np.asarray(values, float), len(states))
+
+    y = cells["y"].to_numpy(float)
+    w = cells["w_sum"].fillna(0.0).to_numpy(float)
+    n, sw = total(cells["w_n"]), total(w)
+    with np.errstate(invalid="ignore", divide="ignore"):  # no weight: 0/0
+        mean = total(w * y) / sw
+        ssd = total((y - mean[idx]) ** 2 * cells["w2_sum"].fillna(0.0))
+        se = np.sqrt(np.where(n > 1, n / (n - 1), 1.0) * ssd) / sw
+    return pd.DataFrame(
+        {"state": states, "direct": 100.0 * mean, "direct_SE": 100.0 * se}
     )
-    return out.select(
-        "state",
-        (F.lit(100.0) * F.col("mean_")).alias("direct"),
-        (F.lit(100.0) * F.col("se_")).alias("direct_SE"),
-    ).toPandas()
 
 
 def comparison_table(

@@ -7,11 +7,14 @@ Spark-first re-architecture (SURVEY.md §2.11):
   (design.py): at most areas × 72 rows whatever the number of units, and
   every E/M step below is mathematically exact on cells. The fit runs
   every step in NumPy on the collected cell table.
-- E1 per-area Laplace approximation: golden-section search per area, as
-  the reference loops states on the driver (``Rmd:252-274``).
-- E2 MC draws: one (R, areas) matrix of hash-seeded normals generated in
-  Spark — deterministic across partitionings and cluster sizes (the
-  reference builds an R list of 1000 data.frames, ``Rmd:276-296``).
+- E1 per-area Laplace approximation: one golden-section search that runs
+  every area's at once, each objective evaluation one pass over the cells
+  (the reference loops ``optimize()`` over states, ``Rmd:252-274``).
+- E2 MC draws: one (R, areas) matrix of hash-seeded normals keyed by
+  (state, r), made on the driver by ``rng.replicate_normals`` — the same
+  draws ``seeded_normal`` gives in Spark, to the last bit or two, and no
+  Spark job (the reference builds an R list of 1000 data.frames,
+  ``Rmd:276-296``).
 - E3 σ step: closed form σ̂² = mean(n_v_sq)/(n−2), the exact optimum of the
   reference's 1-D objective (``Rmd:298-310``; same maximizer, no search).
 - E4 β step: damped Newton with analytic gradient AND Hessian, each
@@ -31,10 +34,9 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from data_integration_spark.functions.rng import replicate_numbers, seeded_normal
-from data_integration_spark.sources.local import local_table
+from data_integration_spark.functions.rng import replicate_normals
 from data_integration_spark.stats.design import CellArrays, cell_arrays, outcome_cells
 from data_integration_spark.stats.optimize import golden_max, newton_minimize
 
@@ -54,29 +56,6 @@ def _expit(z: np.ndarray) -> np.ndarray:
     return out
 
 
-def laplace_one_area(
-    xb: np.ndarray,
-    y: np.ndarray,
-    m: np.ndarray,
-    sigma: float,
-    v_bounds: tuple[float, float] = (-3.0, 3.0),
-    tol: float = 1e-6,
-) -> tuple[float, float]:
-    """Maximize log g(v) = −v²/2σ² + Σ m·[y·logθ + (1−y)·log(1−θ)],
-    θ = expit(xb+v) (``Rmd:253-262``, in logs for stability); returns
-    (v̂, τ̂²) with τ̂² = 1/(1/σ² + Σ m·θ'(xb+v̂)) (``Rmd:264-266``)."""
-
-    def log_g(v: float) -> float:
-        z = xb + v
-        nll = y * _softplus(-z) + (1.0 - y) * _softplus(z)
-        return -(v * v) / (2.0 * sigma * sigma) - float(np.dot(m, nll))
-
-    v_hat, _ = golden_max(log_g, v_bounds[0], v_bounds[1], tol=tol)
-    p = _expit(xb + v_hat)
-    tau_sq = 1.0 / (1.0 / (sigma * sigma) + float(np.dot(m, p * (1.0 - p))))
-    return v_hat, tau_sq
-
-
 def collect_cells(survey: DataFrame | pd.DataFrame) -> tuple[CellArrays, np.ndarray]:
     """The survey's ``outcome_cells`` as arrays, and the unit count ni per
     area (aligned with ``cells.states``)."""
@@ -86,24 +65,11 @@ def collect_cells(survey: DataFrame | pd.DataFrame) -> tuple[CellArrays, np.ndar
     return cells, ni
 
 
-def draw_matrix(
-    spark: SparkSession, states: list[str], n_reps: int, seed: int
-) -> np.ndarray:
+def draw_matrix(states: list[str], n_reps: int, seed: int) -> np.ndarray:
     """(n_reps, areas) standard normals: row r−1, column s holds
     ``seeded_normal(state, r, salt=seed)`` for the ``int`` replicate
-    number r, bit-stable across partitionings."""
-    draws = (
-        local_table(spark, [(s,) for s in states], "state string")
-        .select("state", replicate_numbers(n_reps, "n_reps").alias("r"))
-        .withColumn("z", seeded_normal("state", "r", salt=seed))
-        .toPandas()
-    )
-    s_idx = {s: i for i, s in enumerate(states)}
-    z = np.zeros((n_reps, len(states)))
-    z[draws["r"].to_numpy() - 1, draws["state"].map(s_idx).to_numpy()] = (
-        draws["z"].to_numpy()
-    )
-    return z
+    number r, computed on the driver."""
+    return replicate_normals(states, n_reps, seed, "n_reps")
 
 
 def e_step(
@@ -114,8 +80,9 @@ def e_step(
     sigma: float,
     v_bounds: tuple[float, float],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
-    """E1–E3 at (β, σ): per-area (v̂, τ̂²), the draws ṽ = v̂ + τ̂·z, and the
-    closed-form σ² = mean_r(Σ_s ni_s·ṽ²_{r,s}) / (n−2) before clamping.
+    """E1–E3 at (β, σ): per-area Laplace (v̂, τ̂²), the draws ṽ = v̂ + τ̂·z,
+    and the closed-form σ² = mean_r(Σ_s ni_s·ṽ²_{r,s}) / (n−2) before
+    clamping.
 
     The base z is FIXED across outer iterations (common random numbers):
     unlike the reference's fresh rnorm per call (``Rmd:283``), the MC
@@ -123,13 +90,22 @@ def e_step(
     monotonically instead of rattling inside MC noise. Documented
     deviation."""
     xb = cells.X @ beta
-    v_hat = np.zeros(len(cells.states))
-    tau_sq = np.zeros(len(cells.states))
-    for si in range(len(cells.states)):
-        sel = cells.state_idx == si
-        v_hat[si], tau_sq[si] = laplace_one_area(
-            xb[sel], cells.y[sel], cells.m[sel], sigma, v_bounds
-        )
+    s_idx, m, y = cells.state_idx, cells.m, cells.y
+    n_areas = len(cells.states)
+
+    def log_g(v: np.ndarray) -> np.ndarray:
+        """Per area, log g(v) = −v²/2σ² + Σ m·[y·logθ + (1−y)·log(1−θ)],
+        θ = expit(xb+v) (``Rmd:253-262``, in logs for stability)."""
+        z = xb + v[s_idx]
+        nll = y * _softplus(-z) + (1.0 - y) * _softplus(z)
+        return -(v * v) / (2.0 * sigma * sigma) - np.bincount(s_idx, m * nll, n_areas)
+
+    lo, hi = (np.full(n_areas, float(b)) for b in v_bounds)
+    v_hat = golden_max(log_g, lo, hi, tol=1e-6)
+    # τ̂² = 1/(1/σ² + Σ m·θ'(xb+v̂)) (``Rmd:264-266``)
+    p = _expit(xb + v_hat[s_idx])
+    info = np.bincount(s_idx, m * (p * (1.0 - p)), n_areas)
+    tau_sq = 1.0 / (1.0 / (sigma * sigma) + info)
     v_tilde = v_hat[None, :] + np.sqrt(tau_sq)[None, :] * z
     mean_nvsq = float(np.mean((v_tilde * v_tilde) @ ni))
     sigma_sq = mean_nvsq / max(float(cells.m.sum()) - 2.0, 1.0)
@@ -173,11 +149,6 @@ class EMResult:
     n_iter: int
     converged: bool
     history: list[dict] = field(default_factory=list)
-
-    def v_hat_df(self, spark: SparkSession) -> DataFrame:
-        return local_table(
-            spark, self.v_hat, "state string, ni long, v_hat double, tau_hat_sq double"
-        )
 
 
 class EMEstimator:
@@ -224,8 +195,7 @@ class EMEstimator:
         sigma = float(sigma_init)
         cells, ni = collect_cells(survey)
         if draws is None:
-            spark = SparkSession.active()
-            draws = draw_matrix(spark, cells.states, self.n_reps, self.seed)
+            draws = draw_matrix(cells.states, self.n_reps, self.seed)
         if draws.shape != (self.n_reps, len(cells.states)):
             raise ValueError(f"draws must be (n_reps, areas), got {draws.shape}")
 
@@ -284,9 +254,7 @@ def em_stationarity_certificate(
     beta = np.asarray(result.beta_hat, float)
     sigma = float(result.sigma_hat)
     cells, ni = collect_cells(survey)
-    z = draw_matrix(
-        survey.sparkSession, cells.states, estimator.n_reps, estimator.seed
-    )
+    z = draw_matrix(cells.states, estimator.n_reps, estimator.seed)
     _, _, v_tilde, sigma_sq_star = e_step(
         cells, ni, z, beta, sigma, estimator.v_bounds
     )

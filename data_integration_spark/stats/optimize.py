@@ -1,9 +1,11 @@
 """Pure-NumPy optimizers (SciPy is not available in this environment).
 
-- ``golden_max``: 1-D bounded maximization — replaces R's ``optimize()``
-  (golden-section + parabolic in R; plain golden-section here, tolerance-
-  compatible) used by the reference at ``Method_code.Rmd:262`` (per-area
-  Laplace step) and ``Rmd:308-310`` (σ step; we use the closed form).
+- ``golden_max``: bounded 1-D maximization of many objectives at once —
+  replaces R's ``optimize()`` (golden-section + parabolic in R; plain
+  golden-section here, tolerance-compatible), which the reference calls
+  once per area at ``Method_code.Rmd:262`` (Laplace step; here one search
+  over all areas, each objective evaluation one vectorized pass) and at
+  ``Rmd:308-310`` (σ step; we use the closed form).
 - ``newton_minimize``: damped Newton for smooth convex objectives with
   analytic gradient+Hessian — replaces ``optimParallel`` L-BFGS-B with
   forward-difference gradients (``Rmd:337``). The β-objective is a
@@ -24,24 +26,36 @@ _INVPHI = (math.sqrt(5.0) - 1.0) / 2.0
 
 
 def golden_max(
-    f: Callable[[float], float], lo: float, hi: float, tol: float = 1e-6
-) -> tuple[float, float]:
-    """Maximize unimodal ``f`` on [lo, hi]; returns (argmax, max)."""
-    a, b = lo, hi
+    f: Callable[[np.ndarray], np.ndarray],
+    lo: np.ndarray,
+    hi: np.ndarray,
+    tol: float = 1e-6,
+) -> np.ndarray:
+    """Maximize many unimodal 1-D objectives at once, one per coordinate of
+    the brackets [lo, hi]: ``f(x)`` returns every coordinate's objective
+    at the points ``x``. Each coordinate runs its own golden-section
+    search, with the arithmetic and stopping rule of a scalar one; a
+    coordinate whose bracket is within ``tol`` keeps it while the others
+    go on. Returns the argmax of each."""
+    a, b = np.array(lo, dtype=float), np.array(hi, dtype=float)
     c = b - _INVPHI * (b - a)
     d = a + _INVPHI * (b - a)
     fc, fd = f(c), f(d)
-    while (b - a) > tol:
-        if fc > fd:
-            b, d, fd = d, c, fc
-            c = b - _INVPHI * (b - a)
-            fc = f(c)
-        else:
-            a, c, fc = c, d, fd
-            d = a + _INVPHI * (b - a)
-            fd = f(d)
-    x = (a + b) / 2.0
-    return x, f(x)
+    active = (b - a) > tol
+    while active.any():
+        left = active & (fc > fd)  # the max is in [a, d]: probe a new c
+        right = active & ~(fc > fd)  # the max is in [c, b]: probe a new d
+        b = np.where(left, d, b)
+        a = np.where(right, c, a)
+        d, fd = np.where(left, c, d), np.where(left, fc, fd)
+        c, fc = np.where(right, d, c), np.where(right, fd, fc)
+        c = np.where(left, b - _INVPHI * (b - a), c)
+        d = np.where(right, a + _INVPHI * (b - a), d)
+        f_new = f(np.where(left, c, d))
+        fc = np.where(left, f_new, fc)
+        fd = np.where(right, f_new, fd)
+        active = (b - a) > tol
+    return (a + b) / 2.0
 
 
 def newton_minimize(

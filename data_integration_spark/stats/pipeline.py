@@ -7,10 +7,12 @@ the big survey → direct survey-weighted estimates → comparison vs actuals
 
 Driver-side Python orchestrates. Unit rows are read only inside Spark
 aggregations, each collected once and none per bootstrap replicate: the
-small survey's outcome cells (fit by the GLM and the EM), the big survey's
-scoring cells (scored by EBP and the bootstrap), the direct estimates, and
-the bootstrap's simulated cells and truth. The rest runs in NumPy/pandas on
-those design-bounded tables, and the report as SQL over local views of them.
+small survey's outcome cells (fit by the GLM and the EM, and summed into
+the direct estimates), the big survey's scoring cells (scored by EBP and
+the bootstrap), and the bootstrap's simulated cells and truth; the
+actuals are collected as they are. The rest runs in NumPy/pandas on those
+design-bounded tables, the hash-seeded area draws included, and the
+report as SQL over local views of them.
 """
 
 from __future__ import annotations
@@ -77,11 +79,11 @@ def run_pipeline(
     ebp = ebp_estimates(
         big_cells,
         fit.beta_hat,
-        draw_table(fit.v_hat_df(spark), ebp_draws, seed),
+        draw_table(fit.v_hat, ebp_draws, seed),
         est_alias="EM_est",
     )
     # 4. direct estimates (Rmd:456-473)
-    direct = direct_estimates(survey_small)
+    direct = direct_estimates(small_cells)
     # 5. comparison vs actuals (outer merge on state, Rmd:466-472)
     comp = comparison_table(actuals, [direct, ebp])
     errors = error_summary(comp, "actual", ["direct", "EM_est"])

@@ -40,7 +40,8 @@ def test_reference_workflow_through_api(engine):
 
 def test_engine_and_pipeline_draw_the_same_ebp(spark):
     """For the same fit and seed, ``Engine`` and ``run_pipeline`` must score
-    EBP with the same draws: both build them with ``ebp.draw_table``."""
+    EBP with the same draws: both make them on the driver with
+    ``ebp.draw_table`` from the fit's (state, v_hat, tau_hat_sq) table."""
     from data_integration_spark.stats.pipeline import run_pipeline
 
     fx = make_fixtures(n_states=6, big_per_state=(50, 80))
@@ -63,8 +64,9 @@ def test_engine_and_pipeline_draw_the_same_ebp(spark):
 def test_engine_collects_small_cells_once(spark, count_jobs):
     """``fit_glm`` and ``fit_em`` fit one collected cell table of the small
     survey: together they run its query once (2 jobs: the shuffle map
-    stage and the result) plus the EM's draw matrix (1 job). ``load``
-    drops the cells, so the same pair after a reload costs the same."""
+    stage and the result); the EM's draw matrix is made on the driver.
+    ``load`` drops the cells, so the same pair after a reload costs the
+    same."""
     fx = make_fixtures(n_states=6, big_per_state=(50, 80))
     small, big, actuals = (
         spark.createDataFrame(fx[k]).cache()
@@ -80,9 +82,30 @@ def test_engine_collects_small_cells_once(spark, count_jobs):
     try:
         for load in (1, 2):
             eng.load(small, big, actuals)
-            assert count_jobs(f"pin_engine_fits_{load}", fits) == 3
+            assert count_jobs(f"pin_engine_fits_{load}", fits) == 2
     finally:
         small.unpersist()
+
+
+def test_engine_direct_estimates_and_draws_run_no_job(spark, count_jobs):
+    """After the fits, the direct estimates sum the small survey's cached
+    outcome cells and the EBP draws are made on the driver, returned as
+    a local table: neither runs a Spark job."""
+    fx = make_fixtures(n_states=6, big_per_state=(50, 80))
+    small, big, actuals = (
+        spark.createDataFrame(fx[k])
+        for k in ("survey_small", "survey_big", "actual_result")
+    )
+    eng = Engine(spark, seed=7).load(small, big, actuals)
+    eng.fit_em(n_reps=20, tol=0.0, max_iter=2)
+    out = {}
+    direct = lambda: out.update(d=eng.direct_estimates())
+    draws = lambda: out.update(v=eng.ebp_draws(10))
+    assert count_jobs("pin_engine_direct", direct) == 0
+    assert count_jobs("pin_engine_draws", draws) == 0
+    assert len(out["d"]) == fx["survey_small"]["state"].nunique()
+    assert out["v"].columns == ["state", "r", "v_tilde"]
+    assert out["v"].count() == 10 * len(eng.em_fit.v_hat)
 
 
 def test_em_on_simulated_helper(spark, engine):

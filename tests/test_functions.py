@@ -10,7 +10,16 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from data_integration_spark.functions.math import expit, linear_predictor, logit
-from data_integration_spark.functions.rng import bernoulli, hash_uniform, seeded_normal
+from data_integration_spark.functions.rng import (
+    bernoulli,
+    driver_normal,
+    driver_uniform,
+    driver_xxhash64,
+    hash_uniform,
+    replicate_normals,
+    replicate_numbers,
+    seeded_normal,
+)
 from data_integration_spark.functions.stats import (
     error_measures,
     mspe_by_group,
@@ -173,6 +182,58 @@ def test_seeded_normal_moments(spark):
     ).agg(F.avg("v"), F.stddev("v")).collect()[0]
     assert abs(stats[0] - 2.0) < 0.1
     assert abs(stats[1] - 3.0) < 0.1
+
+
+#: string keys for the driver twin: empty, non-ASCII, null, and around the
+#: 32-byte stripe of xxhash64's long-input path (é is 2 bytes, 中 3, 🙂 4)
+_HASH_STRINGS = [
+    "", "S00", "é", "中文", "🙂x", "a" * 31, "b" * 32, "c" * 33, "é" * 16,
+    "中" * 11, "d" * 64, "e" * 71, "🙂" * 9, "mixé中🙂 key", None,
+]
+_HASH_INTS = [1, 2, 7, 1000, 0, -1, -(2**31), 2**31 - 1]
+_HASH_SALTS = [-5, 0, 1, 85, 100000, 2**31, -(2**40)]  # the last two are long
+
+
+def test_driver_draws_equal_spark_draws(spark):
+    """The driver's xxhash64 and uniforms equal Spark's ``xxhash64`` and
+    ``hash_uniform`` bit for bit on (string, int, salt) keys, int and long
+    salts included; its normals agree with ``seeded_normal`` to 4e-15
+    (the JVM's log and cos are not the C library's), also as the (r, area)
+    matrix of ``replicate_normals`` against ``replicate_numbers``."""
+    import numpy as np
+
+    rows = [(s, r) for s in _HASH_STRINGS for r in _HASH_INTS]
+    df = spark.createDataFrame(rows, "s string, r int")
+    cols = []
+    for i, salt in enumerate(_HASH_SALTS):
+        cols += [
+            F.xxhash64("s", "r", F.lit(salt)).alias(f"h{i}"),
+            hash_uniform("s", "r", salt=salt).alias(f"u{i}"),
+            seeded_normal("s", "r", salt=salt).alias(f"z{i}"),
+        ]
+    got = df.select("s", "r", *cols).toPandas()
+    keys = (got["s"].to_numpy(object), got["r"].to_numpy(np.int32))
+    for i, salt in enumerate(_HASH_SALTS):
+        h = driver_xxhash64(*keys, salt).astype(np.int64)
+        np.testing.assert_array_equal(h, got[f"h{i}"].to_numpy())
+        np.testing.assert_array_equal(
+            driver_uniform(*keys, salt=salt), got[f"u{i}"].to_numpy()
+        )
+        z = driver_normal(*keys, salt=salt)
+        np.testing.assert_allclose(z, got[f"z{i}"].to_numpy(), rtol=0, atol=4e-15)
+
+    states = ["S00", "S01", "中"]
+    spark_draws = (
+        spark.createDataFrame([(s,) for s in states], "state string")
+        .select("state", replicate_numbers(5, "n").alias("r"))
+        .select("state", "r", seeded_normal("state", "r", salt=42).alias("z"))
+        .toPandas()
+    )
+    want = np.zeros((5, len(states)))
+    col = spark_draws["state"].map(states.index)
+    want[spark_draws["r"] - 1, col] = spark_draws["z"]
+    got_m = replicate_normals(states, 5, 42, "n")
+    np.testing.assert_allclose(got_m, want, rtol=0, atol=4e-15)
 
 
 def test_bernoulli_rate(spark):

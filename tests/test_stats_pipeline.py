@@ -4,7 +4,11 @@ synthetic surveys."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_integration_spark.stats.em import EMEstimator
@@ -229,6 +233,8 @@ def test_counts_below_one_raise(spark, fx, call):
     """``sequence(1, 0)`` counts down, so a count of 0 would silently draw
     replicates 1 and 0; every entry point that builds one must refuse a
     count below 1, naming the parameter."""
+    import pandas as pd
+
     from data_integration_spark.stats.bootstrap import (
         parametric_bootstrap,
         simulated_truth,
@@ -237,8 +243,8 @@ def test_counts_below_one_raise(spark, fx, call):
 
     small = spark.createDataFrame(fx["survey_small"].head(50))
     big = spark.createDataFrame(fx["survey_big"].head(50))
-    v_hat = spark.createDataFrame(
-        [("S00", 0.1, 0.04)], "state string, v_hat double, tau_hat_sq double"
+    v_hat = pd.DataFrame(
+        [("S00", 0.1, 0.04)], columns=["state", "v_hat", "tau_hat_sq"]
     )
     calls = {
         "draw_table": (lambda: draw_table(v_hat, 0, 3), "n_draws"),
@@ -287,3 +293,82 @@ def test_simulated_truth_equals_per_rep_simulation(spark, fx):
         assert got == want
     finally:
         big.unpersist()
+
+
+def _direct_via_spark(df):
+    """The direct estimates as ``survey_mean_se`` computes them in Spark,
+    by state."""
+    from data_integration_spark.functions.stats import survey_mean_se
+
+    out = survey_mean_se(
+        df, "state", F.col("demvote").cast("double"), F.col("weight")
+    ).collect()
+    return {r.state: (r["mean"], r["se"]) for r in out}
+
+
+def _assert_direct_equal(got, want):
+    assert set(got["state"]) == set(want)
+    for r in got.itertuples():
+        mean, se = want[r.state]
+        for a, b in ((r.direct, mean), (r.direct_SE, se)):
+            if b is None:
+                assert math.isnan(a), (r.state, a)
+            else:
+                assert abs(a - 100.0 * b) <= 1e-12 * abs(100.0 * b), (r.state, a, b)
+
+
+def test_direct_from_cells_equals_survey_mean_se(spark, fx):
+    """The direct estimates summed from the small survey's outcome cells
+    equal ``survey_mean_se`` over its units, to 1e-12 relative."""
+    from data_integration_spark.stats.design import outcome_cells
+    from data_integration_spark.stats.ebp import direct_estimates
+
+    df = spark.createDataFrame(fx["survey_small"])
+    got = direct_estimates(outcome_cells(df))
+    assert len(got) == 49
+    _assert_direct_equal(got, _direct_via_spark(df))
+
+
+_unit = st.fixed_dictionaries(
+    {
+        "state": st.sampled_from(["A", "B", "C"]),
+        "demvote": st.one_of(st.none(), st.integers(0, 1)),
+        "weight": st.one_of(st.none(), st.floats(0.05, 40.0)),
+        "age4": st.sampled_from(["18-29", "45-64"]),
+        "gender": st.sampled_from(["male", "female"]),
+        "race3": st.sampled_from(["white", "black", "hispanic"]),
+        "educ4": st.sampled_from(["HS", "col grad", "postgrad"]),
+        "obama12": st.just(0.55),
+    }
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    units=st.lists(_unit, min_size=1, max_size=40),
+    one=_unit,
+    const=st.lists(_unit, min_size=2, max_size=6),
+    const_y=st.integers(0, 1),
+)
+def test_direct_from_cells_keeps_survey_rules(spark, units, one, const, const_y):
+    """Direct-from-cells equals ``survey_mean_se`` on surveys that hold a
+    null weight, a one-unit area and a constant-y area; the last two
+    have SE exactly 0."""
+    from data_integration_spark.stats.design import outcome_cells
+    from data_integration_spark.stats.ebp import direct_estimates
+
+    rows = list(units) + [{**units[0], "weight": None}]
+    rows.append({**one, "state": "ONE", "demvote": 1, "weight": 2.5})
+    rows += [
+        {**u, "state": "CONST", "demvote": const_y, "weight": u["weight"] or 1.0}
+        for u in const
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "state string, demvote int, weight double, age4 string, gender string, "
+        "race3 string, educ4 string, obama12 double",
+    )
+    got = direct_estimates(outcome_cells(df))
+    _assert_direct_equal(got, _direct_via_spark(df))
+    se = dict(zip(got["state"], got["direct_SE"]))
+    assert se["ONE"] == 0.0 and se["CONST"] == 0.0

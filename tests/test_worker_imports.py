@@ -46,6 +46,32 @@ def test_vanilla_session_foreign_cwd_worker_imports():
     )
 
 
+def _checkout_files() -> dict[str, int]:
+    out = {}
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if d not in (".git", "__pycache__")]
+        for f in files:
+            path = os.path.join(root, f)
+            out[path] = os.stat(path).st_mtime_ns
+    return out
+
+
+def test_worker_imports_write_nothing_under_the_checkout(spark, monkeypatch):
+    """Shipping the package builds its zip under the process's scratch
+    root, outside the checkout, and leaves the checkout's files as they
+    were."""
+    from data_integration_spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "_PYFILE_SHIPPED", set())
+    monkeypatch.setattr(catalog, "_PKG_ZIP", None)
+    before = _checkout_files()
+    catalog.ensure_worker_imports(spark)
+    assert _checkout_files() == before
+    zip_path = catalog._PKG_ZIP
+    assert os.path.isfile(zip_path)
+    assert not os.path.realpath(zip_path).startswith(os.path.realpath(REPO) + os.sep)
+
+
 def test_query_index_is_current():
     """QUERIES.md must match the live registry (regenerate with
     tools/gen_query_index.py when adding queries)."""
