@@ -1,9 +1,19 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata structs.
 
-The Spark-side mechanics are REAL and tested — schemas, Arrow batch shapes,
-``mapInPandas`` partitioning, metadata propagation. Decoding (r8, VERDICT
-r7 #7): uncompressed BMP images and PCM WAV audio decode with REAL
+Every op that reads payload bytes runs through ``map_items``. It selects
+``id_col AS item_id`` and the payload, runs ONE Arrow-batched
+``mapInPandas`` with the op's schema, and calls the op's per-item
+function ``fn(payload: bytes)``, which returns that item's output rows
+without the ``item_id`` (1→N: one row per decoded item, one per sampled
+frame). With a ``fail_row``, any exception from ``fn`` turns the item
+into the single row ``(item_id, *fail_row)`` — the ``ok=False`` row of a
+corrupt payload; no partial rows of a failed item are kept. Without one,
+the error propagates and fails the job. Each op checks its parameters
+BEFORE calling ``map_items``, so a bad argument raises on the driver
+before any job instead of turning every item into an ``ok=False`` row.
+
+Decoding: uncompressed BMP images and PCM WAV audio decode with REAL
 pure-Python/stdlib codecs in-container (``_decode_bmp`` parses the
 BITMAPINFOHEADER and pixel rows with padding; ``_decode_wav`` rides the
 stdlib ``wave`` parser + numpy sample decode). Other formats (JPEG/PNG/…)
@@ -23,12 +33,13 @@ from __future__ import annotations
 import hashlib
 import io
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 try:  # optional codec for compressed formats — absent in this container
     from PIL import Image as _PIL_Image  # type: ignore[import-not-found]
@@ -55,8 +66,44 @@ AUDIO_SCHEMA = (
     "mean_abs double, ok boolean"
 )
 FEATURE_DIM = 16
-FEATURE_SCHEMA = f"item_id long, feature array<float>"
+FEATURE_SCHEMA = "item_id long, feature array<float>"
 FRAME_SCHEMA = "item_id long, frame_index int, frame_sha string"
+
+
+def map_items(
+    df: DataFrame,
+    id_col: str,
+    binary_col: str,
+    schema: str,
+    fn: Callable[[bytes], Iterable[tuple]],
+    fail_row: tuple | None = None,
+) -> DataFrame:
+    """Run the per-item function ``fn`` over ``binary_col`` in one
+    Arrow-batched ``mapInPandas`` with output ``schema`` (DDL whose first
+    column is ``item_id long``). ``fn(payload)`` returns the item's rows
+    without ``item_id``; each is emitted as ``(item_id, *row)``. With
+    ``fail_row``, an exception from ``fn`` emits exactly
+    ``(item_id, *fail_row)`` for that item and none of its other rows;
+    without it, the exception propagates."""
+    out_schema = StructType.fromDDL(schema)
+    columns = out_schema.names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
+                try:
+                    out = list(fn(bytes(payload)))
+                except Exception:  # noqa: BLE001 — corrupt payloads yield fail_row
+                    if fail_row is None:
+                        raise
+                    out = [fail_row]
+                rows.extend((item_id, *row) for row in out)
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.select(
+        F.col(id_col).alias("item_id"), F.col(binary_col).alias("payload")
+    ).mapInPandas(run, out_schema)
 
 
 def encode_bmp(width: int, height: int, fill: int) -> bytes:
@@ -340,29 +387,13 @@ def _decode_bytes_full(payload: bytes) -> tuple[int, int, int, float]:
 def decode_images(
     df: DataFrame, id_col: str = "item_id", binary_col: str = "payload"
 ) -> DataFrame:
-    """mapInPandas decode: binary → (dims, mean_pixel, ok). Arrow-batched;
-    one Python worker pass per batch, schema fixed up front."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    w, h, c, m = _decode_bytes_full(bytes(payload))
-                    rows.append((item_id, w, h, c, m, True))
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, 0, 0, 0.0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "width", "height", "n_channels",
-                    "mean_pixel", "ok",
-                ],
-            )
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(decode, DECODED_SCHEMA)
+    """Image decode: binary → (dims, mean_pixel, ok); corrupt payloads
+    yield ok=False."""
+    return map_items(
+        df, id_col, binary_col, DECODED_SCHEMA,
+        lambda p: [(*_decode_bytes_full(p), True)],
+        fail_row=(0, 0, 0, 0.0, False),
+    )
 
 
 VIDEO_FRAME_SCHEMA = (
@@ -412,55 +443,43 @@ def sample_video_frames(
     executor's broad except must only ever see data errors)."""
     if every_n < 1 or max_frames < 1:
         raise ValueError("need every_n >= 1 and max_frames >= 1")
+    return map_items(
+        df, id_col, binary_col, VIDEO_FRAME_SCHEMA,
+        lambda p: _video_frames(p, every_n, max_frames),
+        fail_row=(-1, 0, 0, 0.0, False),
+    )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                data = bytes(payload)
-                item_rows = []  # committed only if the WHOLE walk succeeds
-                try:
-                    if data[:4] != b"VID0":
-                        raise ValueError("not a VID0 container")
-                    pos, idx, taken = 4, 0, 0
-                    while pos < len(data) and taken < max_frames:
-                        if pos + 4 > len(data):
-                            raise ValueError("truncated frame header")
-                        (ln,) = struct.unpack_from("<I", data, pos)
-                        pos += 4
-                        if pos + ln > len(data):
-                            raise ValueError("truncated frame body")
-                        if idx % every_n == 0:
-                            w, h, _c, m = _decode_bmp(data[pos : pos + ln])
-                            item_rows.append((item_id, idx, w, h, m, True))
-                            taken += 1
-                        elif ln < _BMP_MIN_SIZE or data[pos : pos + 2] != b"BM":
-                            # skipped frames in the walked prefix still get
-                            # a structure check — cheap corruption detection
-                            # without a full decode. The ln guard keeps the
-                            # sniff INSIDE the frame: a <2-byte frame's
-                            # slice would otherwise read the next frame's
-                            # length prefix (and no valid BMP is smaller
-                            # than _BMP_MIN_SIZE)
-                            raise ValueError("skipped frame not a BMP")
-                        pos += ln
-                        idx += 1
-                    if not item_rows:  # valid but zero-frame container
-                        item_rows.append((item_id, -1, 0, 0, 0.0, True))
-                    rows.extend(item_rows)
-                except Exception:  # noqa: BLE001 — corrupt containers yield ok=False
-                    rows.append((item_id, -1, 0, 0, 0.0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "frame_index", "width", "height",
-                    "mean_pixel", "ok",
-                ],
-            )
 
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(sample, VIDEO_FRAME_SCHEMA)
+def _video_frames(
+    data: bytes, every_n: int, max_frames: int
+) -> list[tuple[int, int, int, float, bool]]:
+    """Walk one VID0 container (see ``sample_video_frames``) → its
+    (frame_index, width, height, mean_pixel, ok) rows; raises on a
+    malformed container or a corrupt walked frame."""
+    if data[:4] != b"VID0":
+        raise ValueError("not a VID0 container")
+    rows = []
+    pos, idx = 4, 0
+    while pos < len(data) and len(rows) < max_frames:
+        if pos + 4 > len(data):
+            raise ValueError("truncated frame header")
+        (ln,) = struct.unpack_from("<I", data, pos)
+        pos += 4
+        if pos + ln > len(data):
+            raise ValueError("truncated frame body")
+        if idx % every_n == 0:
+            w, h, _c, m = _decode_bmp(data[pos : pos + ln])
+            rows.append((idx, w, h, m, True))
+        elif ln < _BMP_MIN_SIZE or data[pos : pos + 2] != b"BM":
+            # skipped frames in the walked prefix still get a structure
+            # check — cheap corruption detection without a full decode.
+            # The ln guard keeps the sniff INSIDE the frame: a <2-byte
+            # frame's slice would otherwise read the next frame's length
+            # prefix (and no valid BMP is smaller than _BMP_MIN_SIZE)
+            raise ValueError("skipped frame not a BMP")
+        pos += ln
+        idx += 1
+    return rows or [(-1, 0, 0, 0.0, True)]  # valid but zero-frame container
 
 
 RESIZED_SCHEMA = (
@@ -497,30 +516,19 @@ def resize_images(
     if width <= 0 or height <= 0:
         raise ValueError("target dims must be positive")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    arr = _decode_bmp_pixels(bytes(payload))
-                    if arr.shape[2] == 1:
-                        arr = np.repeat(arr, 3, axis=2)
-                    elif arr.shape[2] == 4:
-                        arr = arr[:, :, :3]
-                    out = _resize_pixels(arr, width, height)
-                    rows.append(
-                        (item_id, _encode_bmp_pixels(out), width, height, True)
-                    )
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, b"", 0, 0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["item_id", "payload", "width", "height", "ok"],
-            )
+    def resize(payload: bytes) -> list[tuple]:
+        arr = _decode_bmp_pixels(payload)
+        if arr.shape[2] == 1:
+            arr = np.repeat(arr, 3, axis=2)
+        elif arr.shape[2] == 4:
+            arr = arr[:, :, :3]
+        out = _resize_pixels(arr, width, height)
+        return [(_encode_bmp_pixels(out), width, height, True)]
 
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(resize, RESIZED_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, RESIZED_SCHEMA, resize,
+        fail_row=(b"", 0, 0, False),
+    )
 
 
 DHASH_SCHEMA = "item_id long, dhash long, ok boolean"
@@ -563,22 +571,11 @@ def image_dhash(
     the scan partitioning — no shuffle, no driver traffic."""
     if hash_w < 1 or hash_h < 1 or hash_w * hash_h > 62:
         raise ValueError("need 1 <= hash_w*hash_h <= 62 (positive int64)")
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    rows.append(
-                        (item_id, _dhash_bits(bytes(payload), hash_w, hash_h), True)
-                    )
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, False))
-            yield pd.DataFrame(rows, columns=["item_id", "dhash", "ok"])
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(fingerprint, DHASH_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, DHASH_SCHEMA,
+        lambda p: [(_dhash_bits(p, hash_w, hash_h), True)],
+        fail_row=(0, False),
+    )
 
 
 PHASH_SCHEMA = "item_id long, phash long, ok boolean"
@@ -641,26 +638,11 @@ def image_phash(
     intersection now has both standard perceptual-hash constructions.
     Junk payloads surface ok=False; decode/DCT work rides the scan
     partitioning — no shuffle, no driver traffic."""
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    rows.append(
-                        (
-                            item_id,
-                            _phash_bits(bytes(payload), hash_size, img_size),
-                            True,
-                        )
-                    )
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, False))
-            yield pd.DataFrame(rows, columns=["item_id", "phash", "ok"])
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(fingerprint, PHASH_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, PHASH_SCHEMA,
+        lambda p: [(_phash_bits(p, hash_size, img_size), True)],
+        fail_row=(0, False),
+    )
 
 
 AUDIO_FEATURE_SCHEMA = (
@@ -773,25 +755,11 @@ def audio_features(
             f"n_bands must be in [1, n_fft//2+1] = [1, {n_fft // 2 + 1}] "
             "(more bands than rfft bins yields empty bands -> NaN)"
         )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    nf, feat = _wav_band_features(
-                        bytes(payload), n_fft, hop, n_bands
-                    )
-                    rows.append((item_id, nf, feat, True))
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, [0.0] * n_bands, False))
-            yield pd.DataFrame(
-                rows, columns=["item_id", "n_frames", "feature", "ok"]
-            )
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(extract, AUDIO_FEATURE_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, AUDIO_FEATURE_SCHEMA,
+        lambda p: [(*_wav_band_features(p, n_fft, hop, n_bands), True)],
+        fail_row=(0, [0.0] * n_bands, False),
+    )
 
 
 AUDIO_FP_SCHEMA = "item_id long, afp long, ok boolean"
@@ -844,22 +812,11 @@ def audio_fingerprint(
         raise ValueError("need frame_len >= 1")
     if not (1 <= n_bits <= 62):
         raise ValueError("need 1 <= n_bits <= 62 (positive int64)")
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    rows.append(
-                        (item_id, _audio_fp_bits(bytes(payload), frame_len, n_bits), True)
-                    )
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, False))
-            yield pd.DataFrame(rows, columns=["item_id", "afp", "ok"])
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(fingerprint, AUDIO_FP_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, AUDIO_FP_SCHEMA,
+        lambda p: [(_audio_fp_bits(p, frame_len, n_bits), True)],
+        fail_row=(0, False),
+    )
 
 
 def audio_fingerprint_spectral(
@@ -885,85 +842,51 @@ def audio_fingerprint_spectral(
         )
     if n_fft < 2 or hop < 1:
         raise ValueError("need n_fft >= 2 and hop >= 1")
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    rows.append(
-                        (
-                            item_id,
-                            _spectral_fp_bits(
-                                bytes(payload), n_fft, hop, n_bands, t_steps
-                            ),
-                            True,
-                        )
-                    )
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, False))
-            yield pd.DataFrame(rows, columns=["item_id", "afp", "ok"])
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(fingerprint, AUDIO_FP_SCHEMA)
+    return map_items(
+        df, id_col, binary_col, AUDIO_FP_SCHEMA,
+        lambda p: [(_spectral_fp_bits(p, n_fft, hop, n_bands, t_steps), True)],
+        fail_row=(0, False),
+    )
 
 
 def decode_audio(
     df: DataFrame, id_col: str = "item_id", binary_col: str = "payload"
 ) -> DataFrame:
-    """mapInPandas WAV decode: binary → (n_channels, sample_rate,
-    n_frames, mean_abs, ok) through the REAL stdlib RIFF parser. Same
-    Arrow batch flow as ``decode_images``."""
+    """WAV decode: binary → (n_channels, sample_rate, n_frames, mean_abs,
+    ok) through the REAL stdlib RIFF parser; corrupt payloads yield
+    ok=False."""
+    return map_items(
+        df, id_col, binary_col, AUDIO_SCHEMA,
+        lambda p: [(*_decode_wav(p), True)],
+        fail_row=(0, 0, 0, 0.0, False),
+    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                try:
-                    c, r, n, m = _decode_wav(bytes(payload))
-                    rows.append((item_id, c, r, n, m, True))
-                except Exception:  # noqa: BLE001 — corrupt payloads yield ok=False
-                    rows.append((item_id, 0, 0, 0, 0.0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "n_channels", "sample_rate", "n_frames",
-                    "mean_abs", "ok",
-                ],
-            )
 
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(decode, AUDIO_SCHEMA)
+def _hash_feature(payload: bytes) -> list[float]:
+    """Fixed-dim float vector from the payload's sha256: element j is the
+    mean of bytes 2j and 2j+1, over 255, in float32."""
+    h = hashlib.sha256(payload).digest()
+    vec = (
+        np.frombuffer(h[:FEATURE_DIM * 2], dtype=np.uint8)
+        .astype(np.float32)
+        .reshape(FEATURE_DIM, 2)
+        .mean(axis=1)
+        / 255.0
+    )
+    return vec.tolist()
 
 
 def extract_features(
     df: DataFrame, id_col: str = "item_id", binary_col: str = "payload"
 ) -> DataFrame:
-    """mapInPandas feature extraction: binary → fixed-dim float vector
-    (deterministic byte-hash fake; a real model would run here). Output is
-    ann.py-compatible (array<float>)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                h = hashlib.sha256(bytes(payload)).digest()
-                vec = (
-                    np.frombuffer(h[:FEATURE_DIM * 2], dtype=np.uint8)
-                    .astype(np.float32)
-                    .reshape(FEATURE_DIM, 2)
-                    .mean(axis=1)
-                    / 255.0
-                )
-                ids.append(item_id)
-                feats.append(vec.tolist())
-            yield pd.DataFrame({"item_id": ids, "feature": feats})
-
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(extract, FEATURE_SCHEMA)
+    """Feature extraction: binary → fixed-dim float vector (deterministic
+    byte-hash fake; a real model would run here). Output is
+    ann.py-compatible (array<float>). Every payload maps, so there is no
+    ok column and an error fails the job."""
+    return map_items(
+        df, id_col, binary_col, FEATURE_SCHEMA,
+        lambda p: [(_hash_feature(p),)],
+    )
 
 
 def sample_frames(
@@ -974,21 +897,12 @@ def sample_frames(
     binary_col: str = "payload",
 ) -> DataFrame:
     """Frame-sampling plumbing for video-shaped payloads: emits ≤max_frames
-    (item, frame_index, frame_sha) rows per item — a mapInPandas UDTF shape
-    (1 input row → N output rows)."""
+    (item, frame_index, frame_sha) rows per item — the UDTF shape (1 input
+    row → N output rows). An error fails the job."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf[binary_col]):
-                data = bytes(payload)
-                for i in range(min(max_frames, max(1, len(data) // every_n_bytes))):
-                    chunk = data[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    rows.append(
-                        (item_id, i, hashlib.sha256(chunk).hexdigest()[:16])
-                    )
-            yield pd.DataFrame(rows, columns=["item_id", "frame_index", "frame_sha"])
+    def sample(data: bytes) -> list[tuple[int, str]]:
+        n = min(max_frames, max(1, len(data) // every_n_bytes))
+        chunks = (data[i * every_n_bytes : (i + 1) * every_n_bytes] for i in range(n))
+        return [(i, hashlib.sha256(c).hexdigest()[:16]) for i, c in enumerate(chunks)]
 
-    return df.select(
-        F.col(id_col).alias("item_id"), F.col(binary_col)
-    ).mapInPandas(sample, FRAME_SCHEMA)
+    return map_items(df, id_col, binary_col, FRAME_SCHEMA, sample)

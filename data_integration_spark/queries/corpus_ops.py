@@ -1956,12 +1956,6 @@ def q_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     two60 = 1152921504606846976.0  # 2^60, exact in double
     k = _KMV_K
-
-    def kmv_est(cnt, hk):
-        return F.when(cnt < k, cnt.cast("double")).otherwise(
-            (k - 1) * two60 / hk
-        )
-
     w_src = Window.partitionBy("source").orderBy("h")
     # ONE corpus pass builds the per-source sketches (explode → distinct
     # → K-min window, all distributed); everything past this line is
@@ -2005,7 +1999,7 @@ def q_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = {s: np.sort(np.asarray(v, dtype=np.int64)) for s, v in by_src.items()}
 
     def est_of(arr: np.ndarray) -> float:
-        # the kmv_est expression verbatim: exact count below K, else one
+        # _kmv_engine_merge's kmv_est verbatim: exact count below K, else one
         # double division of exact integers ((k−1)·2^60 is exactly
         # representable)
         if len(arr) < k:

@@ -2,26 +2,37 @@
 binary columns (the container has no real media files; the Spark-side
 schema/batch/UDF mechanics are the real thing).
 
-``q_multimodal_decode`` (r8) exercises the REAL pure-Python BMP codec
+``q_multimodal_decode`` exercises the REAL pure-Python BMP codec
 end-to-end: documents are encoded Spark-side into genuine 24-bit BMP files
 whose dimensions and constant fill derive from SQL-expressible column
 arithmetic, then decoded back by parsing the actual headers and pixel rows
 — so DuckDB reproduces the expected decode output from the base table.
 The metadata/features/frames queries keep UTF-8 text payloads (their
 oracles ride DuckDB's sha256 hex arithmetic).
+
+Every synthesized fixture is one ``_fixture_payloads`` pass: a per-row
+encoder over a narrow projection of ``documents``.
 """
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Callable, Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_spark.dedup.components import _truncate_lineage
 from data_integration_spark.dedup.simhash import hamming_near_pairs
 from data_integration_spark.multimodal.binary_ops import (
+    _dct_matrix,
+    _encode_bmp_pixels,
     attach_binary_metadata,
     audio_features,
     audio_fingerprint,
+    audio_fingerprint_spectral,
     decode_images,
     encode_bmp,
     encode_bmp_gradient,
@@ -35,22 +46,31 @@ from data_integration_spark.multimodal.binary_ops import (
     sample_video_frames,
 )
 from data_integration_spark.queries import register
-from data_integration_spark.sources.catalog import Catalog
+from data_integration_spark.sources.catalog import Catalog, spread_scan
 from data_integration_spark.sources.local import local_table
 
 
-def _spread_scan(df: DataFrame) -> DataFrame:
-    """Parallelize the payload-synthesis ``mapInPandas`` kernels (r15
-    optimization, guide §2.5's unsplittable-input fix): the fixture
-    payload is generated FROM the id columns, so only a few bytes per
-    row cross this round-robin exchange — while WITHOUT it a single
-    small parquet file pins the whole synth→decode→hash pipeline to ONE
-    scan task (sf0.1 documents.parquet is one 594 KB file → one input
-    split → every codec kernel ran single-core). Scale-adaptive:
-    ``defaultParallelism`` tracks the cluster's cores, and at real scale
-    (many input files) the exchange still only carries the narrow id
-    projection, never payloads (guide §8: move keys, not payloads)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+def _fixture_payloads(docs: DataFrame, make: Callable[..., bytes]) -> DataFrame:
+    """(item_id long, payload binary): one synthesized payload per row of
+    ``docs``, a projection of ``documents`` with ``doc_id`` first;
+    ``make(*row)`` builds the row's payload from its column values.
+    The payload is generated FROM the narrow id columns, so the scan is
+    spread first (``spread_scan``): only those few bytes per row cross the
+    exchange, and the codec kernels downstream run on every core instead
+    of in the single scan task a small one-file table gives."""
+
+    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "item_id": pdf["doc_id"],
+                    "payload": [
+                        make(*row) for row in pdf.itertuples(index=False, name=None)
+                    ],
+                }
+            )
+
+    return spread_scan(docs).mapInPandas(enc, "item_id long, payload binary")
 
 
 def _hexbyte_sql(h: str, i: int) -> str:
@@ -87,33 +107,16 @@ def _payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bmp_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each document as a genuine 24-bit BMP whose (width, height,
     fill) derive from column arithmetic — the encode half of the real
-    codec path, itself an Arrow-batched mapInPandas pass."""
-    import pandas as pd
-
-    docs = _spread_scan(
-        Catalog(spark, sf_dir)["documents"].select("doc_id", "n_chars")
+    codec path."""
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id", "n_chars"),
+        lambda d, n: encode_bmp(4 + d % 29, 4 + n % 23, d % 256),
     )
-
-    def enc(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["doc_id"],
-                    "payload": [
-                        encode_bmp(
-                            int(4 + d % 29), int(4 + n % 23), int(d % 256)
-                        )
-                        for d, n in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
 
 
 @register("q_multimodal_decode", oracle=_DECODE_ORACLE)
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode end-to-end (r8, VERDICT r7 #7): encode each
+    """REAL image decode end-to-end: encode each
     document into an actual 24-bit BMP (mapInPandas), then decode by
     parsing the real headers + pixel rows (``_decode_bmp``). The decoded
     dims come from the BITMAPINFOHEADER and the mean pixel from the pixel
@@ -166,8 +169,8 @@ FROM h
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInPandas feature extraction → fixed-dim array<float> (ann-ready),
     projected to a canonical scalar form for the cross-engine compare: the
-    driver's canonicalizer cannot hash raw list columns (round-1 failure),
-    so the registered query emits (dim, exact integer checksums) instead.
+    driver's canonicalizer cannot hash raw list columns, so the registered
+    query emits (dim, exact integer checksums) instead.
     ``extract_features`` keeps the raw ``array<float>`` output for
     programmatic use (similarity/ann.py consumes it directly).
 
@@ -241,27 +244,10 @@ def _gradient_bmp_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-down pixel (r, c) holds gray ``(doc_id + r + 2*c) % 256``) —
     non-constant on both axes so the resize certificate sees WHICH rows
     AND columns the resampler chose, not just that bytes survived."""
-    import pandas as pd
-
-    docs = _spread_scan(
-        Catalog(spark, sf_dir)["documents"].select("doc_id", "n_chars")
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id", "n_chars"),
+        lambda d, n: encode_bmp_gradient(4 + d % 29, 4 + n % 23, d % 256),
     )
-
-    def enc(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["doc_id"],
-                    "payload": [
-                        encode_bmp_gradient(
-                            int(4 + d % 29), int(4 + n % 23), int(d % 256)
-                        )
-                        for d, n in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
 
 
 @register("q_multimodal_resize", oracle=_RESIZE_ORACLE)
@@ -309,27 +295,15 @@ def _tone_wav_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     sine at an exact FFT bin: k = 4*(doc_id%8)+2 cycles per 64-sample
     frame, so every analysis frame sees the identical spectrum and the
     tone's Hann main lobe lands wholly inside one predicted band."""
-    import numpy as np
-    import pandas as pd
 
-    docs = _spread_scan(Catalog(spark, sf_dir)["documents"].select("doc_id"))
+    def tone(d: int) -> bytes:
+        k = 4 * (d % 8) + 2
+        t = np.arange(64 + 32 * (d % 5))
+        return encode_wav(0.5 * np.sin(2.0 * np.pi * k * t / 64.0))
 
-    def enc(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                k = 4 * (d % 8) + 2
-                n = 64 + 32 * (d % 5)
-                t = np.arange(n)
-                payloads.append(
-                    encode_wav(0.5 * np.sin(2.0 * np.pi * k * t / 64.0))
-                )
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id"), tone
+    )
 
 
 @register("q_multimodal_audio_features", oracle=_AUDIO_ORACLE)
@@ -378,30 +352,12 @@ def _video_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each document as a VID0 length-prefixed container of
     1 + doc_id%5 genuine BMP frames (per-frame constant fill varies with
     the frame index, dims with the doc)."""
-    import pandas as pd
-
-    docs = _spread_scan(Catalog(spark, sf_dir)["documents"].select("doc_id"))
-
-    def enc(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payloads.append(
-                    encode_video(
-                        [
-                            encode_bmp(
-                                4 + d % 13, 3 + d % 7, (d + i) % 256
-                            )
-                            for i in range(1 + d % 5)
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id"),
+        lambda d: encode_video(
+            [encode_bmp(4 + d % 13, 3 + d % 7, (d + i) % 256) for i in range(1 + d % 5)]
+        ),
+    )
 
 
 # Fixture bit-pattern contract (shared by the Spark encoder and the SQL
@@ -439,45 +395,22 @@ def _dhash_bmp_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLANNED pattern (see _DHASH_ORACLE contract): bit (r, c) drives the
     ±10 step from pixel (r, c) to (r, c+1), so the image realizes the
     target difference structure exactly."""
-    import hashlib
 
-    import numpy as np
-    import pandas as pd
+    def planted(d: int) -> bytes:
+        g, m = d // 4, d % 4
+        base = int(hashlib.md5(str(g).encode()).hexdigest()[:14], 16)
+        arr = np.zeros((8, 8), dtype=np.int64)
+        arr[:, 0] = 100
+        for r in range(8):
+            for c in range(7):
+                k = r * 7 + c
+                bit = ((base >> k) & 1 == 1) != (k < m)
+                arr[r, c + 1] = arr[r, c] + (10 if bit else -10)
+        return _encode_bmp_pixels(np.repeat(arr.astype(np.uint8)[:, :, None], 3, axis=2))
 
-    from data_integration_spark.multimodal.binary_ops import (
-        _encode_bmp_pixels,
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id"), planted
     )
-
-    docs = _spread_scan(Catalog(spark, sf_dir)["documents"].select("doc_id"))
-
-    def enc(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                g, m = d // 4, d % 4
-                base = int(
-                    hashlib.md5(str(g).encode()).hexdigest()[:14], 16
-                )
-                arr = np.zeros((8, 8), dtype=np.int64)
-                arr[:, 0] = 100
-                for r in range(8):
-                    for c in range(7):
-                        k = r * 7 + c
-                        bit = ((base >> k) & 1 == 1) != (k < m)
-                        arr[r, c + 1] = arr[r, c] + (10 if bit else -10)
-                payloads.append(
-                    _encode_bmp_pixels(
-                        np.repeat(
-                            arr.astype(np.uint8)[:, :, None], 3, axis=2
-                        )
-                    )
-                )
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
 
 
 @register("q_image_dedup_dhash", oracle=_DHASH_ORACLE)
@@ -496,11 +429,10 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction, bit packing, block split, OR a recall-losing pair join
     all break the driver hash."""
     sig = image_dhash(_dhash_bmp_payload_df(spark, sf_dir))
-    # r15 optimization: materialize the 16-byte (id, hash) rows ONCE
-    # before the self-join — the pigeonhole join otherwise duplicates
-    # the whole synth→decode→hash lineage on BOTH sides (the corpus was
-    # decoded twice per run; guide §8: decide on small rows). Fresh per
-    # invocation (localCheckpoint never caches across runs).
+    # materialize the 16-byte (id, hash) rows ONCE before the self-join —
+    # the pigeonhole join otherwise duplicates the whole
+    # synth→decode→hash lineage on BOTH sides (decide on small rows).
+    # Fresh per invocation (localCheckpoint never caches across runs).
     fp = _truncate_lineage(
         sig.filter(F.col("ok")).select(F.col("item_id"), F.col("dhash"))
     )
@@ -559,8 +491,6 @@ WHERE BIT_COUNT(XOR(a.ph, b.ph)) <= 3
 def _phash_planned_bits(doc_id: int) -> list[bool]:
     """The oracle's planned 63-bit pattern, as pure Python (see the
     contract comment above _PHASH_ORACLE)."""
-    import hashlib
-
     g, m = doc_id // 4, doc_id % 4
     base = int(hashlib.md5(str(g).encode()).hexdigest()[:8], 16)
     bits = []
@@ -585,42 +515,22 @@ def _phash_bmp_payload_df(
     recover the structure exactly. ``max_doc_id`` bounds the fixture
     BEFORE the encode pass (the cross-modal query's bounded image side)
     so no payload is synthesized just to be filtered."""
-    import numpy as np
-    import pandas as pd
-
-    from data_integration_spark.multimodal.binary_ops import (
-        _dct_matrix,
-        _encode_bmp_pixels,
-    )
-
     docs = Catalog(spark, sf_dir)["documents"].select("doc_id")
     if max_doc_id is not None:
         # prune at the scan (PushedFilters), THEN spread for the encode
         docs = docs.filter(F.col("doc_id") < max_doc_id)
-    docs = _spread_scan(docs)
-    mag = 30.0
 
-    def enc(batches):
+    def planted(d: int) -> bytes:
+        bits = _phash_planned_bits(d)
+        C = np.zeros((32, 32))
+        C[0, 0] = 128.0 * 32.0
+        for k in range(63):
+            C[(k + 1) // 8, (k + 1) % 8] = 30.0 if bits[k] else -30.0
         D = _dct_matrix(32)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                bits = _phash_planned_bits(int(d))
-                C = np.zeros((32, 32))
-                C[0, 0] = 128.0 * 32.0
-                for k in range(63):
-                    u, v = (k + 1) // 8, (k + 1) % 8
-                    C[u, v] = mag if bits[k] else -mag
-                pix = D.T @ C @ D
-                arr = np.clip(np.rint(pix), 0, 255).astype(np.uint8)
-                payloads.append(
-                    _encode_bmp_pixels(np.repeat(arr[:, :, None], 3, axis=2))
-                )
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
-            )
+        arr = np.clip(np.rint(D.T @ C @ D), 0, 255).astype(np.uint8)
+        return _encode_bmp_pixels(np.repeat(arr[:, :, None], 3, axis=2))
 
-    return docs.mapInPandas(enc, "item_id long, payload binary")
+    return _fixture_payloads(docs, planted)
 
 
 @register("q_image_dedup_phash", oracle=_PHASH_ORACLE)
@@ -639,7 +549,7 @@ def q_image_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing, or a recall-losing pair join all break the driver hash."""
     sig = image_phash(_phash_bmp_payload_df(spark, sf_dir))
     # decode once, self-join the materialized 16-byte rows (see
-    # q_image_dedup_dhash — the same r15 double-decode fix)
+    # q_image_dedup_dhash)
     fp = _truncate_lineage(
         sig.filter(F.col("ok")).select(F.col("item_id"), F.col("phash"))
     )
@@ -696,44 +606,26 @@ def _afp_wav_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ±0.005 amplitude step from frame k to k+1 (walk from 0.5, range
     [0.22, 0.78] — each step is ~164 int16 quantization levels, so the
     decoded energy comparisons can never flip)."""
-    import hashlib
 
-    import numpy as np
-    import pandas as pd
+    def planted(d: int) -> bytes:
+        g, m = d // 4, d % 4
+        base = int(hashlib.md5(str(g).encode()).hexdigest()[:14], 16)
+        amps = [0.5]
+        for k in range(56):
+            bit = ((base >> k) & 1 == 1) != (k < m)
+            amps.append(amps[-1] + (0.005 if bit else -0.005))
+        samples = np.repeat(np.asarray(amps, dtype=np.float64), _AFP_FRAME_LEN)
+        return encode_wav(samples, rate=8000)
 
-    from data_integration_spark.multimodal.binary_ops import encode_wav
-
-    docs = _spread_scan(Catalog(spark, sf_dir)["documents"].select("doc_id"))
-
-    def enc(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                g, m = d // 4, d % 4
-                base = int(
-                    hashlib.md5(str(g).encode()).hexdigest()[:14], 16
-                )
-                amps = [0.5]
-                for k in range(56):
-                    bit = ((base >> k) & 1 == 1) != (k < m)
-                    amps.append(amps[-1] + (0.005 if bit else -0.005))
-                samples = np.repeat(
-                    np.asarray(amps, dtype=np.float64), _AFP_FRAME_LEN
-                )
-                payloads.append(encode_wav(samples, rate=8000))
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(enc, "item_id long, payload binary")
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id"), planted
+    )
 
 
 @register("q_audio_dedup_fingerprint", oracle=_AFP_ORACLE)
 def q_audio_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual AUDIO near-dup pairing — the last modality×dedup
-    intersection (image dHash landed in r10; audio dedup was byte-sha
-    exact only): REAL 56-bit energy-difference fingerprint per clip
+    intersection (audio dedup was byte-sha exact only): REAL 56-bit energy-difference fingerprint per clip
     (``binary_ops.audio_fingerprint`` — stdlib RIFF decode → mono →
     frame energies → sign-of-gradient bits, the Haitsma–Kalker
     construction), then ALL pairs within Hamming distance 3 via the
@@ -752,7 +644,7 @@ def q_audio_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bits=56,
     )
     # decode once, self-join the materialized 16-byte rows (see
-    # q_image_dedup_dhash — the same r15 double-decode fix)
+    # q_image_dedup_dhash)
     fp = _truncate_lineage(
         sig.filter(F.col("ok")).select(F.col("item_id"), F.col("afp"))
     )
@@ -798,39 +690,23 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _chirp_wav_payload_df(
     spark: SparkSession, sf_dir: str, volume: float = 1.0
 ) -> DataFrame:
-    import numpy as np
-    import pandas as pd
+    s = np.arange(64)
+    tones = np.stack(
+        [np.sin(2.0 * np.pi * (4 * b + 2) * s / 64.0) for b in range(8)]
+    )  # (8 bands, 64 samples)
 
-    from data_integration_spark.multimodal.binary_ops import encode_wav
-
-    docs = _spread_scan(Catalog(spark, sf_dir)["documents"].select("doc_id"))
-
-    def enc(batches):
-        s = np.arange(64)
-        tones = np.stack(
-            [np.sin(2.0 * np.pi * (4 * b + 2) * s / 64.0) for b in range(8)]
-        )  # (8 bands, 64 samples)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = []
-                for t in range(9):
-                    amps = np.asarray(
-                        [
-                            0.1 * 2.0 ** (-((d + 3 * t + 7 * b) % 8) / 2.0)
-                            for b in range(8)
-                        ]
-                    )
-                    frames.append(volume * (amps @ tones))
-                payloads.append(
-                    encode_wav(np.concatenate(frames), rate=8000)
-                )
-            yield pd.DataFrame(
-                {"item_id": pdf["doc_id"], "payload": payloads}
+    def chirp(d: int) -> bytes:
+        frames = []
+        for t in range(9):
+            amps = np.asarray(
+                [0.1 * 2.0 ** (-((d + 3 * t + 7 * b) % 8) / 2.0) for b in range(8)]
             )
+            frames.append(volume * (amps @ tones))
+        return encode_wav(np.concatenate(frames), rate=8000)
 
-    return docs.mapInPandas(enc, "item_id long, payload binary")
+    return _fixture_payloads(
+        Catalog(spark, sf_dir)["documents"].select("doc_id"), chirp
+    )
 
 
 _SPECTRAL_PARAMS = dict(n_fft=64, hop=64, n_bands=8, t_steps=8)
@@ -855,14 +731,8 @@ def q_audio_spectral_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to every codec op here — one Arrow-batched
     mapInPandas riding the scan partitioning, no shuffle, no driver
     traffic; the output feeds the same pigeonhole Hamming join as the
-    1-band/dHash forms. VERDICT r10 missing #2: this construction was
-    library + property-test only; now registered (rows-only by the
-    contract escape hatch) with the invariants certificate as the
-    full-oracle sibling."""
-    from data_integration_spark.multimodal.binary_ops import (
-        audio_fingerprint_spectral,
-    )
-
+    1-band/dHash forms. Registered rows-only, with the invariants
+    certificate as the full-oracle sibling."""
     return audio_fingerprint_spectral(
         _chirp_wav_payload_df(spark, sf_dir), **_SPECTRAL_PARAMS
     )
@@ -901,10 +771,6 @@ def q_audio_spectral_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     - varied == 1: the fingerprints are not collapsing to one value
       (>1 distinct across the corpus — guards a degenerate fixture or a
       construction that ignores its input)."""
-    from data_integration_spark.multimodal.binary_ops import (
-        audio_fingerprint_spectral,
-    )
-
     fp1 = audio_fingerprint_spectral(
         _chirp_wav_payload_df(spark, sf_dir), **_SPECTRAL_PARAMS
     )
@@ -1001,8 +867,8 @@ WHERE ROUND(d.dot / (qn.qn * cn.cn), 6) >= 0.98
 
 @register("q_crossmodal_dedup", oracle=_XMODAL_ORACLE)
 def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CROSS-MODAL near-dup retrieval (image ↔ text; LIVE since the r14
-    flip, leading that round's signing window): real BMPs (the pHash fixture) → REAL decode→DCT pipeline →
+    """CROSS-MODAL near-dup retrieval (image ↔ text): real BMPs (the
+    pHash fixture) → REAL decode→DCT pipeline →
     ±1 DCT-sign features → pinned int64 projection into the 64-d
     text-embedding space (similarity/crossmodal.py) → guarded broadcast
     cosine (≥ 0.98) against the embeddings corpus UNIONed with planted
@@ -1016,24 +882,25 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100× rehearsal corpus, the GEMM path seconds); at retrieval
     scale the cosine stage swaps for the IVF probe path exactly like
     the text-to-text semantic-dedup family."""
-    from data_integration_spark.multimodal.binary_ops import image_phash
     from data_integration_spark.similarity.ann import (
         as_double_array,
         cosine_pairs_vectorized,
     )
+    from data_integration_spark.similarity.crossmodal import (
+        pinned_projection,
+        project_hashes,
+    )
+
     imgs = _phash_bmp_payload_df(spark, sf_dir, max_doc_id=300)
     # ONE decode pass: collect the (≤ 400-row) fingerprint slice, then
     # (a) loud truncation guard (the q_cosine_pairs convention — a
     #     silent limit would drop query docs the SQL oracle keeps),
-    # (b) loud decode-failure guard (ADVICE r13: the oracle plants and
-    #     scores EVERY doc_id < 300 unconditionally, so a failed decode
-    #     must raise by item_id, never silently drop),
-    # (c) the pinned projection over a re-uploaded local relation of the
-    #     SAME collected hashes — identical y values, and the BMP→DCT
-    #     lineage runs once instead of once per guard + once per
-    #     consumer (r14 review finding #5: the previous shape decoded
-    #     the fixture twice on every bench pass and turned every
-    #     plan-only inspection of this query into a real decode job).
+    # (b) loud decode-failure guard (the oracle plants and scores EVERY
+    #     doc_id < 300 unconditionally, so a failed decode must raise by
+    #     item_id, never silently drop),
+    # (c) the pinned projection of the SAME collected hashes on the
+    #     driver, so the BMP→DCT lineage runs once instead of once per
+    #     guard and once per consumer.
     max_imgs = 400  # bounded by the max_doc_id=300 fixture slice
     ph_pd = image_phash(imgs).limit(max_imgs + 1).toPandas()
     if len(ph_pd) > max_imgs:  # not assert: survives python -O
@@ -1048,29 +915,11 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{bad_id} — the fixture guarantees every doc_id "
             "< 300 decodes; fix the payload or the decoder, do not filter"
         )
-    # (item_id, y) — integer-exact doubles. r15: the pinned projection of
-    # the ALREADY-COLLECTED ≤400-row hash slice is computed in-process
-    # with the same int64 GEMM the distributed op runs (bit-identical by
-    # exactness — every intermediate is an exact int64); the previous
-    # createDataFrame → mapInPandas → toPandas round-trip cost two jobs
-    # per run just to ferry 400 rows out and back.
-    import numpy as np
-    import pandas as pd
-
-    from data_integration_spark.similarity.crossmodal import (
-        N_FEATURES,
-        pinned_projection,
-    )
-
-    h = ph_pd["phash"].to_numpy(dtype=np.int64)
-    bits = (h[:, None] >> np.arange(N_FEATURES, dtype=np.int64)) & 1
-    y = ((2 * bits - 1).astype(np.int64)) @ pinned_projection()
-    proj_pd = pd.DataFrame(
-        {
-            "item_id": ph_pd["item_id"].to_numpy(),
-            "y": list(y.astype(np.float64)),
-        }
-    )
+    # (item_id, y) — integer-exact doubles from the same kernel the
+    # distributed op (project_phash_features) runs: every intermediate is
+    # an exact int64, so the values are bit-identical
+    y = project_hashes(ph_pd["phash"].to_numpy(dtype=np.int64), pinned_projection())
+    proj_pd = pd.DataFrame({"item_id": ph_pd["item_id"].to_numpy(), "y": list(y)})
     q_pd = proj_pd.assign(vec_id=proj_pd["item_id"] + 2_000_000_000)[
         ["vec_id", "y"]
     ].rename(columns={"y": "e"})
@@ -1089,7 +938,7 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id long, e array<double>",
     )
     # eval_order="raw_dot" matches the oracle's SUM(y·e)/(qn·cn) float
-    # evaluation order exactly (ADVICE r13): the only residual vs DuckDB
+    # evaluation order exactly: the only residual vs DuckDB
     # is dot reduction order, absorbed by the 6-decimal grid
     pairs = cosine_pairs_vectorized(
         q_pd, emb.unionByName(planted), threshold=0.98, eval_order="raw_dot"

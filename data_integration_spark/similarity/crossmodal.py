@@ -59,6 +59,16 @@ def pinned_projection(
     return (((k * n_out + j + 1) * _MULT) % _MOD1) % _SPAN - 100
 
 
+def project_hashes(hashes: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """y = f·W for each packed pHash: bit k of the hash (k < W.shape[0])
+    becomes the feature f_k = 2·bit − 1 ∈ {−1, +1}, and the product is one
+    int64 GEMM. Returned as float64 rows, integer-valued and exact by
+    range (see the module docstring), so every caller gets the same bits."""
+    h = np.asarray(hashes, dtype=np.int64)
+    bits = (h[:, None] >> np.arange(W.shape[0], dtype=np.int64)) & 1
+    return ((2 * bits - 1) @ W).astype(np.float64)
+
+
 def project_phash_features(
     sig: DataFrame,
     id_col: str = "item_id",
@@ -67,25 +77,17 @@ def project_phash_features(
     n_out: int = N_OUT,
 ) -> DataFrame:
     """(id, y array<double>): unpack the packed pHash into the ±1
-    DCT-sign feature vector and project through the pinned map — one
-    int64 GEMM per Arrow batch inside mapInPandas, no shuffle. The
-    emitted doubles are integer-valued (exact by range)."""
+    DCT-sign feature vector and project through the pinned map
+    (``project_hashes``) — one int64 GEMM per Arrow batch inside
+    mapInPandas, no shuffle."""
     W = pinned_projection(n_in, n_out)
 
     def proj(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            bits = (h[:, None] >> np.arange(n_in, dtype=np.int64)) & 1
-            f = (2 * bits - 1).astype(np.int64)  # ±1 features
-            y = f @ W  # exact int64 GEMM
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "y": list(y.astype(np.float64)),
-                }
-            )
+            y = project_hashes(pdf[hash_col].to_numpy(dtype=np.int64), W)
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "y": list(y)})
 
     return sig.select(id_col, hash_col).mapInPandas(
         proj, f"{id_col} long, y array<double>"

@@ -21,6 +21,7 @@ from data_integration_spark.similarity.crossmodal import (
     N_FEATURES,
     N_OUT,
     pinned_projection,
+    project_hashes,
     project_phash_features,
 )
 
@@ -53,6 +54,18 @@ def test_projection_is_integer_exact(spark):
         assert np.array_equal(got[item_id], want.astype(np.float64)), item_id
         # the emitted doubles are integer-valued (exact by range)
         assert np.all(got[item_id] == np.rint(got[item_id]))
+
+
+def test_driver_projection_equals_the_spark_op(spark):
+    """``project_hashes`` on the driver (q_crossmodal_dedup's path) gives
+    the same bits as the distributed op."""
+    hashes = [(i, (i * 0x9E3779B97F4A7C15) & ((1 << 63) - 1)) for i in range(50)]
+    df = spark.createDataFrame(hashes, "item_id long, phash long")
+    got = {r["item_id"]: np.array(r["y"]) for r in project_phash_features(df).collect()}
+    want = project_hashes(np.array([h for _, h in hashes]), pinned_projection())
+    assert want.dtype == np.float64
+    for (item_id, _h), row in zip(hashes, want):
+        assert np.array_equal(got[item_id], row), item_id
 
 
 def test_planted_recovery_and_natural_margin(spark):
